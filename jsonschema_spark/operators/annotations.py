@@ -11,7 +11,7 @@ here each node's entries are gated on that node's fast verdict.
 
 Scope (documented): annotations at the root node and recursively through
 properties / allOf / anyOf / oneOf / if-then-else / dependentSchemas /
-$ref subschemas. Array-element annotation locations are out of scope.
+$ref / $dynamicRef / $recursiveRef subschemas. Array-element annotation locations are out of scope.
 Property-name lists are emitted in sorted order (the reference emits in
 evaluation order; sorting keeps the output deterministic here).
 """
@@ -28,10 +28,10 @@ from jsonschema_spark.plans.compiler import (
     Config,
     _KEYWORD_ORDER,
     _ptr_escape,
-    _resolve_ref,
+    _references,
     compile_node,
 )
-from jsonschema_spark.plans.context import B, Cond, Ctx, FlatRowCtx, S, VariantCtx, and_, not_
+from jsonschema_spark.plans.context import B, Cond, Ctx, S, and_, not_
 
 ANN_DT = (
     "array<struct<keywordLocation:string,absoluteKeywordLocation:string,"
@@ -118,12 +118,10 @@ def _entries(schema, ctx: Ctx, kw: str, cfg: Config, ref_stack, applies: Cond) -
             _entries(sub, ctx, f"{kw}/dependentSchemas/{_ptr_escape(trigger)}", cfg, ref_stack,
                      and_(cond, ctx.get_prop(trigger).present))
         )
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        ref_key = (cfg.base_uri, ref)
-        if ref_stack.count(ref_key) < cfg.max_ref_depth:
-            target, sub_cfg = _resolve_ref(ref, cfg)
-            out.extend(_entries(target, ctx, f"{kw}/$ref", sub_cfg, ref_stack + (ref_key,), cond))
+    for key, hit in _references(schema, cfg, ref_stack):
+        if hit is not None:
+            target, sub_cfg, sub_stack = hit
+            out.extend(_entries(target, ctx, f"{kw}/{key}", sub_cfg, sub_stack, cond))
     return out
 
 
@@ -147,15 +145,10 @@ def annotations(
     annotation) — the Basic-output ``annotations[]`` shape, one row per
     emitted annotation. ``positions`` adds the [line,col,line,col] source
     span (doc_col sources only)."""
-    from jsonschema_spark.operators.validate import _as_compiled
+    from jsonschema_spark.operators.validate import _as_compiled, _bind
 
     cs = _as_compiled(schema)
-    if doc_col is None:
-        ctx: Ctx = FlatRowCtx(df.schema)
-        pre = df
-    else:
-        pre = df.withColumn("__jss_v", F.try_parse_json(F.col(doc_col)))
-        ctx = VariantCtx(F.col("__jss_v"), "")
+    pre, ctx, _ = _bind(df, doc_col)
     ann = annotations_col(cs, ctx)
     rows = (
         pre.withColumn("__anns", ann)

@@ -18,7 +18,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame, functions as F
 
 from jsonschema_spark.plans.compiler import CompiledSchema, compile_node
-from jsonschema_spark.plans.context import B, FlatRowCtx, S, VariantCtx
+from jsonschema_spark.plans.context import B, S
 
 TRACE_DT = "array<struct<step:int,keywordLocation:string,instanceLocation:string,ok:boolean>>"
 
@@ -31,17 +31,12 @@ def trace(
 ) -> DataFrame:
     """Per-instruction trace rows: (id_cols..., step, keywordLocation,
     instanceLocation, ok) in evaluation order."""
-    from jsonschema_spark.operators.validate import _as_compiled
+    from jsonschema_spark.operators.validate import _as_compiled, _bind
 
     cs = _as_compiled(schema)
     sink: list = []
     cfg = replace(cs._cfg("fast"), trace_sink=sink)
-    if doc_col is None:
-        ctx = FlatRowCtx(df.schema)
-        pre = df
-    else:
-        pre = df.withColumn("__jss_v", F.try_parse_json(F.col(doc_col)))
-        ctx = VariantCtx(F.col("__jss_v"), "")
+    pre, ctx, _ = _bind(df, doc_col)
     compile_node(cs.schema, ctx, "", cfg)
     entries = F.array(
         *[

@@ -25,10 +25,11 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from jsonschema_spark.plans.compiler import (
     CompiledSchema,
     VIOLS_DT,
+    compile_node,
     compile_schema,
-    empty_viols,
+    _viol_struct,
 )
-from jsonschema_spark.plans.context import B
+from jsonschema_spark.plans.context import B, Cond, Ctx, FlatRowCtx, VariantCtx, and_
 
 
 def _as_compiled(schema: Union[dict, bool, CompiledSchema]) -> CompiledSchema:
@@ -39,6 +40,51 @@ def _as_compiled(schema: Union[dict, bool, CompiledSchema]) -> CompiledSchema:
 
 _PARSE_FAIL_MSG = "The instance could not be parsed as JSON"
 _VARIANT_TMP = "__jss_variant"
+
+
+def _bind(
+    df: DataFrame, doc_col: Optional[str], instance_cols: Optional[Sequence[str]] = None
+) -> tuple[DataFrame, Ctx, Cond]:
+    """Where the instance lives: ``(df', ctx, parse_ok)``.
+
+    Flat rows are the DataFrame's own columns (``instance_cols`` narrows
+    the instance object) and ``df' is df``. JSON documents are parsed ONCE
+    into a VARIANT column behind a projection: a compiled plan references
+    the document many times (guards, accessors, message text), and parsing
+    inline re-runs parse_json per reference (measured ~3x). A NULL or
+    unparseable document fails ``parse_ok``. ``_unbind`` drops the column."""
+    if doc_col is None:
+        fields = df.schema.fields
+        if instance_cols is not None:
+            keep = set(instance_cols)
+            missing = keep - {f.name for f in fields}
+            if missing:
+                # a silently-dropped typo would make required properties
+                # "absent" and flip every verdict
+                raise ValueError(f"instance_cols not in DataFrame: {sorted(missing)}")
+            fields = [f for f in fields if f.name in keep]
+        return df, FlatRowCtx(T.StructType(fields)), True
+    pre = df.withColumn(_VARIANT_TMP, F.try_parse_json(F.col(doc_col)))
+    v = F.col(_VARIANT_TMP)
+    return pre, VariantCtx(v, ""), v.isNotNull()
+
+
+def _unbind(df: DataFrame, doc_col: Optional[str], *cols: str) -> DataFrame:
+    """Drop ``cols`` and the column ``_bind`` parsed ``doc_col`` into."""
+    gone = [*cols, _VARIANT_TMP] if doc_col is not None else list(cols)
+    return df.drop(*gone) if gone else df
+
+
+def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
+             short_circuit: bool = True) -> tuple[Column, Column]:
+    """``(valid, violations)`` columns of ``cs`` over a bound instance; an
+    unparseable document fails with the parse message alone."""
+    compiled = compile_node(cs.schema, ctx, "", cs._cfg(mode, short_circuit))
+    viols = compiled.viols_col()
+    if parse_ok is not True:
+        parse_viol = F.array(_viol_struct(cs.base_uri, "", "", F.lit(_PARSE_FAIL_MSG))).cast(VIOLS_DT)
+        viols = F.when(~parse_ok, parse_viol).otherwise(viols)
+    return B(and_(parse_ok, compiled.ok)), viols
 
 
 def annotate(
@@ -54,29 +100,9 @@ def annotate(
     ``short_circuit=True`` follows the reference's LogicalAnd first-failure
     reporting; ``False`` reports every failing conjunct (oracle-friendly)."""
     cs = _as_compiled(schema)
-    if doc_col is None:
-        compiled = cs.compile_flat(df.schema, mode="exhaustive", short_circuit=short_circuit)
-        ok, viols = B(compiled.ok), compiled.viols_col()
-        return df.withColumns({valid_col: ok, violations_col: viols})
-    # parse ONCE behind a projection: the compiled plan references the
-    # variant column many times (guards, accessors, message text) — parsing
-    # inline would re-run parse_json per reference (measured ~3×)
-    pre = df.withColumn(_VARIANT_TMP, F.try_parse_json(F.col(doc_col)))
-    v = F.col(_VARIANT_TMP)
-    compiled = cs.compile_variant(v, mode="exhaustive", short_circuit=short_circuit)
-    # NULL document string == unparseable: both fail with the parse message
-    parse_ok = v.isNotNull()
-    ok = parse_ok & B(compiled.ok)
-    parse_viol = F.array(
-        F.struct(
-            F.lit("").alias("keywordLocation"),
-            F.lit(f"{cs.base_uri}#").alias("absoluteKeywordLocation"),
-            F.lit("").alias("instanceLocation"),
-            F.lit(_PARSE_FAIL_MSG).alias("error"),
-        )
-    ).cast(VIOLS_DT)
-    viols = F.when(~parse_ok, parse_viol).otherwise(compiled.viols_col())
-    return pre.withColumns({valid_col: ok, violations_col: viols}).drop(_VARIANT_TMP)
+    pre, ctx, parse_ok = _bind(df, doc_col)
+    ok, viols = _verdict(cs, ctx, parse_ok, "exhaustive", short_circuit)
+    return _unbind(pre.withColumns({valid_col: ok, violations_col: viols}), doc_col)
 
 
 def validate(
@@ -94,23 +120,9 @@ def validate(
     schema (matters for closed-object keywords: additionalProperties,
     unevaluatedProperties, propertyNames, min/maxProperties)."""
     cs = _as_compiled(schema)
-    if doc_col is None:
-        row_schema = df.schema
-        if instance_cols is not None:
-            keep = set(instance_cols)
-            missing = keep - {f.name for f in df.schema.fields}
-            if missing:
-                # a silently-dropped typo would make required properties
-                # "absent" and flip every verdict
-                raise ValueError(f"instance_cols not in DataFrame: {sorted(missing)}")
-            row_schema = T.StructType([f for f in df.schema.fields if f.name in keep])
-        compiled = cs.compile_flat(row_schema, mode="fast")
-        return df.withColumn(valid_col, B(compiled.ok))
-    pre = df.withColumn(_VARIANT_TMP, F.try_parse_json(F.col(doc_col)))
-    v = F.col(_VARIANT_TMP)
-    compiled = cs.compile_variant(v, mode="fast")
-    ok = v.isNotNull() & B(compiled.ok)
-    return pre.withColumn(valid_col, ok).drop(_VARIANT_TMP)
+    pre, ctx, parse_ok = _bind(df, doc_col, instance_cols)
+    ok, _ = _verdict(cs, ctx, parse_ok, "fast")
+    return _unbind(pre.withColumn(valid_col, ok), doc_col)
 
 
 def violations(
@@ -181,18 +193,14 @@ def property_verdicts(
     (plus its required bit) evaluated independently, all in the same
     single pass. A property column is True when the value is absent-and-
     not-required or present-and-valid."""
-    from jsonschema_spark.plans.compiler import _apply_subschema, and_
-    from jsonschema_spark.plans.context import B, FlatRowCtx, VariantCtx
+    from jsonschema_spark.plans.compiler import _apply_subschema
 
     cs = _as_compiled(schema)
     node = cs.schema if isinstance(cs.schema, dict) else {}
     props = node.get("properties", {}) or {}
     required = set(node.get("required", []) or [])
     cfg = cs._cfg("fast")
-    if doc_col is None:
-        ctx = FlatRowCtx(df.schema)
-    else:
-        ctx = VariantCtx(F.try_parse_json(F.col(doc_col)), "")
+    pre, ctx, _ = _bind(df, doc_col)
     cols = {}
     for name, sub_schema in props.items():
         child = ctx.get_prop(name)
@@ -202,7 +210,7 @@ def property_verdicts(
         cols[f"{prefix}{name}"] = B(ok)
     for name in required - set(props):
         cols[f"{prefix}{name}"] = B(ctx.get_prop(name).present)
-    return df.withColumns(cols)
+    return _unbind(pre.withColumns(cols), doc_col)
 
 
 def standard_output(
@@ -230,17 +238,14 @@ def standard_output(
         return v.withColumn(out_col, report).drop("valid")
     if fmt != "basic":
         raise ValueError(f"unknown output format {fmt!r} (flag|basic)")
-    a = annotate(df, schema, doc_col=doc_col)
+    cs = _as_compiled(schema)
+    pre, ctx, parse_ok = _bind(df, doc_col)
+    ok, viols = _verdict(cs, ctx, parse_ok, "exhaustive")
+    a = pre.withColumns({"valid": ok, "violations": viols})
     ann_col = None
     if annotations:
         from jsonschema_spark.operators.annotations import annotations_col
-        from jsonschema_spark.plans.context import FlatRowCtx, VariantCtx
 
-        cs = _as_compiled(schema)
-        if doc_col is None:
-            ctx = FlatRowCtx(df.schema)
-        else:
-            ctx = VariantCtx(F.try_parse_json(F.col(doc_col)), "")
         ann_col = annotations_col(cs, ctx)
     if positions and doc_col is not None:
         return _standard_output_positions(a, doc_col, ann_col, out_col)
@@ -254,7 +259,7 @@ def standard_output(
             F.struct(F.col("valid").alias("valid"), F.col("violations").alias("errors"))
         )
     )
-    return a.withColumn(out_col, report).drop("valid", "violations")
+    return _unbind(a.withColumn(out_col, report), doc_col, "valid", "violations")
 
 
 def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_col: str) -> DataFrame:
@@ -264,7 +269,7 @@ def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_
 
     from pyspark.sql.types import StringType
 
-    from jsonschema_spark.functions.positions import position_of, scan_spans, _line_col
+    from jsonschema_spark.functions.positions import scan_spans, _line_col
 
     @F.pandas_udf(StringType())
     def assemble(valid: pd.Series, doc: pd.Series, viols: pd.Series, anns: pd.Series) -> pd.Series:
@@ -304,7 +309,7 @@ def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_
     report = assemble(
         F.col("valid"), F.col(doc_col), F.to_json(F.col("violations")), anns_json
     )
-    return annotated.withColumn(out_col, report).drop("valid", "violations")
+    return _unbind(annotated.withColumn(out_col, report), doc_col, "valid", "violations")
 
 
 def verdict_counts(
@@ -316,14 +321,17 @@ def verdict_counts(
     """Per-group (or global) pass/fail counts — the per-partition verdict
     aggregate from the north_rule. One pass, map-side partial aggregation."""
     v = validate(df, schema, doc_col=doc_col)
-    agg = [
+    if by:
+        return v.groupBy(*by).agg(*_verdict_aggs())
+    return v.agg(*_verdict_aggs())
+
+
+def _verdict_aggs() -> list[Column]:
+    return [
         F.count(F.lit(1)).alias("n_rows"),
         F.coalesce(F.sum(F.col("valid").cast("long")), F.lit(0)).alias("n_valid"),
         F.coalesce(F.sum((~F.col("valid")).cast("long")), F.lit(0)).alias("n_invalid"),
     ]
-    if by:
-        return v.groupBy(*by).agg(*agg)
-    return v.agg(*agg)
 
 
 def verdict_counts_cube(
@@ -345,14 +353,9 @@ def verdict_counts_cube(
     sets at all (SURVEY §2.6); this is the north_rule's per-partition
     verdict aggregate generalized to roll-up reporting."""
     v = validate(df, schema, doc_col=doc_col)
-    agg = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(F.sum(F.col("valid").cast("long")), F.lit(0)).alias("n_valid"),
-        F.coalesce(F.sum((~F.col("valid")).cast("long")), F.lit(0)).alias("n_invalid"),
-    ]
     return (
         v.cube(*dims)
-        .agg(F.grouping_id().cast("long").alias("gid"), *agg)
+        .agg(F.grouping_id().cast("long").alias("gid"), *_verdict_aggs())
         .select(*dims, "gid", "n_rows", "n_valid", "n_invalid")
     )
 

@@ -30,7 +30,7 @@ Violation rows follow the standard Basic output shape
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 from typing import Optional, Union
 
 from pyspark.sql import Column, functions as F, types as T
@@ -45,6 +45,7 @@ from jsonschema_spark.plans.context import (
     Ctx,
     FlatColCtx,
     FlatRowCtx,
+    S,
     VariantCtx,
     and_,
     not_,
@@ -120,28 +121,26 @@ class Config:
         return self.mode != "fast"
 
     def fast(self) -> "Config":
-        return Config(self.base_uri, "fast", self.format_assertion, self.root,
-                      self.short_circuit, self.resolver, self.max_ref_depth,
-                      dynamic_scope=self.dynamic_scope,
-                      format_strict=self.format_strict)
+        return replace(self, mode="fast", trace_sink=None)
 
     def with_root(self, root, base_uri: str) -> "Config":
         scope = self.dynamic_scope or ((self.root, self.base_uri),)
-        return Config(base_uri, self.mode, self.format_assertion, root,
-                      self.short_circuit, self.resolver, self.max_ref_depth,
-                      self.trace_sink, scope + ((root, base_uri),), self.format_strict)
+        return replace(self, base_uri=base_uri, root=root,
+                       dynamic_scope=scope + ((root, base_uri),))
+
+
+def _viol_struct(base_uri: str, kw: str, loc: Union[str, Column], error: Column) -> Column:
+    """One violation row in the standard Basic output shape."""
+    return F.struct(
+        F.lit(kw).alias("keywordLocation"),
+        F.lit(f"{base_uri}#{kw}").alias("absoluteKeywordLocation"),
+        S(loc).alias("instanceLocation"),
+        error.alias("error"),
+    )
 
 
 def _viol(cfg: Config, kw: str, loc: Union[str, Column], error: Column) -> Column:
-    loc_col = F.lit(loc) if isinstance(loc, str) else loc
-    return F.array(
-        F.struct(
-            F.lit(kw).alias("keywordLocation"),
-            F.lit(f"{cfg.base_uri}#{kw}").alias("absoluteKeywordLocation"),
-            loc_col.alias("instanceLocation"),
-            error.alias("error"),
-        )
-    ).cast(VIOLS_DT)
+    return F.array(_viol_struct(cfg.base_uri, kw, loc, error)).cast(VIOLS_DT)
 
 
 def _leaf(cfg: Config, cond: Cond, kw: str, ctx: Ctx, error_builder) -> Compiled:
@@ -430,6 +429,34 @@ def _resolve_ref(ref: str, cfg: Config) -> tuple[dict | bool, Config]:
     return node, cfg.with_root(target, uri)
 
 
+_REF_KEYWORDS = ("$ref", *_DYNAMIC_KEYWORDS)
+
+
+def _references(schema: dict, cfg: Config, ref_stack: tuple):
+    """Resolve the reference keywords of ``schema`` — the one place the
+    recursion budget is applied. Yields ``(key, hit)`` for each of `$ref`,
+    `$dynamicRef`, `$recursiveRef` present, in that order. ``hit`` is
+    ``(target, sub_cfg, sub_stack)``, or None once this reference has been
+    entered ``cfg.max_ref_depth`` times along the current compile path."""
+    for key in _REF_KEYWORDS:
+        if key not in schema:
+            continue
+        val = schema[key]
+        if key == "$ref":
+            if not isinstance(val, str):
+                raise SchemaError(f"$ref must be a string, got {val!r}")
+            target, sub_cfg = _resolve_ref(val, cfg)
+            ref_key = (cfg.base_uri, val)
+        else:
+            target, res, res_uri = _resolve_dynamic_ref(key, val, cfg)
+            sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
+            ref_key = (cfg.base_uri, f"{key}:{val}")
+        if ref_stack.count(ref_key) >= cfg.max_ref_depth:
+            yield key, None
+        else:
+            yield key, (target, sub_cfg, ref_stack + (ref_key,))
+
+
 def compile_node(
     schema: Union[dict, bool],
     ctx: Ctx,
@@ -457,15 +484,14 @@ def compile_node(
 
     parts: list[Compiled] = []
     present_keys = [k for k in _KEYWORD_ORDER if k in schema]
+    refs = dict(_references(schema, cfg, ref_stack))
 
     for key in present_keys:
         val = schema[key]
         kwp = f"{kw}/{_ptr_escape(key)}"
         _n_before = len(parts)
-        if key == "$ref":
-            target, sub_cfg = _resolve_ref(val, cfg)
-            ref_key = (cfg.base_uri, val)
-            if ref_stack.count(ref_key) >= cfg.max_ref_depth:
+        if key in refs:
+            if refs[key] is None:
                 # recursion budget exhausted: data nesting deeper than the
                 # unrolled plan is conservatively REJECTED (documented
                 # limit; shallower data is validated exactly)
@@ -474,22 +500,8 @@ def compile_node(
                           lambda d=cfg.max_ref_depth: M.msg_ref_depth(d))
                 )
             else:
-                sub = compile_node(target, ctx, kwp, sub_cfg, ref_stack + (ref_key,))
-                if sub.ok is not True:
-                    parts.append(
-                        _and_combine([sub], cfg, own=(kwp, ctx, lambda c=ctx: M.msg_ref(c)))
-                    )
-        elif key in _DYNAMIC_KEYWORDS:
-            target, res, res_uri = _resolve_dynamic_ref(key, val, cfg)
-            sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
-            ref_key = (cfg.base_uri, f"{key}:{val}")
-            if ref_stack.count(ref_key) >= cfg.max_ref_depth:
-                parts.append(
-                    _leaf(cfg, False, kwp, ctx,
-                          lambda d=cfg.max_ref_depth: M.msg_ref_depth(d))
-                )
-            else:
-                sub = compile_node(target, ctx, kwp, sub_cfg, ref_stack + (ref_key,))
+                target, sub_cfg, sub_stack = refs[key]
+                sub = compile_node(target, ctx, kwp, sub_cfg, sub_stack)
                 if sub.ok is not True:
                     parts.append(
                         _and_combine([sub], cfg, own=(kwp, ctx, lambda c=ctx: M.msg_ref(c)))
@@ -647,7 +659,6 @@ def _k_enum(val: list, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
 def _k_required(val: list, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
     if not val:
         return Compiled(True)
-    presents = [B(ctx.get_prop(n).present) for n in val]
     statics = [ctx.get_prop(n).present for n in val]
     if len(val) == 1:
         inner = _leaf(cfg, statics[0], kwp, ctx, lambda n=val[0]: M.msg_required_single(n))
@@ -684,6 +695,26 @@ def _apply_subschema(sub_schema, child: Ctx, kwp: str, cfg: Config, ref_stack) -
         return Compiled(True)
     sub = compile_node(sub_schema, child, kwp, cfg, ref_stack)
     return _guarded(child.present, sub, cfg)
+
+
+def _loop_body(val, kwp: str, cfg: Config, ref_stack):
+    """The per-element compiles of a higher-order loop body, one of each:
+    ``ok(ctx)`` under ``cfg.fast()`` — an exhaustive compile would build a
+    violation tree inside the predicate only to drop it — and
+    ``viols(ctx)`` under ``cfg``."""
+    fast = cfg.fast()
+    return (lambda c: compile_node(val, c, kwp, fast, ref_stack).ok,
+            lambda c: compile_node(val, c, kwp, cfg, ref_stack).viols_col())
+
+
+def _each_key(keys: Column, key_ctx, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    """Apply ``val`` to every key of the dynamic key set ``keys``
+    (``key_ctx(k)`` is the context a key's subschema reads)."""
+    ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
+    ok = F.forall(keys, lambda k: B(ok_of(key_ctx(k))))
+    if not cfg.want_viols:
+        return Compiled(ok)
+    return Compiled(ok, F.flatten(F.transform(keys, lambda k: viols_of(key_ctx(k)))).cast(VIOLS_DT))
 
 
 def _k_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -723,17 +754,7 @@ def _k_pattern_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack)
                 raise SchemaError("patternProperties unsupported for this context")
             keys, prop_ctx = entries
             matching = F.filter(keys, lambda k: pattern_ok(k, pattern))
-            ok = F.forall(matching, lambda k: B(compile_node(sub_schema, prop_ctx(k), kwpp, cfg, ref_stack).ok))
-            if cfg.want_viols:
-                per_key = F.flatten(
-                    F.transform(
-                        matching,
-                        lambda k: compile_node(sub_schema, prop_ctx(k), kwpp, cfg, ref_stack).viols_col(),
-                    )
-                ).cast(VIOLS_DT)
-                parts.append(Compiled(ok, per_key))
-            else:
-                parts.append(Compiled(ok))
+            parts.append(_each_key(matching, prop_ctx, sub_schema, kwpp, cfg, ref_stack))
     inner = _and_combine(parts, cfg)
     return _guarded(ctx.is_type("object"), inner, cfg)
 
@@ -792,25 +813,14 @@ def _apply_to_extra_keys(
         if cfg.want_viols:
             viols = F.transform(
                 extra_keys,
-                lambda k: F.struct(
-                    F.lit(kwp).alias("keywordLocation"),
-                    F.lit(f"{cfg.base_uri}#{kwp}").alias("absoluteKeywordLocation"),
-                    _loc_concat(ctx, k).alias("instanceLocation"),
-                    M.msg_additional_property(k).alias("error"),
-                ),
+                lambda k: _viol_struct(cfg.base_uri, kwp, _loc_concat(ctx, k),
+                                      M.msg_additional_property(k)),
             ).cast(VIOLS_DT)
             inner = Compiled(ok, F.when(B(ok), empty_viols()).otherwise(viols))
         else:
             inner = Compiled(ok)
     else:
-        ok = F.forall(extra_keys, lambda k: B(compile_node(val, prop_ctx(k), kwp, cfg, ref_stack).ok))
-        if cfg.want_viols:
-            viols = F.flatten(
-                F.transform(extra_keys, lambda k: compile_node(val, prop_ctx(k), kwp, cfg, ref_stack).viols_col())
-            ).cast(VIOLS_DT)
-            inner = Compiled(ok, viols)
-        else:
-            inner = Compiled(ok)
+        inner = _each_key(extra_keys, prop_ctx, val, kwp, cfg, ref_stack)
     return _guarded(ctx.is_type("object"), inner, cfg)
 
 
@@ -825,14 +835,9 @@ def _k_property_names(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compil
     def key_ctx(k: Column) -> Ctx:
         return FlatColCtx(k, T.StringType(), _loc_concat(ctx, k))
 
-    ok = F.forall(keys, lambda k: B(compile_node(val, key_ctx(k), kwp, cfg, ref_stack).ok))
-    if cfg.want_viols:
-        viols = F.flatten(
-            F.transform(keys, lambda k: compile_node(val, key_ctx(k), kwp, cfg, ref_stack).viols_col())
-        ).cast(VIOLS_DT)
-        inner = Compiled(ok, F.when(B(ok), empty_viols()).otherwise(viols))
-    else:
-        inner = Compiled(ok)
+    inner = _each_key(keys, key_ctx, val, kwp, cfg, ref_stack)
+    if inner.viols is not None:
+        inner = Compiled(inner.ok, F.when(B(inner.ok), empty_viols()).otherwise(inner.viols))
     return _guarded(ctx.is_type("object"), inner, cfg)
 
 
@@ -890,18 +895,17 @@ def _k_items(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Com
         return Compiled(True)  # statically non-array (e.g. flat row root)
     factory = ctx.element_ctx_factory()
     arr = ctx.arr()
+    ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
 
     def elem_ok(x: Column, i: Column) -> Column:
-        c = compile_node(val, factory(x, i), kwp, cfg, ref_stack)
-        gated = or_(i < start, c.ok) if start else c.ok
-        return B(gated)
+        c_ok = ok_of(factory(x, i))
+        return B(or_(i < start, c_ok) if start else c_ok)
 
     ok = F.forall(F.transform(arr, elem_ok), lambda b: b)
     if cfg.want_viols:
 
         def elem_viols(x: Column, i: Column) -> Column:
-            c = compile_node(val, factory(x, i), kwp, cfg, ref_stack)
-            v = c.viols_col()
+            v = viols_of(factory(x, i))
             if start:
                 v = F.when(i < start, empty_viols()).otherwise(v)
             return v
@@ -923,11 +927,8 @@ def _k_contains(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -
         return Compiled(True)  # statically non-array (e.g. flat row root)
     factory = ctx.element_ctx_factory()
     arr = ctx.arr()
-
-    def elem_ok(x: Column, i: Column) -> Column:
-        return B(compile_node(val, factory(x, i), kwp, cfg, ref_stack).ok)
-
-    count = F.size(F.filter(F.transform(arr, elem_ok), lambda b: b))
+    ok_of, _ = _loop_body(val, kwp, cfg, ref_stack)
+    count = F.size(F.filter(F.transform(arr, lambda x, i: B(ok_of(factory(x, i)))), lambda b: b))
     cond = count >= minimum if maximum is None else (count >= minimum) & (count <= maximum)
     if minimum == 0 and maximum is None:
         return Compiled(True)
@@ -1034,26 +1035,20 @@ def _subtree_mentions(node, keys: tuple) -> bool:
     return False
 
 
-def _conjunctive_contributors(schema, cfg: Config, seen: tuple = ()) -> list:
-    """The node plus transitive allOf / $ref children — subschemas whose
-    annotations are always evaluated when the node is."""
+def _conjunctive_contributors(schema, cfg: Config, ref_stack: tuple) -> list:
+    """The node plus transitive allOf / reference targets — subschemas whose
+    annotations are always evaluated when the node is — each listed once.
+    A reference past the recursion budget is not followed: it compiles to
+    a reject, so the node fails wherever that target would have applied."""
     out = [schema]
-    if not isinstance(schema, dict):
-        return out
-    for sub in schema.get("allOf") or []:
-        if isinstance(sub, dict):
-            out.extend(_conjunctive_contributors(sub, cfg, seen))
-    ref = schema.get("$ref")
-    if isinstance(ref, str) and ref not in seen:
-        target, sub_cfg = _resolve_ref(ref, cfg)
-        out.extend(_conjunctive_contributors(target, sub_cfg, seen + (ref,)))
-    for dk in _DYNAMIC_KEYWORDS:
-        dval = schema.get(dk)
-        if isinstance(dval, str) and (dk, dval) not in seen:
-            target, res, res_uri = _resolve_dynamic_ref(dk, dval, cfg)
-            sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
-            out.extend(_conjunctive_contributors(target, sub_cfg, seen + ((dk, dval),)))
-    return out
+    if isinstance(schema, dict):
+        for sub in schema.get("allOf") or []:
+            if isinstance(sub, dict):
+                out.extend(_conjunctive_contributors(sub, cfg, ref_stack))
+        for _, hit in _references(schema, cfg, ref_stack):
+            if hit is not None:
+                out.extend(_conjunctive_contributors(*hit))
+    return [c for n, c in enumerate(out) if not any(c is d for d in out[:n])]
 
 
 def _branch_ok(sub_schema, ctx: Ctx, kw: str, cfg: Config, ref_stack) -> Cond:
@@ -1062,123 +1057,86 @@ def _branch_ok(sub_schema, ctx: Ctx, kw: str, cfg: Config, ref_stack) -> Cond:
     return compile_node(sub_schema, ctx, kw, cfg.fast(), ref_stack).ok
 
 
-def _key_evaluated(schema, k: Column, ctx: Ctx, cfg: Config, ref_stack, is_root: bool = True) -> Cond:
-    """Cond: the instance property named ``k`` is evaluated by ``schema``
-    at this location — the runtime evaluated-property-set predicate."""
+def _evaluated(schema, uneval: str, local, ctx: Ctx, cfg: Config, ref_stack,
+               nested: bool = False) -> Cond:
+    """Cond: one instance member — a property name or an array element —
+    is evaluated by ``schema`` at this location: the runtime evaluated-set
+    predicate. ``local(node, cfg, ref_stack)`` gives a node's keyword-local
+    conditions; a nested ``uneval`` keyword evaluates every member. The
+    walker adds what both member kinds share: allOf/anyOf/oneOf,
+    if-then-else and dependentSchemas branches that validate, and
+    reference targets. `not` contributes nothing: its annotations never
+    propagate."""
     if not isinstance(schema, dict):
         return False
-    conds: list[Cond] = []
-    props = schema.get("properties") or {}
-    if props:
-        conds.append(k.isin(list(props.keys())))
-    for p in (schema.get("patternProperties") or {}):
-        conds.append(pattern_ok(k, p))
-    if "additionalProperties" in schema:
+    conds: list[Cond] = list(local(schema, cfg, ref_stack))
+    if nested and uneval in schema:
         conds.append(True)
-    if not is_root and "unevaluatedProperties" in schema:
-        conds.append(True)
-    for sub in schema.get("allOf") or []:
-        conds.append(and_(_branch_ok(sub, ctx, "", cfg, ref_stack),
-                          _key_evaluated(sub, k, ctx, cfg, ref_stack, False)))
-    for key in ("anyOf", "oneOf"):
+
+    def branch(sub, *gates: Cond) -> None:
+        conds.append(and_(*gates, _branch_ok(sub, ctx, "", cfg, ref_stack),
+                          _evaluated(sub, uneval, local, ctx, cfg, ref_stack, True)))
+
+    for key in ("allOf", "anyOf", "oneOf"):
         for sub in schema.get(key) or []:
-            conds.append(and_(_branch_ok(sub, ctx, "", cfg, ref_stack),
-                              _key_evaluated(sub, k, ctx, cfg, ref_stack, False)))
+            branch(sub)
     if "if" in schema:
         if_ok = _branch_ok(schema["if"], ctx, "", cfg, ref_stack)
-        conds.append(and_(if_ok, _key_evaluated(schema["if"], k, ctx, cfg, ref_stack, False)))
+        conds.append(and_(if_ok, _evaluated(schema["if"], uneval, local, ctx, cfg, ref_stack, True)))
         if "then" in schema:
-            conds.append(and_(if_ok, _branch_ok(schema["then"], ctx, "", cfg, ref_stack),
-                              _key_evaluated(schema["then"], k, ctx, cfg, ref_stack, False)))
+            branch(schema["then"], if_ok)
         if "else" in schema:
-            conds.append(and_(not_(if_ok), _branch_ok(schema["else"], ctx, "", cfg, ref_stack),
-                              _key_evaluated(schema["else"], k, ctx, cfg, ref_stack, False)))
+            branch(schema["else"], not_(if_ok))
     for trigger, sub in (schema.get("dependentSchemas") or {}).items():
-        conds.append(and_(ctx.get_prop(trigger).present,
-                          _branch_ok(sub, ctx, "", cfg, ref_stack),
-                          _key_evaluated(sub, k, ctx, cfg, ref_stack, False)))
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        ref_key = (cfg.base_uri, ref)
-        if ref_stack.count(ref_key) < cfg.max_ref_depth:
-            target, sub_cfg = _resolve_ref(ref, cfg)
-            conds.append(_key_evaluated(target, k, ctx, sub_cfg, ref_stack + (ref_key,), False))
-    # $dynamicRef/$recursiveRef targets evaluate properties too — omitting
+        branch(sub, ctx.get_prop(trigger).present)
+    # $dynamicRef/$recursiveRef targets evaluate members too — omitting
     # them would spuriously reject under dynamic unevaluated*
-    for dk in _DYNAMIC_KEYWORDS:
-        dval = schema.get(dk)
-        if isinstance(dval, str):
-            ref_key = (cfg.base_uri, f"{dk}:{dval}")
-            if ref_stack.count(ref_key) < cfg.max_ref_depth:
-                target, res, res_uri = _resolve_dynamic_ref(dk, dval, cfg)
-                sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
-                conds.append(_key_evaluated(target, k, ctx, sub_cfg,
-                                            ref_stack + (ref_key,), False))
-    # `not` contributes nothing: its annotations never propagate
+    for _, hit in _references(schema, cfg, ref_stack):
+        if hit is not None:
+            target, sub_cfg, sub_stack = hit
+            conds.append(_evaluated(target, uneval, local, ctx, sub_cfg, sub_stack, True))
     return or_(*conds)
 
 
-def _item_evaluated(schema, x: Column, i: Column, ctx: Ctx, cfg: Config, ref_stack, is_root: bool = True) -> Cond:
-    """Cond: array element ``x`` at index ``i`` is evaluated by ``schema``
-    at this location (prefixItems positions, items, contains matches)."""
-    if not isinstance(schema, dict):
-        return False
-    factory = ctx.element_ctx_factory()
-    conds: list[Cond] = []
-    items = schema.get("items")
-    if items is not None and not isinstance(items, list):
-        conds.append(True)
-    pi = items if isinstance(items, list) else schema.get("prefixItems")
-    if isinstance(pi, list) and pi:
-        conds.append(i < len(pi))
-    if not is_root and "unevaluatedItems" in schema:
-        conds.append(True)
-    if "contains" in schema:
-        # matched elements are evaluated (LoopContains annotations)
-        conds.append(compile_node(schema["contains"], factory(x, i), "", cfg.fast(), ref_stack).ok)
-    for sub in schema.get("allOf") or []:
-        conds.append(and_(_branch_ok(sub, ctx, "", cfg, ref_stack),
-                          _item_evaluated(sub, x, i, ctx, cfg, ref_stack, False)))
-    for key in ("anyOf", "oneOf"):
-        for sub in schema.get(key) or []:
-            conds.append(and_(_branch_ok(sub, ctx, "", cfg, ref_stack),
-                              _item_evaluated(sub, x, i, ctx, cfg, ref_stack, False)))
-    if "if" in schema:
-        if_ok = _branch_ok(schema["if"], ctx, "", cfg, ref_stack)
-        conds.append(and_(if_ok, _item_evaluated(schema["if"], x, i, ctx, cfg, ref_stack, False)))
-        if "then" in schema:
-            conds.append(and_(if_ok, _branch_ok(schema["then"], ctx, "", cfg, ref_stack),
-                              _item_evaluated(schema["then"], x, i, ctx, cfg, ref_stack, False)))
-        if "else" in schema:
-            conds.append(and_(not_(if_ok), _branch_ok(schema["else"], ctx, "", cfg, ref_stack),
-                              _item_evaluated(schema["else"], x, i, ctx, cfg, ref_stack, False)))
-    for trigger, sub in (schema.get("dependentSchemas") or {}).items():
-        conds.append(and_(ctx.get_prop(trigger).present,
-                          _branch_ok(sub, ctx, "", cfg, ref_stack),
-                          _item_evaluated(sub, x, i, ctx, cfg, ref_stack, False)))
-    ref = schema.get("$ref")
-    if isinstance(ref, str):
-        ref_key = (cfg.base_uri, ref)
-        if ref_stack.count(ref_key) < cfg.max_ref_depth:
-            target, sub_cfg = _resolve_ref(ref, cfg)
-            conds.append(_item_evaluated(target, x, i, ctx, sub_cfg, ref_stack + (ref_key,), False))
-    for dk in _DYNAMIC_KEYWORDS:
-        dval = schema.get(dk)
-        if isinstance(dval, str):
-            ref_key = (cfg.base_uri, f"{dk}:{dval}")
-            if ref_stack.count(ref_key) < cfg.max_ref_depth:
-                target, res, res_uri = _resolve_dynamic_ref(dk, dval, cfg)
-                sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
-                conds.append(_item_evaluated(target, x, i, ctx, sub_cfg,
-                                             ref_stack + (ref_key,), False))
-    return or_(*conds)
+def _property_conds(k: Column):
+    """Keyword-local evaluated-set conditions for the property named ``k``."""
+
+    def local(node: dict, cfg: Config, ref_stack) -> list[Cond]:
+        props = node.get("properties") or {}
+        conds: list[Cond] = [k.isin(list(props.keys()))] if props else []
+        conds += [pattern_ok(k, p) for p in node.get("patternProperties") or {}]
+        if "additionalProperties" in node:
+            conds.append(True)
+        return conds
+
+    return local
+
+
+def _item_conds(x: Column, i: Column, factory):
+    """Keyword-local evaluated-set conditions for element ``x`` at index
+    ``i``: prefixItems positions, items, contains matches."""
+
+    def local(node: dict, cfg: Config, ref_stack) -> list[Cond]:
+        conds: list[Cond] = []
+        items = node.get("items")
+        if items is not None and not isinstance(items, list):
+            conds.append(True)
+        pi = items if isinstance(items, list) else node.get("prefixItems")
+        if isinstance(pi, list) and pi:
+            conds.append(i < len(pi))
+        if "contains" in node:
+            # matched elements are evaluated (LoopContains annotations)
+            conds.append(compile_node(node["contains"], factory(x, i), "", cfg.fast(), ref_stack).ok)
+        return conds
+
+    return local
 
 
 def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     names: set = set()
     patterns: list = []
     dynamic = False
-    for c in _conjunctive_contributors(schema, cfg):
+    for c in _conjunctive_contributors(schema, cfg, ref_stack):
         if not isinstance(c, dict):
             continue
         if "additionalProperties" in c:
@@ -1203,7 +1161,8 @@ def _k_unevaluated_properties_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg
         parts: list[Compiled] = []
         for name in static_names:
             child = ctx.get_prop(name)
-            evaluated = _key_evaluated(schema, F.lit(name), ctx, cfg, ref_stack)
+            evaluated = _evaluated(schema, "unevaluatedProperties", _property_conds(F.lit(name)),
+                                   ctx, cfg, ref_stack)
             if val is False:
                 cond = or_(not_(child.present), evaluated)
                 parts.append(_leaf(cfg, cond, kwp, child, lambda n=name: M.msg_additional_property(n)))
@@ -1221,16 +1180,15 @@ def _k_unevaluated_properties_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg
     if entries is None:
         raise SchemaError("unevaluatedProperties unsupported for this context")
     keys, prop_ctx = entries
-    uneval_keys = F.filter(
-        keys, lambda k: ~B(_key_evaluated(schema, k, ctx, cfg, ref_stack))
-    )
+    uneval_keys = F.filter(keys, lambda k: ~B(_evaluated(
+        schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack)))
     return _apply_to_extra_keys(uneval_keys, prop_ctx, val, ctx, kwp, cfg, ref_stack)
 
 
 def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     prefix = 0
     dynamic = False
-    for c in _conjunctive_contributors(schema, cfg):
+    for c in _conjunctive_contributors(schema, cfg, ref_stack):
         if not isinstance(c, dict):
             continue
         items = c.get("items")
@@ -1255,19 +1213,21 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
 def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     factory = ctx.element_ctx_factory()
     arr = ctx.arr()
+    ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
+
+    def evaluated(x: Column, i: Column) -> Cond:
+        return _evaluated(schema, "unevaluatedItems", _item_conds(x, i, factory), ctx, cfg, ref_stack)
 
     def elem_ok(x: Column, i: Column) -> Column:
-        ev = _item_evaluated(schema, x, i, ctx, cfg, ref_stack)
-        c = compile_node(val, factory(x, i), kwp, cfg, ref_stack)
-        return B(or_(ev, c.ok))
+        ev = evaluated(x, i)
+        return B(or_(ev, ok_of(factory(x, i))))
 
     ok = F.forall(F.transform(arr, elem_ok), lambda b: b)
     if cfg.want_viols:
 
         def elem_viols(x: Column, i: Column) -> Column:
-            ev = _item_evaluated(schema, x, i, ctx, cfg, ref_stack)
-            c = compile_node(val, factory(x, i), kwp, cfg, ref_stack)
-            return F.when(B(ev), empty_viols()).otherwise(c.viols_col())
+            ev = evaluated(x, i)
+            return F.when(B(ev), empty_viols()).otherwise(viols_of(factory(x, i)))
 
         viols = F.when(B(ok), empty_viols()).otherwise(
             F.flatten(F.transform(arr, elem_viols)).cast(VIOLS_DT)
