@@ -185,13 +185,25 @@ def infer_json_stats(
     ``max_enum`` distinct values, else NULL. All floats are
     milli-quantized bigints (oracle bit-stability convention).
     """
+    prof = _profile(df, json_col, max_keys, max_enum)
+    return (
+        prof.withColumn("enum_csv", F.array_join("enum_vals", "|"))
+        .drop("enum_vals")
+        .orderBy("json_key")
+    )
+
+
+def _profile(df: DataFrame, json_col: str, max_keys: int, max_enum: int) -> DataFrame:
+    """``infer_json_stats`` rows, unordered, with the enum carried as
+    ``enum_vals``: the sorted string values as an array (no separator
+    can collide with a value)."""
     keys, _skipped, n_objects = census_keys(df, json_col, max_keys)
     if not keys:
         schema = (
             "json_key string, n_present long, required boolean, "
             "types_csv string, n_null long, int_lo long, int_hi long, "
             "num_lo_milli long, num_hi_milli long, str_maxlen long, "
-            "n_distinct_str long, enum_csv string"
+            "n_distinct_str long, enum_vals array<string>"
         )
         return df.sparkSession.createDataFrame([], schema)
     ex = _exploded(df, json_col, keys)
@@ -223,16 +235,14 @@ def infer_json_stats(
         sv.withColumn("_r", F.row_number().over(w))
         .where(F.col("_r") <= max_enum + 1)
         .groupBy("json_key")
-        .agg(F.array_join(F.array_sort(F.collect_list("sval")), "|")
-             .alias("_enum_all"),
-             F.count(F.lit(1)).alias("_n_top"))
+        .agg(F.array_sort(F.collect_list("sval")).alias("_enum_all"))
     )
     enum = (
         nd.join(topv, "json_key", "left")
         .select(
             "json_key", "n_distinct_str",
             F.when(F.col("n_distinct_str") <= max_enum, F.col("_enum_all"))
-            .alias("enum_csv"),
+            .alias("enum_vals"),
         )
     )
 
@@ -245,9 +255,8 @@ def infer_json_stats(
             "num_lo_milli", "num_hi_milli", "str_maxlen",
             F.coalesce("n_distinct_str", F.lit(0)).cast("long")
             .alias("n_distinct_str"),
-            "enum_csv",
+            "enum_vals",
         )
-        .orderBy("json_key")
     )
 
 
@@ -268,7 +277,7 @@ def infer_json_schema(
     trade-off (new data may legally exceed them); pass ``bounds=False``
     for a types+required-only contract.
     """
-    rows = infer_json_stats(df, json_col, max_keys, max_enum).collect()
+    rows = _profile(df, json_col, max_keys, max_enum).orderBy("json_key").collect()
     props: dict = {}
     required = []
     for r in rows:
@@ -285,8 +294,8 @@ def infer_json_schema(
         if bounds and types == ["string"]:
             if r["str_maxlen"] is not None:
                 sub["maxLength"] = r["str_maxlen"]
-            if r["enum_csv"] is not None and r["enum_csv"] != "":
-                sub["enum"] = r["enum_csv"].split("|")
+            if r["enum_vals"]:
+                sub["enum"] = list(r["enum_vals"])
         props[r["json_key"]] = sub
         if r["required"]:
             required.append(r["json_key"])

@@ -760,16 +760,18 @@ def _k_pattern_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack)
 
 
 def _k_additional_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    declared = set(schema.get("properties", {}) or {})
-    patterns = [p for p in (schema.get("patternProperties", {}) or {})]
+    declared = list(schema.get("properties") or {})
+    patterns = list(schema.get("patternProperties") or {})
     return _k_extra_properties(declared, patterns, val, ctx, kwp, cfg, ref_stack)
 
 
 def _k_extra_properties(
-    declared: set, patterns: list, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack
+    declared: list, patterns: list, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack
 ) -> Compiled:
     """Shared body of additionalProperties and (static) unevaluatedProperties:
-    apply ``val`` to every property not in ``declared`` / matching ``patterns``."""
+    apply ``val`` to every property not in ``declared`` / matching ``patterns``.
+    ``declared`` keeps schema order, so the plan text is the same in every
+    process (a set would follow the string-hash seed)."""
     from jsonschema_spark.functions.strings import permissive_search_py
 
     static_names = _static_prop_names(ctx)
@@ -795,7 +797,7 @@ def _k_extra_properties(
         raise SchemaError("additionalProperties unsupported for this context")
     keys, prop_ctx = entries
     is_extra = lambda k: and_(  # noqa: E731
-        ~k.isin(list(declared)) if declared else True,
+        ~k.isin(declared) if declared else True,
         *[not_(pattern_ok(k, p)) for p in patterns],
     )
     extra_keys = F.filter(keys, lambda k: B(is_extra(k)))
@@ -1133,7 +1135,7 @@ def _item_conds(x: Column, i: Column, factory):
 
 
 def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    names: set = set()
+    names: dict = {}  # ordered set: declared names in schema order
     patterns: list = []
     dynamic = False
     for c in _conjunctive_contributors(schema, cfg, ref_stack):
@@ -1142,7 +1144,7 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
         if "additionalProperties" in c:
             # every remaining property is already evaluated (or rejected)
             return Compiled(True)
-        names.update((c.get("properties") or {}).keys())
+        names.update(dict.fromkeys(c.get("properties") or {}))
         patterns.extend((c.get("patternProperties") or {}).keys())
         for k in _BRANCHING_KEYS:
             v = c.get(k)
@@ -1151,7 +1153,7 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
             ):
                 dynamic = True
     if not dynamic:
-        return _k_extra_properties(names, patterns, val, ctx, kwp, cfg, ref_stack)
+        return _k_extra_properties(list(names), patterns, val, ctx, kwp, cfg, ref_stack)
     return _k_unevaluated_properties_dynamic(schema, val, ctx, kwp, cfg, ref_stack)
 
 

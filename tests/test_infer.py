@@ -160,3 +160,15 @@ def test_infer_validate_round_trip(spark):
         [('{"i": "not an int", "s": "aa", "f": 1.5, "b": true, "n": null, '
           '"o": {}, "a": [], "mix": 1}',)], "p string")
     assert validate(bad, schema, doc_col="p").collect()[0]["valid"] is False
+
+
+def test_enum_values_containing_separator_round_trip(spark):
+    """Enum values travel as an array: a value holding the '|' that
+    enum_csv joins on stays one member, and its document validates."""
+    rows = ['{"s": "a|b"}', '{"s": "c"}']
+    df = spark.createDataFrame([(r,) for r in rows], "p string")
+    schema = infer_json_schema(df, "p")
+    assert schema["properties"]["s"]["enum"] == ["a|b", "c"]
+    v = validate(df, schema, doc_col="p")
+    assert [r["valid"] for r in v.collect()] == [True, True]
+    assert _stats(spark, rows)["s"]["enum_csv"] == "a|b|c"

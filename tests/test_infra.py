@@ -444,6 +444,30 @@ def test_annotations_dropped_from_failing_branches(spark):
     assert "/anyOf/0/title" in kws and "/anyOf/1/title" not in kws
 
 
+def test_annotations_follow_dynamic_refs(spark):
+    """Annotations are collected from every applied subschema, including
+    $dynamicRef / $recursiveRef targets."""
+    from jsonschema_spark import annotations
+
+    schema = {
+        "$dynamicRef": "#node",
+        "$defs": {"node": {"$dynamicAnchor": "node", "title": "dynamic target",
+                           "type": "object"}},
+    }
+    df = spark.createDataFrame([(1, "{}"), (2, "5")], "id long, doc string")
+    rows = annotations(df, schema, ["id"], doc_col="doc").collect()
+    got = {(r["id"], r["keywordLocation"], r["annotation"]) for r in rows}
+    # a failing target (id 2 is not an object) drops its annotations
+    assert got == {(1, "/$dynamicRef/title", '["dynamic target"]')}
+
+    recursive = {"$recursiveAnchor": True, "title": "root",
+                 "properties": {"child": {"$recursiveRef": "#"}}}
+    df = spark.createDataFrame([(1, '{"child": {}}')], "id long, doc string")
+    rows = annotations(df, recursive, ["id"], doc_col="doc").collect()
+    locs = {(r["keywordLocation"], r["instanceLocation"]) for r in rows}
+    assert ("/properties/child/$recursiveRef/title", "/child") in locs
+
+
 def test_format_annotation_mode(spark):
     from jsonschema_spark import annotations, compile_schema
 

@@ -250,3 +250,19 @@ def test_tree_unique_items_deep(spark):
         '{"xs": [true, 1]}',                          # boolean vs number ⇒ unique
         '{"xs": [{"a":1}, {"a":2}]}',
     ) == [False, False, True, True, True]
+
+
+def test_tree_property_verdicts(spark):
+    """property_verdicts on JSON documents: one verdict per property, and
+    a missing required key or an unparseable document fails it."""
+    from jsonschema_spark import property_verdicts
+
+    schema = {
+        "required": ["id"],
+        "properties": {"id": {"type": "integer"}, "tags": {"items": {"type": "string"}}},
+    }
+    df = docs(spark, '{"id": 1, "tags": ["a"]}', '{"id": "x", "tags": [1]}', '{"tags": []}', "{oops")
+    out = property_verdicts(df, schema, doc_col="doc").orderBy("i")
+    assert out.columns == ["i", "doc", "ok_id", "ok_tags"]
+    assert [(r.ok_id, r.ok_tags) for r in out.collect()] == [
+        (True, True), (False, False), (False, True), (False, True)]
