@@ -76,15 +76,19 @@ def _unbind(df: DataFrame, doc_col: Optional[str], *cols: str) -> DataFrame:
 
 
 def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
-             short_circuit: bool = True) -> tuple[Column, Column]:
-    """``(valid, violations)`` columns of ``cs`` over a bound instance; an
-    unparseable document fails with the parse message alone."""
+             short_circuit: bool = True) -> tuple[Column, Optional[Column]]:
+    """``(valid, violations)`` columns of ``cs`` over a bound instance
+    (violations None in fast mode); an unparseable document fails with the
+    parse message alone."""
     compiled = compile_node(cs.schema, ctx, "", cs._cfg(mode, short_circuit))
+    ok = B(and_(parse_ok, compiled.ok))
+    if mode == "fast":
+        return ok, None
     viols = compiled.viols_col()
     if parse_ok is not True:
         parse_viol = F.array(_viol_struct(cs.base_uri, "", "", F.lit(_PARSE_FAIL_MSG))).cast(VIOLS_DT)
         viols = F.when(~parse_ok, parse_viol).otherwise(viols)
-    return B(and_(parse_ok, compiled.ok)), viols
+    return ok, viols
 
 
 def annotate(

@@ -84,7 +84,11 @@ def test_plan_text_is_hash_seed_independent():
                          stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
         for seed in ("0", "1")
     ]
-    outs = [p.communicate(timeout=300)[0] for p in procs]
+    try:
+        outs = [p.communicate(timeout=300)[0] for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
     assert all(p.returncode == 0 for p in procs)
     texts = [_norm(o) for o in outs]
     assert texts[0].count("\n") == 2 and texts[0] == texts[1]
