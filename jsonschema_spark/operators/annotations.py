@@ -11,9 +11,10 @@ here each node's entries are gated on that node's fast verdict.
 
 Scope (documented): annotations at the root node and recursively through
 properties / allOf / anyOf / oneOf / if-then-else / dependentSchemas /
-$ref / $dynamicRef / $recursiveRef subschemas. Array-element annotation locations are out of scope.
-Property-name lists are emitted in sorted order (the reference emits in
-evaluation order; sorting keeps the output deterministic here).
+$ref / $dynamicRef / $recursiveRef subschemas. Array-element annotation
+locations are out of scope. Property-name lists are emitted in sorted
+order (the reference emits in evaluation order; sorting keeps the output
+deterministic here).
 """
 
 from __future__ import annotations

@@ -1071,7 +1071,7 @@ def _evaluated(schema, uneval: str, local, ctx: Ctx, cfg: Config, ref_stack,
     propagate."""
     if not isinstance(schema, dict):
         return False
-    conds: list[Cond] = list(local(schema, cfg, ref_stack))
+    conds = local(schema, cfg, ref_stack)
     if nested and uneval in schema:
         conds.append(True)
 
@@ -1221,8 +1221,7 @@ def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Con
         return _evaluated(schema, "unevaluatedItems", _item_conds(x, i, factory), ctx, cfg, ref_stack)
 
     def elem_ok(x: Column, i: Column) -> Column:
-        ev = evaluated(x, i)
-        return B(or_(ev, ok_of(factory(x, i))))
+        return B(or_(evaluated(x, i), ok_of(factory(x, i))))
 
     ok = F.forall(F.transform(arr, elem_ok), lambda b: b)
     if cfg.want_viols:
