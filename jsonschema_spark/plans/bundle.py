@@ -14,6 +14,8 @@ import copy
 import re
 from typing import Union
 
+from jsonschema_spark.plans.upgrade import _rewrite_refs, _walk_schema
+
 
 def _slug(uri: str, taken: set) -> str:
     base = re.sub(r"[^A-Za-z0-9_.-]+", "-", uri.split("://")[-1]).strip("-") or "schema"
@@ -24,47 +26,27 @@ def _slug(uri: str, taken: set) -> str:
     return name
 
 
-def _external_refs(node, out: set) -> None:
-    if isinstance(node, dict):
+def _external_refs(doc) -> set:
+    out: set = set()
+
+    def fn(node):
         ref = node.get("$ref")
         if isinstance(ref, str) and not ref.startswith("#"):
             out.add(ref.partition("#")[0])
-        for v in node.values():
-            _external_refs(v, out)
-    elif isinstance(node, list):
-        for x in node:
-            _external_refs(x, out)
+
+    _walk_schema(doc, fn)
+    return out
 
 
-def _rewrite(node, mapping: dict[str, str]) -> None:
-    if isinstance(node, dict):
+def _rewrite(doc, mapping: dict[str, str]) -> None:
+    def fn(node):
         ref = node.get("$ref")
         if isinstance(ref, str) and not ref.startswith("#"):
             uri, _, frag = ref.partition("#")
             if uri in mapping:
                 node["$ref"] = f"#/$defs/{mapping[uri]}{frag}"
-        for v in node.values():
-            _rewrite(v, mapping)
-    elif isinstance(node, list):
-        for x in node:
-            _rewrite(x, mapping)
 
-
-def _rewrite_local(node, prefix: str) -> None:
-    """Rebase an inlined document's fragment-pointer refs (``#/...`` or
-    bare ``#``) under its new ``$defs/<slug>`` home. Plain-name ``#anchor``
-    refs are left untouched: ``$anchor`` resolution is document-wide, so
-    the anchor stays resolvable after inlining (prefixing would forge a
-    broken pointer like ``#/$defs/<slug>name``)."""
-    if isinstance(node, dict):
-        ref = node.get("$ref")
-        if isinstance(ref, str) and (ref == "#" or ref.startswith("#/")):
-            node["$ref"] = prefix + ref[1:]
-        for v in node.values():
-            _rewrite_local(v, prefix)
-    elif isinstance(node, list):
-        for x in node:
-            _rewrite_local(x, prefix)
+    _walk_schema(doc, fn)
 
 
 def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
@@ -79,9 +61,7 @@ def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
     frontier_docs = [out]
     while frontier_docs:
         doc = frontier_docs.pop()
-        refs: set = set()
-        _external_refs(doc, refs)
-        for uri in sorted(refs):
+        for uri in sorted(_external_refs(doc)):
             if uri in mapping:
                 continue
             if uri not in resolver:
@@ -92,9 +72,12 @@ def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
             inlined = copy.deepcopy(resolver[uri])
             if isinstance(inlined, dict):
                 inlined.pop("$schema", None)
-                # the inlined document's own local refs must now resolve
-                # inside its new home under $defs/<slug>
-                _rewrite_local(inlined, f"#/$defs/{slug}")
+                # the inlined document's own pointer refs (``#/...`` or
+                # bare ``#``) now resolve inside its new home under
+                # $defs/<slug>. Plain-name ``#anchor`` refs stay as they
+                # are: anchors resolve document-wide, and prefixing would
+                # forge a broken pointer like ``#/$defs/<slug>name``.
+                _rewrite_refs(inlined, {"#": f"#/$defs/{slug}"})
             out.setdefault("$defs", {})[slug] = inlined
             frontier_docs.append(inlined)
     _rewrite(out, mapping)

@@ -22,7 +22,7 @@ import copy
 from typing import Union
 
 from jsonschema_spark.functions.canonical import canonical_dumps
-from jsonschema_spark.plans.upgrade import _walk_schema
+from jsonschema_spark.plans.upgrade import _walk_schema, subschemas
 
 _ALL_TYPES = {"null", "boolean", "integer", "number", "string", "array", "object"}
 
@@ -166,13 +166,9 @@ def _is_unsatisfiable(node: dict) -> bool:
 
 
 def _mentions_unevaluated(node) -> bool:
-    if isinstance(node, dict):
-        if "unevaluatedProperties" in node or "unevaluatedItems" in node:
-            return True
-        return any(_mentions_unevaluated(v) for v in node.values())
-    if isinstance(node, list):
-        return any(_mentions_unevaluated(v) for v in node)
-    return False
+    return isinstance(node, dict) and (
+        "unevaluatedProperties" in node or "unevaluatedItems" in node
+        or any(_mentions_unevaluated(sub) for _, sub in subschemas(node)))
 
 
 _NO_PROT: tuple[set, set] = (set(), set())
@@ -673,7 +669,7 @@ def _rewrite_node(node: dict, changed: list, annotations_matter: bool = False,
                     continue
                 applies = (bucket in declared
                            or (bucket == "number" and "integer" in declared))
-                if not applies and not _drop_blocked(node[kw], prot):
+                if not applies and not _drop_blocked(node, kw, prot):
                     node.pop(kw)
                     mark()
     # enum_drop_redundant_validation / non_applicable_enum_validation_keywords:
@@ -759,17 +755,12 @@ def _rewrite_node(node: dict, changed: list, annotations_matter: bool = False,
         mark()
 
 
-def _collect_refs(node, out: set) -> None:
-    if isinstance(node, dict):
-        for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-            v = node.get(kw)
-            if isinstance(v, str):
-                out.add(v)
-        for v in node.values():
-            _collect_refs(v, out)
-    elif isinstance(node, list):
-        for v in node:
-            _collect_refs(v, out)
+def _collect_refs(node) -> list:
+    """Every reference string under ``node``, one entry per use."""
+    out: list = []
+    _walk_schema(node, lambda n: out.extend(
+        n[kw] for kw in ("$ref", "$dynamicRef", "$recursiveRef") if isinstance(n.get(kw), str)))
+    return out
 
 
 def _unescape_ptr(seg: str) -> str:
@@ -783,8 +774,7 @@ def _pointer_protection(root) -> tuple[set, set]:
     pointer would dangle) nor drop a targeted subtree. Recomputed per
     fixpoint iteration; id-based, so a subtree that a rule MOVES keeps
     its protection for the rest of the pass."""
-    refs: set = set()
-    _collect_refs(root, refs)
+    refs = set(_collect_refs(root))
     ancestors: set = set()
     targets: set = set()
     for r in refs:
@@ -819,22 +809,22 @@ def _clear_blocked(node, prot) -> bool:
     return id(node) in prot[0] or _has_identifiers(node)
 
 
-def _drop_blocked(sub, prot) -> bool:
-    """Dropping a keyword's subtree outright: blocked when a pointer
-    targets it, resolves through it, or it carries identifiers."""
-    return id(sub) in prot[0] or id(sub) in prot[1] or _has_identifiers(sub)
+def _drop_blocked(node: dict, kw: str, prot) -> bool:
+    """Dropping keyword ``kw``'s subtree outright: blocked when a pointer
+    targets it, resolves through it, or a subschema under it carries
+    identifiers."""
+    sub = node[kw]
+    return id(sub) in prot[0] or id(sub) in prot[1] or any(
+        ptr.split("/")[1] == kw and _has_identifiers(child)
+        for ptr, child in subschemas(node))
 
 
 def _has_identifiers(node) -> bool:
-    """An entry carrying $id/$anchor/$dynamicAnchor (or nesting one) may be
+    """A schema carrying $id/$anchor/$dynamicAnchor (or nesting one) may be
     referenced by URI or anchor name — never safe to drop by pointer."""
-    if isinstance(node, dict):
-        if any(k in node for k in ("$id", "$anchor", "$dynamicAnchor")):
-            return True
-        return any(_has_identifiers(v) for v in node.values())
-    if isinstance(node, list):
-        return any(_has_identifiers(v) for v in node)
-    return False
+    return isinstance(node, dict) and (
+        any(k in node for k in ("$id", "$anchor", "$dynamicAnchor"))
+        or any(_has_identifiers(sub) for _, sub in subschemas(node)))
 
 
 def _drop_orphan_defs(root: dict, changed: list) -> None:
@@ -842,8 +832,7 @@ def _drop_orphan_defs(root: dict, changed: list) -> None:
     entries no pointer reference reaches. Conservative: any non-pointer
     reference in the document (anchor or absolute URI) or an entry with
     identifiers disables dropping entirely."""
-    refs: set = set()
-    _collect_refs(root, refs)
+    refs = set(_collect_refs(root))
     if any(not r.startswith("#/") for r in refs):
         return  # anchors / external URIs could reach defs invisibly
     for kw in ("$defs", "definitions"):
@@ -887,29 +876,19 @@ def _normalize_dialect_uri(s: str) -> str:
 
 
 def _doc_has_recursive_anchor(root) -> bool:
-    if isinstance(root, dict):
-        if root.get("$recursiveAnchor") is True:
-            return True
-        return any(_doc_has_recursive_anchor(v) for v in root.values())
-    if isinstance(root, list):
-        return any(_doc_has_recursive_anchor(v) for v in root)
-    return False
+    return isinstance(root, dict) and (
+        root.get("$recursiveAnchor") is True
+        or any(_doc_has_recursive_anchor(sub) for _, sub in subschemas(root)))
 
 
 def _doc_dynamic_anchor_names(root) -> set:
-    names = set()
+    names: set = set()
 
-    def walk(n):
-        if isinstance(n, dict):
-            if isinstance(n.get("$dynamicAnchor"), str):
-                names.add(n["$dynamicAnchor"])
-            for v in n.values():
-                walk(v)
-        elif isinstance(n, list):
-            for v in n:
-                walk(v)
+    def fn(n):
+        if isinstance(n.get("$dynamicAnchor"), str):
+            names.add(n["$dynamicAnchor"])
 
-    walk(root)
+    _walk_schema(root, fn)
     return names
 
 
@@ -951,8 +930,7 @@ def _root_passes(out: dict, changed: list) -> None:
                         n[exkw] = n.pop(bkw)
                     changed.append(True)
         _walk_schema(out, ex_bool)
-    refs: set = set()
-    _collect_refs(out, refs)
+    refs = set(_collect_refs(out))
     # definitions_to_defs: rename when no reference could observe the path
     if not any("definitions" in r for r in refs):
         def rn(n):
@@ -1007,23 +985,9 @@ def _root_passes(out: dict, changed: list) -> None:
     # carrying no identifiers and no further references, inlines as an
     # allOf conjunct ($ref is an in-place applicator — same annotations);
     # the orphaned definition then cascades away.
-    refs = set()
-    all_refs: list = []
-
-    def cr(n):
-        if isinstance(n, dict):
-            for kw in ("$ref", "$dynamicRef", "$recursiveRef"):
-                if isinstance(n.get(kw), str):
-                    all_refs.append(n[kw])
-            for v in n.values():
-                cr(v)
-        elif isinstance(n, list):
-            for v in n:
-                cr(v)
-    cr(out)
     from collections import Counter
 
-    counts = Counter(all_refs)
+    counts = Counter(_collect_refs(out))
 
     def inline(n):
         rv = n.get("$ref")
@@ -1036,11 +1000,7 @@ def _root_passes(out: dict, changed: list) -> None:
         target = out.get("$defs", {}).get(name) if isinstance(out.get("$defs"), dict) else None
         if not isinstance(target, dict) or target is n:
             return
-        t_refs: list = []
-        saved, all_refs[:] = all_refs[:], []
-        cr(target)
-        t_refs, all_refs[:] = all_refs[:], saved
-        if t_refs or _has_identifiers(target):
+        if _collect_refs(target) or _has_identifiers(target):
             return   # recursion / URI-reachable content: keep the ref
         n.pop("$ref")
         n.setdefault("allOf", []).append(copy.deepcopy(target))

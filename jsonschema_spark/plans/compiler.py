@@ -51,6 +51,7 @@ from jsonschema_spark.plans.context import (
     not_,
     or_,
 )
+from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
 
 VIOL_FIELDS = "keywordLocation:string,absoluteKeywordLocation:string,instanceLocation:string,error:string"
 VIOL_STRUCT_DT = f"struct<{VIOL_FIELDS}>"
@@ -273,18 +274,14 @@ def _resource_anchors(root, name: str, dynamic_only: bool):
     hits = []
 
     def walk(n, is_root):
-        if isinstance(n, dict):
-            if not is_root and isinstance(n.get("$id"), str):
-                return
-            if n.get("$dynamicAnchor") == name or (
-                not dynamic_only and n.get("$anchor") == name
-            ):
-                hits.append(n)
-            for v in n.values():
-                walk(v, False)
-        elif isinstance(n, list):
-            for x in n:
-                walk(x, False)
+        if not isinstance(n, dict) or (not is_root and isinstance(n.get("$id"), str)):
+            return
+        if n.get("$dynamicAnchor") == name or (
+            not dynamic_only and n.get("$anchor") == name
+        ):
+            hits.append(n)
+        for _, sub in subschemas(n):
+            walk(sub, False)
 
     walk(root, True)
     return hits
@@ -334,10 +331,6 @@ def _resolve_dynamic_ref(key: str, val, cfg: Config):
 _TYPE_NAMES = {"null", "boolean", "integer", "number", "string", "array", "object"}
 
 
-def _ptr_escape(token: str) -> str:
-    return token.replace("~", "~0").replace("/", "~1")
-
-
 def _walk_pointer(root, pointer: str, ref: str):
     node: Union[dict, bool, list] = root
     if pointer:
@@ -353,28 +346,21 @@ def _walk_pointer(root, pointer: str, ref: str):
 
 
 def _find_anchor(node, name: str):
-    if isinstance(node, dict):
-        if node.get("$anchor") == name:
-            return node
-        for v in node.values():
-            hit = _find_anchor(v, name)
-            if hit is not None:
-                return hit
-    elif isinstance(node, list):
-        for x in node:
-            hit = _find_anchor(x, name)
-            if hit is not None:
-                return hit
+    if not isinstance(node, dict):
+        return None
+    if node.get("$anchor") == name:
+        return node
+    for _, sub in subschemas(node):
+        hit = _find_anchor(sub, name)
+        if hit is not None:
+            return hit
     return None
 
 
 def _collect_embedded_resources(node, base: str, out: dict, is_root: bool = True) -> None:
     """uri → subschema for every embedded `$id` resource (nested scopes
-    compose: an inner $id resolves against its enclosing base). Walks
-    SCHEMA positions only — const/enum data values are never resources."""
+    compose: an inner $id resolves against its enclosing base)."""
     from urllib.parse import urljoin
-
-    from jsonschema_spark.plans.upgrade import _SCHEMA_LISTS, _SCHEMA_MAPS, _SCHEMA_VALUES
 
     if not isinstance(node, dict):
         return
@@ -382,21 +368,8 @@ def _collect_embedded_resources(node, base: str, out: dict, is_root: bool = True
     if isinstance(sid, str) and not is_root:
         base = urljoin(base or "", sid)
         out.setdefault(base, node)
-    for key in _SCHEMA_MAPS:
-        if isinstance(node.get(key), dict):
-            for sub in node[key].values():
-                _collect_embedded_resources(sub, base, out, False)
-    for key in _SCHEMA_VALUES:
-        v = node.get(key)
-        if isinstance(v, dict):
-            _collect_embedded_resources(v, base, out, False)
-        elif isinstance(v, list):
-            for x in v:
-                _collect_embedded_resources(x, base, out, False)
-    for key in _SCHEMA_LISTS:
-        if isinstance(node.get(key), list):
-            for x in node[key]:
-                _collect_embedded_resources(x, base, out, False)
+    for _, sub in subschemas(node):
+        _collect_embedded_resources(sub, base, out, False)
 
 
 def _resolve_ref(ref: str, cfg: Config) -> tuple[dict | bool, Config]:
@@ -1028,13 +1001,15 @@ _BRANCHING_KEYS = ("anyOf", "oneOf", "not", "if", "then", "else", "dependentSche
 
 
 def _subtree_mentions(node, keys: tuple) -> bool:
-    if isinstance(node, dict):
-        if any(k in node for k in keys):
-            return True
-        return any(_subtree_mentions(v, keys) for v in node.values())
-    if isinstance(node, list):
-        return any(_subtree_mentions(x, keys) for x in node)
-    return False
+    return isinstance(node, dict) and (
+        any(k in node for k in keys)
+        or any(_subtree_mentions(sub, keys) for _, sub in subschemas(node)))
+
+
+def _branches_mention(schema: dict, keys: tuple) -> bool:
+    """Whether a subschema under one of ``_BRANCHING_KEYS`` uses ``keys``."""
+    return any(ptr.split("/")[1] in _BRANCHING_KEYS and _subtree_mentions(sub, keys)
+               for ptr, sub in subschemas(schema))
 
 
 def _conjunctive_contributors(schema, cfg: Config, ref_stack: tuple) -> list:
@@ -1146,12 +1121,10 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
             return Compiled(True)
         names.update(dict.fromkeys(c.get("properties") or {}))
         patterns.extend((c.get("patternProperties") or {}).keys())
-        for k in _BRANCHING_KEYS:
-            v = c.get(k)
-            if v is not None and _subtree_mentions(
-                v, ("properties", "patternProperties", "additionalProperties", "unevaluatedProperties")
-            ):
-                dynamic = True
+        if _branches_mention(
+            c, ("properties", "patternProperties", "additionalProperties", "unevaluatedProperties")
+        ):
+            dynamic = True
     if not dynamic:
         return _k_extra_properties(list(names), patterns, val, ctx, kwp, cfg, ref_stack)
     return _k_unevaluated_properties_dynamic(schema, val, ctx, kwp, cfg, ref_stack)
@@ -1201,12 +1174,8 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
         pi = items if isinstance(items, list) else c.get("prefixItems")
         if isinstance(pi, list):
             prefix = max(prefix, len(pi))
-        for k in _BRANCHING_KEYS:
-            v = c.get(k)
-            if v is not None and _subtree_mentions(
-                v, ("items", "prefixItems", "contains", "unevaluatedItems")
-            ):
-                dynamic = True
+        if _branches_mention(c, ("items", "prefixItems", "contains", "unevaluatedItems")):
+            dynamic = True
     if not dynamic:
         return _k_items(val, ctx, kwp, cfg, prefix, ref_stack)
     return _k_unevaluated_items_dynamic(schema, val, ctx, kwp, cfg, ref_stack)

@@ -18,7 +18,8 @@ from typing import Optional, Union
 
 from pyspark.sql import types as T
 
-from jsonschema_spark.plans.compiler import _KEYWORD_ORDER, _ptr_escape
+from jsonschema_spark.plans.compiler import _KEYWORD_ORDER
+from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
 
 _APPLICATORS = {
     "properties", "patternProperties", "additionalProperties", "propertyNames",
@@ -45,13 +46,17 @@ def inspect_schema(
     """Flat listing of every keyword location:
     (keywordLocation, keyword, value, strategy)."""
     out: list[dict] = []
-    fields = {f.name: f.dataType for f in df_schema.fields} if df_schema is not None else {}
+    fields = ({f"/properties/{_ptr_escape(f.name)}": f.dataType for f in df_schema.fields}
+              if df_schema is not None else {})
 
     def walk(node, kw: str, col_dtype):
         if not isinstance(node, dict):
             out.append({"keywordLocation": kw, "keyword": "<boolean schema>",
                         "value": node, "strategy": "static"})
             return
+        children: dict = {}
+        for suffix, sub in subschemas(node):
+            children.setdefault(suffix.split("/")[1], []).append((suffix, sub))
         for key in _KEYWORD_ORDER:
             if key not in node:
                 continue
@@ -63,21 +68,16 @@ def inspect_schema(
                 "value": val if not isinstance(val, (dict, list)) else f"<{type(val).__name__}>",
                 "strategy": _strategy(key, val, col_dtype),
             })
-            if key == "properties" and isinstance(val, dict):
-                for name, sub in val.items():
-                    walk(sub, f"{kwp}/{_ptr_escape(name)}", fields.get(name) if kw == "" else None)
-            elif key in ("items", "additionalProperties", "propertyNames", "not", "contains") and isinstance(val, dict):
-                walk(val, kwp, None)
-            elif key in ("allOf", "anyOf", "oneOf", "prefixItems") and isinstance(val, list):
-                for i, sub in enumerate(val):
-                    walk(sub, f"{kwp}/{i}", col_dtype if key != "prefixItems" else None)
-            elif key in ("patternProperties", "dependentSchemas") and isinstance(val, dict):
-                for pat, sub in val.items():
-                    walk(sub, f"{kwp}/{_ptr_escape(pat)}", None)
-            elif key == "if":
-                for branch in ("if", "then", "else"):
-                    if branch in node:
-                        walk(node[branch], f"{kw}/{branch}", col_dtype)
+            # then/else compile with their `if`; combinator branches and
+            # the conditional see the node's own column, root properties
+            # their table column, every other position no column type
+            for branch in ("if", "then", "else") if key == "if" else (key,):
+                for suffix, sub in children.get(branch, ()):
+                    if branch in ("allOf", "anyOf", "oneOf", "if", "then", "else"):
+                        dtype = col_dtype
+                    else:
+                        dtype = fields.get(suffix) if kw == "" else None
+                    walk(sub, kw + suffix, dtype)
     walk(schema, "", None)
     return out
 

@@ -31,6 +31,7 @@ import re
 from typing import Union
 
 from jsonschema_spark.functions.canonical import canonical_dumps
+from jsonschema_spark.plans.upgrade import _walk_schema, subschemas
 
 _BOUND_PAIRS = [
     ("minimum", "maximum"),
@@ -425,17 +426,8 @@ def _walk(node: Union[dict, bool], path: str, out: list[dict], root=None,
     out.extend(_findings(node, path, dia))
     if root is not None:
         out.extend(_instance_findings(node, path, root, base, resolver))
-    for key in ("properties", "patternProperties", "dependentSchemas", "$defs", "definitions"):
-        if isinstance(node.get(key), dict):
-            for name, sub in node[key].items():
-                _walk(sub, f"{path}/{key}/{name}", out, root, base, resolver, dia)
-    for key in ("items", "additionalProperties", "propertyNames", "not", "contains", "if", "then", "else"):
-        if isinstance(node.get(key), dict):
-            _walk(node[key], f"{path}/{key}", out, root, base, resolver, dia)
-    for key in ("allOf", "anyOf", "oneOf", "prefixItems"):
-        if isinstance(node.get(key), list):
-            for i, sub in enumerate(node[key]):
-                _walk(sub, f"{path}/{key}/{i}", out, root, base, resolver, dia)
+    for suffix, sub in subschemas(node):
+        _walk(sub, path + suffix, out, root, base, resolver, dia)
 
 
 def lint_schema(schema: Union[dict, bool], resolver: dict = None,
@@ -476,7 +468,7 @@ def lint_fix(schema: Union[dict, bool]) -> Union[dict, bool]:
     returns a new schema.
 
     Fix rules are applied at SCHEMA positions only — the walker recurses
-    through keyword-aware applicator locations (same dispatch as ``_walk``),
+    through ``subschemas`` (the same positions ``_walk`` visits),
     never into the entries of ``properties``/``patternProperties``/``$defs``
     maps as if they were keywords, and never into ``const``/``enum``/
     ``default`` data values (a property literally named "enum" must keep
@@ -486,8 +478,6 @@ def lint_fix(schema: Union[dict, bool]) -> Union[dict, bool]:
     out = copy.deepcopy(schema)
 
     def fix(node):
-        if not isinstance(node, dict):
-            return node
         if node.get("enum") == [] and "not" not in node:
             # forbid_empty_enum.h transform: enum [] → the false schema
             node.pop("enum")
@@ -583,18 +573,6 @@ def lint_fix(schema: Union[dict, bool]) -> Union[dict, bool]:
                 node["allOf"] = kept
             else:
                 node.pop("allOf")
-        for key in ("properties", "patternProperties", "dependentSchemas", "$defs", "definitions"):
-            if isinstance(node.get(key), dict):
-                for sub in node[key].values():
-                    fix(sub)
-        for key in ("items", "additionalProperties", "propertyNames", "not", "contains",
-                    "if", "then", "else", "unevaluatedProperties", "unevaluatedItems"):
-            if isinstance(node.get(key), dict):
-                fix(node[key])
-        for key in ("allOf", "anyOf", "oneOf", "prefixItems"):
-            if isinstance(node.get(key), list):
-                for x in node[key]:
-                    fix(x)
-        return node
 
-    return fix(out)
+    _walk_schema(out, fix)
+    return out

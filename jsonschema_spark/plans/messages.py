@@ -117,7 +117,7 @@ def msg_enum(ctx: Ctx, values: list) -> Column:
 # --- strings ----------------------------------------------------------------
 
 
-def msg_regex(ctx: Ctx, pattern: str, property_name: Cond = False) -> Column:
+def msg_regex(ctx: Ctx, pattern: str) -> Column:
     return C(
         "The string value ",
         json_escape_col(ctx.str_val()),
@@ -182,32 +182,23 @@ FORMAT_LABELS = {
 # --- numbers -----------------------------------------------------------------
 
 
-def _num_repr(ctx: Ctx) -> Column:
-    return ctx.json_repr()
-
-
-def _num_tag(ctx: Ctx) -> Column:
-    # value_type_name for the instance: Real stays 'number'
-    return _tag_col(ctx)
-
-
 def msg_greater_equal(ctx: Ctx, value) -> Column:
     return C(
-        "The ", _num_tag(ctx), " value ", _num_repr(ctx),
+        "The ", _tag_col(ctx), " value ", ctx.json_repr(),
         f" was expected to be greater than or equal to the {_value_type_name(value)} {jrepr(value)}",
     )
 
 
 def msg_less_equal(ctx: Ctx, value) -> Column:
     return C(
-        "The ", _num_tag(ctx), " value ", _num_repr(ctx),
+        "The ", _tag_col(ctx), " value ", ctx.json_repr(),
         f" was expected to be less than or equal to the {_value_type_name(value)} {jrepr(value)}",
     )
 
 
 def msg_greater(ctx: Ctx, value) -> Column:
     base = C(
-        "The ", _num_tag(ctx), " value ", _num_repr(ctx),
+        "The ", _tag_col(ctx), " value ", ctx.json_repr(),
         f" was expected to be greater than the {_value_type_name(value)} {jrepr(value)}",
     )
     return F.when(ctx.num_val() == F.lit(float(value)), C(base, ", but they were equal")).otherwise(base)
@@ -215,7 +206,7 @@ def msg_greater(ctx: Ctx, value) -> Column:
 
 def msg_less(ctx: Ctx, value) -> Column:
     base = C(
-        "The ", _num_tag(ctx), " value ", _num_repr(ctx),
+        "The ", _tag_col(ctx), " value ", ctx.json_repr(),
         f" was expected to be less than the {_value_type_name(value)} {jrepr(value)}",
     )
     return F.when(ctx.num_val() == F.lit(float(value)), C(base, ", but they were equal")).otherwise(base)
@@ -223,7 +214,7 @@ def msg_less(ctx: Ctx, value) -> Column:
 
 def msg_multiple_of(ctx: Ctx, value) -> Column:
     return C(
-        "The ", _num_tag(ctx), " value ", _num_repr(ctx),
+        "The ", _tag_col(ctx), " value ", ctx.json_repr(),
         f" was expected to be divisible by the {_value_type_name(value)} {jrepr(value)}",
     )
 
@@ -304,31 +295,6 @@ def msg_dependent_required(present_name: str, required: list[str]) -> Column:
     return F.lit(
         f"Because the object value defined the property {esc(present_name)}{tail}"
     )
-
-
-def msg_property_names(ctx: Ctx) -> Column:
-    keys = ctx.obj_keys()
-    n = F.size(keys)
-    quoted = F.transform(keys, lambda k: C('"', k, '"'))
-    return (
-        F.when(
-            n == 0,
-            F.lit("The object is empty and no properties were expected to validate against the given subschema"),
-        )
-        .when(n == 1, C("The object property ", F.element_at(quoted, 1), " was expected to validate against the given subschema"))
-        .otherwise(
-            C(
-                "The object properties ",
-                F.array_join(F.slice(quoted, 1, F.greatest(n - 1, F.lit(1))), ", "),
-                ", and ",
-                F.element_at(quoted, -1),
-                " were expected to validate against the given subschema",
-            )
-        )
-    )
-
-
-# --- arrays ------------------------------------------------------------------
 
 
 def _count_items_tail(size_col: Column) -> Column:

@@ -13,11 +13,8 @@ from __future__ import annotations
 from numbers import Number
 from typing import Union
 
-_SCHEMA_KEYWORDS_SUBSCHEMA = ("items", "additionalProperties", "propertyNames",
-                              "not", "contains", "if", "then", "else")
-_SCHEMA_KEYWORDS_LIST = ("allOf", "anyOf", "oneOf", "prefixItems")
-_SCHEMA_KEYWORDS_MAP = ("properties", "patternProperties", "dependentSchemas",
-                        "$defs", "definitions")
+from jsonschema_spark.plans.upgrade import subschemas
+
 _TYPE_NAMES = {"null", "boolean", "integer", "number", "string", "array", "object"}
 
 
@@ -70,34 +67,22 @@ def metaschema_errors(schema: Union[dict, bool], path: str = "") -> list[str]:
     if ref is not None and not isinstance(ref, str):
         errs.append(f"{loc}: $ref must be a string URI-reference")
 
-    for kw in _SCHEMA_KEYWORDS_SUBSCHEMA:
-        if kw in schema and not isinstance(schema[kw], list):
-            errs.extend(metaschema_errors(schema[kw], f"{path}/{kw}"))
-    if isinstance(schema.get("items"), list):  # draft-7 tuple form
-        for i, sub in enumerate(schema["items"]):
-            errs.extend(metaschema_errors(sub, f"{path}/items/{i}"))
-    for kw in _SCHEMA_KEYWORDS_LIST:
+    for kw in ("allOf", "anyOf", "oneOf", "prefixItems"):
         v = schema.get(kw)
-        if v is not None:
-            if not isinstance(v, list) or (kw != "prefixItems" and not v):
-                errs.append(f"{loc}: {kw} must be a non-empty array of schemas")
-            else:
-                for i, sub in enumerate(v):
-                    errs.extend(metaschema_errors(sub, f"{path}/{kw}/{i}"))
-    for kw in _SCHEMA_KEYWORDS_MAP:
+        if v is not None and (not isinstance(v, list) or (kw != "prefixItems" and not v)):
+            errs.append(f"{loc}: {kw} must be a non-empty array of schemas")
+    for kw in ("properties", "patternProperties", "dependentSchemas", "$defs", "definitions"):
         v = schema.get(kw)
-        if v is not None:
-            if not isinstance(v, dict):
-                errs.append(f"{loc}: {kw} must be an object of schemas")
-            else:
-                for name, sub in v.items():
-                    errs.extend(metaschema_errors(sub, f"{path}/{kw}/{name}"))
+        if v is not None and not isinstance(v, dict):
+            errs.append(f"{loc}: {kw} must be an object of schemas")
     dr = schema.get("dependentRequired")
     if dr is not None:
         if not isinstance(dr, dict) or not all(
             isinstance(v, list) and all(isinstance(x, str) for x in v) for v in dr.values()
         ):
             errs.append(f"{loc}: dependentRequired must map property names to string arrays")
+    for suffix, sub in subschemas(schema):
+        errs.extend(metaschema_errors(sub, path + suffix))
     return errs
 
 

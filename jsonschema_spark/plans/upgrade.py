@@ -24,10 +24,14 @@ from typing import Union
 DIALECT_2020 = "https://json-schema.org/draft/2020-12/schema"
 
 
-# Keyword positions holding subschemas — the walker recurses ONLY through
-# these (never into `properties` map entries as keywords, never into
-# const/enum/default data values; a property named "definitions" is data,
-# not a keyword).
+# Keyword positions holding subschemas: the ONLY definition of schema
+# positions in the package. Every schema traversal (the compiler's anchor
+# and resource walks, bundle, canonicalize, lint, metaschema, inspect, the
+# HTTP resolver) goes through ``subschemas``; `fmt` reads the tables to
+# order keys. Values under any other keyword are data: never walk into
+# const/enum/default/examples or unknown keywords, and never read a
+# `properties` map entry as a keyword (a property named "definitions" is
+# data). Only `plans/pyeval.py`, the independent oracle, walks on its own.
 _SCHEMA_MAPS = ("properties", "patternProperties", "dependentSchemas", "$defs", "definitions")
 _SCHEMA_VALUES = ("items", "additionalItems", "additionalProperties", "propertyNames",
                   "not", "contains", "if", "then", "else",
@@ -35,32 +39,51 @@ _SCHEMA_VALUES = ("items", "additionalItems", "additionalProperties", "propertyN
 _SCHEMA_LISTS = ("allOf", "anyOf", "oneOf", "prefixItems", "extends")
 
 
+def _ptr_escape(name: str) -> str:
+    return name.replace("~", "~0").replace("/", "~1")
+
+
+def subschemas(node):
+    """Yield ``(pointer_suffix, child)`` for each direct schema position of
+    ``node``; ``pointer_suffix`` is the escaped JSON Pointer from ``node``
+    to ``child`` (``/properties/a~1b``, ``/anyOf/0``). A child is yielded
+    whatever its type, so callers see malformed positions too; only
+    `dependencies` filters, because its array and string values are
+    property names, not schemas."""
+    if not isinstance(node, dict):
+        return
+    for key in _SCHEMA_MAPS:
+        if isinstance(node.get(key), dict):
+            for name, sub in node[key].items():
+                yield f"/{key}/{_ptr_escape(name)}", sub
+    for key in _SCHEMA_VALUES:
+        if key not in node:
+            continue
+        if isinstance(node[key], list):  # legacy tuple `items`
+            for i, sub in enumerate(node[key]):
+                yield f"/{key}/{i}", sub
+        else:
+            yield f"/{key}", node[key]
+    for key in _SCHEMA_LISTS:
+        if isinstance(node.get(key), list):
+            for i, sub in enumerate(node[key]):
+                yield f"/{key}/{i}", sub
+    # draft-7 `dependencies`: schema-valued entries only
+    if isinstance(node.get("dependencies"), dict):
+        for name, sub in node["dependencies"].items():
+            if isinstance(sub, (dict, bool)):
+                yield f"/dependencies/{_ptr_escape(name)}", sub
+
+
 def _walk_schema(node, fn) -> None:
-    """Apply ``fn`` to ``node`` then recurse through schema positions only."""
+    """Apply ``fn`` to each object schema under ``node``, pre-order. A
+    node's children are read after ``fn`` returns, so ``fn`` may rewrite
+    the node it is given."""
     if not isinstance(node, dict):
         return
     fn(node)
-    for key in _SCHEMA_MAPS:
-        if isinstance(node.get(key), dict):
-            for sub in node[key].values():
-                _walk_schema(sub, fn)
-    for key in _SCHEMA_VALUES:
-        v = node.get(key)
-        if isinstance(v, dict):
-            _walk_schema(v, fn)
-        elif isinstance(v, list):  # legacy tuple `items` / `extends` list
-            for x in v:
-                _walk_schema(x, fn)
-    for key in _SCHEMA_LISTS:
-        if isinstance(node.get(key), list):
-            for x in node[key]:
-                _walk_schema(x, fn)
-    # draft-7 `dependencies`: schema-valued entries only (list values are
-    # property-name lists, not schemas)
-    if isinstance(node.get("dependencies"), dict):
-        for v in node["dependencies"].values():
-            if isinstance(v, dict):
-                _walk_schema(v, fn)
+    for _, sub in subschemas(node):
+        _walk_schema(sub, fn)
 
 
 def _rewrite_refs(node, mapping: dict[str, str]):

@@ -24,7 +24,7 @@ import json
 from typing import Callable, Optional
 from urllib.parse import urljoin, urldefrag
 
-from jsonschema_spark.plans.upgrade import _SCHEMA_LISTS, _SCHEMA_MAPS, _SCHEMA_VALUES
+from jsonschema_spark.plans.upgrade import subschemas
 
 
 def _default_fetch(uri: str, timeout: float) -> str:
@@ -59,21 +59,8 @@ def _external_refs(schema, base: str, out: set) -> None:
     ref = schema.get("$ref")
     if isinstance(ref, str) and not ref.startswith("#"):
         out.add(urldefrag(urljoin(base or "", ref))[0])
-    for key in _SCHEMA_MAPS:
-        if isinstance(schema.get(key), dict):
-            for sub in schema[key].values():
-                _external_refs(sub, base, out)
-    for key in _SCHEMA_VALUES:
-        v = schema.get(key)
-        if isinstance(v, dict):
-            _external_refs(v, base, out)
-    for key in _SCHEMA_LISTS:
-        if isinstance(schema.get(key), list):
-            for x in schema[key]:
-                _external_refs(x, base, out)
-    if isinstance(schema.get("items"), list):
-        for x in schema["items"]:
-            _external_refs(x, base, out)
+    for _, sub in subschemas(schema):
+        _external_refs(sub, base, out)
 
 
 def resolve_remote_refs(

@@ -18,7 +18,7 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
-from jsonschema_spark.operators.validate import annotate, validate
+from jsonschema_spark.operators.validate import _verdict_aggs, validate, violations
 from jsonschema_spark.plans.compiler import CompiledSchema
 
 
@@ -47,11 +47,7 @@ def windowed_verdict_counts(
     agg = (
         v.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window), *by)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("valid").cast("long")).alias("n_valid"),
-            F.sum((~F.col("valid")).cast("long")).alias("n_invalid"),
-        )
+        .agg(*_verdict_aggs())
     )
     return agg.select(
         F.col("window.start").alias("window_start"),
@@ -152,14 +148,9 @@ def violation_stream(
     id_cols: Sequence[str],
     doc_col: Optional[str] = None,
 ) -> DataFrame:
-    """Streaming violation rows (stateless explode of failing rows)."""
-    annotated = annotate(sdf, schema, doc_col=doc_col)
-    return (
-        annotated.filter(~F.col("valid"))
-        .select(*id_cols, F.explode("violations").alias("_v"))
-        .select(*id_cols, "_v.keywordLocation", "_v.absoluteKeywordLocation",
-                "_v.instanceLocation", "_v.error")
-    )
+    """Streaming violation rows: ``violations`` over a stream (a
+    stateless explode of failing rows)."""
+    return violations(sdf, schema, id_cols, doc_col=doc_col)
 
 
 def stream_sessionize(

@@ -208,6 +208,14 @@ def test_orphan_defs_dropped():
     assert "a" in s3["$defs"]
 
 
+def test_identifiers_in_data_are_not_identifiers():
+    from jsonschema_spark.plans.canonicalize import _has_identifiers
+
+    assert not _has_identifiers({"const": {"$id": "x"}})
+    assert not _has_identifiers({"enum": [{"$anchor": "a"}], "default": {"$id": "y"}})
+    assert _has_identifiers({"properties": {"p": {"$anchor": "a"}}})
+
+
 def test_double_negation_gated_on_annotations():
     # not.not → allOf would let the inner subtree's annotations escape a
     # `not` (which discards them) and flip verdicts under unevaluated*

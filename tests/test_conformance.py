@@ -193,6 +193,24 @@ CASES = [
       "else": {"maxProperties": 1}},
      [('{"mode":1,"value":2}', True), ('{"mode":1}', False),
       ('{"other":1}', True), ('{"a":1,"b":2}', False)]),
+    # --- identifiers live at schema positions only ----------------------------
+    ("$anchor inside an enum is not a real identifier",
+     {"$defs": {"anchor_in_enum": {"enum": [{"$anchor": "my_anchor", "type": "null"}]},
+                "real_identifier_in_schema": {"$anchor": "my_anchor", "type": "string"}},
+      "oneOf": [{"$ref": "#/$defs/anchor_in_enum"}, {"$ref": "#my_anchor"}]},
+     [('{"$anchor": "my_anchor", "type": "null"}', True), ('{"type": "null"}', False),
+      ('"a string"', True), ("1", False)]),
+    ("$id resolves against the nearest parent resource",
+     {"$id": "http://example.com/a.json",
+      "$defs": {"x": {"$id": "http://example.com/b/c.json",
+                      "not": {"$defs": {"y": {"$id": "d.json", "type": "number"}}}}},
+      "allOf": [{"$ref": "http://example.com/b/d.json"}]},
+     [("1", True), ('"a"', False)]),
+    ("$ref inside an enum is data, not a reference",
+     {"$defs": {"a_string": {"type": "string"}},
+      "enum": [{"$ref": "#/$defs/a_string"}]},
+     [('"this is a string"', False), ('{"type": "string"}', False),
+      ('{"$ref": "#/$defs/a_string"}', True)]),
 ]
 
 

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from jsonschema_spark import validate, verdict_counts
 from jsonschema_spark.plans.bundle import bundle
 from jsonschema_spark.plans.compiler import SchemaError, compile_schema
-from jsonschema_spark.plans.upgrade import needs_upgrade, upgrade_schema
+from jsonschema_spark.plans.upgrade import needs_upgrade, subschemas, upgrade_schema
 
 
 def test_upgrade_rewrites():
@@ -215,6 +215,39 @@ def test_bundle_preserves_anchor_refs(spark):
     df = spark.createDataFrame([("en",), ("zz",)], "lang string")
     got = {r["lang"]: r["valid"] for r in validate(df, closed).collect()}
     assert got == {"en": True, "zz": False}
+
+
+def test_subschemas_yields_schema_positions_only():
+    """Direct schema positions with escaped pointer suffixes; data under
+    const/enum/default/examples, unknown keywords and the property-name
+    lists of `dependencies` is never yielded."""
+    node = {
+        "properties": {"a/b": {"type": "integer"}, "c~d": True},
+        "items": [{"minimum": 0}],
+        "unevaluatedProperties": False,
+        "anyOf": [{"$anchor": "x"}],
+        "dependencies": {"p": ["q"], "r": {"required": ["s"]}},
+        "const": {"$id": "https://example.com/data"},
+        "enum": [{"$anchor": "y"}],
+        "default": {"$ref": "#/nowhere"},
+        "examples": [{"type": "string"}],
+        "x-unknown": {"type": "string"},
+    }
+    assert [ptr for ptr, _ in subschemas(node)] == [
+        "/properties/a~1b", "/properties/c~0d", "/items/0",
+        "/unevaluatedProperties", "/anyOf/0", "/dependencies/r",
+    ]
+    assert list(subschemas(True)) == []
+
+
+def test_bundle_ignores_refs_in_data():
+    """`$ref`s under const/default are data: no lookup, no rewrite."""
+    assert bundle({"const": {"$ref": "https://example.com/x"}}, {}) == {
+        "const": {"$ref": "https://example.com/x"}}
+    uri = "https://example.com/int.json"
+    closed = bundle({"$ref": uri, "default": {"$ref": uri}}, {uri: {"type": "integer"}})
+    assert closed["$ref"].startswith("#/$defs/")
+    assert closed["default"] == {"$ref": uri}
 
 
 RECURSIVE = {

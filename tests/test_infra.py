@@ -34,7 +34,7 @@ from jsonschema_spark.plans.serialize import (
 )
 from jsonschema_spark.plans.compiler import compile_schema
 from jsonschema_spark.sources.readers import read_instances, read_jsonl
-from jsonschema_spark.streaming.validate import windowed_verdict_counts
+from jsonschema_spark.streaming.validate import violation_stream, windowed_verdict_counts
 
 
 # --- referential -------------------------------------------------------------
@@ -158,6 +158,32 @@ def test_streaming_windowed_verdicts(spark, tmp_path):
     assert rows["2021-06-01 00:00:00"] == (10, 5)
 
 
+def test_violation_stream_matches_batch_violations(spark, tmp_path):
+    from jsonschema_spark import violations
+
+    src = str(tmp_path / "viol_src")
+    batch = spark.createDataFrame(
+        [(1, '{"a": 1, "b": "x"}'), (2, '{"a": "no"}'), (3, '{"b": 5}'), (4, "[1]")],
+        "id long, doc string")
+    batch.write.parquet(src)
+    schema = {"type": "object", "required": ["a"],
+              "properties": {"a": {"type": "integer"}, "b": {"type": "string"}}}
+    sdf = spark.readStream.schema(batch.schema).parquet(src)
+    q = (
+        violation_stream(sdf, schema, ["id"], doc_col="doc")
+        .writeStream.format("memory")
+        .queryName("violation_rows")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.sql("select * from violation_rows").collect()
+    want = violations(batch, schema, ["id"], doc_col="doc").collect()
+    assert len(want) >= 3
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 # --- readers ------------------------------------------------------------------
 
 
@@ -210,6 +236,16 @@ def test_lint_rules_and_fix():
     assert "allOf" not in fixed and fixed["minLength"] == 5 and "if" not in fixed
 
 
+def test_lint_visits_every_schema_position():
+    """lint_schema reports where lint_fix rewrites: unevaluated* included."""
+    schema = {"unevaluatedProperties": {"type": "string", "enum": ["a"]}}
+    found = {(f["path"], f["rule"]) for f in lint_schema(schema)}
+    assert ("/unevaluatedProperties", "enum_with_type") in found
+    assert "type" not in lint_fix(schema)["unevaluatedProperties"]
+    assert not any(f["path"].startswith("/const") for f in lint_schema(
+        {"const": {"type": "string", "enum": ["a"]}}))
+
+
 def test_lint_fix_ignores_data_positions():
     """Properties literally named 'enum'/'const'/'type' are data, not
     keywords — fix() must leave their sibling definitions alone; const/enum
@@ -251,6 +287,17 @@ def test_metaschema_errors():
     errs = metaschema_errors({"type": "str", "minLength": -1, "pattern": "("})
     assert len(errs) == 3
     assert not is_valid_schema({"properties": {"a": {"enum": "notalist"}}})
+
+
+def test_metaschema_checks_every_schema_position():
+    assert metaschema_errors({"unevaluatedProperties": {"type": "bogus"}}) == [
+        "/unevaluatedProperties: type must be one of "
+        "['array', 'boolean', 'integer', 'null', 'number', 'object', 'string'] "
+        "or a list thereof"]
+    assert metaschema_errors({"properties": {"a/b": {"minLength": -1}}}) == [
+        "/properties/a~1b: minLength must be a non-negative integer"]
+    # data is not a schema
+    assert metaschema_errors({"const": {"type": "bogus"}, "default": {"minLength": -1}}) == []
 
 
 def test_codegen_struct_type():
