@@ -188,7 +188,7 @@ def infer_json_stats(
     prof = _profile(df, json_col, max_keys, max_enum)
     return (
         prof.withColumn("enum_csv", F.array_join("enum_vals", "|"))
-        .drop("enum_vals")
+        .drop("enum_vals", "int_exact")
         .orderBy("json_key")
     )
 
@@ -196,14 +196,15 @@ def infer_json_stats(
 def _profile(df: DataFrame, json_col: str, max_keys: int, max_enum: int) -> DataFrame:
     """``infer_json_stats`` rows, unordered, with the enum carried as
     ``enum_vals``: the sorted string values as an array (no separator
-    can collide with a value)."""
+    can collide with a value), and ``int_exact``: whether every integer
+    occurrence fit int64, so int_lo/int_hi bound them all."""
     keys, _skipped, n_objects = census_keys(df, json_col, max_keys)
     if not keys:
         schema = (
             "json_key string, n_present long, required boolean, "
             "types_csv string, n_null long, int_lo long, int_hi long, "
             "num_lo_milli long, num_hi_milli long, str_maxlen long, "
-            "n_distinct_str long, enum_vals array<string>"
+            "n_distinct_str long, enum_vals array<string>, int_exact boolean"
         )
         return df.sparkSession.createDataFrame([], schema)
     ex = _exploded(df, json_col, keys)
@@ -215,6 +216,8 @@ def _profile(df: DataFrame, json_col: str, max_keys: int, max_enum: int) -> Data
         .cast("long").alias("n_null"),
         F.min("ival").alias("int_lo"),
         F.max("ival").alias("int_hi"),
+        (F.count("ival") == F.count(F.when(F.col("jtype") == "integer", 1)))
+        .alias("int_exact"),
         F.min("milli").alias("num_lo_milli"),
         F.max("milli").alias("num_hi_milli"),
         F.max("slen").alias("str_maxlen"),
@@ -255,7 +258,7 @@ def _profile(df: DataFrame, json_col: str, max_keys: int, max_enum: int) -> Data
             "num_lo_milli", "num_hi_milli", "str_maxlen",
             F.coalesce("n_distinct_str", F.lit(0)).cast("long")
             .alias("n_distinct_str"),
-            "enum_vals",
+            "enum_vals", "int_exact",
         )
     )
 
@@ -288,7 +291,7 @@ def infer_json_schema(
         elif types:
             sub["type"] = types
         if bounds and types == ["integer"]:
-            if r["int_lo"] is not None:
+            if r["int_lo"] is not None and r["int_exact"]:
                 sub["minimum"] = r["int_lo"]
                 sub["maximum"] = r["int_hi"]
         if bounds and types == ["string"]:

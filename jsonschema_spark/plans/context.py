@@ -179,6 +179,12 @@ class Ctx:
 # ---------------------------------------------------------------------------
 
 
+def _integral(d: Column) -> Column:
+    """A double with zero fraction. ``floor`` would cast to bigint and
+    saturate, so 2^70 would read as fractional."""
+    return d % F.lit(1.0) == F.lit(0.0)
+
+
 def _dtype_tag(dt: T.DataType) -> str:
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         return "integer"
@@ -239,8 +245,7 @@ class FlatColCtx(Ctx):
             return True
         if t == "integer" and self._tag == "number":
             # real with zero fraction counts as integer
-            d = self.col.cast("double")
-            return d == F.floor(d).cast("double")
+            return _integral(self.col.cast("double"))
         return False
 
     def str_val(self) -> Column:
@@ -463,8 +468,7 @@ class VariantCtx(Ctx):
         if t == "number":
             return is_num
         if t == "integer":
-            d = self.num_val()
-            return is_int | (is_num & (d == F.floor(d).cast("double")))
+            return is_int | (is_num & _integral(self.num_val()))
         raise ValueError(f"unknown type {t}")
 
     def str_val(self) -> Column:

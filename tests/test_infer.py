@@ -172,3 +172,17 @@ def test_enum_values_containing_separator_round_trip(spark):
     v = validate(df, schema, doc_col="p")
     assert [r["valid"] for r in v.collect()] == [True, True]
     assert _stats(spark, rows)["s"]["enum_csv"] == "a|b|c"
+
+
+def test_integer_beyond_int64_round_trip(spark):
+    """A key mixing int64 and wider integers gets no int64 bounds (the
+    wide value would NULL out of them), so every document validates."""
+    rows = ['{"n": 5}', '{"n": %d}' % 2**70]
+    df = spark.createDataFrame([(r,) for r in rows], "p string")
+    schema = infer_json_schema(df, "p")
+    assert schema["properties"]["n"] == {"type": "integer"}
+    v = validate(df, schema, doc_col="p")
+    assert [r["valid"] for r in v.collect()] == [True, True]
+    st = _stats(spark, rows)["n"]
+    assert (st["int_lo"], st["int_hi"]) == (5, 5)
+    assert "int_exact" not in st

@@ -33,6 +33,12 @@ def test_type_mismatch_golden(spark):
     )
 
 
+def test_double_beyond_int64_is_integer(spark):
+    df = rows(spark, [(1e20,), (-3.0,), (2.5,)], "a double")
+    out = validate(df, {"properties": {"a": {"type": "integer"}}}).collect()
+    assert [r.valid for r in out] == [True, True, False]
+
+
 def test_required(spark):
     df = rows(spark, [("a", None), (None, None), ("b", "x")], "u string, t string")
     schema = {"type": "object", "required": ["u", "t"]}

@@ -24,6 +24,13 @@ def test_tree_type_and_required(spark):
     ) == [True, True, False, False, False, False, False]
 
 
+def test_tree_integers_beyond_int64(spark):
+    """Integral values past int64 are integers; fractions stay numbers."""
+    big = str(2**70)
+    assert verdicts(spark, {"type": "integer"}, big, "-" + big, "1e20", "2.5") == [
+        True, True, True, False]
+
+
 def test_tree_null_vs_missing(spark):
     # JSON null satisfies presence (required) but fails type checks
     schema = {"required": ["a"], "properties": {"a": {"type": "null"}}}
