@@ -297,6 +297,9 @@ def msg_dependent_required(present_name: str, required: list[str]) -> Column:
     )
 
 
+# --- arrays ------------------------------------------------------------------
+
+
 def _count_items_tail(size_col: Column) -> Column:
     return C(
         " but it contained ",
