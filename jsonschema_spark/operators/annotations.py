@@ -31,6 +31,7 @@ from jsonschema_spark.plans.compiler import (
     _ptr_escape,
     _references,
     compile_node,
+    without_call_sites,
 )
 from jsonschema_spark.plans.context import B, Cond, Ctx, S, and_, not_
 
@@ -134,6 +135,7 @@ def annotations_col(cs: CompiledSchema, ctx: Ctx) -> Column:
     return F.concat(*entries) if len(entries) > 1 else entries[0]
 
 
+@without_call_sites()
 def annotations(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],

@@ -17,12 +17,13 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
-from jsonschema_spark.plans.compiler import CompiledSchema, compile_node
+from jsonschema_spark.plans.compiler import CompiledSchema, compile_node, without_call_sites
 from jsonschema_spark.plans.context import B, S
 
 TRACE_DT = "array<struct<step:int,keywordLocation:string,instanceLocation:string,ok:boolean>>"
 
 
+@without_call_sites()
 def trace(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],

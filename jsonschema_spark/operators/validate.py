@@ -27,6 +27,7 @@ from jsonschema_spark.plans.compiler import (
     VIOLS_DT,
     compile_node,
     compile_schema,
+    without_call_sites,
     _viol_struct,
 )
 from jsonschema_spark.plans.context import B, Cond, Ctx, FlatRowCtx, VariantCtx, and_
@@ -91,6 +92,7 @@ def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
     return ok, viols
 
 
+@without_call_sites()
 def annotate(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -109,6 +111,7 @@ def annotate(
     return _unbind(pre.withColumns({valid_col: ok, violations_col: viols}), doc_col)
 
 
+@without_call_sites()
 def validate(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -129,6 +132,7 @@ def validate(
     return _unbind(pre.withColumn(valid_col, ok), doc_col)
 
 
+@without_call_sites()
 def violations(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -154,6 +158,7 @@ def violations(
     return exploded
 
 
+@without_call_sites()
 def violations_with_positions(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -186,6 +191,7 @@ def violations_with_positions(
     )
 
 
+@without_call_sites()
 def property_verdicts(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -217,6 +223,7 @@ def property_verdicts(
     return _unbind(pre.withColumns(cols), doc_col)
 
 
+@without_call_sites()
 def standard_output(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -316,6 +323,7 @@ def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_
     return _unbind(annotated.withColumn(out_col, report), doc_col, "valid", "violations")
 
 
+@without_call_sites()
 def verdict_counts(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -338,6 +346,7 @@ def _verdict_aggs() -> list[Column]:
     ]
 
 
+@without_call_sites()
 def verdict_counts_cube(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -364,6 +373,7 @@ def verdict_counts_cube(
     )
 
 
+@without_call_sites()
 def sampled_verdict(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],
@@ -411,6 +421,7 @@ def sampled_verdict(
     )
 
 
+@without_call_sites()
 def violation_pareto(
     df: DataFrame,
     schema: Union[dict, bool, CompiledSchema],

@@ -30,9 +30,11 @@ Violation rows follow the standard Basic output shape
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from typing import Optional, Union
 
+import pyspark.errors.utils as _pyspark_errors_utils
 from pyspark.sql import Column, functions as F, types as T
 
 from jsonschema_spark.functions.formats import FORMATS, format_ok
@@ -64,6 +66,30 @@ def empty_viols() -> Column:
 
 class SchemaError(ValueError):
     pass
+
+
+@contextmanager
+def without_call_sites():
+    """Build Columns without PySpark's per-call call-site capture.
+
+    PySpark records the Python call site of every ``Column`` method and of
+    ``F.col`` in the JVM (``pyspark.errors.utils._with_origin``): about five
+    py4j round trips per expression node, more than the node itself costs,
+    and every site it records would point into this package. Inside this
+    block the capture is off; on exit, normal or by exception, the previous
+    setting is restored (``None`` included, so a nested block leaves it
+    off). A no-op where PySpark has no such setting. The setting is
+    process-wide: Columns other threads build meanwhile carry no call site.
+    Usable as a decorator."""
+    if not hasattr(_pyspark_errors_utils, "_enable_debugging_cache"):
+        yield
+        return
+    prev = _pyspark_errors_utils._enable_debugging_cache
+    _pyspark_errors_utils._enable_debugging_cache = False
+    try:
+        yield
+    finally:
+        _pyspark_errors_utils._enable_debugging_cache = prev
 
 
 @dataclass
@@ -430,6 +456,7 @@ def _references(schema: dict, cfg: Config, ref_stack: tuple):
             yield key, (target, sub_cfg, ref_stack + (ref_key,))
 
 
+@without_call_sites()
 def compile_node(
     schema: Union[dict, bool],
     ctx: Ctx,
