@@ -82,29 +82,58 @@ def _multiple_of(v, m) -> bool:
         return False
 
 
+# Keyword → shape of its value at a schema position: one schema, a list of
+# schemas, or a map of name → schema. The evaluator's own table, kept
+# apart from the compiler's so the two stay independent. Values under any
+# other keyword (const, enum, default, examples, unknown keywords) are
+# data: an `$id` or `$anchor` inside them identifies nothing.
+_POSITIONS = {
+    **dict.fromkeys(("items", "additionalItems", "contains", "additionalProperties",
+                     "propertyNames", "not", "if", "then", "else",
+                     "unevaluatedProperties", "unevaluatedItems"), "one"),
+    **dict.fromkeys(("prefixItems", "allOf", "anyOf", "oneOf"), "list"),
+    # draft-7 `dependencies` too; its property-name lists are not walked
+    **dict.fromkeys(("properties", "patternProperties", "dependentSchemas",
+                     "dependencies", "$defs", "definitions"), "map"),
+}
+
+
+def _children(node: dict):
+    """The direct subschemas of ``node`` (legacy array ``items`` too)."""
+    for key, shape in _POSITIONS.items():
+        if key not in node:
+            continue
+        val = node[key]
+        if shape == "map":
+            if isinstance(val, dict):
+                yield from val.values()
+        elif isinstance(val, list):
+            yield from val
+        else:
+            yield val
+
+
 def _collect_resources(doc: Schema, base: str, anchors: dict, ids: dict,
                        dyn_anchors: dict) -> None:
     """Register every embedded $id resource, $anchor and $dynamicAnchor —
     keyed per-resource, so dynamic-scope search is boundary-aware
     (compiler analogue: embedded-resource auto-registration)."""
     def walk(node, cur_base):
-        if isinstance(node, dict):
-            nid = node.get("$id")
-            if isinstance(nid, str):
-                cur_base = urljoin(cur_base, nid)
-                ids[urldefrag(cur_base)[0]] = node
-            anc = node.get("$anchor")
-            if isinstance(anc, str):
-                anchors[(urldefrag(cur_base)[0], anc)] = node
-            dyn = node.get("$dynamicAnchor")
-            if isinstance(dyn, str):
-                anchors.setdefault((urldefrag(cur_base)[0], dyn), node)
-                dyn_anchors[(urldefrag(cur_base)[0], dyn)] = node
-            for v in node.values():
-                walk(v, cur_base)
-        elif isinstance(node, list):
-            for v in node:
-                walk(v, cur_base)
+        if not isinstance(node, dict):
+            return
+        nid = node.get("$id")
+        if isinstance(nid, str):
+            cur_base = urljoin(cur_base, nid)
+            ids[urldefrag(cur_base)[0]] = node
+        anc = node.get("$anchor")
+        if isinstance(anc, str):
+            anchors[(urldefrag(cur_base)[0], anc)] = node
+        dyn = node.get("$dynamicAnchor")
+        if isinstance(dyn, str):
+            anchors.setdefault((urldefrag(cur_base)[0], dyn), node)
+            dyn_anchors[(urldefrag(cur_base)[0], dyn)] = node
+        for child in _children(node):
+            walk(child, cur_base)
 
     walk(doc, base)
 

@@ -12,6 +12,8 @@ import pytest
 
 from jsonschema_spark import validate
 
+_MY_ID = "https://localhost:1234/draft2020-12/id/my_identifier.json"
+
 CASES = [
     # --- type ---------------------------------------------------------------
     ("integer accepts int and integral real, rejects fraction/string/bool-ish",
@@ -211,6 +213,28 @@ CASES = [
       "enum": [{"$ref": "#/$defs/a_string"}]},
      [('"this is a string"', False), ('{"type": "string"}', False),
       ('{"$ref": "#/$defs/a_string"}', True)]),
+    ("$id inside an enum is not a real identifier",
+     {"$defs": {"id_in_enum": {"enum": [{"$id": _MY_ID, "type": "null"}]},
+                "real_id_in_schema": {"$id": _MY_ID, "type": "string"},
+                "zzz_id_in_const": {"const": {"$id": _MY_ID, "type": "null"}}},
+      "anyOf": [{"$ref": "#/$defs/id_in_enum"}, {"$ref": _MY_ID}]},
+     [(json.dumps({"$id": _MY_ID, "type": "null"}), True),
+      ('"a string to match #/$defs/id_in_enum"', True), ("1", False)]),
+    ("$id inside an unknown keyword is not a real identifier",
+     {"$defs": {"id_in_unknown0": {"not": {"array_of_schemas": [
+                    {"$id": _MY_ID, "type": "null"}]}},
+                "real_id_in_schema": {"$id": _MY_ID, "type": "string"},
+                "id_in_unknown1": {"not": {"object_of_schemas": {
+                    "foo": {"$id": _MY_ID, "type": "integer"}}}}},
+      "anyOf": [{"$ref": "#/$defs/id_in_unknown0"}, {"$ref": "#/$defs/id_in_unknown1"},
+                {"$ref": _MY_ID}]},
+     [('"a string"', True), ("null", False), ("1", False)]),
+    ("$anchor inside a const is not a real identifier",
+     {"$defs": {"real_identifier_in_schema": {"$anchor": "my_anchor", "type": "string"},
+                "zzz_anchor_in_const": {"const": {"$anchor": "my_anchor", "type": "null"}}},
+      "anyOf": [{"$ref": "#/$defs/zzz_anchor_in_const"}, {"$ref": "#my_anchor"}]},
+     [('{"$anchor": "my_anchor", "type": "null"}', True), ('{"type": "null"}', False),
+      ('"a string"', True), ("1", False)]),
 ]
 
 
