@@ -5,16 +5,15 @@ json/json_value.cc:801-857): int % int, the real-divisor-with-exact-binary-
 representation case, then arbitrary-precision decimal. We mirror it with
 strategy selection at compile time:
 
-1. integer column % integer divisor        → `col % k == 0` (pure codegen)
-2. divisor with exact power-of-two scaling → `col * 2^a` integrality (exact
-   in IEEE754, pure codegen)
+1. integer divisor k                       → `col % k == 0`, over longs for
+   an integer column and over doubles otherwise (pure codegen)
+2. divisor k = m / 2^a                     → `(col * 2^a) % m == 0` (pure
+   codegen)
 3. general real divisor                    → Arrow-batched pandas UDF doing
    exact decimal arithmetic on the shortest-repr string of the float
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -23,8 +22,7 @@ from pyspark.sql.types import BooleanType
 
 def _pow2_scale(k: float) -> int | None:
     """If k = m / 2^a for integers m, a with small a, return a (so that
-    x/k integrality can be tested exactly via x * 2^a / m)."""
-    frac, _ = math.modf(k)
+    x/k integrality can be tested exactly via (x * 2^a) % m)."""
     for a in range(0, 32):
         scaled = k * (1 << a)
         if scaled == int(scaled):
@@ -33,19 +31,21 @@ def _pow2_scale(k: float) -> int | None:
 
 
 def divisible_ok(col: Column, k, col_is_integer: bool) -> Column:
-    """Boolean Column: value at `col` (numeric) is divisible by constant k."""
+    """Boolean Column: value at `col` (numeric) is divisible by constant k.
+
+    A real instance is tested by its double remainder: the floating `%` is
+    exact (like C's fmod), and x * 2^a is exact too, so a value beyond
+    int64 (1e20) divides by 2 and not by 3. The quotient is no test: it
+    rounds, and every double above 2^53 is integral."""
     if isinstance(k, int) or (isinstance(k, float) and k.is_integer()):
         ki = int(k)
         if col_is_integer:
             return (col.cast("long") % F.lit(ki)) == 0
-        # real instance, integer divisor: integrality of col / k
-        q = col.cast("double") / F.lit(float(ki))
-        return q == F.floor(q).cast("double")
+        return col.cast("double") % F.lit(float(ki)) == F.lit(0.0)
     a = _pow2_scale(float(k))
     if a is not None:
         m = float(k) * (1 << a)  # integer-valued by construction
-        q = col.cast("double") * F.lit(float(1 << a)) / F.lit(m)
-        return q == F.floor(q).cast("double")
+        return col.cast("double") * F.lit(float(1 << a)) % F.lit(m) == F.lit(0.0)
     return _divisible_decimal(col.cast("double"), F.lit(float(k)))
 
 

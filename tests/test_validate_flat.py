@@ -135,6 +135,18 @@ def test_multiple_of(spark):
     assert got3 == [True, False]
 
 
+@pytest.mark.parametrize("k,want", [(2, True), (3, False), (0.5, True)])
+def test_multiple_of_beyond_int64(spark, k, want):
+    """1e20 is divisible by 2 and not by 3, as in validate_py: the test is
+    the exact double remainder, not a quotient floored through int64."""
+    from jsonschema_spark import validate_py
+
+    schema = {"properties": {"x": {"multipleOf": k}}}
+    df = rows(spark, [(1e20,), (-1e20,)], "x double")
+    assert [r.valid for r in validate(df, schema).collect()] == [want, want]
+    assert validate_py(schema, {"x": 1e20}) is want
+
+
 def test_type_integer_accepts_integral_real(spark):
     df = rows(spark, [(3.0,), (3.5,)], "x double")
     got = [r.valid for r in validate(df, {"properties": {"x": {"type": "integer"}}}).collect()]

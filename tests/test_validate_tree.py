@@ -5,7 +5,11 @@ patternProperties, propertyNames, additionalProperties) the reference
 implements in evaluator_dispatch.h Groups C/E.
 """
 
-from jsonschema_spark import annotate, validate, violations
+import json
+
+import pytest
+
+from jsonschema_spark import annotate, validate, validate_py, violations
 
 
 def docs(spark, *payloads):
@@ -225,6 +229,16 @@ def test_tree_number_semantics(spark):
     assert verdicts(
         spark, schema, '{"x": 2.5}', '{"x": 2.3}', '{"x": 3}', '{"x": -1}'
     ) == [True, False, True, False]
+
+
+@pytest.mark.parametrize("k,want", [(2, True), (3, False)])
+def test_tree_multiple_of_beyond_int64(spark, k, want):
+    """1e20 parses to a DOUBLE variant, its digits to DECIMAL(21,0); both
+    agree with validate_py."""
+    schema = {"properties": {"x": {"multipleOf": k}}}
+    payloads = ['{"x": 1e20}', '{"x": 100000000000000000000}']
+    assert verdicts(spark, schema, *payloads) == [want, want]
+    assert [validate_py(schema, json.loads(p)) for p in payloads] == [want, want]
 
 
 def test_tree_deep_equality_key_order_and_numbers(spark):
