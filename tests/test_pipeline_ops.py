@@ -916,6 +916,28 @@ def test_sessionize_gap_boundary_and_chain(spark):
     }
 
 
+def test_sessionize_events_is_timezone_independent(spark, sf_dir):
+    """The parquet ``ts`` is naive (read as TIMESTAMP_NTZ): sessions and
+    their rendered bounds are wall-clock, the same under any session
+    timezone."""
+    import __spark_entry__ as entry
+
+    def digest():
+        df = entry.q_sessionize_events(spark, sf_dir)
+        row = F.concat_ws("|", *[F.col(c).cast("string") for c in df.columns])
+        h = F.conv(F.substring(F.md5(row), 1, 14), 16, 10).cast("decimal(38,0)")
+        return tuple(df.agg(F.count(F.lit(1)), F.sum(h)).first())
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc = digest()
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        assert digest() == utc and utc[0] > 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
 def test_decontaminate_drops_on_per_bench_threshold(spark):
     from jsonschema_spark.operators.dedup import decontaminate
 
