@@ -12,7 +12,11 @@ becomes Column expressions evaluated in a single pass over the DataFrame:
   instanceLocation, error
 
 Only failing rows ever materialize violation structs (hot/cold split — the
-InstructionExtra analogue, evaluator_instruction.h:256-271).
+InstructionExtra analogue, evaluator_instruction.h:256-271). A compiled
+plan's violation array is meaningful only where its verdict fails, so it
+is gated on the verdict in exactly three places: once over the whole plan
+in ``_verdict`` here, per element in the compiler's ``_loop_body``, and per
+part in its non-short-circuit ``_and_combine``. No keyword gates its own.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from jsonschema_spark.plans.compiler import (
     VIOLS_DT,
     compile_node,
     compile_schema,
+    empty_viols,
     without_call_sites,
     _viol_struct,
 )
@@ -80,16 +85,17 @@ def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
              short_circuit: bool = True) -> tuple[Column, Optional[Column]]:
     """``(valid, violations)`` columns of ``cs`` over a bound instance
     (violations None in fast mode); an unparseable document fails with the
-    parse message alone."""
+    parse message alone. The plan's violations are gated on ``valid`` here,
+    once: they are meaningful only where it fails."""
     compiled = compile_node(cs.schema, ctx, "", cs._cfg(mode, short_circuit))
     ok = B(and_(parse_ok, compiled.ok))
     if mode == "fast":
         return ok, None
-    viols = compiled.viols_col()
+    viols = F.when(ok, empty_viols())
     if parse_ok is not True:
         parse_viol = F.array(_viol_struct(cs.base_uri, "", "", F.lit(_PARSE_FAIL_MSG))).cast(VIOLS_DT)
-        viols = F.when(~parse_ok, parse_viol).otherwise(viols)
-    return ok, viols
+        viols = viols.when(~parse_ok, parse_viol)
+    return ok, viols.otherwise(compiled.viols_col())
 
 
 @without_call_sites()

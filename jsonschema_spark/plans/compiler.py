@@ -94,7 +94,14 @@ def without_call_sites():
 
 @dataclass
 class Compiled:
-    """Result of compiling one schema node against a context."""
+    """Result of compiling one schema node against a context.
+
+    ``viols`` is meaningful only on rows where ``ok`` is false: elsewhere
+    it may hold anything, and nothing reads it there. So no keyword gates
+    its own violations. Three readers also see rows where ``ok`` holds,
+    and each gates there: ``_verdict`` (operators/validate.py) once over
+    the whole plan, ``_loop_body`` per element, and the non-short-circuit
+    ``_and_combine`` per part."""
 
     ok: Cond
     viols: Optional[Column] = None  # None ⇔ statically no violations
@@ -176,30 +183,27 @@ def _leaf(cfg: Config, cond: Cond, kw: str, ctx: Ctx, error_builder) -> Compiled
         return Compiled(True)
     if not cfg.want_viols:
         return Compiled(cond)
-    err = error_builder()
-    v = _viol(cfg, kw, ctx.loc, err)
-    if cond is False:
-        return Compiled(False, v)
-    return Compiled(cond, F.when(B(cond), empty_viols()).otherwise(v))
+    return Compiled(cond, _viol(cfg, kw, ctx.loc, error_builder()))
 
 
-def _guarded(guard: Cond, inner: Compiled, cfg: Config) -> Compiled:
+def _guarded(guard: Cond, inner: Compiled) -> Compiled:
     """Apply a type/presence precondition: if guard fails, vacuous pass
     (EVALUATE_BEGIN precondition-skip, evaluator_dispatch.h:71-123)."""
     if guard is True:
         return inner
     if guard is False or inner.ok is True:
         return Compiled(True)
-    ok = or_(not_(guard), inner.ok)
-    if not cfg.want_viols or inner.viols is None:
-        return Compiled(ok)
-    return Compiled(ok, F.when(B(guard), inner.viols).otherwise(empty_viols()))
+    return Compiled(or_(not_(guard), inner.ok), inner.viols)
 
 
 def _and_combine(parts: list[Compiled], cfg: Config, own: Optional[tuple] = None) -> Compiled:
     """Conjunction with reference short-circuit violation semantics: report
     the first failing part's violations (plus the parent's own entry when
-    `own=(kw, ctx, error_builder)` is given)."""
+    `own=(kw, ctx, error_builder)` is given). On a failing row where no
+    earlier part fails, the last one does, so it needs no test of its own.
+    ``short_circuit=False`` reports every failing part, each gated on its
+    own ``ok``: on a failing row the passing parts' violations are read
+    too."""
     live = [p for p in parts if p.ok is not True]
     ok = and_(*[p.ok for p in live])
     if ok is True:
@@ -214,21 +218,18 @@ def _and_combine(parts: list[Compiled], cfg: Config, own: Optional[tuple] = None
     def with_own(v: Column) -> Column:
         return F.concat(v, own_v) if own_v is not None else v
 
+    if len(live) == 1:  # failing row ⇒ the one part fails
+        return Compiled(ok, with_own(live[0].viols_col()))
     if not cfg.short_circuit:
-        parts_v = [
-            F.when(not_(B(p.ok)), p.viols_col()).otherwise(empty_viols()) for p in live
-        ]
-        allv = F.concat(*parts_v) if len(parts_v) > 1 else parts_v[0]
-        viols = F.when(B(ok), empty_viols()).otherwise(with_own(allv))
-        return Compiled(ok, viols)
+        return Compiled(ok, with_own(F.concat(*[
+            F.when(not_(B(p.ok)), p.viols_col()).otherwise(empty_viols()) for p in live])))
 
     chain = None
-    for p in live:
+    for p in live[:-1]:
         fail = not_(B(p.ok))
         v = with_own(p.viols_col())
         chain = F.when(fail, v) if chain is None else chain.when(fail, v)
-    viols = chain.otherwise(empty_viols())
-    return Compiled(ok, viols)
+    return Compiled(ok, chain.otherwise(with_own(live[-1].viols_col())))
 
 
 # ---------------------------------------------------------------------------
@@ -518,10 +519,10 @@ def compile_node(
             parts.append(_k_dependent_required(val, ctx, kwp, cfg))
         elif key == "minProperties":
             g = ctx.is_type("object")
-            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_properties(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_properties(c, v))))
         elif key == "maxProperties":
             g = ctx.is_type("object")
-            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_properties(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_properties(c, v))))
         elif key == "properties":
             parts.append(_k_properties(val, ctx, kwp, cfg, ref_stack))
         elif key == "patternProperties":
@@ -534,10 +535,10 @@ def compile_node(
             parts.append(_k_dependent_schemas(val, ctx, kwp, cfg, ref_stack))
         elif key == "minItems":
             g = ctx.is_type("array")
-            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_items(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_items(c, v))))
         elif key == "maxItems":
             g = ctx.is_type("array")
-            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_items(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_items(c, v))))
         elif key == "uniqueItems":
             if val:
                 parts.append(_k_unique_items(ctx, kwp, cfg))
@@ -553,13 +554,13 @@ def compile_node(
             parts.append(_k_contains(schema, val, ctx, kwp, cfg, ref_stack))
         elif key == "minLength":
             g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_length(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_length(c, v))))
         elif key == "maxLength":
             g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_length(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_length(c, v))))
         elif key == "pattern":
             g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, pattern_ok(ctx.str_val(), val), kwp, ctx, lambda c=ctx, v=val: M.msg_regex(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, pattern_ok(ctx.str_val(), val), kwp, ctx, lambda c=ctx, v=val: M.msg_regex(c, v))))
         elif key == "format":
             if cfg.format_assertion and val in FORMATS:
                 if cfg.format_strict:
@@ -567,24 +568,24 @@ def compile_node(
                 else:
                     _fmt_build = format_ok
                 g = ctx.is_type("string")
-                parts.append(_guarded(g, _leaf(cfg, _fmt_build(val, ctx.str_val()), kwp, ctx, lambda c=ctx, v=val: M.msg_format(c, v)), cfg))
+                parts.append(_guarded(g, _leaf(cfg, _fmt_build(val, ctx.str_val()), kwp, ctx, lambda c=ctx, v=val: M.msg_format(c, v))))
         elif key == "minimum":
             g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() >= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater_equal(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() >= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater_equal(c, v))))
         elif key == "maximum":
             g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() <= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less_equal(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() <= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less_equal(c, v))))
         elif key == "exclusiveMinimum":
             g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() > float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() > float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater(c, v))))
         elif key == "exclusiveMaximum":
             g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() < float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() < float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less(c, v))))
         elif key == "multipleOf":
             g = ctx.is_type("number")
             tag = ctx.tag()
             is_int_col = tag == "integer" if isinstance(tag, str) else False
-            parts.append(_guarded(g, _leaf(cfg, divisible_ok(ctx.num_val(), val, is_int_col), kwp, ctx, lambda c=ctx, v=val: M.msg_multiple_of(c, v)), cfg))
+            parts.append(_guarded(g, _leaf(cfg, divisible_ok(ctx.num_val(), val, is_int_col), kwp, ctx, lambda c=ctx, v=val: M.msg_multiple_of(c, v))))
         elif key == "allOf":
             parts.append(_k_all_of(val, ctx, kwp, cfg, ref_stack))
         elif key == "anyOf":
@@ -624,7 +625,7 @@ def compile_node(
             leaf = _leaf(cfg, cond, kwp, ctx,
                          lambda c=ctx, v=schema[key], s=spec: s.message(c, v))
             if spec.type_guard:
-                leaf = _guarded(ctx.is_type(spec.type_guard), leaf, cfg)
+                leaf = _guarded(ctx.is_type(spec.type_guard), leaf)
             parts.append(leaf)
 
     return _and_combine(parts, cfg)
@@ -668,7 +669,7 @@ def _k_required(val: list, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
             cfg, cond, kwp, ctx,
             lambda names=list(val), pc=statics: M.msg_required_multi(names, pc),
         )
-    return _guarded(ctx.is_type("object"), inner, cfg)
+    return _guarded(ctx.is_type("object"), inner)
 
 
 def _k_dependent_required(val: dict, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
@@ -681,7 +682,7 @@ def _k_dependent_required(val: dict, ctx: Ctx, kwp: str, cfg: Config) -> Compile
         parts.append(
             _leaf(cfg, cond, kwp, ctx, lambda t=trigger, m=missing: M.msg_dependent_required(t, m))
         )
-    return _guarded(ctx.is_type("object"), _and_combine(parts, cfg), cfg)
+    return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
 
 
 def _apply_subschema(sub_schema, child: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -694,17 +695,24 @@ def _apply_subschema(sub_schema, child: Ctx, kwp: str, cfg: Config, ref_stack) -
     if child.present is False:
         return Compiled(True)
     sub = compile_node(sub_schema, child, kwp, cfg, ref_stack)
-    return _guarded(child.present, sub, cfg)
+    return _guarded(child.present, sub)
 
 
 def _loop_body(val, kwp: str, cfg: Config, ref_stack):
     """The per-element compiles of a higher-order loop body, one of each:
     ``ok(ctx)`` under ``cfg.fast()`` — an exhaustive compile would build a
     violation tree inside the predicate only to drop it — and
-    ``viols(ctx)`` under ``cfg``."""
+    ``viols(ctx)`` under ``cfg``, gated on that compile's own ``ok``: a
+    failing loop still visits its passing elements."""
     fast = cfg.fast()
-    return (lambda c: compile_node(val, c, kwp, fast, ref_stack).ok,
-            lambda c: compile_node(val, c, kwp, cfg, ref_stack).viols_col())
+
+    def viols_of(c: Ctx) -> Column:
+        body = compile_node(val, c, kwp, cfg, ref_stack)
+        if isinstance(body.ok, bool):
+            return empty_viols() if body.ok else body.viols_col()
+        return F.when(body.ok, empty_viols()).otherwise(body.viols_col())
+
+    return lambda c: compile_node(val, c, kwp, fast, ref_stack).ok, viols_of
 
 
 def _each_key(keys: Column, key_ctx, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -723,7 +731,7 @@ def _k_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Comp
         child = ctx.get_prop(name)
         parts.append(_apply_subschema(sub_schema, child, f"{kwp}/{_ptr_escape(name)}", cfg, ref_stack))
     inner = _and_combine(parts, cfg, own=(kwp, ctx, lambda c=ctx, n=len(val): M.msg_properties(n)))
-    return _guarded(ctx.is_type("object"), inner, cfg)
+    return _guarded(ctx.is_type("object"), inner)
 
 
 def _static_prop_names(ctx: Ctx) -> Optional[list[str]]:
@@ -756,7 +764,7 @@ def _k_pattern_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack)
             matching = F.filter(keys, lambda k: pattern_ok(k, pattern))
             parts.append(_each_key(matching, prop_ctx, sub_schema, kwpp, cfg, ref_stack))
     inner = _and_combine(parts, cfg)
-    return _guarded(ctx.is_type("object"), inner, cfg)
+    return _guarded(ctx.is_type("object"), inner)
 
 
 def _k_additional_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -787,10 +795,10 @@ def _k_extra_properties(
             child = ctx.get_prop(name)
             if val is False:
                 inner = _leaf(cfg, False, kwp, child, lambda n=name: M.msg_additional_property(n))
-                parts.append(_guarded(child.present, inner, cfg))
+                parts.append(_guarded(child.present, inner))
             else:
                 parts.append(_apply_subschema(val, child, kwp, cfg, ref_stack))
-        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg), cfg)
+        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
 
     entries = ctx.obj_entries_factory()
     if entries is None:
@@ -818,12 +826,12 @@ def _apply_to_extra_keys(
                 lambda k: _viol_struct(cfg.base_uri, kwp, _loc_concat(ctx, k),
                                       M.msg_additional_property(k)),
             ).cast(VIOLS_DT)
-            inner = Compiled(ok, F.when(B(ok), empty_viols()).otherwise(viols))
+            inner = Compiled(ok, viols)
         else:
             inner = Compiled(ok)
     else:
         inner = _each_key(extra_keys, prop_ctx, val, kwp, cfg, ref_stack)
-    return _guarded(ctx.is_type("object"), inner, cfg)
+    return _guarded(ctx.is_type("object"), inner)
 
 
 def _loc_concat(ctx: Ctx, key: Column) -> Column:
@@ -837,10 +845,7 @@ def _k_property_names(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compil
     def key_ctx(k: Column) -> Ctx:
         return FlatColCtx(k, T.StringType(), _loc_concat(ctx, k))
 
-    inner = _each_key(keys, key_ctx, val, kwp, cfg, ref_stack)
-    if inner.viols is not None:
-        inner = Compiled(inner.ok, F.when(B(inner.ok), empty_viols()).otherwise(inner.viols))
-    return _guarded(ctx.is_type("object"), inner, cfg)
+    return _guarded(ctx.is_type("object"), _each_key(keys, key_ctx, val, kwp, cfg, ref_stack))
 
 
 def _k_dependent_schemas(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -848,8 +853,8 @@ def _k_dependent_schemas(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) 
     for trigger, sub_schema in val.items():
         child = ctx.get_prop(trigger)
         sub = compile_node(sub_schema, ctx, f"{kwp}/{_ptr_escape(trigger)}", cfg, ref_stack)
-        parts.append(_guarded(child.present, sub, cfg))
-    return _guarded(ctx.is_type("object"), _and_combine(parts, cfg), cfg)
+        parts.append(_guarded(child.present, sub))
+    return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
 
 
 def _k_unique_items(ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
@@ -874,7 +879,7 @@ def _k_unique_items(ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
     else:
         cond = F.size(F.array_distinct(arr)) == F.size(arr)
     inner = _leaf(cfg, cond, kwp, ctx, lambda c=ctx: M.msg_unique_items(c))
-    return _guarded(ctx.is_type("array"), inner, cfg)
+    return _guarded(ctx.is_type("array"), inner)
 
 
 def _k_prefix_items(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -887,12 +892,16 @@ def _k_prefix_items(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Co
         elem = factory(F.try_element_at(arr, F.lit(i + 1)), F.lit(i))
         has_elem = ctx.arr_size() > i
         sub = compile_node(sub_schema, elem, f"{kwp}/{i}", cfg, ref_stack)
-        parts.append(_guarded(has_elem, sub, cfg))
+        parts.append(_guarded(has_elem, sub))
     inner = _and_combine(parts, cfg, own=(kwp, ctx, lambda n=len(val) + 1: M.msg_prefix_items(n)))
-    return _guarded(ctx.is_type("array"), inner, cfg)
+    return _guarded(ctx.is_type("array"), inner)
 
 
-def _k_items(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Compiled:
+def _each_item(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack, skip, own_error=None) -> Compiled:
+    """Apply ``val`` to every element of the array at ``ctx`` except those
+    ``skip(i, elem)`` holds for (index, element context) — the element
+    loop of items and dynamic unevaluatedItems. ``own_error`` builds the
+    parent's own entry, reported after the elements'."""
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
     factory = ctx.element_ctx_factory()
@@ -900,26 +909,27 @@ def _k_items(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Com
     ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
 
     def elem_ok(x: Column, i: Column) -> Column:
-        c_ok = ok_of(factory(x, i))
-        return B(or_(i < start, c_ok) if start else c_ok)
+        elem = factory(x, i)
+        return B(or_(skip(i, elem), ok_of(elem)))
 
     ok = F.forall(F.transform(arr, elem_ok), lambda b: b)
-    if cfg.want_viols:
+    if not cfg.want_viols:
+        return _guarded(ctx.is_type("array"), Compiled(ok))
 
-        def elem_viols(x: Column, i: Column) -> Column:
-            v = viols_of(factory(x, i))
-            if start:
-                v = F.when(i < start, empty_viols()).otherwise(v)
-            return v
+    def elem_viols(x: Column, i: Column) -> Column:
+        elem = factory(x, i)
+        skipped, v = skip(i, elem), viols_of(elem)
+        return v if skipped is False else F.when(B(skipped), empty_viols()).otherwise(v)
 
-        own = _viol(cfg, kwp, ctx.loc, M.msg_items_from(start) if start else M.msg_items())
-        viols = F.when(
-            B(ok), empty_viols()
-        ).otherwise(F.concat(F.flatten(F.transform(arr, elem_viols)).cast(VIOLS_DT), own))
-        inner = Compiled(ok, viols)
-    else:
-        inner = Compiled(ok)
-    return _guarded(ctx.is_type("array"), inner, cfg)
+    viols = F.flatten(F.transform(arr, elem_viols)).cast(VIOLS_DT)
+    if own_error is not None:
+        viols = F.concat(viols, _viol(cfg, kwp, ctx.loc, own_error()))
+    return _guarded(ctx.is_type("array"), Compiled(ok, viols))
+
+
+def _k_items(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Compiled:
+    return _each_item(val, ctx, kwp, cfg, ref_stack, lambda i, elem: i < start if start else False,
+                      lambda: M.msg_items_from(start) if start else M.msg_items())
 
 
 def _k_contains(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -935,7 +945,7 @@ def _k_contains(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -
     if minimum == 0 and maximum is None:
         return Compiled(True)
     inner = _leaf(cfg, cond, kwp, ctx, lambda mi=minimum, ma=maximum: M.msg_contains(mi, ma))
-    return _guarded(ctx.is_type("array"), inner, cfg)
+    return _guarded(ctx.is_type("array"), inner)
 
 
 def _k_all_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -949,8 +959,7 @@ def _k_any_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled
     if ok is True or not cfg.want_viols:
         return Compiled(ok)
     own = _viol(cfg, kwp, ctx.loc, M.msg_any_of(ctx, len(val)))
-    all_viols = F.concat(*[p.viols_col() for p in parts], own)
-    return Compiled(ok, F.when(B(ok), empty_viols()).otherwise(all_viols))
+    return Compiled(ok, F.concat(*[p.viols_col() for p in parts], own))
 
 
 def _k_one_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -963,13 +972,7 @@ def _k_one_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled
     if not cfg.want_viols:
         return Compiled(ok)
     own = _viol(cfg, kwp, ctx.loc, M.msg_one_of(ctx, len(val)))
-    branch_viols = F.concat(*[p.viols_col() for p in parts], own)
-    viols = (
-        F.when(B(ok), empty_viols())
-        .when(count == 0, branch_viols)
-        .otherwise(own)
-    )
-    return Compiled(ok, viols)
+    return Compiled(ok, F.when(count == 0, F.concat(*[p.viols_col() for p in parts], own)).otherwise(own))
 
 
 def _k_not(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -990,17 +993,13 @@ def _k_conditional(schema: dict, ctx: Ctx, kw: str, cfg: Config, ref_stack) -> C
         if chosen.ok is True or not cfg.want_viols:
             return Compiled(chosen.ok)
         own = _viol(cfg, f"{kw}/if", ctx.loc, M.msg_conditional(ctx))
-        return Compiled(chosen.ok, F.when(B(chosen.ok), empty_viols()).otherwise(F.concat(chosen.viols_col(), own)))
+        return Compiled(chosen.ok, F.concat(chosen.viols_col(), own))
     ok = F.when(B(cond.ok), B(then_c.ok)).otherwise(B(else_c.ok))
     if not cfg.want_viols:
         return Compiled(ok)
     own = _viol(cfg, f"{kw}/if", ctx.loc, M.msg_conditional(ctx))
-    viols = (
-        F.when(B(cond.ok) & ~B(then_c.ok), F.concat(then_c.viols_col(), own))
-        .when(~B(cond.ok) & ~B(else_c.ok), F.concat(else_c.viols_col(), own))
-        .otherwise(empty_viols())
-    )
-    return Compiled(ok, viols)
+    return Compiled(ok, F.when(B(cond.ok), F.concat(then_c.viols_col(), own))
+                    .otherwise(F.concat(else_c.viols_col(), own)))
 
 
 # --- unevaluatedProperties / unevaluatedItems ---------------------------------
@@ -1116,9 +1115,10 @@ def _property_conds(k: Column):
     return local
 
 
-def _item_conds(x: Column, i: Column, factory):
-    """Keyword-local evaluated-set conditions for element ``x`` at index
-    ``i``: prefixItems positions, items, contains matches."""
+def _item_conds(i: Column, elem: Ctx):
+    """Keyword-local evaluated-set conditions for the element at index
+    ``i`` (context ``elem``): prefixItems positions, items, contains
+    matches."""
 
     def local(node: dict, cfg: Config, ref_stack) -> list[Cond]:
         conds: list[Cond] = []
@@ -1130,7 +1130,7 @@ def _item_conds(x: Column, i: Column, factory):
             conds.append(i < len(pi))
         if "contains" in node:
             # matched elements are evaluated (LoopContains annotations)
-            conds.append(compile_node(node["contains"], factory(x, i), "", cfg.fast(), ref_stack).ok)
+            conds.append(compile_node(node["contains"], elem, "", cfg.fast(), ref_stack).ok)
         return conds
 
     return local
@@ -1170,14 +1170,8 @@ def _k_unevaluated_properties_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg
                 parts.append(_leaf(cfg, cond, kwp, child, lambda n=name: M.msg_additional_property(n)))
             else:
                 sub = compile_node(val, child, kwp, cfg, ref_stack)
-                applies = and_(child.present, not_(evaluated))
-                ok = or_(not_(B(applies)), sub.ok)
-                if cfg.want_viols and sub.viols is not None:
-                    v = F.when(B(applies), sub.viols).otherwise(empty_viols())
-                    parts.append(Compiled(ok, v))
-                else:
-                    parts.append(Compiled(ok))
-        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg), cfg)
+                parts.append(_guarded(and_(child.present, not_(evaluated)), sub))
+        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
     entries = ctx.obj_entries_factory()
     if entries is None:
         raise SchemaError("unevaluatedProperties unsupported for this context")
@@ -1209,30 +1203,10 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
 
 
 def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    factory = ctx.element_ctx_factory()
-    arr = ctx.arr()
-    ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
+    def evaluated(i: Column, elem: Ctx) -> Cond:
+        return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx, cfg, ref_stack)
 
-    def evaluated(x: Column, i: Column) -> Cond:
-        return _evaluated(schema, "unevaluatedItems", _item_conds(x, i, factory), ctx, cfg, ref_stack)
-
-    def elem_ok(x: Column, i: Column) -> Column:
-        return B(or_(evaluated(x, i), ok_of(factory(x, i))))
-
-    ok = F.forall(F.transform(arr, elem_ok), lambda b: b)
-    if cfg.want_viols:
-
-        def elem_viols(x: Column, i: Column) -> Column:
-            ev = evaluated(x, i)
-            return F.when(B(ev), empty_viols()).otherwise(viols_of(factory(x, i)))
-
-        viols = F.when(B(ok), empty_viols()).otherwise(
-            F.flatten(F.transform(arr, elem_viols)).cast(VIOLS_DT)
-        )
-        inner = Compiled(ok, viols)
-    else:
-        inner = Compiled(ok)
-    return _guarded(ctx.is_type("array"), inner, cfg)
+    return _each_item(val, ctx, kwp, cfg, ref_stack, evaluated)
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,9 @@ import json
 
 import pytest
 
-from jsonschema_spark import validate
+from pyspark.sql import functions as F
+
+from jsonschema_spark import annotate, validate
 
 _MY_ID = "https://localhost:1234/draft2020-12/id/my_identifier.json"
 
@@ -238,17 +240,43 @@ CASES = [
 ]
 
 
+def _verdicts(docs, schema) -> dict:
+    """One job: the fast verdict ``valid`` and, per ``short_circuit`` mode,
+    the ``annotate`` verdict and the size of its violation array."""
+    out = validate(docs, schema, doc_col="doc")
+    for sc in (True, False):
+        out = annotate(out, schema, doc_col="doc", valid_col=f"valid_sc{sc}",
+                       violations_col=f"viols_sc{sc}", short_circuit=sc)
+    sizes = [F.size(f"viols_sc{sc}").alias(f"n_viols_sc{sc}") for sc in (True, False)]
+    return {r["i"]: r for r in out.select("i", "valid", "valid_scTrue", "valid_scFalse",
+                                          *sizes).collect()}
+
+
+def _annotate_mismatches(rows: dict, checks) -> dict:
+    """(instance, short_circuit) -> (valid, #violations) wherever the
+    ``annotate`` verdict is not the expected one, or the row has
+    violations although valid, or none although invalid."""
+    return {
+        (checks[i][0], sc): (r[f"valid_sc{sc}"], r[f"n_viols_sc{sc}"])
+        for i, r in rows.items() for sc in (True, False)
+        if r[f"valid_sc{sc}"] != checks[i][1] or (r[f"n_viols_sc{sc}"] == 0) != checks[i][1]
+    }
+
+
 @pytest.mark.parametrize("desc,schema,checks", CASES, ids=[c[0] for c in CASES])
 def test_conformance(spark, desc, schema, checks):
     docs = spark.createDataFrame(
         [(i, payload) for i, (payload, _) in enumerate(checks)], "i long, doc string"
     )
-    got = {r["i"]: r["valid"] for r in validate(docs, schema, doc_col="doc").collect()}
+    rows = _verdicts(docs, schema)
+    got = {i: r["valid"] for i, r in rows.items()}
     expected = {i: want for i, (_, want) in enumerate(checks)}
     mismatches = {
         checks[i][0]: (got[i], want) for i, want in expected.items() if got[i] != want
     }
     assert not mismatches, f"{desc}: instance -> (got, want): {mismatches}"
+    bad = _annotate_mismatches(rows, checks)
+    assert not bad, f"{desc}: (instance, short_circuit) -> (valid, #violations): {bad}"
 
 
 ADVERSARIAL = [
@@ -288,13 +316,16 @@ def test_conformance_adversarial(spark, desc, schema, checks):
     docs = spark.createDataFrame(
         [(i, payload) for i, (payload, _) in enumerate(checks)], "i long, doc string"
     )
-    got = {r["i"]: r["valid"] for r in validate(docs, schema, doc_col="doc").collect()}
+    rows = _verdicts(docs, schema)
+    got = {i: r["valid"] for i, r in rows.items()}
     mismatches = {
         checks[i][0]: (got[i], want)
         for i, (_, want) in enumerate(checks)
         if got[i] != want
     }
     assert not mismatches, f"{desc}: instance -> (got, want): {mismatches}"
+    bad = _annotate_mismatches(rows, checks)
+    assert not bad, f"{desc}: (instance, short_circuit) -> (valid, #violations): {bad}"
 
 
 @pytest.mark.parametrize("desc,schema,checks", CASES + ADVERSARIAL,

@@ -235,3 +235,37 @@ def test_warc_jvm_path_python_free(spark):
     df = spark.createDataFrame([(1, "WARC/1.0\r\n\r\nx\r\n\r\n")],
                                ["file_id", "warc"])
     assert "Python" not in _plan(warc_records(df), "simple")
+
+
+def test_exhaustive_plans_stay_in_codegen(spark):
+    """Exhaustive ``annotate`` plans compile within janino's 64 KB method
+    limit. Spark normally falls back to interpreted evaluation, without a
+    signal, when generated code does not compile; with
+    ``spark.sql.codegen.fallback`` off such a plan fails the job instead."""
+    from perfbench.schemas import EVENTS
+    from test_conformance import ADVERSARIAL
+
+    from jsonschema_spark import annotate
+
+    kind = EVENTS["properties"]["kind"]["enum"][0]
+    cases = [("perfbench EVENTS", EVENTS, [
+        '{"id": 1, "ts": "2024-01-01T00:00:00Z", "kind": "%s", "user": {"name": "ann_1", '
+        '"age": 30}, "items": [{"sku": "SKU-0001", "qty": 3}], "score": 1.5}' % kind,
+        '{"id": -1, "ts": "x", "kind": "?", "user": {"name": "A", "age": 200, "x": 1}, '
+        '"items": [{"sku": "bad", "qty": 0}], "score": "s"}',
+        "{}", "[1]",
+    ])]
+    cases += [(desc, schema, [doc for doc, _ in checks]) for desc, schema, checks in ADVERSARIAL
+              if desc in ("deeply nested properties", "escaped property names in pointers")]
+    assert len(cases) == 3
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for desc, schema, docs in cases:
+            df = spark.createDataFrame([(d,) for d in docs], "doc string")
+            for sc in (True, False):
+                out = annotate(df, schema, doc_col="doc", short_circuit=sc)
+                n = out.select(F.size("violations").alias("n")).collect()
+                assert len(n) == len(docs), (desc, sc)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
