@@ -17,6 +17,11 @@ plan's violation array is meaningful only where its verdict fails, so it
 is gated on the verdict in exactly three places: once over the whole plan
 in ``_verdict`` here, per element in the compiler's ``_loop_body``, and per
 part in its non-short-circuit ``_and_combine``. No keyword gates its own.
+
+Operators that build on ``validate``/``annotate`` (``standard_output``,
+``violations``, the verdict counts) hold the verdict in reserved
+``__jss_``-prefixed helper columns, so a caller's own ``valid`` or
+``violations`` column passes through untouched.
 """
 
 from __future__ import annotations
@@ -46,6 +51,8 @@ def _as_compiled(schema: Union[dict, bool, CompiledSchema]) -> CompiledSchema:
 
 _PARSE_FAIL_MSG = "The instance could not be parsed as JSON"
 _VARIANT_TMP = "__jss_variant"
+_VALID_TMP = "__jss_valid"
+_VIOLS_TMP = "__jss_violations"
 
 
 def _bind(
@@ -149,19 +156,19 @@ def violations(
     """Violation rows: (id_cols..., keywordLocation, absoluteKeywordLocation,
     instanceLocation, error) — one row per failed assertion, in evaluation
     order. Only failing rows are exploded."""
-    annotated = annotate(df, schema, doc_col=doc_col, short_circuit=short_circuit)
-    exploded = (
-        annotated.filter(~F.col("valid"))
-        .select(*id_cols, F.posexplode("violations").alias("_pos", "_v"))
+    annotated = annotate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP,
+                         violations_col=_VIOLS_TMP, short_circuit=short_circuit)
+    return (
+        annotated.filter(~F.col(_VALID_TMP))
+        .select(*id_cols, F.explode(_VIOLS_TMP).alias("__jss_v"))
         .select(
             *id_cols,
-            F.col("_v.keywordLocation").alias("keywordLocation"),
-            F.col("_v.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
-            F.col("_v.instanceLocation").alias("instanceLocation"),
-            F.col("_v.error").alias("error"),
+            F.col("__jss_v.keywordLocation").alias("keywordLocation"),
+            F.col("__jss_v.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
+            F.col("__jss_v.instanceLocation").alias("instanceLocation"),
+            F.col("__jss_v.error").alias("error"),
         )
     )
-    return exploded
 
 
 @without_call_sites()
@@ -180,19 +187,20 @@ def violations_with_positions(
     doc_col sources only: flat rows have no source text to span."""
     from jsonschema_spark.functions.positions import instance_position
 
-    annotated = annotate(df, schema, doc_col=doc_col, short_circuit=short_circuit)
+    annotated = annotate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP,
+                         violations_col=_VIOLS_TMP, short_circuit=short_circuit)
     return (
-        annotated.filter(~F.col("valid"))
-        .select(*id_cols, F.col(doc_col).alias("__doc"), F.explode("violations").alias("_v"))
+        annotated.filter(~F.col(_VALID_TMP))
+        .select(*id_cols, F.col(doc_col).alias("__jss_doc"), F.explode(_VIOLS_TMP).alias("__jss_v"))
         .select(
             *id_cols,
-            F.col("_v.keywordLocation").alias("keywordLocation"),
-            F.col("_v.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
-            F.col("_v.instanceLocation").alias("instanceLocation"),
-            instance_position(F.col("__doc"), F.col("_v.instanceLocation")).alias(
+            F.col("__jss_v.keywordLocation").alias("keywordLocation"),
+            F.col("__jss_v.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
+            F.col("__jss_v.instanceLocation").alias("instanceLocation"),
+            instance_position(F.col("__jss_doc"), F.col("__jss_v.instanceLocation")).alias(
                 "instancePosition"
             ),
-            F.col("_v.error").alias("error"),
+            F.col("__jss_v.error").alias("error"),
         )
     )
 
@@ -250,15 +258,15 @@ def standard_output(
     inserts ``instancePosition`` spans into every entry
     (test/validate/fail_json.sh) — the full field-for-field Basic shape."""
     if fmt == "flag":
-        v = validate(df, schema, doc_col=doc_col)
-        report = F.to_json(F.struct(F.col("valid").alias("valid")))
-        return v.withColumn(out_col, report).drop("valid")
+        v = validate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP)
+        report = F.to_json(F.struct(F.col(_VALID_TMP).alias("valid")))
+        return v.withColumn(out_col, report).drop(_VALID_TMP)
     if fmt != "basic":
         raise ValueError(f"unknown output format {fmt!r} (flag|basic)")
     cs = _as_compiled(schema)
     pre, ctx, parse_ok = _bind(df, doc_col)
     ok, viols = _verdict(cs, ctx, parse_ok, "exhaustive")
-    a = pre.withColumns({"valid": ok, "violations": viols})
+    a = pre.withColumns({_VALID_TMP: ok, _VIOLS_TMP: viols})
     ann_col = None
     if annotations:
         from jsonschema_spark.operators.annotations import annotations_col
@@ -266,17 +274,16 @@ def standard_output(
         ann_col = annotations_col(cs, ctx)
     if positions and doc_col is not None:
         return _standard_output_positions(a, doc_col, ann_col, out_col)
+    valid = F.col(_VALID_TMP).alias("valid")
     valid_report = (
-        F.to_json(F.struct(F.col("valid").alias("valid"), ann_col.alias("annotations")))
+        F.to_json(F.struct(valid, ann_col.alias("annotations")))
         if ann_col is not None
-        else F.to_json(F.struct(F.col("valid").alias("valid")))
+        else F.to_json(F.struct(valid))
     )
-    report = F.when(F.col("valid"), valid_report).otherwise(
-        F.to_json(
-            F.struct(F.col("valid").alias("valid"), F.col("violations").alias("errors"))
-        )
+    report = F.when(F.col(_VALID_TMP), valid_report).otherwise(
+        F.to_json(F.struct(valid, F.col(_VIOLS_TMP).alias("errors")))
     )
-    return _unbind(a.withColumn(out_col, report), doc_col, "valid", "violations")
+    return _unbind(a.withColumn(out_col, report), doc_col, _VALID_TMP, _VIOLS_TMP)
 
 
 def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_col: str) -> DataFrame:
@@ -324,9 +331,9 @@ def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_
 
     anns_json = F.to_json(ann_col) if ann_col is not None else F.lit("[]")
     report = assemble(
-        F.col("valid"), F.col(doc_col), F.to_json(F.col("violations")), anns_json
+        F.col(_VALID_TMP), F.col(doc_col), F.to_json(F.col(_VIOLS_TMP)), anns_json
     )
-    return _unbind(annotated.withColumn(out_col, report), doc_col, "valid", "violations")
+    return _unbind(annotated.withColumn(out_col, report), doc_col, _VALID_TMP, _VIOLS_TMP)
 
 
 @without_call_sites()
@@ -338,17 +345,18 @@ def verdict_counts(
 ) -> DataFrame:
     """Per-group (or global) pass/fail counts — the per-partition verdict
     aggregate from the north_rule. One pass, map-side partial aggregation."""
-    v = validate(df, schema, doc_col=doc_col)
+    v = validate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP)
     if by:
-        return v.groupBy(*by).agg(*_verdict_aggs())
-    return v.agg(*_verdict_aggs())
+        return v.groupBy(*by).agg(*_verdict_aggs(_VALID_TMP))
+    return v.agg(*_verdict_aggs(_VALID_TMP))
 
 
-def _verdict_aggs() -> list[Column]:
+def _verdict_aggs(valid_col: str) -> list[Column]:
+    valid = F.col(valid_col)
     return [
         F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(F.sum(F.col("valid").cast("long")), F.lit(0)).alias("n_valid"),
-        F.coalesce(F.sum((~F.col("valid")).cast("long")), F.lit(0)).alias("n_invalid"),
+        F.coalesce(F.sum(valid.cast("long")), F.lit(0)).alias("n_valid"),
+        F.coalesce(F.sum((~valid).cast("long")), F.lit(0)).alias("n_invalid"),
     ]
 
 
@@ -371,10 +379,10 @@ def verdict_counts_cube(
     2^d × the agg rows, not 2^d scans. The reference has no grouping
     sets at all (SURVEY §2.6); this is the north_rule's per-partition
     verdict aggregate generalized to roll-up reporting."""
-    v = validate(df, schema, doc_col=doc_col)
+    v = validate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP)
     return (
         v.cube(*dims)
-        .agg(F.grouping_id().cast("long").alias("gid"), *_verdict_aggs())
+        .agg(F.grouping_id().cast("long").alias("gid"), *_verdict_aggs(_VALID_TMP))
         .select(*dims, "gid", "n_rows", "n_valid", "n_invalid")
     )
 
@@ -403,15 +411,15 @@ def sampled_verdict(
     """
     from jsonschema_spark.operators.dedup import hash56
 
-    v = validate(df, schema, doc_col=doc_col,
+    v = validate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP,
                  instance_cols=instance_cols)
     ins = (hash56(F.col(key_col).cast("string"))
            % 1_000_000) < sample_ppm
-    n_inv = F.sum((ins & ~F.col("valid")).cast("long")).cast("long")
+    n_inv = F.sum((ins & ~F.col(_VALID_TMP)).cast("long")).cast("long")
     return v.agg(
         F.count(F.lit(1)).cast("long").alias("n_total"),
         F.sum(ins.cast("long")).cast("long").alias("n_sampled"),
-        F.sum((ins & F.col("valid")).cast("long")).cast("long")
+        F.sum((ins & F.col(_VALID_TMP)).cast("long")).cast("long")
         .alias("n_valid"),
         n_inv.alias("n_invalid"),
     ).select(

@@ -18,7 +18,7 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, functions as F
 
-from jsonschema_spark.operators.validate import _verdict_aggs, validate, violations
+from jsonschema_spark.operators.validate import _VALID_TMP, _verdict_aggs, validate, violations
 from jsonschema_spark.plans.compiler import CompiledSchema
 
 
@@ -43,11 +43,11 @@ def windowed_verdict_counts(
 ) -> DataFrame:
     """Tumbling-window pass/fail counts with a watermark for late data:
     (window_start, window_end, by..., n_rows, n_valid, n_invalid)."""
-    v = validate(sdf, schema, doc_col=doc_col)
+    v = validate(sdf, schema, doc_col=doc_col, valid_col=_VALID_TMP)
     agg = (
         v.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window), *by)
-        .agg(*_verdict_aggs())
+        .agg(*_verdict_aggs(_VALID_TMP))
     )
     return agg.select(
         F.col("window.start").alias("window_start"),

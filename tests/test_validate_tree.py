@@ -287,3 +287,24 @@ def test_tree_property_verdicts(spark):
     assert out.columns == ["i", "doc", "ok_id", "ok_tags"]
     assert [(r.ok_id, r.ok_tags) for r in out.collect()] == [
         (True, True), (False, False), (False, True), (False, True)]
+
+
+def test_operators_leave_callers_valid_column_alone(spark):
+    """Operators built on validate/annotate keep their verdicts in reserved
+    helper columns, so a caller's own ``valid`` column survives them."""
+    from jsonschema_spark import standard_output, verdict_counts
+
+    df = spark.createDataFrame([(1, "yes", '{"a": 1}'), (2, "no", '{"a": "x"}')],
+                               "i long, valid string, doc string")
+    schema = {"properties": {"a": {"type": "integer"}}}
+    for kw in ({"fmt": "flag"}, {"fmt": "basic"}, {"fmt": "basic", "positions": True}):
+        out = standard_output(df, schema, doc_col="doc", **kw)
+        assert out.columns == ["i", "valid", "doc", "report"], kw
+        rows = out.orderBy("i").collect()
+        assert [(r.valid, json.loads(r.report)["valid"]) for r in rows] == [
+            ("yes", True), ("no", False)], kw
+    v = violations(df, schema, ["i", "valid"], doc_col="doc").collect()
+    assert [(r.i, r.valid, r.keywordLocation) for r in v] == [
+        (2, "no", "/properties/a/type"), (2, "no", "/properties")]
+    counts = verdict_counts(df, schema, doc_col="doc", by=["valid"]).orderBy("valid").collect()
+    assert [tuple(r) for r in counts] == [("no", 1, 0, 1), ("yes", 1, 1, 0)]
