@@ -7,6 +7,15 @@ keyword yields a boolean `ok` Column plus (in exhaustive mode) a violation
 array Column, composed bottom-up through the logical applicators. Catalyst
 then handles pushdown/pruning/codegen — no custom rules needed (SURVEY.md §4).
 
+A violation array is meaningful only on rows where its `ok` is false (the
+reference builds an error entry only when an instruction fails). No keyword
+gates its own array on its `ok`; the three readers that also see passing
+rows do: `_verdict` (operators/validate.py) once over the whole plan,
+`_loop_body` per element, and the non-short-circuit `_and_combine` per
+part. So an exhaustive plan repeats a child's condition in its parent's
+`ok` and in the parent's pick of failing parts (the short-circuit chain or
+the per-part gates), not again at every nesting level.
+
 Compile-time rewrites mirrored from the reference's postprocess pass
 (/root/reference/vendor/blaze/src/compiler/postprocess.h:393-630):
 - `$ref` inlining (always — the analogue of jump inlining; cycles rejected)
@@ -1257,14 +1266,18 @@ class CompiledSchema:
     def compile_flat(
         self, df_schema: T.StructType, mode: str = "exhaustive", short_circuit: bool = True
     ) -> Compiled:
-        """Compile against a flat DataFrame row (columns = properties)."""
+        """Compile against a flat DataFrame row (columns = properties). The
+        result's ``viols`` is meaningful only on rows where its ``ok`` is
+        false: gate it on ``ok`` before reading it elsewhere."""
         ctx = FlatRowCtx(df_schema)
         return compile_node(self.schema, ctx, "", self._cfg(mode, short_circuit))
 
     def compile_variant(
         self, doc_col: Column, mode: str = "exhaustive", short_circuit: bool = True
     ) -> Compiled:
-        """Compile against a VARIANT column holding parsed JSON documents."""
+        """Compile against a VARIANT column holding parsed JSON documents.
+        As with ``compile_flat``, ``viols`` is meaningful only where ``ok``
+        is false."""
         ctx = VariantCtx(doc_col, "")
         return compile_node(self.schema, ctx, "", self._cfg(mode, short_circuit))
 
