@@ -9,7 +9,6 @@ from the 2020-12 spec, not copied), run through the tree path. Each case:
 import json
 
 import pytest
-
 from pyspark.sql import functions as F
 
 from jsonschema_spark import annotate, validate
@@ -243,13 +242,12 @@ CASES = [
 def _verdicts(docs, schema) -> dict:
     """One job: the fast verdict ``valid`` and, per ``short_circuit`` mode,
     the ``annotate`` verdict and the size of its violation array."""
-    out = validate(docs, schema, doc_col="doc")
+    out, cols = validate(docs, schema, doc_col="doc"), ["i", "valid"]
     for sc in (True, False):
         out = annotate(out, schema, doc_col="doc", valid_col=f"valid_sc{sc}",
                        violations_col=f"viols_sc{sc}", short_circuit=sc)
-    sizes = [F.size(f"viols_sc{sc}").alias(f"n_viols_sc{sc}") for sc in (True, False)]
-    return {r["i"]: r for r in out.select("i", "valid", "valid_scTrue", "valid_scFalse",
-                                          *sizes).collect()}
+        cols += [f"valid_sc{sc}", F.size(f"viols_sc{sc}").alias(f"n_viols_sc{sc}")]
+    return {r["i"]: r for r in out.select(*cols).collect()}
 
 
 def _annotate_mismatches(rows: dict, checks) -> dict:

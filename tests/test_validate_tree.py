@@ -308,3 +308,41 @@ def test_operators_leave_callers_valid_column_alone(spark):
         (2, "no", "/properties/a/type"), (2, "no", "/properties")]
     counts = verdict_counts(df, schema, doc_col="doc", by=["valid"]).orderBy("valid").collect()
     assert [tuple(r) for r in counts] == [("no", 1, 0, 1), ("yes", 1, 1, 0)]
+
+
+_IF_THEN_ELSE = {"if": {"type": "integer"}, "then": {"minimum": 5}, "else": {"type": "string"}}
+
+
+@pytest.mark.parametrize("schema,doc,want", [
+    ({"items": {"type": "integer"}}, '[1, "x", 3]', [("/items/type", "/1"), ("/items", "")]),
+    ({"prefixItems": [{"type": "string"}], "items": {"type": "integer"}}, '["a", 1, "x"]',
+     [("/items/type", "/2"), ("/items", "")]),
+    ({"anyOf": [{"prefixItems": [{}]}], "unevaluatedItems": {"type": "integer"}}, '["a", 1, "x"]',
+     [("/unevaluatedItems/type", "/2")]),
+    ({"additionalProperties": {"type": "integer"}}, '{"a": 1, "b": "x"}',
+     [("/additionalProperties/type", "/b")]),
+    ({"patternProperties": {"^x": {"type": "integer"}}}, '{"x1": 1, "x2": "s"}',
+     [("/patternProperties/^x/type", "/x2")]),
+    ({"propertyNames": {"maxLength": 2}}, '{"ab": 1, "abc": 2}', [("/propertyNames/maxLength", "/abc")]),
+    ({"anyOf": [{"properties": {"a": {}}}], "unevaluatedProperties": {"type": "integer"}},
+     '{"a": "s", "b": 1, "c": "x"}', [("/unevaluatedProperties/type", "/c")]),
+    ({"properties": {"a": {"type": "integer"}, "b": {"type": "integer"}}}, '{"a": 1, "b": "x"}',
+     [("/properties/b/type", "/b"), ("/properties", "")]),
+    (_IF_THEN_ELSE, "3", [("/then/minimum", ""), ("/if", "")]),
+    (_IF_THEN_ELSE, "true", [("/else/type", ""), ("/if", "")]),
+    ({"oneOf": [{"type": "integer"}, {"minimum": 2}]}, "3", [("/oneOf", "")]),
+    ({"oneOf": [{"type": "integer"}, {"type": "string"}]}, "true",
+     [("/oneOf/0/type", ""), ("/oneOf/1/type", ""), ("/oneOf", "")]),
+])
+def test_violations_name_only_failing_elements_and_parts(spark, schema, doc, want):
+    """On a failing row, loops and conjunctions report the elements, keys
+    and parts that fail, not the ones that pass beside them (violation
+    arrays are gated per element and per part), in both reporting modes."""
+    out = docs(spark, doc)
+    for sc in (True, False):
+        out = annotate(out, schema, doc_col="doc", valid_col=f"valid_{sc}",
+                       violations_col=f"viols_{sc}", short_circuit=sc)
+    row = out.collect()[0]
+    for sc in (True, False):
+        got = [(v.keywordLocation, v.instanceLocation) for v in row[f"viols_{sc}"]]
+        assert (row[f"valid_{sc}"], got) == (False, want), sc
