@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from jsonschema_spark.plans.compiler import (
     CompiledSchema,
     Config,
-    _KEYWORD_ORDER,
+    _KEYWORDS,
     _ptr_escape,
     _references,
     compile_node,
@@ -43,7 +43,7 @@ ANN_DT = (
 # keywords that are compiled (assertions/applicators) or structural — every
 # OTHER keyword's value becomes an annotation (the unknown-keyword rule
 # covers title/description/default/examples/content*/x-* alike)
-_NON_ANNOTATION = set(_KEYWORD_ORDER) | {
+_NON_ANNOTATION = set(_KEYWORDS) | {
     "$schema", "$id", "$defs", "$anchor", "$comment", "$vocabulary",
     "$dynamicRef", "$dynamicAnchor", "$recursiveRef", "$recursiveAnchor",
     "definitions", "dependencies", "additionalItems",
@@ -152,19 +152,9 @@ def annotations(
 
     cs = _as_compiled(schema)
     pre, ctx, _ = _bind(df, doc_col)
-    ann = annotations_col(cs, ctx)
-    rows = (
-        pre.withColumn("__anns", ann)
-        .select(*id_cols, *([doc_col] if doc_col and positions else []), F.explode("__anns").alias("_a"))
-        .select(
-            *id_cols,
-            *([doc_col] if doc_col and positions else []),
-            F.col("_a.keywordLocation").alias("keywordLocation"),
-            F.col("_a.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
-            F.col("_a.instanceLocation").alias("instanceLocation"),
-            F.col("_a.annotation").alias("annotation"),
-        )
-    )
+    # inline names each struct field a column: no helper column to collide
+    rows = pre.select(*id_cols, *([doc_col] if doc_col and positions else []),
+                      F.inline(annotations_col(cs, ctx)))
     if doc_col and positions:
         from jsonschema_spark.functions.positions import instance_position
 

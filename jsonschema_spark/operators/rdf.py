@@ -240,6 +240,6 @@ def rdf_df(
     val = validate(df, schema, doc_col=doc_col, **validate_kwargs)
     return val.withColumn(
         out_col,
-        F.when(F.col("valid"),
+        F.when(F.col(validate_kwargs.get("valid_col", "valid")),
                jsonld_expand(F.col(doc_col), schema, form=form, context=context)),
     )

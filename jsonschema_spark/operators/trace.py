@@ -50,14 +50,5 @@ def trace(
             for i, (kwp, loc, ok) in enumerate(sink)
         ]
     ).cast(TRACE_DT)
-    return (
-        pre.withColumn("__steps", entries)
-        .select(*id_cols, F.explode("__steps").alias("_s"))
-        .select(
-            *id_cols,
-            F.col("_s.step").alias("step"),
-            F.col("_s.keywordLocation").alias("keywordLocation"),
-            F.col("_s.instanceLocation").alias("instanceLocation"),
-            F.col("_s.ok").alias("ok"),
-        )
-    )
+    # inline names each struct field a column: no helper column to collide
+    return pre.select(*id_cols, F.inline(entries))

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
+from functools import partial
+from itertools import chain
 from typing import Optional, Union
 
 import pyspark.errors.utils as _pyspark_errors_utils
@@ -62,6 +64,7 @@ from jsonschema_spark.plans.context import (
     not_,
     or_,
 )
+from jsonschema_spark.plans.registry import KEYWORD_COMPILERS, KeywordCompiler
 from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
 
 VIOL_FIELDS = "keywordLocation:string,absoluteKeywordLocation:string,instanceLocation:string,error:string"
@@ -241,52 +244,6 @@ def _and_combine(parts: list[Compiled], cfg: Config, own: Optional[tuple] = None
     return Compiled(ok, chain.otherwise(with_own(live[-1].viols_col())))
 
 
-# ---------------------------------------------------------------------------
-# Keyword ordering — deterministic walker order (documented; the reference's
-# exact walker order lives in sourcemeta::core::SchemaWalker)
-# ---------------------------------------------------------------------------
-
-_KEYWORD_ORDER = [
-    "$ref",
-    "$dynamicRef",
-    "$recursiveRef",
-    "type",
-    "const",
-    "enum",
-    "required",
-    "dependentRequired",
-    "minProperties",
-    "maxProperties",
-    "properties",
-    "patternProperties",
-    "additionalProperties",
-    "propertyNames",
-    "dependentSchemas",
-    "minItems",
-    "maxItems",
-    "uniqueItems",
-    "prefixItems",
-    "items",
-    "contains",
-    "minLength",
-    "maxLength",
-    "pattern",
-    "format",
-    "minimum",
-    "maximum",
-    "exclusiveMinimum",
-    "exclusiveMaximum",
-    "multipleOf",
-    "allOf",
-    "anyOf",
-    "oneOf",
-    "not",
-    "if",
-    # evaluated after every other applicator, like the reference
-    "unevaluatedProperties",
-    "unevaluatedItems",
-]
-
 # Dynamic-scope reference keywords (ControlDynamicAnchorJump,
 # dispatch.h:1523-1549). The reference resolves these against a RUNTIME
 # resource stack; because this compiler inlines every reference, the
@@ -441,29 +398,32 @@ def _resolve_ref(ref: str, cfg: Config) -> tuple[dict | bool, Config]:
 _REF_KEYWORDS = ("$ref", *_DYNAMIC_KEYWORDS)
 
 
+def _reference(key: str, val, cfg: Config, ref_stack: tuple):
+    """Resolve one reference keyword (`$ref`, `$dynamicRef` or
+    `$recursiveRef`) — the one place the recursion budget is applied.
+    Returns ``(target, sub_cfg, sub_stack)``, or None once this reference
+    has been entered ``cfg.max_ref_depth`` times along the current compile
+    path."""
+    if key == "$ref":
+        if not isinstance(val, str):
+            raise SchemaError(f"$ref must be a string, got {val!r}")
+        target, sub_cfg = _resolve_ref(val, cfg)
+        ref_key = (cfg.base_uri, val)
+    else:
+        target, res, res_uri = _resolve_dynamic_ref(key, val, cfg)
+        sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
+        ref_key = (cfg.base_uri, f"{key}:{val}")
+    if ref_stack.count(ref_key) >= cfg.max_ref_depth:
+        return None
+    return target, sub_cfg, ref_stack + (ref_key,)
+
+
 def _references(schema: dict, cfg: Config, ref_stack: tuple):
-    """Resolve the reference keywords of ``schema`` — the one place the
-    recursion budget is applied. Yields ``(key, hit)`` for each of `$ref`,
-    `$dynamicRef`, `$recursiveRef` present, in that order. ``hit`` is
-    ``(target, sub_cfg, sub_stack)``, or None once this reference has been
-    entered ``cfg.max_ref_depth`` times along the current compile path."""
+    """``(key, _reference(...))`` for each reference keyword of ``schema``,
+    in evaluation order."""
     for key in _REF_KEYWORDS:
-        if key not in schema:
-            continue
-        val = schema[key]
-        if key == "$ref":
-            if not isinstance(val, str):
-                raise SchemaError(f"$ref must be a string, got {val!r}")
-            target, sub_cfg = _resolve_ref(val, cfg)
-            ref_key = (cfg.base_uri, val)
-        else:
-            target, res, res_uri = _resolve_dynamic_ref(key, val, cfg)
-            sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
-            ref_key = (cfg.base_uri, f"{key}:{val}")
-        if ref_stack.count(ref_key) >= cfg.max_ref_depth:
-            yield key, None
-        else:
-            yield key, (target, sub_cfg, ref_stack + (ref_key,))
+        if key in schema:
+            yield key, _reference(key, schema[key], cfg, ref_stack)
 
 
 @without_call_sites()
@@ -493,157 +453,62 @@ def compile_node(
         cfg = cfg.with_root(schema, urljoin(cfg.base_uri or "", sid))
 
     parts: list[Compiled] = []
-    present_keys = [k for k in _KEYWORD_ORDER if k in schema]
-    refs = dict(_references(schema, cfg, ref_stack))
-
-    for key in present_keys:
-        val = schema[key]
+    registered = ((k, h) for k, h in KEYWORD_COMPILERS.items() if k not in _KEYWORDS)
+    for key, handler in chain(_KEYWORDS.items(), registered):
+        if key not in schema:
+            continue
         kwp = f"{kw}/{_ptr_escape(key)}"
-        _n_before = len(parts)
-        if key in refs:
-            if refs[key] is None:
-                # recursion budget exhausted: data nesting deeper than the
-                # unrolled plan is conservatively REJECTED (documented
-                # limit; shallower data is validated exactly)
-                parts.append(
-                    _leaf(cfg, False, kwp, ctx,
-                          lambda d=cfg.max_ref_depth: M.msg_ref_depth(d))
-                )
-            else:
-                target, sub_cfg, sub_stack = refs[key]
-                sub = compile_node(target, ctx, kwp, sub_cfg, sub_stack)
-                if sub.ok is not True:
-                    parts.append(
-                        _and_combine([sub], cfg, own=(kwp, ctx, lambda c=ctx: M.msg_ref(c)))
-                    )
-        elif key == "type":
-            parts.append(_k_type(val, ctx, kwp, cfg))
-        elif key == "const":
-            parts.append(_leaf(cfg, ctx.eq_const(val), kwp, ctx, lambda c=ctx, v=val: M.msg_const(c, v)))
-        elif key == "enum":
-            parts.append(_k_enum(val, ctx, kwp, cfg))
-        elif key == "required":
-            parts.append(_k_required(val, ctx, kwp, cfg))
-        elif key == "dependentRequired":
-            parts.append(_k_dependent_required(val, ctx, kwp, cfg))
-        elif key == "minProperties":
-            g = ctx.is_type("object")
-            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_properties(c, v))))
-        elif key == "maxProperties":
-            g = ctx.is_type("object")
-            parts.append(_guarded(g, _leaf(cfg, ctx.obj_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_properties(c, v))))
-        elif key == "properties":
-            parts.append(_k_properties(val, ctx, kwp, cfg, ref_stack))
-        elif key == "patternProperties":
-            parts.append(_k_pattern_properties(val, ctx, kwp, cfg, ref_stack))
-        elif key == "additionalProperties":
-            parts.append(_k_additional_properties(schema, val, ctx, kwp, cfg, ref_stack))
-        elif key == "propertyNames":
-            parts.append(_k_property_names(val, ctx, kwp, cfg, ref_stack))
-        elif key == "dependentSchemas":
-            parts.append(_k_dependent_schemas(val, ctx, kwp, cfg, ref_stack))
-        elif key == "minItems":
-            g = ctx.is_type("array")
-            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_items(c, v))))
-        elif key == "maxItems":
-            g = ctx.is_type("array")
-            parts.append(_guarded(g, _leaf(cfg, ctx.arr_size() <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_items(c, v))))
-        elif key == "uniqueItems":
-            if val:
-                parts.append(_k_unique_items(ctx, kwp, cfg))
-        elif key == "prefixItems":
-            parts.append(_k_prefix_items(val, ctx, kwp, cfg, ref_stack))
-        elif key == "items":
-            if isinstance(val, list):  # draft-7 tuple form
-                parts.append(_k_prefix_items(val, ctx, kwp, cfg, ref_stack))
-            else:
-                start = len(schema.get("prefixItems", [])) if isinstance(schema.get("prefixItems"), list) else 0
-                parts.append(_k_items(val, ctx, kwp, cfg, start, ref_stack))
-        elif key == "contains":
-            parts.append(_k_contains(schema, val, ctx, kwp, cfg, ref_stack))
-        elif key == "minLength":
-            g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) >= val, kwp, ctx, lambda c=ctx, v=val: M.msg_min_length(c, v))))
-        elif key == "maxLength":
-            g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, F.length(ctx.str_val()) <= val, kwp, ctx, lambda c=ctx, v=val: M.msg_max_length(c, v))))
-        elif key == "pattern":
-            g = ctx.is_type("string")
-            parts.append(_guarded(g, _leaf(cfg, pattern_ok(ctx.str_val(), val), kwp, ctx, lambda c=ctx, v=val: M.msg_regex(c, v))))
-        elif key == "format":
-            if cfg.format_assertion and val in FORMATS:
-                if cfg.format_strict:
-                    from jsonschema_spark.functions.formats import format_ok_strict as _fmt_build
-                else:
-                    _fmt_build = format_ok
-                g = ctx.is_type("string")
-                parts.append(_guarded(g, _leaf(cfg, _fmt_build(val, ctx.str_val()), kwp, ctx, lambda c=ctx, v=val: M.msg_format(c, v))))
-        elif key == "minimum":
-            g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() >= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater_equal(c, v))))
-        elif key == "maximum":
-            g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() <= float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less_equal(c, v))))
-        elif key == "exclusiveMinimum":
-            g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() > float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_greater(c, v))))
-        elif key == "exclusiveMaximum":
-            g = ctx.is_type("number")
-            parts.append(_guarded(g, _leaf(cfg, ctx.num_val() < float(val), kwp, ctx, lambda c=ctx, v=val: M.msg_less(c, v))))
-        elif key == "multipleOf":
-            g = ctx.is_type("number")
-            tag = ctx.tag()
-            is_int_col = tag == "integer" if isinstance(tag, str) else False
-            parts.append(_guarded(g, _leaf(cfg, divisible_ok(ctx.num_val(), val, is_int_col), kwp, ctx, lambda c=ctx, v=val: M.msg_multiple_of(c, v))))
-        elif key == "allOf":
-            parts.append(_k_all_of(val, ctx, kwp, cfg, ref_stack))
-        elif key == "anyOf":
-            parts.append(_k_any_of(val, ctx, kwp, cfg, ref_stack))
-        elif key == "oneOf":
-            parts.append(_k_one_of(val, ctx, kwp, cfg, ref_stack))
-        elif key == "not":
-            parts.append(_k_not(val, ctx, kwp, cfg, ref_stack))
-        elif key == "if":
-            parts.append(_k_conditional(schema, ctx, kw, cfg, ref_stack))
-        elif key == "unevaluatedProperties":
-            parts.append(_k_unevaluated_properties(schema, val, ctx, kwp, cfg, ref_stack))
-        elif key == "unevaluatedItems":
-            parts.append(_k_unevaluated_items(schema, val, ctx, kwp, cfg, ref_stack))
+        if isinstance(handler, KeywordCompiler):
+            part = _assertion(handler, schema[key], ctx, kwp, cfg)
+        else:
+            part = handler(schema, schema[key], ctx, kwp, cfg, ref_stack)
+        if part is None:
+            continue
+        parts.append(part)
         # --trace analogue: record each keyword instruction's location and
         # verdict in evaluation order (Pre/Post log, output_trace.cc).
         # Only STATIC instance locations are recordable: compiles inside
         # higher-order-function lambdas (per-element/per-key loops) build
         # Columns bound to lambda variables that cannot be referenced
         # outside the loop — their parent applicator entry still traces.
-        if (
-            cfg.trace_sink is not None
-            and len(parts) > _n_before
-            and isinstance(ctx.loc, str)
-        ):
-            cfg.trace_sink.append((kwp, ctx.loc, parts[-1].ok))
-
-    # §2.7 extension hook: registered custom keyword compilers (the
-    # Compiler std::function analogue, compiler.h:77-80) run after the
-    # built-in dispatch, composing into the same conjunction
-    from jsonschema_spark.plans.registry import KEYWORD_COMPILERS
-
-    for key, spec in KEYWORD_COMPILERS.items():
-        if key in schema and key not in _KEYWORD_ORDER:
-            kwp = f"{kw}/{_ptr_escape(key)}"
-            cond = spec.build(schema[key], ctx)
-            leaf = _leaf(cfg, cond, kwp, ctx,
-                         lambda c=ctx, v=schema[key], s=spec: s.message(c, v))
-            if spec.type_guard:
-                leaf = _guarded(ctx.is_type(spec.type_guard), leaf)
-            parts.append(leaf)
+        if cfg.trace_sink is not None and isinstance(ctx.loc, str):
+            cfg.trace_sink.append((kwp, ctx.loc, part.ok))
 
     return _and_combine(parts, cfg)
 
 
 # --- individual keywords -----------------------------------------------------
+#
+# A handler takes ``(schema, value, ctx, kwp, cfg, ref_stack)`` — the node
+# (for keywords that read a sibling), this keyword's value, the instance
+# context, this keyword's location — and returns a Compiled, or None when
+# the keyword asserts nothing here (no part, no trace step). A keyword
+# that asserts on the value itself is a ``KeywordCompiler`` table entry
+# instead and compiles through ``_assertion``.
 
 
-def _k_type(val, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
+def _assertion(spec: KeywordCompiler, val, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
+    """``spec.build(val, ctx)`` as a leaf; values that are not of
+    ``spec.type_guard`` pass vacuously."""
+    leaf = _leaf(cfg, spec.build(val, ctx), kwp, ctx, lambda: spec.message(ctx, val))
+    return _guarded(ctx.is_type(spec.type_guard), leaf) if spec.type_guard else leaf
+
+
+def _k_reference(key: str, schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
+    hit = _reference(key, val, cfg, ref_stack)
+    if hit is None:
+        # recursion budget exhausted: data nesting deeper than the
+        # unrolled plan is conservatively REJECTED (documented limit;
+        # shallower data is validated exactly)
+        return _leaf(cfg, False, kwp, ctx, lambda: M.msg_ref_depth(cfg.max_ref_depth))
+    target, sub_cfg, sub_stack = hit
+    sub = compile_node(target, ctx, kwp, sub_cfg, sub_stack)
+    if sub.ok is True:
+        return None
+    return _and_combine([sub], cfg, own=(kwp, ctx, lambda: M.msg_ref(ctx)))
+
+
+def _k_type(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     types = [val] if isinstance(val, str) else list(val)
     for t in types:
         if not isinstance(t, str):
@@ -659,29 +524,7 @@ def _k_type(val, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
     return _leaf(cfg, cond, kwp, ctx, lambda c=ctx, e=exp: M.msg_type(c, e))
 
 
-def _k_enum(val: list, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
-    if not val:
-        return _leaf(cfg, False, kwp, ctx, lambda c=ctx: M.msg_enum_empty(c))
-    cond = or_(*[ctx.eq_const(v) for v in val])
-    return _leaf(cfg, cond, kwp, ctx, lambda c=ctx, v=val: M.msg_enum(c, v))
-
-
-def _k_required(val: list, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
-    if not val:
-        return Compiled(True)
-    statics = [ctx.get_prop(n).present for n in val]
-    if len(val) == 1:
-        inner = _leaf(cfg, statics[0], kwp, ctx, lambda n=val[0]: M.msg_required_single(n))
-    else:
-        cond = and_(*statics)
-        inner = _leaf(
-            cfg, cond, kwp, ctx,
-            lambda names=list(val), pc=statics: M.msg_required_multi(names, pc),
-        )
-    return _guarded(ctx.is_type("object"), inner)
-
-
-def _k_dependent_required(val: dict, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
+def _k_dependent_required(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = []
     for trigger, deps in val.items():
         trig_present = ctx.get_prop(trigger).present
@@ -692,6 +535,22 @@ def _k_dependent_required(val: dict, ctx: Ctx, kwp: str, cfg: Config) -> Compile
             _leaf(cfg, cond, kwp, ctx, lambda t=trigger, m=missing: M.msg_dependent_required(t, m))
         )
     return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
+
+
+def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
+    if not (cfg.format_assertion and val in FORMATS):
+        return None  # an annotation only
+    if cfg.format_strict:
+        from jsonschema_spark.functions.formats import format_ok_strict as build
+    else:
+        build = format_ok
+    leaf = _leaf(cfg, build(val, ctx.str_val()), kwp, ctx, lambda: M.msg_format(ctx, val))
+    return _guarded(ctx.is_type("string"), leaf)
+
+
+def _multiple_of_ok(val, ctx: Ctx) -> Cond:
+    tag = ctx.tag()  # a Column on VARIANT: only a typed column is known integral
+    return divisible_ok(ctx.num_val(), val, tag == "integer" if isinstance(tag, str) else False)
 
 
 def _apply_subschema(sub_schema, child: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -734,7 +593,7 @@ def _each_key(keys: Column, key_ctx, val, kwp: str, cfg: Config, ref_stack) -> C
     return Compiled(ok, F.flatten(F.transform(keys, lambda k: viols_of(key_ctx(k)))).cast(VIOLS_DT))
 
 
-def _k_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = []
     for name, sub_schema in val.items():
         child = ctx.get_prop(name)
@@ -753,7 +612,7 @@ def _static_prop_names(ctx: Ctx) -> Optional[list[str]]:
     return None
 
 
-def _k_pattern_properties(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     from jsonschema_spark.functions.strings import permissive_search_py
 
     static_names = _static_prop_names(ctx)
@@ -848,7 +707,7 @@ def _loc_concat(ctx: Ctx, key: Column) -> Column:
     return F.concat(base, F.lit("/"), key)
 
 
-def _k_property_names(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_property_names(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     keys = ctx.obj_keys()
 
     def key_ctx(k: Column) -> Ctx:
@@ -857,7 +716,7 @@ def _k_property_names(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compil
     return _guarded(ctx.is_type("object"), _each_key(keys, key_ctx, val, kwp, cfg, ref_stack))
 
 
-def _k_dependent_schemas(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_dependent_schemas(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = []
     for trigger, sub_schema in val.items():
         child = ctx.get_prop(trigger)
@@ -866,13 +725,15 @@ def _k_dependent_schemas(val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) 
     return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
 
 
-def _k_unique_items(ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
+def _k_unique_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
     """AssertionUnique (dispatch.h:814-818): deep distinctness.
 
     Fast path: typed scalar arrays (flat columns) — pure JVM
     ``array_distinct`` (exact: one Spark array holds one numeric type).
     Slow path: VARIANT arrays and container-element arrays — canonical
     deep equality in an Arrow pudf (key order irrelevant, 1 == 1.0)."""
+    if not val:
+        return None
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
     from jsonschema_spark.functions.canonical import unique_canonical
@@ -891,7 +752,7 @@ def _k_unique_items(ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
     return _guarded(ctx.is_type("array"), inner)
 
 
-def _k_prefix_items(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_prefix_items(schema: dict, val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
     factory = ctx.element_ctx_factory()
@@ -936,7 +797,14 @@ def _each_item(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack, skip, own_error=
     return _guarded(ctx.is_type("array"), Compiled(ok, viols))
 
 
-def _k_items(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Compiled:
+def _k_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    if isinstance(val, list):  # draft-7 tuple form
+        return _k_prefix_items(schema, val, ctx, kwp, cfg, ref_stack)
+    prefix = schema.get("prefixItems")
+    return _items_from(val, ctx, kwp, cfg, len(prefix) if isinstance(prefix, list) else 0, ref_stack)
+
+
+def _items_from(val, ctx: Ctx, kwp: str, cfg: Config, start: int, ref_stack) -> Compiled:
     return _each_item(val, ctx, kwp, cfg, ref_stack, lambda i, elem: i < start if start else False,
                       lambda: M.msg_items_from(start) if start else M.msg_items())
 
@@ -957,12 +825,12 @@ def _k_contains(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -
     return _guarded(ctx.is_type("array"), inner)
 
 
-def _k_all_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_all_of(schema: dict, val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = [compile_node(s, ctx, f"{kwp}/{i}", cfg, ref_stack) for i, s in enumerate(val)]
     return _and_combine(parts, cfg, own=(kwp, ctx, lambda c=ctx, n=len(val): M.msg_all_of(c, n)))
 
 
-def _k_any_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_any_of(schema: dict, val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = [compile_node(s, ctx, f"{kwp}/{i}", cfg, ref_stack) for i, s in enumerate(val)]
     ok = or_(*[p.ok for p in parts])
     if ok is True or not cfg.want_viols:
@@ -971,7 +839,7 @@ def _k_any_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled
     return Compiled(ok, F.concat(*[p.viols_col() for p in parts], own))
 
 
-def _k_one_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_one_of(schema: dict, val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     parts = [compile_node(s, ctx, f"{kwp}/{i}", cfg, ref_stack) for i, s in enumerate(val)]
     count = None
     for p in parts:
@@ -984,16 +852,16 @@ def _k_one_of(val: list, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled
     return Compiled(ok, F.when(count == 0, F.concat(*[p.viols_col() for p in parts], own)).otherwise(own))
 
 
-def _k_not(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+def _k_not(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     # compile the negated child in fast mode: its violations are meaningless
     sub_cfg = cfg.fast()
     sub = compile_node(val, ctx, kwp, sub_cfg, ref_stack)
     return _leaf(cfg, not_(sub.ok), kwp, ctx, lambda c=ctx: M.msg_not(c))
 
 
-def _k_conditional(schema: dict, ctx: Ctx, kw: str, cfg: Config, ref_stack) -> Compiled:
-    fast_cfg = cfg.fast()
-    cond = compile_node(schema["if"], ctx, f"{kw}/if", fast_cfg, ref_stack)
+def _k_conditional(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    kw = kwp[:-len("/if")]  # then/else sit beside `if`
+    cond = compile_node(val, ctx, kwp, cfg.fast(), ref_stack)
     then_c = compile_node(schema["then"], ctx, f"{kw}/then", cfg, ref_stack) if "then" in schema else Compiled(True)
     else_c = compile_node(schema["else"], ctx, f"{kw}/else", cfg, ref_stack) if "else" in schema else Compiled(True)
     if isinstance(cond.ok, bool):
@@ -1001,12 +869,12 @@ def _k_conditional(schema: dict, ctx: Ctx, kw: str, cfg: Config, ref_stack) -> C
         chosen = then_c if cond.ok else else_c
         if chosen.ok is True or not cfg.want_viols:
             return Compiled(chosen.ok)
-        own = _viol(cfg, f"{kw}/if", ctx.loc, M.msg_conditional(ctx))
+        own = _viol(cfg, kwp, ctx.loc, M.msg_conditional(ctx))
         return Compiled(chosen.ok, F.concat(chosen.viols_col(), own))
     ok = F.when(B(cond.ok), B(then_c.ok)).otherwise(B(else_c.ok))
     if not cfg.want_viols:
         return Compiled(ok)
-    own = _viol(cfg, f"{kw}/if", ctx.loc, M.msg_conditional(ctx))
+    own = _viol(cfg, kwp, ctx.loc, M.msg_conditional(ctx))
     return Compiled(ok, F.when(B(cond.ok), F.concat(then_c.viols_col(), own))
                     .otherwise(F.concat(else_c.viols_col(), own)))
 
@@ -1207,7 +1075,7 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
         if _branches_mention(c, ("items", "prefixItems", "contains", "unevaluatedItems")):
             dynamic = True
     if not dynamic:
-        return _k_items(val, ctx, kwp, cfg, prefix, ref_stack)
+        return _items_from(val, ctx, kwp, cfg, prefix, ref_stack)
     return _k_unevaluated_items_dynamic(schema, val, ctx, kwp, cfg, ref_stack)
 
 
@@ -1216,6 +1084,56 @@ def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Con
         return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx, cfg, ref_stack)
 
     return _each_item(val, ctx, kwp, cfg, ref_stack, evaluated)
+
+
+# ---------------------------------------------------------------------------
+# The keyword table: key order is evaluation order (a deterministic walker
+# order; the reference's exact order lives in sourcemeta::core::SchemaWalker,
+# its dispatch in default_compiler.cc:83-639). Registered keywords
+# (plans/registry.py) follow every entry here.
+# ---------------------------------------------------------------------------
+
+_KEYWORDS: dict = {
+    "$ref": partial(_k_reference, "$ref"),
+    "$dynamicRef": partial(_k_reference, "$dynamicRef"),
+    "$recursiveRef": partial(_k_reference, "$recursiveRef"),
+    "type": _k_type,
+    "const": KeywordCompiler(lambda v, c: c.eq_const(v), M.msg_const),
+    "enum": KeywordCompiler(lambda v, c: or_(*[c.eq_const(x) for x in v]), M.msg_enum),
+    "required": KeywordCompiler(
+        lambda v, c: and_(*[c.get_prop(n).present for n in v]), M.msg_required, "object"),
+    "dependentRequired": _k_dependent_required,
+    "minProperties": KeywordCompiler(lambda v, c: c.obj_size() >= v, M.msg_min_properties, "object"),
+    "maxProperties": KeywordCompiler(lambda v, c: c.obj_size() <= v, M.msg_max_properties, "object"),
+    "properties": _k_properties,
+    "patternProperties": _k_pattern_properties,
+    "additionalProperties": _k_additional_properties,
+    "propertyNames": _k_property_names,
+    "dependentSchemas": _k_dependent_schemas,
+    "minItems": KeywordCompiler(lambda v, c: c.arr_size() >= v, M.msg_min_items, "array"),
+    "maxItems": KeywordCompiler(lambda v, c: c.arr_size() <= v, M.msg_max_items, "array"),
+    "uniqueItems": _k_unique_items,
+    "prefixItems": _k_prefix_items,
+    "items": _k_items,
+    "contains": _k_contains,
+    "minLength": KeywordCompiler(lambda v, c: F.length(c.str_val()) >= v, M.msg_min_length, "string"),
+    "maxLength": KeywordCompiler(lambda v, c: F.length(c.str_val()) <= v, M.msg_max_length, "string"),
+    "pattern": KeywordCompiler(lambda v, c: pattern_ok(c.str_val(), v), M.msg_regex, "string"),
+    "format": _k_format,
+    "minimum": KeywordCompiler(lambda v, c: c.num_val() >= float(v), M.msg_greater_equal, "number"),
+    "maximum": KeywordCompiler(lambda v, c: c.num_val() <= float(v), M.msg_less_equal, "number"),
+    "exclusiveMinimum": KeywordCompiler(lambda v, c: c.num_val() > float(v), M.msg_greater, "number"),
+    "exclusiveMaximum": KeywordCompiler(lambda v, c: c.num_val() < float(v), M.msg_less, "number"),
+    "multipleOf": KeywordCompiler(_multiple_of_ok, M.msg_multiple_of, "number"),
+    "allOf": _k_all_of,
+    "anyOf": _k_any_of,
+    "oneOf": _k_one_of,
+    "not": _k_not,
+    "if": _k_conditional,
+    # evaluated after every other applicator, like the reference
+    "unevaluatedProperties": _k_unevaluated_properties,
+    "unevaluatedItems": _k_unevaluated_items,
+}
 
 
 # ---------------------------------------------------------------------------

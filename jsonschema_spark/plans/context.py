@@ -26,11 +26,14 @@ null, boolean, integer, number, string, array, object.
 
 from __future__ import annotations
 
+from decimal import Decimal
 from typing import Callable, Union
 
 from pyspark.sql import Column, functions as F, types as T
 
 Cond = Union[bool, Column]  # static-foldable boolean
+
+_INT64 = range(-(2**63), 2**63)  # integers a bigint literal can hold
 
 
 def B(x: Cond) -> Column:
@@ -304,8 +307,9 @@ class FlatColCtx(Ctx):
         if isinstance(value, (int, float)):
             if self._tag == "integer" and isinstance(value, int):
                 # exact int64 compare — the double path collides values
-                # beyond 2^53 (AssertionEqual is exact, dispatch.h:697)
-                return self.col.cast("long") == F.lit(value)
+                # beyond 2^53 (AssertionEqual is exact, dispatch.h:697);
+                # no integer column holds a constant beyond int64
+                return self.col.cast("long") == F.lit(value) if value in _INT64 else False
             if self._tag in ("integer", "number"):
                 return self.num_val() == F.lit(float(value))
             return False
@@ -394,8 +398,8 @@ class FlatRowCtx(Ctx):
         for name in self.fields:
             child = self.get_prop(name)
             if name in value:
-                conds.append(or_(not_(B(child.present)), child.eq_const(value[name])))
-                conds.append(B(child.present) if value[name] is not None else True)
+                # a NULL column is an absent member, never a JSON null
+                conds.append(and_(child.present, child.eq_const(value[name])))
             else:
                 conds.append(not_(B(child.present)))
         for k in value:
@@ -525,20 +529,29 @@ class VariantCtx(Ctx):
             # exactly double-representable (reference cross-type numeric
             # compare is exact)
             s = self._schema_str()
-            is_int = (
-                s.startswith("BIGINT") | s.startswith("INT")
-                | s.startswith("SMALLINT") | s.startswith("TINYINT")
-            )
-            long_eq = is_int & (F.try_variant_get(self.v, "$", "bigint") == F.lit(value))
+            if value in _INT64:
+                exact = (
+                    s.startswith("BIGINT") | s.startswith("INT")
+                    | s.startswith("SMALLINT") | s.startswith("TINYINT")
+                ) & (F.try_variant_get(self.v, "$", "bigint") == F.lit(value))
+                reals = ("DOUBLE", "FLOAT", "DECIMAL")
+            else:
+                # a wider JSON integer parses as DECIMAL(p,0) up to 38
+                # digits (compared exactly here), as DOUBLE beyond
+                exact = (
+                    s.startswith("DECIMAL") & s.endswith(",0)")
+                    & (F.try_variant_get(self.v, "$", "decimal(38,0)") == F.lit(Decimal(value)))
+                ) if abs(value) < 10**38 else False
+                reals = ("DOUBLE", "FLOAT")
             try:
                 as_double = float(value)
                 representable = int(as_double) == value
             except OverflowError:
                 representable = False
             if not representable:
-                return long_eq
-            is_real = s.startswith("DOUBLE") | s.startswith("FLOAT") | s.startswith("DECIMAL")
-            return long_eq | (is_real & (self.num_val() == F.lit(as_double)))
+                return exact
+            is_real = or_(*[s.startswith(r) for r in reals])
+            return or_(exact, is_real & (self.num_val() == F.lit(as_double)))
         if isinstance(value, float):
             return B(self.is_type("number")) & (self.num_val() == F.lit(float(value)))
         if isinstance(value, str):

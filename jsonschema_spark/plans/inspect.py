@@ -18,7 +18,7 @@ from typing import Optional, Union
 
 from pyspark.sql import types as T
 
-from jsonschema_spark.plans.compiler import _KEYWORD_ORDER
+from jsonschema_spark.plans.compiler import _KEYWORDS
 from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
 
 _APPLICATORS = {
@@ -57,7 +57,7 @@ def inspect_schema(
         children: dict = {}
         for suffix, sub in subschemas(node):
             children.setdefault(suffix.split("/")[1], []).append((suffix, sub))
-        for key in _KEYWORD_ORDER:
+        for key in _KEYWORDS:
             if key not in node:
                 continue
             val = node[key]

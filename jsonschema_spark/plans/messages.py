@@ -14,7 +14,7 @@ from typing import Sequence, Union
 
 from pyspark.sql import Column, functions as F
 
-from jsonschema_spark.plans.context import B, Cond, Ctx, json_escape_col
+from jsonschema_spark.plans.context import B, Ctx, json_escape_col
 
 
 def jrepr(value) -> str:
@@ -98,6 +98,8 @@ def msg_const(ctx: Ctx, value) -> Column:
 
 
 def msg_enum(ctx: Ctx, values: list) -> Column:
+    if not values:
+        return C("The ", _tag_col(ctx), " value was not expected to validate against the empty enumeration")
     if len(values) == 1:
         return msg_const(ctx, values[0])
     try:
@@ -222,12 +224,12 @@ def msg_multiple_of(ctx: Ctx, value) -> Column:
 # --- objects -----------------------------------------------------------------
 
 
-def msg_required_single(name: str) -> Column:
-    return F.lit(f"The object value was expected to define the property {esc(name)}")
-
-
-def msg_required_multi(names: list[str], present_conds: list[Cond]) -> Column:
-    """AssertionDefinesAll: lists missing properties (sorted, per std::set)."""
+def msg_required(ctx: Ctx, names: list[str]) -> Column:
+    """AssertionDefines for one name; AssertionDefinesAll lists the
+    missing properties (sorted, per std::set)."""
+    if len(names) == 1:
+        return F.lit(f"The object value was expected to define the property {esc(names[0])}")
+    present_conds = [ctx.get_prop(n).present for n in names]
     order = sorted(range(len(names)), key=lambda i: names[i])
     head = "The object value was expected to define properties " + oxford(
         [esc(n) for n in names]
@@ -446,7 +448,3 @@ def msg_ref_depth(max_depth: int) -> Column:
 
 def msg_false_schema() -> Column:
     return F.lit("No instance is expected to succeed against the false schema")
-
-
-def msg_enum_empty(ctx: Ctx) -> Column:
-    return C("The ", _tag_col(ctx), " value was not expected to validate against the empty enumeration")

@@ -3,10 +3,13 @@
 The reference exposes a ``Compiler`` std::function hook so users can
 compile their own keywords
 (/root/reference/vendor/blaze/src/compiler/include/sourcemeta/blaze/compiler.h:77-80).
-Here a registered keyword maps to a Column-builder consulted by
-``compile_node`` for any schema key the built-in dispatch does not
-handle; its condition composes into the conjunction like any built-in
-assertion, and its violations carry the registered message.
+Here a registered keyword takes the built-ins' path: ``compile_node``
+walks the compiler's keyword table and then the registered keywords, so
+a registered keyword is evaluated after every built-in, compiles through
+the same ``KeywordCompiler`` assertion path as ``minLength`` or
+``multipleOf``, composes into the conjunction, carries its message in
+violation rows and appears in ``trace()`` rows. A built-in name cannot be
+overridden: registering one changes nothing.
 
     from jsonschema_spark.plans.registry import register_keyword
 
@@ -33,7 +36,6 @@ from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class KeywordCompiler:
-    name: str
     build: Callable  # (value, ctx) -> Cond
     message: Callable  # (ctx, value) -> Column
     type_guard: Optional[str] = None  # JSON type name or None
@@ -51,7 +53,7 @@ def register_keyword(
     if message is None:
         def message(ctx, value, _n=name):  # noqa: ARG001
             return F.lit(f"The value was expected to validate against the {_n} keyword")
-    KEYWORD_COMPILERS[name] = KeywordCompiler(name, build, message, type_guard)
+    KEYWORD_COMPILERS[name] = KeywordCompiler(build, message, type_guard)
 
 
 def unregister_keyword(name: str) -> None:

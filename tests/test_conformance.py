@@ -306,6 +306,18 @@ ADVERSARIAL = [
     ("nested arrays items of items",
      {"items": {"items": {"type": "integer"}}},
      [("[[1],[2,3]]", True), ('[[1],["x"]]', False), ("[]", True)]),
+    # integers beyond int64 parse as DECIMAL(p,0) (or DOUBLE for 1e20)
+    ("const integer beyond int64",
+     {"const": 100000000000000000000},
+     [("100000000000000000000", True), ("100000000000000000001", False), ("1e20", True),
+      ("1", False)]),
+    ("enum with an integer beyond int64", {"enum": [100000000000000000000, 1]},
+     [("100000000000000000000", True), ("100000000000000000001", False), ("1e20", True),
+      ("1", True)]),
+    ("const beyond int64 not double-representable",
+     {"const": 100000000000000000001},
+     [("100000000000000000001", True), ("100000000000000000000", False),
+      ("100000000000000000000.5", False), ("1e20", False)]),
 ]
 
 

@@ -410,6 +410,45 @@ def test_custom_keyword_registry(spark):
         unregister_keyword("x-even")
 
 
+def test_registered_builtin_name_changes_nothing(spark):
+    """A built-in keyword cannot be overridden: registering its name
+    leaves every verdict and violation row as it was."""
+    from jsonschema_spark import register_keyword, unregister_keyword, violations
+
+    schema = {"properties": {"s": {"minLength": 3}}}
+    docs = spark.createDataFrame(
+        [(1, '{"s": "abcd"}'), (2, '{"s": "ab"}'), (3, '{"s": 5}')], "id long, doc string")
+
+    def run():
+        got = sorted((r["id"], r["valid"]) for r in validate(docs, schema, doc_col="doc").collect())
+        viols = sorted(tuple(r) for r in violations(docs, schema, ["id"], doc_col="doc").collect())
+        return got, viols
+
+    before = run()
+    register_keyword("minLength", build=lambda value, ctx: False,
+                     message=lambda ctx, value: F.lit("overridden"))
+    try:
+        assert run() == before
+    finally:
+        unregister_keyword("minLength")
+    assert before[0] == [(1, True), (2, False), (3, True)]
+
+
+def test_registered_keyword_traces_after_builtins(spark):
+    from jsonschema_spark import register_keyword, trace, unregister_keyword
+
+    register_keyword("x-short", build=lambda value, ctx: F.length(ctx.str_val()) <= value,
+                     type_guard="string")
+    try:
+        schema = {"x-short": 2, "type": "string", "minLength": 1}
+        docs = spark.createDataFrame([(1, '"abc"')], "id long, doc string")
+        rows = sorted(trace(docs, schema, ["id"], doc_col="doc").collect(), key=lambda r: r["step"])
+        assert [(r["keywordLocation"], r["ok"]) for r in rows] == [
+            ("/type", True), ("/minLength", True), ("/x-short", False)]
+    finally:
+        unregister_keyword("x-short")
+
+
 def test_config_file_resolver(tmp_path, spark):
     import json as _json
     from jsonschema_spark import compile_schema, find_config, load_config, resolver_from_config

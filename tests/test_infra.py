@@ -720,6 +720,23 @@ def test_trace_rows(spark):
     assert all(ok for _, _, ok in by_id[2])
 
 
+def test_annotations_and_trace_keep_caller_column_names(spark):
+    """Id columns may carry any name, helper-like ones included."""
+    from jsonschema_spark import annotations, trace
+
+    schema = {"title": "T", "properties": {"a": {"minimum": 5}}}
+    docs = spark.createDataFrame([(1, 2, 3, 4, '{"a": 7}')],
+                                 "_a long, __anns long, _s long, __steps long, doc string")
+    ids = ["_a", "__anns", "_s", "__steps"]
+    rows = annotations(docs, schema, ids, doc_col="doc").collect()
+    assert {tuple(r[c] for c in ids) for r in rows} == {(1, 2, 3, 4)}
+    assert sorted(r["keywordLocation"] for r in rows) == ["/properties", "/title"]
+    rows = trace(docs, schema, ids, doc_col="doc").collect()
+    assert {tuple(r[c] for c in ids) for r in rows} == {(1, 2, 3, 4)}
+    assert [r["keywordLocation"] for r in sorted(rows, key=lambda r: r["step"])] == [
+        "/properties/a/minimum", "/properties"]
+
+
 def test_json_dir_multiline_files_whole(spark, tmp_path):
     """Regression: wholetext must be the reader kwarg — multi-line JSON
     files are ONE document, not one per line."""

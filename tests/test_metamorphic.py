@@ -153,6 +153,28 @@ def test_flat_and_tree_paths_agree(spark):
     assert not disagreements, f"{len(disagreements)} path disagreements; first 3: {disagreements[:3]}"
 
 
+def test_root_const_null_member_is_not_a_null_column(spark):
+    """A NULL column is an absent member on the flat path, as ``to_json``
+    makes it on the tree path: it never matches a ``null`` member of a
+    root-level const/enum object. Flat ≡ tree ≡ validate_py."""
+    import json
+
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    df = spark.createDataFrame([(0, 1, None), (1, 1, 5)], "id long, i long, a long")
+    df = df.withColumn("doc", F.to_json(F.struct("i", "a")))
+    docs = [json.loads(r["doc"]) for r in df.orderBy("id").collect()]
+    for schema, want in (
+        ({"const": {"i": 1, "a": None}}, [False, False]),
+        ({"enum": [{"i": 1, "a": None}, {"i": 9}]}, [False, False]),
+        ({"enum": [{"i": 1}, {"i": 1, "a": None}]}, [True, False]),
+    ):
+        flat = [r["valid"] for r in validate(df, schema, instance_cols=["i", "a"])
+                .orderBy("id").collect()]
+        tree = [r["valid"] for r in validate(df, schema, doc_col="doc").orderBy("id").collect()]
+        assert flat == tree == [validate_py(schema, d) for d in docs] == want, schema
+
+
 def test_tree_path_matches_python_evaluator(spark):
     """Third independent leg: the compiled VARIANT tree path must agree
     with the driver-side reference evaluator (plans/pyeval.py) — the

@@ -73,6 +73,13 @@ def test_rdf_df_gates_on_validity(spark):
     assert node["https://schema.org/age"] == [{"@value": 36}]
 
 
+def test_rdf_df_reads_the_named_verdict_column(spark):
+    df = spark.createDataFrame([(1, '{"name": "Ada"}'), (2, '{"age": 99}')], "id long, doc string")
+    rows = {r["id"]: (r["ok"], r["jsonld"] is not None)
+            for r in rdf_df(df, SCHEMA, "doc", valid_col="ok").collect()}
+    assert rows == {1: (True, True), 2: (False, False)}
+
+
 # --- flatten / compact goldens (test/rdf/pass_flatten.sh, pass_compact.sh,
 # pass_flatten_compact.sh — expected documents copied verbatim) ---------------
 

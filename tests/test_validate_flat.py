@@ -147,6 +147,14 @@ def test_multiple_of_beyond_int64(spark, k, want):
     assert validate_py(schema, {"x": 1e20}) is want
 
 
+def test_const_and_enum_beyond_int64_on_integer_column(spark):
+    df = rows(spark, [(5,)], "a long")
+    for sub, want in (({"const": 10**20}, False), ({"enum": [10**20]}, False),
+                      ({"enum": [10**20, 5]}, True)):
+        out = validate(df, {"properties": {"a": sub}}).collect()
+        assert [r.valid for r in out] == [want], sub
+
+
 def test_type_integer_accepts_integral_real(spark):
     df = rows(spark, [(3.0,), (3.5,)], "x double")
     got = [r.valid for r in validate(df, {"properties": {"x": {"type": "integer"}}}).collect()]
