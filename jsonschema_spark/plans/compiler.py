@@ -58,8 +58,10 @@ from jsonschema_spark.plans.context import (
     Ctx,
     FlatColCtx,
     FlatRowCtx,
+    MissingCtx,
     S,
     VariantCtx,
+    _child_loc,
     and_,
     not_,
     or_,
@@ -609,7 +611,29 @@ def _static_prop_names(ctx: Ctx) -> Optional[list[str]]:
         # nested struct: field names are static too (a NULL field counts
         # as absent, same convention as the top-level row)
         return [f.name for f in ctx.dtype.fields]
+    if isinstance(ctx, MissingCtx) or (isinstance(ctx, FlatColCtx) and ctx.tag() != "object"):
+        return []  # statically not an object: no members
     return None
+
+
+def _every_member(parts: list[Compiled], cfg: Config) -> Compiled:
+    """Conjunction of per-member parts that reports every failing member,
+    each gated on its own ``ok``, as the dynamic key loops do."""
+    return _and_combine(parts, replace(cfg, short_circuit=False))
+
+
+def _name_in(k: Union[str, Column], names: list) -> Cond:
+    """Whether member name ``k`` is one of ``names``; folded for a static name."""
+    if isinstance(k, str):
+        return k in names
+    return k.isin(names) if names else False
+
+
+def _name_matches(k: Union[str, Column], pattern: str) -> Cond:
+    """Whether member name ``k`` matches ``pattern``; folded for a static name."""
+    from jsonschema_spark.functions.strings import permissive_search_py
+
+    return permissive_search_py(pattern, k) if isinstance(k, str) else pattern_ok(k, pattern)
 
 
 def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -620,10 +644,12 @@ def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Conf
     for pattern, sub_schema in val.items():
         kwpp = f"{kwp}/{_ptr_escape(pattern)}"
         if static_names is not None:
+            members = []
             for name in static_names:
                 if permissive_search_py(pattern, name):
                     child = ctx.get_prop(name)
-                    parts.append(_apply_subschema(sub_schema, child, kwpp, cfg, ref_stack))
+                    members.append(_apply_subschema(sub_schema, child, kwpp, cfg, ref_stack))
+            parts.append(_every_member(members, cfg))
         else:
             entries = ctx.obj_entries_factory()
             if entries is None:
@@ -666,7 +692,7 @@ def _k_extra_properties(
                 parts.append(_guarded(child.present, inner))
             else:
                 parts.append(_apply_subschema(val, child, kwp, cfg, ref_stack))
-        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
+        return _guarded(ctx.is_type("object"), _every_member(parts, cfg))
 
     entries = ctx.obj_entries_factory()
     if entries is None:
@@ -691,7 +717,7 @@ def _apply_to_extra_keys(
         if cfg.want_viols:
             viols = F.transform(
                 extra_keys,
-                lambda k: _viol_struct(cfg.base_uri, kwp, _loc_concat(ctx, k),
+                lambda k: _viol_struct(cfg.base_uri, kwp, _child_loc(ctx.loc, k),
                                       M.msg_additional_property(k)),
             ).cast(VIOLS_DT)
             inner = Compiled(ok, viols)
@@ -702,16 +728,11 @@ def _apply_to_extra_keys(
     return _guarded(ctx.is_type("object"), inner)
 
 
-def _loc_concat(ctx: Ctx, key: Column) -> Column:
-    base = F.lit(ctx.loc) if isinstance(ctx.loc, str) else ctx.loc
-    return F.concat(base, F.lit("/"), key)
-
-
 def _k_property_names(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     keys = ctx.obj_keys()
 
     def key_ctx(k: Column) -> Ctx:
-        return FlatColCtx(k, T.StringType(), _loc_concat(ctx, k))
+        return FlatColCtx(k, T.StringType(), _child_loc(ctx.loc, k))
 
     return _guarded(ctx.is_type("object"), _each_key(keys, key_ctx, val, kwp, cfg, ref_stack))
 
@@ -978,13 +999,14 @@ def _evaluated(schema, uneval: str, local, ctx: Ctx, cfg: Config, ref_stack,
     return or_(*conds)
 
 
-def _property_conds(k: Column):
-    """Keyword-local evaluated-set conditions for the property named ``k``."""
+def _property_conds(k: Union[str, Column]):
+    """Keyword-local evaluated-set conditions for the property named ``k``
+    (a static name or a key Column)."""
 
     def local(node: dict, cfg: Config, ref_stack) -> list[Cond]:
         props = node.get("properties") or {}
-        conds: list[Cond] = [k.isin(list(props.keys()))] if props else []
-        conds += [pattern_ok(k, p) for p in node.get("patternProperties") or {}]
+        conds: list[Cond] = [_name_in(k, list(props))] if props else []
+        conds += [_name_matches(k, p) for p in node.get("patternProperties") or {}]
         if "additionalProperties" in node:
             conds.append(True)
         return conds
@@ -1039,22 +1061,23 @@ def _k_unevaluated_properties_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg
     if static_names is not None:
         parts: list[Compiled] = []
         for name in static_names:
-            child = ctx.get_prop(name)
-            evaluated = _evaluated(schema, "unevaluatedProperties", _property_conds(F.lit(name)),
+            evaluated = _evaluated(schema, "unevaluatedProperties", _property_conds(name),
                                    ctx, cfg, ref_stack)
+            if evaluated is True:
+                continue
+            child = ctx.get_prop(name)
             if val is False:
-                cond = or_(not_(child.present), evaluated)
-                parts.append(_leaf(cfg, cond, kwp, child, lambda n=name: M.msg_additional_property(n)))
+                sub = _leaf(cfg, False, kwp, child, lambda n=name: M.msg_additional_property(n))
             else:
                 sub = compile_node(val, child, kwp, cfg, ref_stack)
-                parts.append(_guarded(and_(child.present, not_(evaluated)), sub))
-        return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
+            parts.append(_guarded(and_(child.present, not_(evaluated)), sub))
+        return _guarded(ctx.is_type("object"), _every_member(parts, cfg))
     entries = ctx.obj_entries_factory()
     if entries is None:
         raise SchemaError("unevaluatedProperties unsupported for this context")
     keys, prop_ctx = entries
-    uneval_keys = F.filter(keys, lambda k: ~B(_evaluated(
-        schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack)))
+    uneval_keys = F.filter(keys, lambda k: B(not_(_evaluated(
+        schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack))))
     return _apply_to_extra_keys(uneval_keys, prop_ctx, val, ctx, kwp, cfg, ref_stack)
 
 

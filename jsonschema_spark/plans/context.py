@@ -182,6 +182,15 @@ class Ctx:
 # ---------------------------------------------------------------------------
 
 
+def _exact_double(value: int):
+    """``value`` as a float when the double holds it exactly, else None."""
+    try:
+        as_double = float(value)
+    except OverflowError:
+        return None
+    return as_double if int(as_double) == value else None
+
+
 def _integral(d: Column) -> Column:
     """A double with zero fraction. ``floor`` would cast to bigint and
     saturate, so 2^70 would read as fractional."""
@@ -288,6 +297,12 @@ class FlatColCtx(Ctx):
             )
         return F.array()
 
+    def obj_entries_factory(self):
+        if not isinstance(self.dtype, T.MapType):
+            return None
+        col, vt, loc = self.col, self.dtype.valueType, self.loc
+        return F.map_keys(col), lambda key: FlatColCtx(F.element_at(col, key), vt, _child_loc(loc, key))
+
     def get_prop(self, name: str) -> Ctx:
         child_loc = _child_loc(self.loc, name)
         if isinstance(self.dtype, T.StructType):
@@ -305,17 +320,27 @@ class FlatColCtx(Ctx):
         if isinstance(value, bool):
             return self.bool_val() == F.lit(value) if self._tag == "boolean" else False
         if isinstance(value, (int, float)):
-            if self._tag == "integer" and isinstance(value, int):
-                # exact int64 compare — the double path collides values
-                # beyond 2^53 (AssertionEqual is exact, dispatch.h:697);
-                # no integer column holds a constant beyond int64
-                return self.col.cast("long") == F.lit(value) if value in _INT64 else False
-            if self._tag in ("integer", "number"):
-                return self.num_val() == F.lit(float(value))
-            return False
+            if self._tag not in ("integer", "number"):
+                return False
+            if isinstance(value, int):
+                # integer constants compare exactly (AssertionEqual,
+                # dispatch.h:697): the double path collides values beyond
+                # 2^53. No integer column holds a constant beyond int64, no
+                # decimal one a constant with more integral digits than it
+                # has, and a real equals one only when it is a double.
+                if self._tag == "integer":
+                    return self.col.cast("long") == F.lit(value) if value in _INT64 else False
+                if isinstance(self.dtype, T.DecimalType):
+                    fits = abs(value) < 10 ** (self.dtype.precision - self.dtype.scale)
+                    return self.col == F.lit(Decimal(value)) if fits else False
+                if _exact_double(value) is None:
+                    return False
+            return self.num_val() == F.lit(float(value))
         if isinstance(value, str):
             return self.str_val() == F.lit(value) if self._tag == "string" else False
-        # arrays/objects: deep structural equality via canonical rendering
+        if isinstance(self.dtype, T.StructType):
+            return _members_eq_const(self, [f.name for f in self.dtype.fields], value)
+        # arrays/maps: deep structural equality via canonical rendering
         # (key order irrelevant, 1 == 1.0 — evaluator_dispatch.h:697-712);
         # pudf slow path, containers only
         if self._tag in ("array", "object"):
@@ -336,12 +361,31 @@ class FlatColCtx(Ctx):
         return F.lit("null")
 
 
-def _child_loc(loc: Union[str, Column], name: str) -> Union[str, Column]:
-    # JSON Pointer escaping per RFC 6901
+def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, Column]:
+    """The location of member ``name`` (a static name or a key Column) of
+    the value at ``loc``, escaped per RFC 6901."""
+    if isinstance(name, Column):
+        return F.concat(S(loc), F.lit("/"), F.replace(F.replace(name, F.lit("~"), F.lit("~0")),
+                                                      F.lit("/"), F.lit("~1")))
     token = name.replace("~", "~0").replace("/", "~1")
     if isinstance(loc, str):
         return f"{loc}/{token}"
     return F.concat(loc, F.lit("/" + token))
+
+
+def _members_eq_const(ctx: Ctx, names: list[str], value) -> Cond:
+    """Equality of the object with static members ``names`` to a constant,
+    member by member: a NULL member is an absent one, never a JSON null."""
+    if not isinstance(value, dict) or any(k not in names for k in value):
+        return False
+    conds: list[Cond] = []
+    for name in names:
+        child = ctx.get_prop(name)
+        if name in value:
+            conds.append(and_(child.present, child.eq_const(value[name])))
+        else:
+            conds.append(not_(B(child.present)))
+    return and_(*conds)
 
 
 class FlatRowCtx(Ctx):
@@ -392,20 +436,7 @@ class FlatRowCtx(Ctx):
         return list(self.fields)
 
     def eq_const(self, value) -> Cond:
-        if not isinstance(value, dict):
-            return False
-        conds: list[Cond] = []
-        for name in self.fields:
-            child = self.get_prop(name)
-            if name in value:
-                # a NULL column is an absent member, never a JSON null
-                conds.append(and_(child.present, child.eq_const(value[name])))
-            else:
-                conds.append(not_(B(child.present)))
-        for k in value:
-            if k not in self.fields:
-                return False
-        return and_(*conds)
+        return _members_eq_const(self, list(self.fields), value)
 
     def json_repr(self) -> Column:
         return F.to_json(F.struct(*[self.colf(n).alias(n) for n in self.fields]))
@@ -514,7 +545,7 @@ class VariantCtx(Ctx):
         loc = self.loc
 
         def prop_ctx(key: Column) -> Ctx:
-            return VariantCtx(F.element_at(m, key), F.concat(S(loc), F.lit("/"), key))
+            return VariantCtx(F.element_at(m, key), _child_loc(loc, key))
 
         return F.map_keys(m), prop_ctx
 
@@ -543,12 +574,8 @@ class VariantCtx(Ctx):
                     & (F.try_variant_get(self.v, "$", "decimal(38,0)") == F.lit(Decimal(value)))
                 ) if abs(value) < 10**38 else False
                 reals = ("DOUBLE", "FLOAT")
-            try:
-                as_double = float(value)
-                representable = int(as_double) == value
-            except OverflowError:
-                representable = False
-            if not representable:
+            as_double = _exact_double(value)
+            if as_double is None:
                 return exact
             is_real = or_(*[s.startswith(r) for r in reals])
             return or_(exact, is_real & (self.num_val() == F.lit(as_double)))

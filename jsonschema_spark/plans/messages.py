@@ -255,7 +255,8 @@ def msg_required(ctx: Ctx, names: list[str]) -> Column:
 def msg_additional_property(key: Union[str, Column]) -> Column:
     if isinstance(key, str):
         return F.lit(f"The object value was not expected to define the property {esc(key)}")
-    return C('The object value was not expected to define the property "', key, '"')
+    return C('The object value was not expected to define the property "',
+             F.replace(key, F.lit('"'), F.lit('\\"')), '"')
 
 
 def msg_properties(n_children: int) -> Column:
@@ -329,13 +330,14 @@ def msg_unique_items(ctx: Ctx) -> Column:
     # for the common single-duplicate case and fall back to a generic
     # listing. Elements are rendered to strings FIRST — array_distinct
     # cannot order VARIANT values directly.
-    from jsonschema_spark.plans.context import VariantCtx
+    from jsonschema_spark.plans.context import FlatColCtx, VariantCtx
 
     arr = ctx.arr()
     if isinstance(ctx, VariantCtx):
         canon = F.transform(arr, lambda x: F.to_json(x))
     else:
-        canon = F.transform(arr, lambda x: x.cast("string"))
+        et = ctx.dtype.elementType
+        canon = F.transform(arr, lambda x: FlatColCtx(x, et, "").json_repr())
     reprs = F.array_distinct(
         F.filter(canon, lambda s: F.size(F.filter(canon, lambda t: t == s)) > 1)
     )

@@ -222,3 +222,115 @@ def test_fast_and_exhaustive_verdicts_agree(spark):
             .collect()
         ]
         assert fast == exh, f"schema {i}: fast vs exhaustive verdicts diverge: {schema}"
+
+
+def _violation_rows(df, schema, short_circuit, doc_col=None, with_error=False):
+    """``Counter((keywordLocation, instanceLocation[, error]))`` of each row
+    of ``annotate``, in row order: over ``df``'s columns (flat), or over
+    ``doc_col`` (tree)."""
+    from collections import Counter
+
+    out = annotate(df, schema, doc_col=doc_col, short_circuit=short_circuit).select("violations")
+    return [Counter((v["keywordLocation"], v["instanceLocation"])
+                    + ((v["error"],) if with_error else ()) for v in r["violations"])
+            for r in out.collect()]
+
+
+def test_flat_and_tree_violations_agree(spark):
+    """Flat ≡ tree on violation rows, not only verdicts: the same
+    (keywordLocation, instanceLocation) multiset per row, in both
+    ``short_circuit`` modes. Error text is left out: VARIANT normalises
+    decimals, so a flat double prints ``0.0`` where the tree prints ``0``."""
+    rng = random.Random(20260817)
+    cols = ["a", "b", "s", "xs", "o"]
+    both = spark.createDataFrame(_rows(rng, 80), COLS).withColumn(
+        "doc", F.to_json(F.struct(*cols))).localCheckpoint(eager=True)
+    flat_df, tree_df = both.select(*cols), both.select("doc")
+    disagreements = []
+    for i in range(25):
+        schema = _rand_schema(random.Random(1000 + i))
+        for sc in (True, False):
+            flat = _violation_rows(flat_df, schema, sc)
+            tree = _violation_rows(tree_df, schema, sc, doc_col="doc")
+            disagreements += [(1000 + i, sc, k, f, t) for k, (f, t) in enumerate(zip(flat, tree)) if f != t]
+    assert not disagreements, f"{len(disagreements)} rows differ; first 3: {disagreements[:3]}"
+
+
+def test_member_loops_report_every_failing_member(spark):
+    """A keyword that loops over object members reports every failing
+    member on both paths, whatever ``short_circuit`` says: it is a loop,
+    like ``items``, not a conjunction of keywords."""
+    df = spark.createDataFrame([(1, "x", "y", 5)], "a long, b string, c string, e long")
+    tree_df = df.select(F.to_json(F.struct(*df.columns)).alias("doc"))
+    cases = [
+        ({"properties": {"a": {}}, "additionalProperties": False},
+         {("/additionalProperties", "/b"), ("/additionalProperties", "/c"), ("/additionalProperties", "/e")}),
+        ({"properties": {"a": {}}, "additionalProperties": {"type": "integer"}},
+         {("/additionalProperties/type", "/b"), ("/additionalProperties/type", "/c")}),
+        ({"patternProperties": {"^[bc]": {"maxLength": 0}}},
+         {("/patternProperties/^[bc]/maxLength", "/b"), ("/patternProperties/^[bc]/maxLength", "/c")}),
+        ({"properties": {"a": {}}, "unevaluatedProperties": False},
+         {("/unevaluatedProperties", "/b"), ("/unevaluatedProperties", "/c"),
+          ("/unevaluatedProperties", "/e")}),
+        ({"anyOf": [{"properties": {"a": {}}}], "unevaluatedProperties": {"type": "integer"}},
+         {("/unevaluatedProperties/type", "/b"), ("/unevaluatedProperties/type", "/c")}),
+    ]
+    for schema, want in cases:
+        for sc in (True, False):
+            flat = _violation_rows(df, schema, sc)[0]
+            tree = _violation_rows(tree_df, schema, sc, doc_col="doc")[0]
+            assert flat == tree and set(flat) == want and max(flat.values()) == 1, (schema, sc, flat, tree)
+
+
+def test_member_names_escape_alike_on_both_paths(spark):
+    """Member names with ``/``, ``~`` and ``"`` read the same on both paths:
+    instance locations escape per RFC 6901, messages escape the quote."""
+    from pyspark.sql import types as T
+
+    names = ["a", "d/e", "c~d", 'q"x']
+    df = spark.createDataFrame([("", "v", "w", "z")], T.StructType(
+        [T.StructField(n, T.StringType()) for n in names]))
+    tree_df = df.select(F.to_json(F.struct(*[F.col(n) for n in names])).alias("doc"))
+    escaped = {"/d~1e", "/c~0d", '/q"x'}
+    for schema in (
+        {"properties": {"a": {}}, "additionalProperties": False},
+        {"patternProperties": {"[/~\"]": {"maxLength": 0}}},
+        {"properties": {"a": {}}, "unevaluatedProperties": False},
+        {"anyOf": [{"properties": {"a": {}}}], "unevaluatedProperties": False},
+        {"propertyNames": {"maxLength": 1}},
+    ):
+        for sc in (True, False):
+            flat = _violation_rows(df, schema, sc, with_error=True)[0]
+            tree = _violation_rows(tree_df, schema, sc, doc_col="doc", with_error=True)[0]
+            assert flat == tree, (schema, sc, flat, tree)
+            assert {loc for _, loc, _ in flat} == escaped, (schema, flat)
+    errors = {e for _, loc, e in _violation_rows(
+        tree_df, {"additionalProperties": False}, True, doc_col="doc", with_error=True)[0] if loc == '/q"x'}
+    assert errors == {'The object value was not expected to define the property "q\\"x"'}
+
+
+def test_flat_containers_render_and_compare_like_the_tree(spark):
+    """Flat duplicate items print as JSON, as on the tree path, and a
+    nested struct compares with an object constant member by member (a
+    NULL field is an absent member): flat ≡ tree ≡ validate_py."""
+    import json
+
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    df = spark.createDataFrame(
+        [(["a", "a"], (1, None)), (["a", "b", "b"], (1, "x")), ([], (None, None)), (["x"], (2, "x"))],
+        "ss array<string>, o struct<p: bigint, q: string>")
+    tree_df = df.select(F.to_json(F.struct("ss", "o")).alias("doc"))
+    docs = [json.loads(r["doc"]) for r in tree_df.collect()]
+    uniq = {"properties": {"ss": {"uniqueItems": True}}}
+    flat = _violation_rows(df, uniq, True, with_error=True)
+    assert flat == _violation_rows(tree_df, uniq, True, doc_col="doc", with_error=True)
+    assert ("/properties/ss/uniqueItems", "/ss",
+            'The array value contained the following duplicate item: "a"') in flat[0]
+    for sub in ({"const": {"p": 1}}, {"const": {"p": 1, "q": None}}, {"const": {}},
+                {"const": {"p": 1.0, "q": "x"}}, {"enum": [{"p": 2, "q": "x"}, {"p": 1}, 3]},
+                {"const": [1]}, {"const": {"p": 1, "r": 2}}):
+        schema = {"properties": {"o": sub}}
+        flat = [r["valid"] for r in validate(df, schema).collect()]
+        tree = [r["valid"] for r in validate(tree_df, schema, doc_col="doc").collect()]
+        assert flat == tree == [validate_py(schema, d) for d in docs], (sub, flat, tree)

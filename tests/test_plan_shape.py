@@ -269,3 +269,43 @@ def test_exhaustive_plans_stay_in_codegen(spark):
                 assert len(n) == len(docs), (desc, sc)
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
+def test_flat_struct_const_is_python_free(spark):
+    """A nested struct compares with an object constant member by member,
+    inside the JVM: no Arrow round trip through a canonical-JSON UDF."""
+    df = spark.createDataFrame([((1, "x"),)], "o struct<p: bigint, q: string>")
+    for sub in ({"const": {"p": 1}}, {"enum": [{"p": 1, "q": "x"}, {"q": "y"}]}):
+        assert "EvalPython" not in _plan(validate(df, {"properties": {"o": sub}})), sub
+
+
+def test_flat_plans_stay_in_codegen(spark):
+    """The fast flat plan above, and exhaustive flat ``annotate`` of the
+    perfbench pages schema and of the seeded metamorphic schemas over their
+    typed row, compile within janino's limits: with
+    ``spark.sql.codegen.fallback`` off, a plan that does not fails the job."""
+    import datetime
+    import random
+
+    from perfbench.schemas import PAGES
+    from test_metamorphic import COLS, _rand_schema, _rows
+
+    from jsonschema_spark import annotate
+
+    pages = spark.createDataFrame([
+        ("https://a.example/x", datetime.datetime(2024, 1, 1), b"<p>x</p>", "x", "en",
+         datetime.date(2024, 1, 1)),
+        ("ftp://bad", None, None, "", "xx", None),
+    ], "url string, warc_ts timestamp, html binary, text string, lang string, day date")
+    cols_df = spark.createDataFrame(_rows(random.Random(3), 12), COLS)
+    cases = [(PAGES, pages)] + [(_rand_schema(random.Random(1000 + i)), cols_df) for i in range(25)]
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert validate(spark.read.parquet(DOCS), SCHEMA).filter(~F.col("valid")).count() >= 0
+        for schema, df in cases:
+            for sc in (True, False):
+                n = annotate(df, schema, short_circuit=sc).select(F.size("violations").alias("n")).collect()
+                assert len(n) == df.count(), (schema, sc)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)

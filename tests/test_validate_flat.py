@@ -366,3 +366,38 @@ def test_verdict_counts_cube_granularities(spark):
     assert any(r["source"] == "a" and r["lang"] is None and r["n_rows"] == 1
                for r in by_gid[0])
     assert any(r["source"] == "a" and r["n_rows"] == 2 for r in by_gid[1])
+
+
+def test_integer_const_is_exact_on_decimal_and_double_columns(spark):
+    """An integer constant compares exactly with a decimal column (no trip
+    through double) and equals a double only when the double holds it; a
+    constant no column value can hold is simply unequal."""
+    from decimal import Decimal
+
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    big = 2**53  # 9007199254740992: the double of 2**53 + 1 too
+    df = rows(spark, [(Decimal(big), float(big))], "d decimal(38,0), x double")
+    for sub, want in (({"const": big + 1}, False), ({"const": big}, True),
+                      ({"enum": [big + 1, big]}, True), ({"const": 10**400}, False),
+                      ({"const": 10**38}, False)):
+        for col in ("d", "x"):
+            schema = {"properties": {col: sub}}
+            assert validate_py(schema, {col: big}) is want, (col, sub)
+            assert [r.valid for r in validate(df, schema).collect()] == [want], (col, sub)
+
+
+def test_member_keywords_on_scalar_and_map_columns(spark):
+    """Object keywords pass vacuously on a column that is not an object,
+    and loop over a map column's keys as the tree path does over an
+    object's."""
+    df = spark.createDataFrame([(7, {"k": 1, "d/e": -1})], "n long, m map<string,bigint>")
+    df = df.withColumn("doc", F.to_json(F.struct("n", "m")))
+    for sub in ({"additionalProperties": False}, {"patternProperties": {"^k": {"minimum": 2}}},
+                {"additionalProperties": {"minimum": 0}}, {"unevaluatedProperties": False}):
+        for col in ("n", "m"):
+            schema = {"properties": {col: sub}}
+            flat = annotate(df, schema, short_circuit=False).drop("doc").collect()[0]
+            tree = annotate(df, schema, doc_col="doc", short_circuit=False).collect()[0]
+            assert flat.valid is tree.valid is (col == "n"), (schema, flat, tree)
+            assert sorted(flat.violations) == sorted(tree.violations), (schema, flat, tree)
