@@ -40,7 +40,7 @@ from jsonschema_spark.plans.compiler import (
     without_call_sites,
     _viol_struct,
 )
-from jsonschema_spark.plans.context import B, Cond, Ctx, FlatRowCtx, VariantCtx, and_
+from jsonschema_spark.plans.context import B, Cond, Ctx, FlatColCtx, VariantCtx, and_
 
 
 def _as_compiled(schema: Union[dict, bool, CompiledSchema]) -> CompiledSchema:
@@ -76,7 +76,7 @@ def _bind(
                 # "absent" and flip every verdict
                 raise ValueError(f"instance_cols not in DataFrame: {sorted(missing)}")
             fields = [f for f in fields if f.name in keep]
-        return df, FlatRowCtx(T.StructType(fields)), True
+        return df, FlatColCtx.row(T.StructType(fields)), True
     pre = df.withColumn(_VARIANT_TMP, F.try_parse_json(F.col(doc_col)))
     v = F.col(_VARIANT_TMP)
     return pre, VariantCtx(v, ""), v.isNotNull()

@@ -57,8 +57,6 @@ from jsonschema_spark.plans.context import (
     Cond,
     Ctx,
     FlatColCtx,
-    FlatRowCtx,
-    MissingCtx,
     S,
     VariantCtx,
     _child_loc,
@@ -491,9 +489,12 @@ def compile_node(
 
 def _assertion(spec: KeywordCompiler, val, ctx: Ctx, kwp: str, cfg: Config) -> Compiled:
     """``spec.build(val, ctx)`` as a leaf; values that are not of
-    ``spec.type_guard`` pass vacuously."""
-    leaf = _leaf(cfg, spec.build(val, ctx), kwp, ctx, lambda: spec.message(ctx, val))
-    return _guarded(ctx.is_type(spec.type_guard), leaf) if spec.type_guard else leaf
+    ``spec.type_guard`` pass vacuously, and nothing is built for a value
+    that statically is not (the row has no string value to read)."""
+    guard = ctx.is_type(spec.type_guard) if spec.type_guard else True
+    if guard is False:
+        return Compiled(True)
+    return _guarded(guard, _leaf(cfg, spec.build(val, ctx), kwp, ctx, lambda: spec.message(ctx, val)))
 
 
 def _k_reference(key: str, schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
@@ -542,12 +543,15 @@ def _k_dependent_required(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Conf
 def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
     if not (cfg.format_assertion and val in FORMATS):
         return None  # an annotation only
+    guard = ctx.is_type("string")
+    if guard is False:
+        return Compiled(True)
     if cfg.format_strict:
         from jsonschema_spark.functions.formats import format_ok_strict as build
     else:
         build = format_ok
     leaf = _leaf(cfg, build(val, ctx.str_val()), kwp, ctx, lambda: M.msg_format(ctx, val))
-    return _guarded(ctx.is_type("string"), leaf)
+    return _guarded(guard, leaf)
 
 
 def _multiple_of_ok(val, ctx: Ctx) -> Cond:
@@ -604,24 +608,6 @@ def _k_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_
     return _guarded(ctx.is_type("object"), inner)
 
 
-def _static_prop_names(ctx: Ctx) -> Optional[list[str]]:
-    if isinstance(ctx, FlatRowCtx):
-        return ctx.prop_names()
-    if isinstance(ctx, FlatColCtx) and isinstance(ctx.dtype, T.StructType):
-        # nested struct: field names are static too (a NULL field counts
-        # as absent, same convention as the top-level row)
-        return [f.name for f in ctx.dtype.fields]
-    if isinstance(ctx, MissingCtx) or (isinstance(ctx, FlatColCtx) and ctx.tag() != "object"):
-        return []  # statically not an object: no members
-    return None
-
-
-def _every_member(parts: list[Compiled], cfg: Config) -> Compiled:
-    """Conjunction of per-member parts that reports every failing member,
-    each gated on its own ``ok``, as the dynamic key loops do."""
-    return _and_combine(parts, replace(cfg, short_circuit=False))
-
-
 def _name_in(k: Union[str, Column], names: list) -> Cond:
     """Whether member name ``k`` is one of ``names``; folded for a static name."""
     if isinstance(k, str):
@@ -636,96 +622,57 @@ def _name_matches(k: Union[str, Column], pattern: str) -> Cond:
     return permissive_search_py(pattern, k) if isinstance(k, str) else pattern_ok(k, pattern)
 
 
-def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    from jsonschema_spark.functions.strings import permissive_search_py
+def _unlisted(declared: list, patterns: list):
+    """``selected`` for the members neither named in ``declared`` nor
+    matching one of ``patterns``. ``declared`` keeps schema order, so the
+    plan text is the same in every process (a set would follow the
+    string-hash seed)."""
+    return lambda k: and_(not_(_name_in(k, declared)), *[not_(_name_matches(k, p)) for p in patterns])
 
-    static_names = _static_prop_names(ctx)
-    parts = []
-    for pattern, sub_schema in val.items():
-        kwpp = f"{kwp}/{_ptr_escape(pattern)}"
-        if static_names is not None:
-            members = []
-            for name in static_names:
-                if permissive_search_py(pattern, name):
-                    child = ctx.get_prop(name)
-                    members.append(_apply_subschema(sub_schema, child, kwpp, cfg, ref_stack))
-            parts.append(_every_member(members, cfg))
-        else:
-            entries = ctx.obj_entries_factory()
-            if entries is None:
-                raise SchemaError("patternProperties unsupported for this context")
-            keys, prop_ctx = entries
-            matching = F.filter(keys, lambda k: pattern_ok(k, pattern))
-            parts.append(_each_key(matching, prop_ctx, sub_schema, kwpp, cfg, ref_stack))
-    inner = _and_combine(parts, cfg)
-    return _guarded(ctx.is_type("object"), inner)
+
+def _each_member(ctx: Ctx, selected, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    """Apply ``val`` — a subschema, or False to reject — to every member of
+    the object at ``ctx`` that ``selected`` holds for: the member loop of
+    patternProperties, additionalProperties and unevaluatedProperties.
+    Static members (``ctx.prop_names()``) loop here, ``selected`` taking a
+    name ``str``; otherwise ``selected`` takes a key Column inside
+    ``filter``. Every failing member reports, each gated on its own ``ok``,
+    as in the element loops. The caller applies the object type guard."""
+    names = ctx.prop_names()
+    if names is not None:
+        parts = []
+        for name in names:
+            chosen = selected(name)
+            if chosen is False:
+                continue
+            child = ctx.get_prop(name)
+            if val is False:
+                body = _leaf(cfg, False, kwp, child, lambda n=name: M.msg_additional_property(n))
+            else:
+                body = compile_node(val, child, kwp, cfg, ref_stack)
+            parts.append(_guarded(and_(child.present, chosen), body))
+        return _and_combine(parts, replace(cfg, short_circuit=False))
+    keys, prop_ctx = ctx.obj_entries_factory()
+    keys = F.filter(keys, lambda k: B(selected(k)))
+    if val is not False:
+        return _each_key(keys, prop_ctx, val, kwp, cfg, ref_stack)
+    ok = F.size(keys) == 0
+    if not cfg.want_viols:
+        return Compiled(ok)
+    return Compiled(ok, F.transform(keys, lambda k: _viol_struct(
+        cfg.base_uri, kwp, _child_loc(ctx.loc, k), M.msg_additional_property(k))).cast(VIOLS_DT))
+
+
+def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    parts = [_each_member(ctx, partial(_name_matches, pattern=pattern), sub_schema,
+                          f"{kwp}/{_ptr_escape(pattern)}", cfg, ref_stack)
+             for pattern, sub_schema in val.items()]
+    return _guarded(ctx.is_type("object"), _and_combine(parts, cfg))
 
 
 def _k_additional_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    declared = list(schema.get("properties") or {})
-    patterns = list(schema.get("patternProperties") or {})
-    return _k_extra_properties(declared, patterns, val, ctx, kwp, cfg, ref_stack)
-
-
-def _k_extra_properties(
-    declared: list, patterns: list, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack
-) -> Compiled:
-    """Shared body of additionalProperties and (static) unevaluatedProperties:
-    apply ``val`` to every property not in ``declared`` / matching ``patterns``.
-    ``declared`` keeps schema order, so the plan text is the same in every
-    process (a set would follow the string-hash seed)."""
-    from jsonschema_spark.functions.strings import permissive_search_py
-
-    static_names = _static_prop_names(ctx)
-
-    if static_names is not None:
-        extra = [
-            n
-            for n in static_names
-            if n not in declared and not any(permissive_search_py(p, n) for p in patterns)
-        ]
-        parts = []
-        for name in extra:
-            child = ctx.get_prop(name)
-            if val is False:
-                inner = _leaf(cfg, False, kwp, child, lambda n=name: M.msg_additional_property(n))
-                parts.append(_guarded(child.present, inner))
-            else:
-                parts.append(_apply_subschema(val, child, kwp, cfg, ref_stack))
-        return _guarded(ctx.is_type("object"), _every_member(parts, cfg))
-
-    entries = ctx.obj_entries_factory()
-    if entries is None:
-        raise SchemaError("additionalProperties unsupported for this context")
-    keys, prop_ctx = entries
-    is_extra = lambda k: and_(  # noqa: E731
-        ~k.isin(declared) if declared else True,
-        *[not_(pattern_ok(k, p)) for p in patterns],
-    )
-    extra_keys = F.filter(keys, lambda k: B(is_extra(k)))
-    return _apply_to_extra_keys(extra_keys, prop_ctx, val, ctx, kwp, cfg, ref_stack)
-
-
-def _apply_to_extra_keys(
-    extra_keys: Column, prop_ctx, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack
-) -> Compiled:
-    """Apply ``val`` (False = reject, schema = validate) to the dynamic key
-    set ``extra_keys`` — shared tail of additionalProperties and dynamic
-    unevaluatedProperties."""
-    if val is False:
-        ok = F.size(extra_keys) == 0
-        if cfg.want_viols:
-            viols = F.transform(
-                extra_keys,
-                lambda k: _viol_struct(cfg.base_uri, kwp, _child_loc(ctx.loc, k),
-                                      M.msg_additional_property(k)),
-            ).cast(VIOLS_DT)
-            inner = Compiled(ok, viols)
-        else:
-            inner = Compiled(ok)
-    else:
-        inner = _each_key(extra_keys, prop_ctx, val, kwp, cfg, ref_stack)
-    return _guarded(ctx.is_type("object"), inner)
+    selected = _unlisted(list(schema.get("properties") or {}), list(schema.get("patternProperties") or {}))
+    return _guarded(ctx.is_type("object"), _each_member(ctx, selected, val, kwp, cfg, ref_stack))
 
 
 def _k_property_names(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -749,27 +696,15 @@ def _k_dependent_schemas(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Confi
 def _k_unique_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
     """AssertionUnique (dispatch.h:814-818): deep distinctness.
 
-    Fast path: typed scalar arrays (flat columns) — pure JVM
-    ``array_distinct`` (exact: one Spark array holds one numeric type).
-    Slow path: VARIANT arrays and container-element arrays — canonical
-    deep equality in an Arrow pudf (key order irrelevant, 1 == 1.0)."""
+    The context picks the test: pure-JVM ``array_distinct`` over typed
+    scalar arrays (flat columns; exact, one Spark array holds one numeric
+    type), canonical deep equality in an Arrow pudf over VARIANT arrays
+    and container-element arrays (key order irrelevant, 1 == 1.0)."""
     if not val:
         return None
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
-    from jsonschema_spark.functions.canonical import unique_canonical
-
-    arr = ctx.arr()
-    needs_canonical = isinstance(ctx, VariantCtx)
-    if not needs_canonical:
-        dt = getattr(ctx, "dtype", None)
-        et = dt.elementType if isinstance(dt, T.ArrayType) else None
-        needs_canonical = isinstance(et, (T.StructType, T.MapType, T.ArrayType))
-    if needs_canonical:
-        cond = unique_canonical(ctx.json_repr())
-    else:
-        cond = F.size(F.array_distinct(arr)) == F.size(arr)
-    inner = _leaf(cfg, cond, kwp, ctx, lambda c=ctx: M.msg_unique_items(c))
+    inner = _leaf(cfg, ctx.unique_items(), kwp, ctx, lambda c=ctx: M.msg_unique_items(c))
     return _guarded(ctx.is_type("array"), inner)
 
 
@@ -1052,33 +987,11 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
         ):
             dynamic = True
     if not dynamic:
-        return _k_extra_properties(list(names), patterns, val, ctx, kwp, cfg, ref_stack)
-    return _k_unevaluated_properties_dynamic(schema, val, ctx, kwp, cfg, ref_stack)
-
-
-def _k_unevaluated_properties_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    static_names = _static_prop_names(ctx)
-    if static_names is not None:
-        parts: list[Compiled] = []
-        for name in static_names:
-            evaluated = _evaluated(schema, "unevaluatedProperties", _property_conds(name),
-                                   ctx, cfg, ref_stack)
-            if evaluated is True:
-                continue
-            child = ctx.get_prop(name)
-            if val is False:
-                sub = _leaf(cfg, False, kwp, child, lambda n=name: M.msg_additional_property(n))
-            else:
-                sub = compile_node(val, child, kwp, cfg, ref_stack)
-            parts.append(_guarded(and_(child.present, not_(evaluated)), sub))
-        return _guarded(ctx.is_type("object"), _every_member(parts, cfg))
-    entries = ctx.obj_entries_factory()
-    if entries is None:
-        raise SchemaError("unevaluatedProperties unsupported for this context")
-    keys, prop_ctx = entries
-    uneval_keys = F.filter(keys, lambda k: B(not_(_evaluated(
-        schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack))))
-    return _apply_to_extra_keys(uneval_keys, prop_ctx, val, ctx, kwp, cfg, ref_stack)
+        selected = _unlisted(list(names), patterns)
+    else:
+        def selected(k: Union[str, Column]) -> Cond:
+            return not_(_evaluated(schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack))
+    return _guarded(ctx.is_type("object"), _each_member(ctx, selected, val, kwp, cfg, ref_stack))
 
 
 def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -1210,7 +1123,7 @@ class CompiledSchema:
         """Compile against a flat DataFrame row (columns = properties). The
         result's ``viols`` is meaningful only on rows where its ``ok`` is
         false: gate it on ``ok`` before reading it elsewhere."""
-        ctx = FlatRowCtx(df_schema)
+        ctx = FlatColCtx.row(df_schema)
         return compile_node(self.schema, ctx, "", self._cfg(mode, short_circuit))
 
     def compile_variant(

@@ -7,10 +7,12 @@ row, and every schema keyword compiles to a boolean Column over that context.
 
 Two families:
 
-- ``FlatRowCtx`` / ``FlatColCtx`` — the instance is the row itself; JSON
-  properties are native typed columns. JSON types are static (from the Spark
-  schema), so type assertions constant-fold at compile time and the whole
-  plan stays inside whole-stage codegen.
+- ``FlatColCtx`` — a typed column viewed as a JSON value. The instance is
+  the row itself: ``FlatColCtx.row`` views it as an object whose members
+  are the DataFrame's columns, as a struct column's members are its
+  fields. JSON types are static (from the Spark schema), so type
+  assertions constant-fold at compile time and the whole plan stays
+  inside whole-stage codegen.
 
 - ``VariantCtx`` — the instance is a JSON document in a string column,
   parsed once via Spark 4 ``parse_json`` into a VARIANT. Type tags come from
@@ -27,7 +29,7 @@ null, boolean, integer, number, string, array, object.
 from __future__ import annotations
 
 from decimal import Decimal
-from typing import Callable, Union
+from typing import Callable, Optional, Union
 
 from pyspark.sql import Column, functions as F, types as T
 
@@ -160,10 +162,25 @@ class Ctx:
     def get_prop(self, name: str) -> "Ctx":
         raise NotImplementedError
 
-    def obj_entries_factory(self):
-        """Returns (keys_array, (key)->Ctx) for patternProperties-style loops,
-        or None when unsupported (flat path handles these statically)."""
+    def prop_names(self) -> Optional[list[str]]:
+        """The object's member names when they are static (a NULL member
+        is absent at run time), or None when only ``obj_entries_factory``
+        lists them."""
         return None
+
+    def obj_entries_factory(self):
+        """(keys array, key Column -> member Ctx) of an object whose
+        members are known per row."""
+        raise NotImplementedError
+
+    def unique_items(self) -> Column:
+        """Whether the array's elements are pairwise distinct (deep
+        equality, AssertionUnique)."""
+        raise NotImplementedError
+
+    def item_reprs(self) -> Column:
+        """The array's elements rendered as JSON strings."""
+        raise NotImplementedError
 
     # --- equality & rendering -----------------------------------------
     def eq_const(self, value) -> Cond:
@@ -230,6 +247,9 @@ class MissingCtx(Ctx):
     def is_type(self, t: str) -> Cond:
         return False
 
+    def prop_names(self) -> list[str]:
+        return []
+
     def eq_const(self, value) -> Cond:
         return False
 
@@ -238,14 +258,23 @@ class MissingCtx(Ctx):
 
 
 class FlatColCtx(Ctx):
-    """A single typed column viewed as a JSON value."""
+    """A single typed column viewed as a JSON value. ``member(name)`` reads
+    a struct's member column: a field, or a column of the row."""
 
-    def __init__(self, col: Column, dtype: T.DataType, loc: Union[str, Column]):
+    def __init__(self, col: Column, dtype: T.DataType, loc: Union[str, Column],
+                 present: Cond | None = None, member: Callable[[str], Column] | None = None):
         self.col = col
         self.dtype = dtype
         self.loc = loc
-        self.present = col.isNotNull()
+        self.present = col.isNotNull() if present is None else present
+        self.member = member or col.getField
         self._tag = _dtype_tag(dtype)
+
+    @classmethod
+    def row(cls, schema: T.StructType) -> "FlatColCtx":
+        """The whole row as a JSON object: its members are the columns."""
+        col = F.struct(*[F.col(f.name).alias(f.name) for f in schema.fields])
+        return cls(col, schema, "", present=True, member=F.col)
 
     def tag(self):
         return self._tag
@@ -292,14 +321,17 @@ class FlatColCtx(Ctx):
             return F.map_keys(self.col)
         if isinstance(self.dtype, T.StructType):
             return F.filter(
-                F.array(*[F.when(self.col.getField(f.name).isNotNull(), F.lit(f.name)) for f in self.dtype.fields]),
+                F.array(*[F.when(self.member(n).isNotNull(), F.lit(n)) for n in self.prop_names()]),
                 lambda x: x.isNotNull(),
             )
         return F.array()
 
+    def prop_names(self) -> Optional[list[str]]:
+        if isinstance(self.dtype, T.StructType):
+            return [f.name for f in self.dtype.fields]
+        return None if isinstance(self.dtype, T.MapType) else []
+
     def obj_entries_factory(self):
-        if not isinstance(self.dtype, T.MapType):
-            return None
         col, vt, loc = self.col, self.dtype.valueType, self.loc
         return F.map_keys(col), lambda key: FlatColCtx(F.element_at(col, key), vt, _child_loc(loc, key))
 
@@ -309,7 +341,7 @@ class FlatColCtx(Ctx):
             names = {f.name: f for f in self.dtype.fields}
             if name not in names:
                 return MissingCtx(child_loc)
-            return FlatColCtx(self.col.getField(name), names[name].dataType, child_loc)
+            return FlatColCtx(self.member(name), names[name].dataType, child_loc)
         if isinstance(self.dtype, T.MapType):
             return FlatColCtx(F.element_at(self.col, F.lit(name)), self.dtype.valueType, child_loc)
         return MissingCtx(child_loc)
@@ -339,7 +371,19 @@ class FlatColCtx(Ctx):
         if isinstance(value, str):
             return self.str_val() == F.lit(value) if self._tag == "string" else False
         if isinstance(self.dtype, T.StructType):
-            return _members_eq_const(self, [f.name for f in self.dtype.fields], value)
+            # member by member: a NULL member is an absent one, never a
+            # JSON null
+            names = self.prop_names()
+            if not isinstance(value, dict) or any(k not in names for k in value):
+                return False
+            conds: list[Cond] = []
+            for name in names:
+                child = self.get_prop(name)
+                if name in value:
+                    conds.append(and_(child.present, child.eq_const(value[name])))
+                else:
+                    conds.append(not_(B(child.present)))
+            return and_(*conds)
         # arrays/maps: deep structural equality via canonical rendering
         # (key order irrelevant, 1 == 1.0 — evaluator_dispatch.h:697-712);
         # pudf slow path, containers only
@@ -360,6 +404,19 @@ class FlatColCtx(Ctx):
             return F.to_json(self.col)
         return F.lit("null")
 
+    def unique_items(self) -> Column:
+        # a Spark array holds one element type, so scalar elements compare
+        # exactly in the JVM; container elements need canonical equality
+        if isinstance(self.dtype.elementType, (T.StructType, T.MapType, T.ArrayType)):
+            from jsonschema_spark.functions.canonical import unique_canonical
+
+            return unique_canonical(self.json_repr())
+        return F.size(F.array_distinct(self.col)) == F.size(self.col)
+
+    def item_reprs(self) -> Column:
+        et = self.dtype.elementType
+        return F.transform(self.col, lambda x: FlatColCtx(x, et, "").json_repr())
+
 
 def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, Column]:
     """The location of member ``name`` (a static name or a key Column) of
@@ -371,75 +428,6 @@ def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, 
     if isinstance(loc, str):
         return f"{loc}/{token}"
     return F.concat(loc, F.lit("/" + token))
-
-
-def _members_eq_const(ctx: Ctx, names: list[str], value) -> Cond:
-    """Equality of the object with static members ``names`` to a constant,
-    member by member: a NULL member is an absent one, never a JSON null."""
-    if not isinstance(value, dict) or any(k not in names for k in value):
-        return False
-    conds: list[Cond] = []
-    for name in names:
-        child = ctx.get_prop(name)
-        if name in value:
-            conds.append(and_(child.present, child.eq_const(value[name])))
-        else:
-            conds.append(not_(B(child.present)))
-    return and_(*conds)
-
-
-class FlatRowCtx(Ctx):
-    """The whole row as a JSON object; properties = DataFrame columns."""
-
-    def __init__(self, schema: T.StructType, colf: Callable[[str], Column] = F.col):
-        self.schema = schema
-        self.fields = {f.name: f for f in schema.fields}
-        self.colf = colf
-        self.loc = ""
-        self.present: Cond = True
-
-    def tag(self):
-        return "object"
-
-    def is_type(self, t: str) -> Cond:
-        return t == "object"
-
-    # The row is statically an object, so every scalar/array keyword guard
-    # (is_type(...) != "object") is the Python literal False and _guarded
-    # discards the leaf — these accessors only exist so the leaf expression
-    # can be *built* before being thrown away (e.g. a root-level multipleOf).
-    def str_val(self) -> Column:
-        return F.lit(None).cast("string")
-
-    def num_val(self) -> Column:
-        return F.lit(None).cast("double")
-
-    def bool_val(self) -> Column:
-        return F.lit(None).cast("boolean")
-
-    def arr(self) -> Column:
-        return F.lit(None).cast("array<string>")
-
-    def obj_keys(self) -> Column:
-        return F.filter(
-            F.array(*[F.when(self.colf(n).isNotNull(), F.lit(n)) for n in self.fields]),
-            lambda x: x.isNotNull(),
-        )
-
-    def get_prop(self, name: str) -> Ctx:
-        if name not in self.fields:
-            return MissingCtx(_child_loc("", name))
-        f = self.fields[name]
-        return FlatColCtx(self.colf(name), f.dataType, _child_loc("", name))
-
-    def prop_names(self) -> list[str]:
-        return list(self.fields)
-
-    def eq_const(self, value) -> Cond:
-        return _members_eq_const(self, list(self.fields), value)
-
-    def json_repr(self) -> Column:
-        return F.to_json(F.struct(*[self.colf(n).alias(n) for n in self.fields]))
 
 
 # ---------------------------------------------------------------------------
@@ -593,3 +581,11 @@ class VariantCtx(Ctx):
 
     def json_repr(self) -> Column:
         return F.to_json(self.v)
+
+    def unique_items(self) -> Column:
+        from jsonschema_spark.functions.canonical import unique_canonical
+
+        return unique_canonical(self.json_repr())
+
+    def item_reprs(self) -> Column:
+        return F.transform(self.arr(), lambda x: F.to_json(x))

@@ -330,14 +330,7 @@ def msg_unique_items(ctx: Ctx) -> Column:
     # for the common single-duplicate case and fall back to a generic
     # listing. Elements are rendered to strings FIRST — array_distinct
     # cannot order VARIANT values directly.
-    from jsonschema_spark.plans.context import FlatColCtx, VariantCtx
-
-    arr = ctx.arr()
-    if isinstance(ctx, VariantCtx):
-        canon = F.transform(arr, lambda x: F.to_json(x))
-    else:
-        et = ctx.dtype.elementType
-        canon = F.transform(arr, lambda x: FlatColCtx(x, et, "").json_repr())
+    canon = ctx.item_reprs()
     reprs = F.array_distinct(
         F.filter(canon, lambda s: F.size(F.filter(canon, lambda t: t == s)) > 1)
     )
