@@ -108,7 +108,7 @@ class Ctx:
     """Abstract instance-value context.
 
     ``loc`` is the JSON-pointer instance location (str when static, Column
-    when inside an array loop). ``present`` is whether the value exists at
+    inside a loop over array elements or object keys). ``present`` is whether the value exists at
     all (absent property → keywords are vacuously satisfied, but ``required``
     on the parent fails).
     """
@@ -261,9 +261,9 @@ class FlatColCtx(Ctx):
     """A single typed column viewed as a JSON value. ``member(name)`` reads
     a struct's member column: a field, or a column of the row."""
 
-    def __init__(self, col: Column, dtype: T.DataType, loc: Union[str, Column],
+    def __init__(self, col: Optional[Column], dtype: T.DataType, loc: Union[str, Column],
                  present: Cond | None = None, member: Callable[[str], Column] | None = None):
-        self.col = col
+        self._col = col
         self.dtype = dtype
         self.loc = loc
         self.present = col.isNotNull() if present is None else present
@@ -273,8 +273,13 @@ class FlatColCtx(Ctx):
     @classmethod
     def row(cls, schema: T.StructType) -> "FlatColCtx":
         """The whole row as a JSON object: its members are the columns."""
-        col = F.struct(*[F.col(f.name).alias(f.name) for f in schema.fields])
-        return cls(col, schema, "", present=True, member=F.col)
+        return cls(None, schema, "", present=True, member=F.col)
+
+    @property
+    def col(self) -> Column:
+        if self._col is None:  # the row: a struct of its columns, built only when read
+            self._col = F.struct(*[self.member(n).alias(n) for n in self.prop_names()])
+        return self._col
 
     def tag(self):
         return self._tag
