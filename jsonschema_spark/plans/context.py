@@ -108,9 +108,9 @@ class Ctx:
     """Abstract instance-value context.
 
     ``loc`` is the JSON-pointer instance location (str when static, Column
-    inside a loop over array elements or object keys). ``present`` is whether the value exists at
-    all (absent property → keywords are vacuously satisfied, but ``required``
-    on the parent fails).
+    inside a loop over array elements or object keys). ``present`` is
+    whether the value exists at all (absent property → keywords are
+    vacuously satisfied, but ``required`` on the parent fails).
     """
 
     loc: Union[str, Column]
