@@ -18,6 +18,14 @@ is gated on the verdict in exactly three places: once over the whole plan
 in ``_verdict`` here, per element in the compiler's ``_loop_body``, and per
 part in its non-short-circuit ``_and_combine``. No keyword gates its own.
 
+A schema compiles once per session: every operator reaches the compiler
+through ``_verdict``, which keeps its ``(valid, violations)`` Columns in
+``plans/plan_cache.py`` under the schema's JSON in its own key order, every
+``CompiledSchema`` field, the mode, ``short_circuit`` and the instance
+binding (the flat row's ``StructType``, or the parsed VARIANT column). A
+repeated request reuses them instead of rebuilding every expression over
+py4j.
+
 Operators that build on ``validate``/``annotate`` (``standard_output``,
 ``violations``, the verdict counts) hold the verdict in reserved
 ``__jss_``-prefixed helper columns, so a caller's own ``valid`` or
@@ -26,6 +34,7 @@ Operators that build on ``validate``/``annotate`` (``standard_output``,
 
 from __future__ import annotations
 
+from dataclasses import fields
 from typing import Optional, Sequence, Union
 
 import pandas as pd
@@ -40,6 +49,7 @@ from jsonschema_spark.plans.compiler import (
     without_call_sites,
     _viol_struct,
 )
+from jsonschema_spark.plans import plan_cache
 from jsonschema_spark.plans.context import B, Cond, Ctx, FlatColCtx, VariantCtx, and_
 
 
@@ -88,12 +98,31 @@ def _unbind(df: DataFrame, doc_col: Optional[str], *cols: str) -> DataFrame:
     return df.drop(*gone) if gone else df
 
 
+def _plan_key(cs: CompiledSchema, ctx: Ctx, mode: str, short_circuit: bool) -> Optional[tuple]:
+    """Everything ``_verdict``'s Columns depend on: each ``CompiledSchema``
+    field as JSON text in its own key order, the mode, ``short_circuit``
+    and the binding ``_bind`` made. None (no reuse) when a field is not
+    plain JSON."""
+    texts = [plan_cache.json_text(getattr(cs, f.name)) for f in fields(cs)]
+    if None in texts:
+        return None
+    binding = ctx.dtype.json() if isinstance(ctx, FlatColCtx) else _VARIANT_TMP
+    return (*texts, mode, short_circuit, binding)
+
+
 def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
              short_circuit: bool = True) -> tuple[Column, Optional[Column]]:
-    """``(valid, violations)`` columns of ``cs`` over a bound instance
-    (violations None in fast mode); an unparseable document fails with the
-    parse message alone. The plan's violations are gated on ``valid`` here,
-    once: they are meaningful only where it fails."""
+    """``(valid, violations)`` columns of ``cs`` over an instance ``_bind``
+    bound (violations None in fast mode); an unparseable document fails
+    with the parse message alone. The plan's violations are gated on
+    ``valid`` here, once: they are meaningful only where it fails. The
+    Columns are built once per plan key and session (``_plan_key``)."""
+    return plan_cache.PLANS.get(_plan_key(cs, ctx, mode, short_circuit),
+                             lambda: _build_verdict(cs, ctx, parse_ok, mode, short_circuit))
+
+
+def _build_verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
+                   short_circuit: bool) -> tuple[Column, Optional[Column]]:
     compiled = compile_node(cs.schema, ctx, "", cs._cfg(mode, short_circuit))
     ok = B(and_(parse_ok, compiled.ok))
     if mode == "fast":

@@ -1083,6 +1083,11 @@ class CompiledSchema:
 
     Pure-Python + Column-expression object; broadcastable by closure capture
     (the schema dict is tiny — executors only ever see generated expressions).
+    Like the template, a schema compiles once per session: the operators of
+    ``operators/validate.py`` keep the Columns of each (schema, fields, mode,
+    binding) in ``plans/plan_cache.py``. Every field here is part of that
+    key, so a new compile input belongs here, or must join the key.
+    ``compile_flat``/``compile_variant`` always compile anew.
     """
 
     schema: Union[dict, bool]

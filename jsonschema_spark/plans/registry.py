@@ -24,6 +24,9 @@ overridden: registering one changes nothing.
 ``message(ctx, value) -> Column`` the violation text; ``type_guard``
 optionally names a JSON type — other types pass vacuously (the
 EVALUATE_BEGIN precondition-skip, evaluator_dispatch.h:71-123).
+
+Registering or unregistering a keyword empties the plan cache
+(``plans/plan_cache.py``): a plan compiled before may name the keyword.
 """
 
 from __future__ import annotations
@@ -32,6 +35,8 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import functions as F
+
+from jsonschema_spark.plans import plan_cache
 
 
 @dataclass(frozen=True)
@@ -54,7 +59,9 @@ def register_keyword(
         def message(ctx, value, _n=name):  # noqa: ARG001
             return F.lit(f"The value was expected to validate against the {_n} keyword")
     KEYWORD_COMPILERS[name] = KeywordCompiler(build, message, type_guard)
+    plan_cache.PLANS.clear()
 
 
 def unregister_keyword(name: str) -> None:
     KEYWORD_COMPILERS.pop(name, None)
+    plan_cache.PLANS.clear()

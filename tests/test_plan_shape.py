@@ -237,27 +237,57 @@ def test_warc_jvm_path_python_free(spark):
     assert "Python" not in _plan(warc_records(df), "simple")
 
 
+def _small_jobs(table: dict) -> list:
+    """``(name, schema, exhaustive)`` of each ``small_jobs`` job whose
+    schema is in ``table``, in the mode the job runs it: fast for verdict
+    counts, exhaustive without short-circuit otherwise."""
+    from perfbench.workloads import SmallJobs
+
+    return [(name, table[name], call != "verdicts")
+            for name, call in dict(SmallJobs.ROTATION).items() if name in table]
+
+
+def _run_twice(dfs, schema, exhaustive: bool, doc_col=None) -> None:
+    """Run the plan of one ``small_jobs`` job over each of ``dfs``: the
+    second build reuses the first's cached plan."""
+    from jsonschema_spark import annotate
+
+    for df in dfs:
+        if exhaustive:
+            out = annotate(df, schema, doc_col=doc_col, short_circuit=False).select(F.size("violations"))
+        else:
+            out = validate(df, schema, doc_col=doc_col).select("valid")
+        assert len(out.collect()) == df.count(), schema
+
+
 def test_exhaustive_plans_stay_in_codegen(spark):
-    """Exhaustive ``annotate`` plans compile within janino's 64 KB method
-    limit. Spark normally falls back to interpreted evaluation, without a
-    signal, when generated code does not compile; with
-    ``spark.sql.codegen.fallback`` off such a plan fails the job instead."""
-    from perfbench.schemas import EVENTS
+    """Exhaustive ``annotate`` plans, and every ``small_jobs`` tree plan in
+    the mode its job runs, compile within janino's 64 KB method limit.
+    Spark normally falls back to interpreted evaluation, without a signal,
+    when generated code does not compile; with ``spark.sql.codegen.fallback``
+    off such a plan fails the job instead. Each ``small_jobs`` plan runs over
+    two DataFrames, so a plan-cache hit stays in codegen too."""
+    from perfbench.schemas import EVENTS, SMALL_TREE
     from test_conformance import ADVERSARIAL
 
     from jsonschema_spark import annotate
 
     kind = EVENTS["properties"]["kind"]["enum"][0]
-    cases = [("perfbench EVENTS", EVENTS, [
+    event_docs = [
         '{"id": 1, "ts": "2024-01-01T00:00:00Z", "kind": "%s", "user": {"name": "ann_1", '
         '"age": 30}, "items": [{"sku": "SKU-0001", "qty": 3}], "score": 1.5}' % kind,
         '{"id": -1, "ts": "x", "kind": "?", "user": {"name": "A", "age": 200, "x": 1}, '
         '"items": [{"sku": "bad", "qty": 0}], "score": "s"}',
         "{}", "[1]",
-    ])]
+    ]
+    cases = [("perfbench EVENTS", EVENTS, event_docs)]
     cases += [(desc, schema, [doc for doc, _ in checks]) for desc, schema, checks in ADVERSARIAL
               if desc in ("deeply nested properties", "escaped property names in pointers")]
     assert len(cases) == 3
+    jobs = _small_jobs(SMALL_TREE)
+    assert len(jobs) == len(SMALL_TREE)
+    doc_dfs = [spark.createDataFrame([(d,) for d in docs], "doc string")
+               for docs in (event_docs, event_docs[1:] + ['{"user": {"name": "bo_2", "age": 9}}'])]
     prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
@@ -267,6 +297,8 @@ def test_exhaustive_plans_stay_in_codegen(spark):
                 out = annotate(df, schema, doc_col="doc", short_circuit=sc)
                 n = out.select(F.size("violations").alias("n")).collect()
                 assert len(n) == len(docs), (desc, sc)
+        for _, schema, exhaustive in jobs:
+            _run_twice(doc_dfs, schema, exhaustive, doc_col="doc")
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
 
@@ -280,23 +312,32 @@ def test_flat_struct_const_is_python_free(spark):
 
 
 def test_flat_plans_stay_in_codegen(spark):
-    """The fast flat plan above, and exhaustive flat ``annotate`` of the
+    """The fast flat plan above, exhaustive flat ``annotate`` of the
     perfbench pages schema and of the seeded metamorphic schemas over their
-    typed row, compile within janino's limits: with
-    ``spark.sql.codegen.fallback`` off, a plan that does not fails the job."""
+    typed row, and every ``small_jobs`` flat plan in the mode its job runs
+    (over two DataFrames, so a plan-cache hit is covered), compile within
+    janino's limits: with ``spark.sql.codegen.fallback`` off, a plan that
+    does not fails the job."""
     import datetime
     import random
 
-    from perfbench.schemas import PAGES
+    from perfbench.schemas import PAGES, SMALL_FLAT
     from test_metamorphic import COLS, _rand_schema, _rows
 
     from jsonschema_spark import annotate
 
+    pages_ddl = "url string, warc_ts timestamp, html binary, text string, lang string, day date"
     pages = spark.createDataFrame([
         ("https://a.example/x", datetime.datetime(2024, 1, 1), b"<p>x</p>", "x", "en",
          datetime.date(2024, 1, 1)),
         ("ftp://bad", None, None, "", "xx", None),
-    ], "url string, warc_ts timestamp, html binary, text string, lang string, day date")
+    ], pages_ddl)
+    more_pages = spark.createDataFrame([
+        ("http://b.example/", datetime.datetime(2024, 2, 3, 4, 5), b"", None, "de",
+         datetime.date(2024, 2, 3)),
+    ], pages_ddl)
+    jobs = _small_jobs(SMALL_FLAT)
+    assert len(jobs) == len(SMALL_FLAT)
     cols_df = spark.createDataFrame(_rows(random.Random(3), 12), COLS)
     cases = [(PAGES, pages)] + [(_rand_schema(random.Random(1000 + i)), cols_df) for i in range(25)]
     prev = spark.conf.get("spark.sql.codegen.fallback")
@@ -307,5 +348,7 @@ def test_flat_plans_stay_in_codegen(spark):
             for sc in (True, False):
                 n = annotate(df, schema, short_circuit=sc).select(F.size("violations").alias("n")).collect()
                 assert len(n) == df.count(), (schema, sc)
+        for _, schema, exhaustive in jobs:
+            _run_twice([pages, more_pages], schema, exhaustive)
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
