@@ -12,7 +12,9 @@ Two families:
   are the DataFrame's columns, as a struct column's members are its
   fields. JSON types are static (from the Spark schema), so type
   assertions constant-fold at compile time and the whole plan stays
-  inside whole-stage codegen.
+  inside whole-stage codegen. A NULL column or struct field is an absent
+  member; a NULL array element or map value is JSON null, so type tests
+  on those read the value at run time.
 
 - ``VariantCtx`` — the instance is a JSON document in a string column,
   parsed once via Spark 4 ``parse_json`` into a VARIANT. Type tags come from
@@ -257,23 +259,38 @@ class MissingCtx(Ctx):
         return F.lit("null")
 
 
+def _quoted_col(name: str) -> Column:
+    """The column named ``name``: quoted, so a dot is part of the name
+    rather than struct-field access."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 class FlatColCtx(Ctx):
     """A single typed column viewed as a JSON value. ``member(name)`` reads
-    a struct's member column: a field, or a column of the row."""
+    a struct's member column: a field, or a column of the row. A
+    ``nullable`` value (an array element or map value, which is present
+    whether or not it is NULL) reads NULL as JSON null."""
 
     def __init__(self, col: Optional[Column], dtype: T.DataType, loc: Union[str, Column],
-                 present: Cond | None = None, member: Callable[[str], Column] | None = None):
+                 present: Cond | None = None, member: Callable[[str], Column] | None = None,
+                 nullable: bool = False):
         self._col = col
         self.dtype = dtype
         self.loc = loc
         self.present = col.isNotNull() if present is None else present
         self.member = member or col.getField
         self._tag = _dtype_tag(dtype)
+        self.nullable = nullable and self._tag != "null"
 
     @classmethod
     def row(cls, schema: T.StructType) -> "FlatColCtx":
         """The whole row as a JSON object: its members are the columns."""
-        return cls(None, schema, "", present=True, member=F.col)
+        return cls(None, schema, "", present=True, member=_quoted_col)
+
+    @classmethod
+    def value(cls, col: Column, dtype: T.DataType, loc: Union[str, Column]) -> "FlatColCtx":
+        """An array element or map value: always present, JSON null when NULL."""
+        return cls(col, dtype, loc, present=True, nullable=True)
 
     @property
     def col(self) -> Column:
@@ -282,9 +299,19 @@ class FlatColCtx(Ctx):
         return self._col
 
     def tag(self):
+        if self.nullable:
+            return F.when(self.col.isNull(), F.lit("null")).otherwise(F.lit(self._tag))
         return self._tag
 
     def is_type(self, t: str) -> Cond:
+        if self.nullable:
+            if t == "null":
+                return self.col.isNull()
+            return and_(self.col.isNotNull(), self._is_static_type(t))
+        return self._is_static_type(t)
+
+    def _is_static_type(self, t: str) -> Cond:
+        """``is_type`` of a value that is not NULL."""
         if t == self._tag:
             return True
         if t == "number" and self._tag == "integer":
@@ -317,7 +344,7 @@ class FlatColCtx(Ctx):
         loc = self.loc
 
         def factory(x: Column, i: Column) -> Ctx:
-            return FlatColCtx(x, et, F.concat(S(loc), F.lit("/"), i.cast("string")))
+            return FlatColCtx.value(x, et, F.concat(S(loc), F.lit("/"), i.cast("string")))
 
         return factory
 
@@ -338,7 +365,7 @@ class FlatColCtx(Ctx):
 
     def obj_entries_factory(self):
         col, vt, loc = self.col, self.dtype.valueType, self.loc
-        return F.map_keys(col), lambda key: FlatColCtx(F.element_at(col, key), vt, _child_loc(loc, key))
+        return F.map_keys(col), lambda key: FlatColCtx.value(F.element_at(col, key), vt, _child_loc(loc, key))
 
     def get_prop(self, name: str) -> Ctx:
         child_loc = _child_loc(self.loc, name)
@@ -348,12 +375,20 @@ class FlatColCtx(Ctx):
                 return MissingCtx(child_loc)
             return FlatColCtx(self.member(name), names[name].dataType, child_loc)
         if isinstance(self.dtype, T.MapType):
-            return FlatColCtx(F.element_at(self.col, F.lit(name)), self.dtype.valueType, child_loc)
+            key = F.lit(name)
+            return FlatColCtx(F.element_at(self.col, key), self.dtype.valueType, child_loc,
+                              present=F.map_contains_key(self.col, key), nullable=True)
         return MissingCtx(child_loc)
 
     def eq_const(self, value) -> Cond:
+        if self.nullable:
+            return self.col.isNull() if value is None else and_(self.col.isNotNull(), self._eq_value(value))
+        return self._eq_value(value)
+
+    def _eq_value(self, value) -> Cond:
+        """``eq_const`` of a value that is not NULL."""
         if value is None:
-            return self._tag == "null" if isinstance(self._tag, str) else False
+            return self._tag == "null"
         if isinstance(value, bool):
             return self.bool_val() == F.lit(value) if self._tag == "boolean" else False
         if isinstance(value, (int, float)):
@@ -399,6 +434,12 @@ class FlatColCtx(Ctx):
         return False
 
     def json_repr(self) -> Column:
+        if self.nullable:
+            return F.when(self.col.isNull(), F.lit("null")).otherwise(self._value_repr())
+        return self._value_repr()
+
+    def _value_repr(self) -> Column:
+        """``json_repr`` of a value that is not NULL."""
         if self._tag == "string":
             return json_escape_col(self.str_val())
         if self._tag == "boolean":
@@ -420,7 +461,7 @@ class FlatColCtx(Ctx):
 
     def item_reprs(self) -> Column:
         et = self.dtype.elementType
-        return F.transform(self.col, lambda x: FlatColCtx(x, et, "").json_repr())
+        return F.transform(self.col, lambda x: FlatColCtx.value(x, et, "").json_repr())
 
 
 def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, Column]:

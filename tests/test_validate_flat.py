@@ -401,3 +401,67 @@ def test_member_keywords_on_scalar_and_map_columns(spark):
             tree = annotate(df, schema, doc_col="doc", short_circuit=False).collect()[0]
             assert flat.valid is tree.valid is (col == "n"), (schema, flat, tree)
             assert sorted(flat.violations) == sorted(tree.violations), (schema, flat, tree)
+
+
+
+def _flat_tree_py(df, schema):
+    """Each row of ``df`` three ways, in row order: flat ``annotate`` over its
+    columns, tree ``annotate`` over the row rendered by ``to_json``, and
+    ``validate_py`` over that JSON. The first two give ``(valid, sorted
+    violations)``, the last a verdict."""
+    import json
+
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    cols = [F.col("`" + c.replace("`", "``") + "`") for c in df.columns]
+    docs = df.select(F.to_json(F.struct(*cols)).alias("doc"))
+    flat = [(r.valid, sorted(r.violations)) for r in annotate(df, schema, short_circuit=False).collect()]
+    tree = [(r.valid, sorted(r.violations)) for r in
+            annotate(docs, schema, doc_col="doc", short_circuit=False).collect()]
+    py = [validate_py(schema, json.loads(r.doc)) for r in docs.collect()]
+    return flat, tree, py
+
+
+def test_dotted_and_backticked_column_names(spark):
+    """A column name with a dot or a backtick names a row member; the dot
+    is no struct-field access."""
+    df = spark.createDataFrame([(7, 2, 1), (1, 9, None), (None, 1, 5)], "`a.b` long, `a``b` long, c long")
+    for schema in (
+        {"required": ["a.b"], "properties": {"a.b": {"minimum": 5}}},
+        {"required": ["a`b"], "properties": {"a`b": {"maximum": 3}}},
+        {"properties": {"a.b": {"minimum": 0}}, "additionalProperties": {"maximum": 3}},
+        {"properties": {"a.b": {}, "c": {}}, "additionalProperties": False},
+    ):
+        flat, tree, py = _flat_tree_py(df, schema)
+        assert flat == tree, schema
+        assert [v for v, _ in flat] == py, schema
+    assert [r.valid for r in validate(df, {"required": ["a.b"], "properties": {"a.b": {"minimum": 5}}})
+            .collect()] == [True, False, False]
+
+
+def test_null_elements_and_map_values_are_json_null(spark):
+    """A NULL array element or map value is JSON null, as on the tree path;
+    a NULL struct field stays an absent member."""
+    df = spark.createDataFrame([
+        ([None, 2], [None, {"p": 1}], {"k": None, "j": 1}),
+        ([1, 2], [{"p": None}, {"p": 1}], {"j": 1}),
+        ([None, None], [], {}),
+    ], "xs array<bigint>, os array<struct<p: bigint>>, m map<string,bigint>")
+    for schema in (
+        {"properties": {"xs": {"items": {"type": "integer"}}}},
+        {"properties": {"xs": {"items": {"type": ["integer", "null"]}}}},
+        {"properties": {"xs": {"items": {"enum": [2, None]}}}},
+        {"properties": {"xs": {"items": {"const": 2}}}},
+        {"properties": {"xs": {"items": {"not": {"type": "null"}}, "uniqueItems": True}}},
+        {"properties": {"xs": {"contains": {"type": "null"}, "prefixItems": [{"type": "number"}]}}},
+        {"properties": {"os": {"items": {"type": "object"}}}},
+        {"properties": {"os": {"items": {"required": ["p"]}}}},
+        {"properties": {"m": {"additionalProperties": {"type": "integer"}}}},
+        {"properties": {"m": {"required": ["k"], "properties": {"k": {"type": "null"}}}}},
+        {"properties": {"m": {"properties": {"k": {"minimum": 1}}}}},
+    ):
+        flat, tree, py = _flat_tree_py(df, schema)
+        assert flat == tree, schema
+        assert [v for v, _ in flat] == py, schema
+    flat, _, _ = _flat_tree_py(df, {"properties": {"xs": {"items": {"type": "integer"}}}})
+    assert [v for v, _ in flat] == [False, True, False]
