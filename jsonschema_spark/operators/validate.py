@@ -118,7 +118,7 @@ def _verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,
     ``valid`` here, once: they are meaningful only where it fails. The
     Columns are built once per plan key and session (``_plan_key``)."""
     return plan_cache.PLANS.get(_plan_key(cs, ctx, mode, short_circuit),
-                             lambda: _build_verdict(cs, ctx, parse_ok, mode, short_circuit))
+                                lambda: _build_verdict(cs, ctx, parse_ok, mode, short_circuit))
 
 
 def _build_verdict(cs: CompiledSchema, ctx: Ctx, parse_ok: Cond, mode: str,

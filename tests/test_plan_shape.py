@@ -238,12 +238,12 @@ def test_warc_jvm_path_python_free(spark):
 
 
 def _small_jobs(table: dict) -> list:
-    """``(name, schema, exhaustive)`` of each ``small_jobs`` job whose
-    schema is in ``table``, in the mode the job runs it: fast for verdict
-    counts, exhaustive without short-circuit otherwise."""
+    """``(schema, exhaustive)`` of each ``small_jobs`` job whose schema is
+    in ``table``, in the mode the job runs it: fast for verdict counts,
+    exhaustive without short-circuit otherwise."""
     from perfbench.workloads import SmallJobs
 
-    return [(name, table[name], call != "verdicts")
+    return [(table[name], call != "verdicts")
             for name, call in dict(SmallJobs.ROTATION).items() if name in table]
 
 
@@ -297,7 +297,7 @@ def test_exhaustive_plans_stay_in_codegen(spark):
                 out = annotate(df, schema, doc_col="doc", short_circuit=sc)
                 n = out.select(F.size("violations").alias("n")).collect()
                 assert len(n) == len(docs), (desc, sc)
-        for _, schema, exhaustive in jobs:
+        for schema, exhaustive in jobs:
             _run_twice(doc_dfs, schema, exhaustive, doc_col="doc")
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
@@ -348,7 +348,7 @@ def test_flat_plans_stay_in_codegen(spark):
             for sc in (True, False):
                 n = annotate(df, schema, short_circuit=sc).select(F.size("violations").alias("n")).collect()
                 assert len(n) == df.count(), (schema, sc)
-        for _, schema, exhaustive in jobs:
+        for schema, exhaustive in jobs:
             _run_twice([pages, more_pages], schema, exhaustive)
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
