@@ -5,8 +5,9 @@ json/json_value.cc:801-857): int % int, the real-divisor-with-exact-binary-
 representation case, then arbitrary-precision decimal. We mirror it with
 strategy selection at compile time:
 
-1. integer divisor k                       → `col % k == 0`, over longs for
-   an integer column and over doubles otherwise (pure codegen)
+1. integer divisor k                       → `try_mod(n, k) == 0` over the
+   exact integer reading n of an integer-typed value, over doubles
+   otherwise (pure codegen)
 2. divisor k = m / 2^a                     → `(col * 2^a) % m == 0` (pure
    codegen)
 3. general real divisor                    → Arrow-batched pandas UDF doing
@@ -14,6 +15,8 @@ strategy selection at compile time:
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -30,17 +33,27 @@ def _pow2_scale(k: float) -> int | None:
     return None
 
 
-def divisible_ok(col: Column, k, col_is_integer: bool) -> Column:
+def divisible_ok(col: Column | None, k, exact: Column | None = None) -> Column:
     """Boolean Column: value at `col` (numeric) is divisible by constant k.
 
-    A real instance is tested by its double remainder: the floating `%` is
-    exact (like C's fmod), and x * 2^a is exact too, so a value beyond
-    int64 (1e20) divides by 2 and not by 3. The quotient is no test: it
-    rounds, and every double above 2^53 is integral."""
+    ``exact`` reads the value as an exact integer (bigint or decimal(p,0))
+    where it is integer-typed and is NULL elsewhere; ``col`` is None when
+    ``exact`` is never NULL. An integer divisor takes the remainder of
+    ``exact`` with ``try_mod``, which cannot abort the job, so 2^53+1 is
+    odd. A real instance is tested by its double remainder: the floating
+    `%` is exact (like C's fmod), and x * 2^a is exact too, so a value
+    beyond int64 (1e20) divides by 2 and not by 3. The quotient is no test:
+    it rounds, and every double above 2^53 is integral."""
     if isinstance(k, int) or (isinstance(k, float) and k.is_integer()):
         ki = int(k)
-        if col_is_integer:
-            return (col.cast("long") % F.lit(ki)) == 0
+        if exact is not None:
+            if abs(ki) >= 10**38:  # beyond every decimal(38,0): only 0 divides
+                exact_ok = exact == F.lit(0)
+            else:
+                exact_ok = F.try_mod(exact, F.lit(ki if -(2**63) <= ki < 2**63 else Decimal(ki))) == F.lit(0)
+            if col is None:
+                return exact_ok
+            return F.coalesce(exact_ok, col.cast("double") % F.lit(float(ki)) == F.lit(0.0))
         return col.cast("double") % F.lit(float(ki)) == F.lit(0.0)
     a = _pow2_scale(float(k))
     if a is not None:

@@ -555,8 +555,9 @@ def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> 
 
 
 def _multiple_of_ok(val, ctx: Ctx) -> Cond:
-    tag = ctx.tag()  # a Column on VARIANT: only a typed column is known integral
-    return divisible_ok(ctx.num_val(), val, tag == "integer" if isinstance(tag, str) else False)
+    """An integer-typed value divides exactly (``ctx.int_val()``); a typed
+    integer column needs no double reading beside it."""
+    return divisible_ok(None if ctx.is_type("integer") is True else ctx.num_val(), val, ctx.int_val())
 
 
 def _apply_subschema(sub_schema, child: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -589,9 +590,50 @@ def _loop_body(val, kwp: str, cfg: Config, ref_stack):
     return lambda c: compile_node(val, c, kwp, fast, ref_stack).ok, viols_of
 
 
+def _member_names(schema, cfg: Config, ref_stack) -> tuple:
+    """The member names ``schema`` reads from its instance by name:
+    ``properties``, ``required``, ``dependentRequired`` and
+    ``dependentSchemas`` names, through in-place applicators and reference
+    targets, in schema order. A loop binds them once per element
+    (``Ctx.loop_elements``); a name missed here is read by path, so the
+    scan decides no verdict."""
+    names: dict = {}
+    seen: list = []
+
+    def walk(node, cfg: Config, ref_stack) -> None:
+        if not isinstance(node, dict) or any(node is n for n in seen):
+            return
+        seen.append(node)
+        props, required = node.get("properties"), node.get("required")
+        dep_required, dep_schemas = node.get("dependentRequired"), node.get("dependentSchemas")
+        names.update(dict.fromkeys(props if isinstance(props, dict) else ()))
+        names.update(dict.fromkeys(n for n in (required if isinstance(required, list) else ())
+                                   if isinstance(n, str)))
+        for trigger, deps in (dep_required.items() if isinstance(dep_required, dict) else ()):
+            names.update(dict.fromkeys([trigger, *(d for d in deps if isinstance(d, str))]))
+        dep_schemas = dep_schemas if isinstance(dep_schemas, dict) else {}
+        names.update(dict.fromkeys(dep_schemas))
+        subs = [*(node.get("allOf") or ()), *(node.get("anyOf") or ()), *(node.get("oneOf") or ()),
+                node.get("not"), *dep_schemas.values()]
+        if "if" in node:
+            subs += [node["if"], node.get("then"), node.get("else")]
+        for sub in subs:
+            walk(sub, cfg, ref_stack)
+        try:
+            hits = [hit for _, hit in _references(node, cfg, ref_stack) if hit is not None]
+        except SchemaError:
+            return  # the compile reports it
+        for hit in hits:
+            walk(*hit)
+
+    walk(schema, cfg, ref_stack)
+    return tuple(names)
+
+
 def _each_key(keys: Column, key_ctx, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    """Apply ``val`` to every key of the dynamic key set ``keys``
-    (``key_ctx(k)`` is the context a key's subschema reads)."""
+    """Apply ``val`` to every entry of the dynamic array ``keys`` (member
+    names, or the entries of ``Ctx.loop_members``; ``key_ctx(k)`` is the
+    context an entry's subschema reads)."""
     ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
     ok = F.forall(keys, lambda k: B(ok_of(key_ctx(k))))
     if not cfg.want_viols:
@@ -652,15 +694,15 @@ def _each_member(ctx: Ctx, selected, val, kwp: str, cfg: Config, ref_stack) -> C
                 body = compile_node(val, child, kwp, cfg, ref_stack)
             parts.append(_guarded(and_(child.present, chosen), body))
         return _and_combine(parts, replace(cfg, short_circuit=False))
-    keys, prop_ctx = ctx.obj_entries_factory()
-    keys = F.filter(keys, lambda k: B(selected(k)))
+    entries, key_of, member_of = ctx.loop_members(() if val is False else _member_names(val, cfg, ref_stack))
+    entries = F.filter(entries, lambda k: B(selected(key_of(k))))
     if val is not False:
-        return _each_key(keys, prop_ctx, val, kwp, cfg, ref_stack)
-    ok = F.size(keys) == 0
+        return _each_key(entries, member_of, val, kwp, cfg, ref_stack)
+    ok = F.size(entries) == 0
     if not cfg.want_viols:
         return Compiled(ok)
-    return Compiled(ok, F.transform(keys, lambda k: _viol_struct(
-        cfg.base_uri, kwp, _child_loc(ctx.loc, k), M.msg_additional_property(k))).cast(VIOLS_DT))
+    return Compiled(ok, F.transform(entries, lambda k: _viol_struct(
+        cfg.base_uri, kwp, _child_loc(ctx.loc, key_of(k)), M.msg_additional_property(key_of(k)))).cast(VIOLS_DT))
 
 
 def _k_pattern_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
@@ -730,8 +772,7 @@ def _each_item(val, ctx: Ctx, kwp: str, cfg: Config, ref_stack, skip, own_error=
     parent's own entry, reported after the elements'."""
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
-    factory = ctx.element_ctx_factory()
-    arr = ctx.arr()
+    arr, factory = ctx.loop_elements(_member_names(val, cfg, ref_stack))
     ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
 
     def elem_ok(x: Column, i: Column) -> Column:
@@ -770,8 +811,7 @@ def _k_contains(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -
     maximum = schema.get("maxContains")
     if ctx.is_type("array") is False:
         return Compiled(True)  # statically non-array (e.g. flat row root)
-    factory = ctx.element_ctx_factory()
-    arr = ctx.arr()
+    arr, factory = ctx.loop_elements(_member_names(val, cfg, ref_stack))
     ok_of, _ = _loop_body(val, kwp, cfg, ref_stack)
     count = F.size(F.filter(F.transform(arr, lambda x, i: B(ok_of(factory(x, i)))), lambda b: b))
     cond = count >= minimum if maximum is None else (count >= minimum) & (count <= maximum)

@@ -17,9 +17,16 @@ Two families:
   on those read the value at run time.
 
 - ``VariantCtx`` — the instance is a JSON document in a string column,
-  parsed once via Spark 4 ``parse_json`` into a VARIANT. Type tags come from
-  ``schema_of_variant`` (per row), children from variant path extraction /
-  ``map<string,variant>`` casts. Missing key → SQL NULL variant; JSON null →
+  parsed once via Spark 4 ``parse_json`` into a VARIANT. Each type test
+  reads the value once (the reference tests one type tag against a set,
+  ``AssertionTypeAny``): object and array by a cast that reads no member
+  or the array read a loop makes anyway, null by ``is_variant_null``, and
+  a scalar type by one ``schema_of_variant`` of the scalar; never by
+  rendering a container's schema. Members come from variant path
+  extraction, ``map<string,variant>`` casts, or, for a loop element, one
+  cast per element to a struct of the member names its loop body reads
+  (the reference reads an object once and dispatches its members,
+  ``LoopPropertiesMatch``). Missing key → SQL NULL variant; JSON null →
   VOID variant — exactly the distinction the reference's evaluator makes
   between an absent property and a null value.
 
@@ -140,6 +147,11 @@ class Ctx:
     def num_val(self) -> Column:
         raise NotImplementedError
 
+    def int_val(self) -> Optional[Column]:
+        """The value read exactly as an integer (bigint or decimal(p,0))
+        where it is integer-typed, NULL elsewhere; None when it never is."""
+        return None
+
     def bool_val(self) -> Column:
         raise NotImplementedError
 
@@ -152,8 +164,16 @@ class Ctx:
         return F.size(self.arr())
 
     def element_ctx_factory(self) -> Callable[[Column, Column], "Ctx"]:
-        """(element, index) -> Ctx for use inside F.transform lambdas."""
+        """(element, index) -> Ctx of an element read by index."""
         raise NotImplementedError
+
+    def loop_elements(self, names: tuple):
+        """``(array, factory)`` of an element loop: the array a higher-order
+        function runs over, and ``factory(element, index)`` -> the
+        element's Ctx inside its lambda. ``names`` are the member names the
+        loop body reads from each element by name; a context may bind them
+        once per element."""
+        return self.arr(), self.element_ctx_factory()
 
     def obj_keys(self) -> Column:
         raise NotImplementedError
@@ -166,13 +186,15 @@ class Ctx:
 
     def prop_names(self) -> Optional[list[str]]:
         """The object's member names when they are static (a NULL member
-        is absent at run time), or None when only ``obj_entries_factory``
-        lists them."""
+        is absent at run time), or None when only ``loop_members`` lists
+        them."""
         return None
 
-    def obj_entries_factory(self):
-        """(keys array, key Column -> member Ctx) of an object whose
-        members are known per row."""
+    def loop_members(self, names: tuple):
+        """``(entries, key_of, member_of)`` of a member loop over an object
+        whose members are known per row: the array a higher-order function
+        runs over, and an entry's key Column and member Ctx inside its
+        lambda. ``names`` as for ``loop_elements``."""
         raise NotImplementedError
 
     def unique_items(self) -> Column:
@@ -333,6 +355,10 @@ class FlatColCtx(Ctx):
     def num_val(self) -> Column:
         return self.col.cast("double")
 
+    def int_val(self) -> Optional[Column]:
+        integral = self._tag == "integer" or (isinstance(self.dtype, T.DecimalType) and self.dtype.scale == 0)
+        return self.col if integral else None
+
     def bool_val(self) -> Column:
         return self.col.cast("boolean")
 
@@ -363,9 +389,10 @@ class FlatColCtx(Ctx):
             return [f.name for f in self.dtype.fields]
         return None if isinstance(self.dtype, T.MapType) else []
 
-    def obj_entries_factory(self):
+    def loop_members(self, names: tuple):
         col, vt, loc = self.col, self.dtype.valueType, self.loc
-        return F.map_keys(col), lambda key: FlatColCtx.value(F.element_at(col, key), vt, _child_loc(loc, key))
+        return (F.map_keys(col), lambda key: key,
+                lambda key: FlatColCtx.value(F.element_at(col, key), vt, _child_loc(loc, key)))
 
     def get_prop(self, name: str) -> Ctx:
         child_loc = _child_loc(self.loc, name)
@@ -480,64 +507,112 @@ def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, 
 # Tree path: instance = a VARIANT value (parsed JSON document)
 # ---------------------------------------------------------------------------
 
-_TAG_WHEN = [
-    ("OBJECT", "object"),
-    ("ARRAY", "array"),
-    ("STRING", "string"),
-    ("BOOLEAN", "boolean"),
-    ("BIGINT", "integer"),
-    ("INT", "integer"),
-    ("SMALLINT", "integer"),
-    ("TINYINT", "integer"),
-    ("VOID", "null"),
-]
+# ``schema_of_variant`` renderings of JSON scalars. A numeric type is named
+# by its first three letters (DECIMAL carries its precision and scale).
+# parse_json stores an integer within int64 as BIGINT, and an integer
+# beyond it, or a real without a fraction such as 1.0 or
+# 9007199254740993.0, as DECIMAL(p,0); both read exactly as decimal(38,0).
+_REAL3 = ("DOU", "FLO", "DEC")
+_NUM3 = ("BIG", "INT", "SMA", "TIN") + _REAL3
+_INT_TYPES = ("BIGINT", "INT", "SMALLINT", "TINYINT")
+_WIDE_INT_TYPES = tuple(f"DECIMAL({p},0)" for p in range(1, 39))
+_SCALAR_TAGS = {"STRING": "string", "BOOLEAN": "boolean", "BIGINT": "integer", "INT": "integer",
+                "SMALLINT": "integer", "TINYINT": "integer"}
+
+
+def _struct_ddl(names: tuple) -> str:
+    """``struct<`n1`: variant, ...>``: the object of a loop element cast so
+    that each name is one field read."""
+    return "struct<" + ", ".join("`" + n.replace("`", "``") + "`: variant" for n in names) + ">"
+
+
+def _struct_names(names) -> tuple:
+    """``names`` less those equal to an earlier one but for case: the cast
+    matches names case-sensitively, but a struct with both ``sku`` and
+    ``Sku`` cannot be read by field name, so the later one is read by path."""
+    seen: set = set()
+    out = []
+    for n in names:
+        if n.lower() not in seen:
+            seen.add(n.lower())
+            out.append(n)
+    return tuple(out)
+
+
+def _loop_ctx(value: Column, loc: Column, names: tuple, bound: Column) -> "VariantCtx":
+    """The Ctx of loop element ``value``; with ``names``, ``bound`` is its
+    binding, whose field ``o`` is the element cast to their struct."""
+    if not names:
+        return VariantCtx(value, loc, in_loop=True)
+    return VariantCtx(value, loc, obj=bound.getField("o"), names=names, in_loop=True)
 
 
 class VariantCtx(Ctx):
     """A VARIANT value (Spark 4) viewed as a JSON value.
 
-    ``schema_of_variant`` yields a per-row type string (BIGINT, STRING,
-    DOUBLE, DECIMAL(p,s), BOOLEAN, VOID, OBJECT<...>, ARRAY<...>); we map it
-    onto the reference's 7 JSON type names. DECIMAL/DOUBLE/FLOAT → 'number'.
+    Each JSON type test reads the value once:
+
+    - object: ``try_variant_get(v, '$', 'struct<>') IS NOT NULL``, a cast
+      that reads no member; array: ``arr() IS NOT NULL``, the array read
+      the loop over it makes anyway; null: ``is_variant_null(v)``. None of
+      them renders the subtree, as ``schema_of_variant`` does.
+    - string, boolean, number and integer compare one ``schema_of_variant``
+      of the scalar as a whole: ``STRING``, ``BOOLEAN``, or its first three
+      letters against the numeric types. DECIMAL/DOUBLE/FLOAT are 'number';
+      'integer' is a number whose double has no fraction.
+
+    A loop element (``loop_elements``/``loop_members``) can be *bound*:
+    cast once per element to ``struct<n1: variant, ...>`` over the member
+    names its loop body reads (``obj``, ``names``), so each of those members
+    is a field read instead of a path read that rebuilds the value, and
+    ``obj IS NOT NULL`` is its object test. The cast matches names
+    case-sensitively (``Sku`` is not ``sku``); a JSON-null member is a
+    VOID variant and an absent one SQL NULL, as for a path read; a
+    non-object casts to a NULL struct. A name outside ``names`` is read by
+    path. Loop bodies run inside higher-order functions, which Spark
+    evaluates without generated code and without sharing repeated reads;
+    the root is left unbound, since its projection's generated code shares
+    them already. ``in_loop`` marks a value read inside such a lambda: a
+    container constant there compares member by member, since no pandas
+    UDF can run in a lambda.
     """
 
-    def __init__(self, v: Column, loc: Union[str, Column], present: Cond | None = None):
+    def __init__(self, v: Column, loc: Union[str, Column], present: Cond | None = None,
+                 obj: Column | None = None, names: tuple = (), in_loop: bool = False):
         self.v = v
         self.loc = loc
         self.present = v.isNotNull() if present is None else present
+        self.obj = obj
+        self.names = names
+        self.in_loop = in_loop
 
-    def _schema_str(self) -> Column:
+    def _schema(self) -> Column:
         return F.schema_of_variant(self.v)
 
+    def _object(self) -> Column:
+        """The value as a struct (of the bound names), NULL for a non-object."""
+        return self.obj if self.obj is not None else F.try_variant_get(self.v, "$", "struct<>")
+
     def tag(self) -> Column:
-        s = self._schema_str()
-        out = F.lit("number")  # DOUBLE / FLOAT / DECIMAL fall through
-        expr = None
-        for prefix, name in _TAG_WHEN:
-            cond = s.startswith(prefix)
-            expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-        return expr.otherwise(out)
+        tags = F.create_map(*[F.lit(x) for kv in _SCALAR_TAGS.items() for x in kv])
+        scalar = F.coalesce(F.try_element_at(tags, self._schema()), F.lit("number"))
+        return (F.when(self.is_type("object"), "object").when(self.is_type("array"), "array")
+                .when(self.is_type("null"), "null").otherwise(scalar))
 
     def is_type(self, t: str) -> Cond:
-        s = self._schema_str()
         if t == "object":
-            return s.startswith("OBJECT")
+            return self._object().isNotNull()
         if t == "array":
-            return s.startswith("ARRAY")
-        if t == "string":
-            return s == F.lit("STRING")
-        if t == "boolean":
-            return s == F.lit("BOOLEAN")
+            return self.arr().isNotNull()
         if t == "null":
-            return s == F.lit("VOID")
-        is_int = (
-            s.startswith("BIGINT") | s.startswith("INT") | s.startswith("SMALLINT") | s.startswith("TINYINT")
-        )
-        is_num = is_int | s.startswith("DOUBLE") | s.startswith("FLOAT") | s.startswith("DECIMAL")
+            return F.is_variant_null(self.v)
+        if t in ("string", "boolean"):
+            return self._schema() == F.lit(t.upper())
+        number = F.substring(self._schema(), 1, 3).isin(*_NUM3)
         if t == "number":
-            return is_num
+            return number
         if t == "integer":
-            return is_int | (is_num & _integral(self.num_val()))
+            return number & _integral(self.num_val())
         raise ValueError(f"unknown type {t}")
 
     def str_val(self) -> Column:
@@ -546,6 +621,12 @@ class VariantCtx(Ctx):
     def num_val(self) -> Column:
         return F.try_variant_get(self.v, "$", "double")
 
+    def int_val(self) -> Column:
+        return F.when(self._schema().isin(*_INT_TYPES), self._exact_int())
+
+    def _exact_int(self) -> Column:
+        return F.try_variant_get(self.v, "$", "decimal(38,0)")
+
     def bool_val(self) -> Column:
         return F.try_variant_get(self.v, "$", "boolean")
 
@@ -553,12 +634,26 @@ class VariantCtx(Ctx):
         return F.try_variant_get(self.v, "$", "array<variant>")
 
     def element_ctx_factory(self):
-        loc = self.loc
+        loc, in_loop = self.loc, self.in_loop
 
         def factory(x: Column, i: Column) -> Ctx:
-            return VariantCtx(x, F.concat(S(loc), F.lit("/"), i.cast("string")))
+            return VariantCtx(x, F.concat(S(loc), F.lit("/"), i.cast("string")), in_loop=in_loop)
 
         return factory
+
+    def loop_elements(self, names):
+        loc, names = self.loc, _struct_names(names)
+        arr = self.arr()
+        if names:
+            ddl = _struct_ddl(names)
+            arr = F.transform(arr, lambda x: F.struct(
+                x.alias("v"), F.try_variant_get(x, "$", ddl).alias("o")))
+
+        def factory(b: Column, i: Column) -> Ctx:
+            x = b.getField("v") if names else b
+            return _loop_ctx(x, F.concat(S(loc), F.lit("/"), i.cast("string")), names, b)
+
+        return arr, factory
 
     def _as_map(self) -> Column:
         return F.try_variant_get(self.v, "$", "map<string,variant>")
@@ -568,20 +663,27 @@ class VariantCtx(Ctx):
 
     def get_prop(self, name: str) -> Ctx:
         child_loc = _child_loc(self.loc, name)
-        if all(c in _IDENT_SAFE for c in name) and name and not name[0].isdigit():
+        if name in self.names:
+            child = self.obj.getField(name)
+        elif all(c in _IDENT_SAFE for c in name) and name and not name[0].isdigit():
             child = F.try_variant_get(self.v, f"$.{name}", "variant")
         else:
             child = F.element_at(self._as_map(), F.lit(name))
-        return VariantCtx(child, child_loc)
+        return VariantCtx(child, child_loc, in_loop=self.in_loop)
 
-    def obj_entries_factory(self):
-        m = self._as_map()
-        loc = self.loc
+    def loop_members(self, names):
+        loc, names = self.loc, _struct_names(names)
+        entries = F.map_entries(self._as_map())
+        if names:
+            ddl = _struct_ddl(names)
+            entries = F.transform(entries, lambda e: F.struct(
+                e.getField("key").alias("key"), e.getField("value").alias("value"),
+                F.try_variant_get(e.getField("value"), "$", ddl).alias("o")))
 
-        def prop_ctx(key: Column) -> Ctx:
-            return VariantCtx(F.element_at(m, key), _child_loc(loc, key))
+        def member(e: Column) -> Ctx:
+            return _loop_ctx(e.getField("value"), _child_loc(loc, e.getField("key")), names, e)
 
-        return F.map_keys(m), prop_ctx
+        return entries, lambda e: e.getField("key"), member
 
     def eq_const(self, value) -> Cond:
         if value is None:
@@ -589,34 +691,26 @@ class VariantCtx(Ctx):
         if isinstance(value, bool):
             return self.is_type("boolean") & (self.bool_val() == F.lit(value))
         if isinstance(value, int):
-            # exact int64 equality for integer-tagged instances; a REAL
-            # instance equals an int constant only when the constant is
-            # exactly double-representable (reference cross-type numeric
-            # compare is exact)
-            s = self._schema_str()
-            if value in _INT64:
-                exact = (
-                    s.startswith("BIGINT") | s.startswith("INT")
-                    | s.startswith("SMALLINT") | s.startswith("TINYINT")
-                ) & (F.try_variant_get(self.v, "$", "bigint") == F.lit(value))
-                reals = ("DOUBLE", "FLOAT", "DECIMAL")
-            else:
-                # a wider JSON integer parses as DECIMAL(p,0) up to 38
-                # digits (compared exactly here), as DOUBLE beyond
-                exact = (
-                    s.startswith("DECIMAL") & s.endswith(",0)")
-                    & (F.try_variant_get(self.v, "$", "decimal(38,0)") == F.lit(Decimal(value)))
-                ) if abs(value) < 10**38 else False
-                reals = ("DOUBLE", "FLOAT")
+            # within int64 an integer-typed instance compares exactly, and
+            # beyond it a DECIMAL(p,0) one; a real equals the constant only
+            # when the double holds the constant exactly, and beyond int64
+            # only when it is a double (a decimal with a fraction may round
+            # onto it)
+            exact_types = _INT_TYPES if value in _INT64 else _WIDE_INT_TYPES
+            exact = (self._schema().isin(*exact_types) & (self._exact_int() == F.lit(Decimal(value)))
+                     if abs(value) < 10**38 else False)
             as_double = _exact_double(value)
             if as_double is None:
                 return exact
-            is_real = or_(*[s.startswith(r) for r in reals])
-            return or_(exact, is_real & (self.num_val() == F.lit(as_double)))
+            reals = _REAL3 if value in _INT64 else _REAL3[:2]
+            real = F.substring(self._schema(), 1, 3).isin(*reals) & (self.num_val() == F.lit(as_double))
+            return or_(exact, real)
         if isinstance(value, float):
             return B(self.is_type("number")) & (self.num_val() == F.lit(float(value)))
         if isinstance(value, str):
             return B(self.is_type("string")) & (self.str_val() == F.lit(value))
+        if self.in_loop:
+            return self._eq_container(value)
         # containers: deep structural equality via canonical rendering —
         # variant to_json preserves source key order, so the raw string
         # compare would wrongly distinguish {"a":1,"b":2} from its
@@ -624,6 +718,18 @@ class VariantCtx(Ctx):
         from jsonschema_spark.functions.canonical import canonical_dumps, canonical_json
 
         return canonical_json(F.to_json(self.v)) == F.lit(canonical_dumps(value))
+
+    def _eq_container(self, value) -> Cond:
+        """Deep equality to a container constant, member by member in the
+        JVM: an object with the same member names in any order, or an array
+        of the same length, whose members are equal."""
+        if isinstance(value, dict):
+            members = [and_(c.present, c.eq_const(x)) for c, x in ((self.get_prop(k), x) for k, x in value.items())]
+            return and_(self.is_type("object"), self.obj_size() == F.lit(len(value)), *members)
+        arr = self.arr()
+        elems = [VariantCtx(F.try_element_at(arr, F.lit(i + 1)), "", in_loop=True).eq_const(x)
+                 for i, x in enumerate(value)]
+        return and_(arr.isNotNull(), F.size(arr) == F.lit(len(value)), *elems)
 
     def json_repr(self) -> Column:
         return F.to_json(self.v)

@@ -19,12 +19,23 @@ CASES = [
     # --- type ---------------------------------------------------------------
     ("integer accepts int and integral real, rejects fraction/string/bool-ish",
      {"type": "integer"},
-     [("1", True), ("1.0", True), ("1.5", False), ('"1"', False), ("true", False), ("null", False)]),
-    ("number accepts ints", {"type": "number"}, [("1", True), ("1.5", True), ('"x"', False)]),
+     [("1", True), ("1.0", True), ("1.5", False), ('"1"', False), ("true", False), ("null", False),
+      ("1e0", True), ("-0.0", True), ("1.5E300", True), ("12345678901234567890123", True),
+      ("0.10", False), ('""', False), ("{}", False), ("[]", False)]),
+    ("number accepts ints", {"type": "number"},
+     [("1", True), ("1.5", True), ('"x"', False), ("1.0", True), ("1e0", True), ("-0.0", True),
+      ("1.5E300", True), ("12345678901234567890123", True), ("0.10", True), ('""', False),
+      ('"1"', False), ("true", False), ("null", False), ("{}", False), ("[]", False)]),
     ("type union", {"type": ["string", "null"]},
-     [('"a"', True), ("null", True), ("5", False), ("[]", False)]),
+     [('"a"', True), ("null", True), ("5", False), ("[]", False), ('""', True), ('"1"', True),
+      ("true", False), ("{}", False), ("1.0", False), ("0.10", False)]),
     ("object/array tags", {"type": "object"},
-     [("{}", True), ("[]", False), ('"{}"', False)]),
+     [("{}", True), ("[]", False), ('"{}"', False), ('{"a": {}}', True), ("[{}]", False),
+      ("null", False), ("true", False), ("1", False)]),
+    ("boolean and array tags", {"type": ["boolean", "array"]},
+     [("true", True), ("[]", True), ("[1, {}]", True), ("1", False), ("1.0", False), ("1e0", False),
+      ("-0.0", False), ("1.5E300", False), ("12345678901234567890123", False), ("0.10", False),
+      ('""', False), ('"1"', False), ("null", False), ("{}", False)]),
     # --- const / enum -------------------------------------------------------
     ("const null", {"const": None}, [("null", True), ("0", False), ('""', False)]),
     ("const false vs 0", {"const": False}, [("false", True), ("0", False)]),
@@ -37,7 +48,8 @@ CASES = [
      [("1", True), ("3", True), ("0.999", False), ("3.001", False), ('"x"', True)]),
     ("exclusive bounds", {"exclusiveMinimum": 1, "exclusiveMaximum": 3},
      [("1", False), ("3", False), ("2", True)]),
-    ("multipleOf int", {"multipleOf": 2}, [("4", True), ("5", False), ("4.0", True)]),
+    ("multipleOf int", {"multipleOf": 2},
+     [("4", True), ("5", False), ("4.0", True), ("9007199254740993", False), ("9007199254740994", True)]),
     ("multipleOf fraction", {"multipleOf": 0.5},
      [("1.5", True), ("1.25", False), ("3", True)]),
     # --- string -------------------------------------------------------------
@@ -51,6 +63,10 @@ CASES = [
      [('{"a":1,"b":2}', True), ('{"a":1}', False), ("{}", False), ("[]", True), ("5", True)]),
     ("null property satisfies required", {"required": ["a"]},
      [('{"a": null}', True), ("{}", False)]),
+    ("required and properties match member names exactly",
+     {"required": ["sku"], "properties": {"sku": {"type": "null"}, "a.b": {"const": 2}}},
+     [('{"Sku": 1}', False), ('{"sku": null}', True), ('{"sku": null, "a.b": 2}', True),
+      ('{"sku": null, "a.b": 3}', False), ('{"sku": null, "a": {"b": 3}}', True)]),
     ("properties ignores absent", {"properties": {"a": {"type": "integer"}}},
      [("{}", True), ('{"a": 1}', True), ('{"a": "x"}', False)]),
     ("min/maxProperties", {"minProperties": 1, "maxProperties": 2},
@@ -69,10 +85,43 @@ CASES = [
       ('{"b":1}', False), ('{"x1":1}', False)]),
     ("additionalProperties schema",
      {"properties": {"a": {}}, "additionalProperties": {"type": "integer"}},
-     [('{"a":"anything","z":3}', True), ('{"z":"s"}', False)]),
+     [('{"a":"anything","z":3}', True), ('{"z":"s"}', False),
+      ('{"z": 1e0, "y": -0.0, "x": 12345678901234567890123, "w": 1.0, "v": 1.5E300}', True),
+      ('{"z": 0.10}', False), ('{"z": ""}', False), ('{"z": "1"}', False), ('{"z": true}', False),
+      ('{"z": null}', False), ('{"z": {}}', False), ('{"z": []}', False)]),
+    ("member loop binds the names its body reads",
+     {"additionalProperties": {"required": ["sku"], "properties": {"sku": {"type": "null"},
+                                                                   "a.b": {"type": "string"}}}},
+     [('{"m": {"sku": null}}', True), ('{"m": {"Sku": null}}', False), ('{"m": {"sku": 1}}', False),
+      ('{"m": {"sku": null, "a.b": "x"}}', True), ('{"m": {"sku": null, "a.b": 1}}', False),
+      ('{"m": {"sku": null, "a": {"b": 1}}}', True), ('{"m": 1, "n": "x", "o": []}', True)]),
     # --- array --------------------------------------------------------------
     ("items all elements", {"items": {"type": "integer"}},
-     [("[]", True), ("[1,2]", True), ('[1,"x"]', False), ('"notarray"', True)]),
+     [("[]", True), ("[1,2]", True), ('[1,"x"]', False), ('"notarray"', True),
+      ("[1, 1.0, 1e0, -0.0, 1.5E300, 12345678901234567890123]", True), ("[0.10]", False),
+      ('[""]', False), ('["1"]', False), ("[true]", False), ("[null]", False), ("[{}]", False),
+      ("[[]]", False)]),
+    ("items type tags", {"items": {"type": ["string", "boolean", "null", "object", "array"]}},
+     [('["", "1", true, null, {}, []]', True), ("[1]", False), ("[1.0]", False), ("[1e0]", False),
+      ("[0.10]", False), ("[-0.0]", False)]),
+    ("element loop binds the names its body reads",
+     {"items": {"required": ["sku"], "properties": {"sku": {"type": "integer"}, "Sku": {"type": "string"},
+                                                    "a.b": {"type": "string"}}}},
+     [('[{"Sku": "x"}]', False), ('[{"sku": null}]', False), ('[{"sku": 1, "a.b": "x"}]', True),
+      ('[{"sku": 1, "a.b": 1}]', False), ('[{"sku": 1, "Sku": "x"}]', True),
+      ('[{"sku": 1, "Sku": 2}]', False), ('[1, "x", null, []]', True), ('[{"sku": 1.0}]', True),
+      ('[{"sku": 1, "a": {"b": 1}}]', True)]),
+    ("container const inside an element loop", {"properties": {"os": {"items": {"const": {}}}}},
+     [('{"os": []}', True), ('{"os": [{}]}', True), ('{"os": [{}, {"a": 1}]}', False),
+      ('{"os": [[]]}', False), ('{"os": [null]}', False), ("{}", True)]),
+    ("container enum inside element and member loops",
+     {"items": {"enum": [{"a": 1, "b": [1, {"c": None}]}, [1, "x"], {}, []]},
+      "additionalProperties": {"enum": [{"a": 1.0}, [[2]]]}},
+     [('[{"b": [1.0, {"c": null}], "a": 1}]', True), ('[[1.0, "x"], {}, []]', True),
+      ('[{"a": 1, "b": [1, {"c": 0}]}]', False), ('[{"a": 1}]', False), ("[[1]]", False),
+      ('[["x", 1]]', False), ('[{"a": 1, "b": [1, {"c": null}], "d": 2}]', False), ("[1]", False),
+      ('[{"a": 1, "b": [1, {}]}]', False), ('{"m": {"a": 1}, "n": [[2.0]]}', True),
+      ('{"m": {"a": 1, "b": 1}}', False), ('{"m": [[2], []]}', False), ('{"m": {"A": 1}}', False)]),
     ("prefixItems then items",
      {"prefixItems": [{"type": "string"}], "items": {"type": "integer"}},
      [('["a",1,2]', True), ('["a","b"]', False), ("[1]", False), ("[]", True)]),

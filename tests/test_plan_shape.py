@@ -9,6 +9,7 @@ row-at-a-time BatchEvalPython)."""
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -350,5 +351,75 @@ def test_flat_plans_stay_in_codegen(spark):
                 assert len(n) == df.count(), (schema, sc)
         for schema, exhaustive in jobs:
             _run_twice([pages, more_pages], schema, exhaustive)
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
+def _lambda_bodies(text: str) -> str:
+    """The outermost ``lambdafunction(...)`` calls in a plan's text."""
+    bodies, start = [], 0
+    while (at := text.find("lambdafunction(", start)) >= 0:
+        depth, end = 0, at + len("lambdafunction")
+        for end in range(end, len(text)):
+            depth += {"(": 1, ")": -1}.get(text[end], 0)
+            if depth == 0:
+                break
+        bodies.append(text[at:end + 1])
+        start = end + 1
+    return "".join(bodies)
+
+
+def _variant_reads_in_lambdas(df) -> tuple:
+    """``(type tests, tag reads, path reads)`` inside the lambda functions
+    of ``df``'s analyzed plan: ``schema_of_variant`` of a bound member
+    (``b.o.<name>``), ``schema_of_variant`` as the scalar branch of a type
+    name (``tag()``, reached only on a scalar), and
+    ``try_variant_get(…, $.<name>, …)``. Any other ``schema_of_variant``
+    fails the test: it may render a whole object or array."""
+    text = _lambda_bodies(df._jdf.queryExecution().analyzed().toString())
+    members = tags = 0
+    for m in re.finditer(r"schema_of_variant\(", text):
+        depth, end = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(text[end], 0)
+            end += 1
+        arg = text[m.end():end - 1]
+        if re.fullmatch(r"lambda \w+#\d+\.o\.\w+", arg):
+            members += 1
+        elif text[:m.start()].endswith("TINYINT, integer), "):
+            tags += 1
+        else:
+            raise AssertionError(f"schema_of_variant of a loop value that is not a member: {arg}")
+    return members, tags, len(re.findall(r", \$\.\w", text))
+
+
+def test_tree_loops_read_each_element_once(spark):
+    """The element loops of the perfbench ``EVENTS`` tree plans bind each
+    element once: each scalar type test on a member reads one
+    ``schema_of_variant`` of that member, no type test renders an object
+    or array, and no member is read by path. The counts are pinned for the
+    fast plan (one per type test: sku, qty and price each have a type and
+    a guarded keyword, and contains tests qty) and both exhaustive plans,
+    which repeat a part's test in its parent's pick of failing parts; the
+    one type name is the message of an element that is not an object. Each
+    plan runs with ``spark.sql.codegen.fallback`` off."""
+    from perfbench.schemas import EVENTS
+
+    from jsonschema_spark import annotate
+
+    df = spark.createDataFrame([
+        ('{"items": [{"sku": "SKU-0001", "qty": 3, "price": 1.5}, {"sku": 1, "qty": "x"}, [], null]}',),
+        ("[1]",)], "doc string")
+    plans = {
+        "fast": (validate(df, EVENTS, doc_col="doc"), (7, 0, 0)),
+        "exhaustive": (annotate(df, EVENTS, doc_col="doc"), (45, 1, 0)),
+        "exhaustive, short_circuit=False": (annotate(df, EVENTS, doc_col="doc", short_circuit=False), (64, 1, 0)),
+    }
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for name, (out, want) in plans.items():
+            assert _variant_reads_in_lambdas(out) == want, name
+            assert len(out.collect()) == 2, name
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)

@@ -241,6 +241,47 @@ def test_tree_multiple_of_beyond_int64(spark, k, want):
     assert [validate_py(schema, json.loads(p)) for p in payloads] == [want, want]
 
 
+def test_multiple_of_is_exact_beyond_2_53(spark):
+    """An integer-typed value takes its remainder exactly: 2^53+1 is odd on a
+    flat bigint column (and in a bigint array), on the tree path and in
+    validate_py alike, where a double reading rounds it to 2^53."""
+    schema = {"properties": {"a": {"multipleOf": 2}, "xs": {"items": {"multipleOf": 2}}}}
+    values = [9007199254740993, 9007199254740994]
+    flat = spark.createDataFrame([(i, v, [v]) for i, v in enumerate(values)], "i long, a long, xs array<bigint>")
+    got_flat = [r.valid for r in validate(flat, schema, instance_cols=["a", "xs"]).orderBy("i").collect()]
+    payloads = [json.dumps({"a": v}) for v in values] + [json.dumps({"xs": [v]}) for v in values]
+    assert got_flat == [False, True]
+    assert verdicts(spark, schema, *payloads) == [False, True, False, True]
+    assert [validate_py(schema, json.loads(p)) for p in payloads] == [False, True, False, True]
+
+
+_SPELLINGS = ["1", "1.0", "1e0", "-0.0", "1.5E300", "12345678901234567890123", "0.10",
+              '""', '"1"', "true", "null", "{}", "[]"]
+_TAGS = ["integer", "number", "number", "number", "number", "number", "number",
+         "string", "string", "boolean", "null", "object", "array"]
+
+
+@pytest.mark.parametrize("wrap,where", [
+    ("%s", lambda s: s), ("[%s]", lambda s: {"items": s}), ('{"k": %s}', lambda s: {"additionalProperties": s}),
+], ids=["root", "items", "additionalProperties"])
+def test_type_messages_name_each_value_type(spark, wrap, where):
+    """The type violation names the value's JSON type for every spelling of
+    a value, at the root and inside element and member loops, in both
+    reporting modes: a VARIANT decimal without fraction (1.0) is a
+    number, an int64 an integer."""
+    schema = where({"allOf": [{"type": "boolean"}, {"type": "null"}]})
+    out = docs(spark, *[wrap % v for v in _SPELLINGS])
+    for sc in (True, False):
+        out = annotate(out, schema, doc_col="doc", valid_col=f"valid_{sc}",
+                       violations_col=f"viols_{sc}", short_circuit=sc)
+    for sc in (True, False):
+        for r in out.orderBy("i").collect():
+            errors = {v.error for v in r[f"viols_{sc}"] if v.keywordLocation.endswith("/type")}
+            expected = "boolean" if _TAGS[r.i] != "boolean" else "null"
+            assert errors >= {f"The value was expected to be of type {expected} but it was of type {_TAGS[r.i]}"}, (
+                sc, r.doc, errors)
+
+
 def test_tree_deep_equality_key_order_and_numbers(spark):
     """Reference deep equality (dispatch.h:697-712): object key order is
     irrelevant and 1 == 1.0 — for const, enum, and uniqueItems."""
