@@ -530,13 +530,10 @@ def _struct_names(names) -> tuple:
     """``names`` less those equal to an earlier one but for case: the cast
     matches names case-sensitively, but a struct with both ``sku`` and
     ``Sku`` cannot be read by field name, so the later one is read by path."""
-    seen: set = set()
-    out = []
+    first: dict = {}
     for n in names:
-        if n.lower() not in seen:
-            seen.add(n.lower())
-            out.append(n)
-    return tuple(out)
+        first.setdefault(n.lower(), n)
+    return tuple(first.values())
 
 
 def _loop_ctx(value: Column, loc: Column, names: tuple, bound: Column) -> "VariantCtx":
