@@ -630,15 +630,15 @@ def _member_names(schema, cfg: Config, ref_stack) -> tuple:
     return tuple(names)
 
 
-def _each_key(keys: Column, key_ctx, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    """Apply ``val`` to every entry of the dynamic array ``keys`` (member
-    names, or the entries of ``Ctx.loop_members``; ``key_ctx(k)`` is the
+def _each_key(entries: Column, entry_ctx, val, kwp: str, cfg: Config, ref_stack) -> Compiled:
+    """Apply ``val`` to every entry of the dynamic array ``entries`` (member
+    names, or the entries of ``Ctx.loop_members``; ``entry_ctx(k)`` is the
     context an entry's subschema reads)."""
     ok_of, viols_of = _loop_body(val, kwp, cfg, ref_stack)
-    ok = F.forall(keys, lambda k: B(ok_of(key_ctx(k))))
+    ok = F.forall(entries, lambda k: B(ok_of(entry_ctx(k))))
     if not cfg.want_viols:
         return Compiled(ok)
-    return Compiled(ok, F.flatten(F.transform(keys, lambda k: viols_of(key_ctx(k)))).cast(VIOLS_DT))
+    return Compiled(ok, F.flatten(F.transform(entries, lambda k: viols_of(entry_ctx(k)))).cast(VIOLS_DT))
 
 
 def _k_properties(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:

@@ -355,17 +355,22 @@ def test_flat_plans_stay_in_codegen(spark):
         spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
+def _closing(text: str, at: int) -> int:
+    """The index just past the parenthesis closing the one at ``at``."""
+    depth = 0
+    for end in range(at, len(text)):
+        depth += {"(": 1, ")": -1}.get(text[end], 0)
+        if depth == 0:
+            return end + 1
+    raise ValueError("unbalanced plan text")
+
+
 def _lambda_bodies(text: str) -> str:
     """The outermost ``lambdafunction(...)`` calls in a plan's text."""
     bodies, start = [], 0
     while (at := text.find("lambdafunction(", start)) >= 0:
-        depth, end = 0, at + len("lambdafunction")
-        for end in range(end, len(text)):
-            depth += {"(": 1, ")": -1}.get(text[end], 0)
-            if depth == 0:
-                break
-        bodies.append(text[at:end + 1])
-        start = end + 1
+        start = _closing(text, at + len("lambdafunction"))
+        bodies.append(text[at:start])
     return "".join(bodies)
 
 
@@ -379,11 +384,7 @@ def _variant_reads_in_lambdas(df) -> tuple:
     text = _lambda_bodies(df._jdf.queryExecution().analyzed().toString())
     members = tags = 0
     for m in re.finditer(r"schema_of_variant\(", text):
-        depth, end = 1, m.end()
-        while depth:
-            depth += {"(": 1, ")": -1}.get(text[end], 0)
-            end += 1
-        arg = text[m.end():end - 1]
+        arg = text[m.end():_closing(text, m.end() - 1) - 1]
         if re.fullmatch(r"lambda \w+#\d+\.o\.\w+", arg):
             members += 1
         elif text[:m.start()].endswith("TINYINT, integer), "):
