@@ -38,7 +38,8 @@ def divisible_ok(col: Column | None, k, exact: Column | None = None) -> Column:
 
     ``exact`` reads the value as an exact integer (bigint or decimal(p,0))
     where it is integer-typed and is NULL elsewhere; ``col`` is None when
-    ``exact`` is never NULL. An integer divisor takes the remainder of
+    ``exact`` is never NULL, and a divisor that is not an integer then
+    reads ``exact`` as a double. An integer divisor takes the remainder of
     ``exact`` with ``try_mod``, which cannot abort the job, so 2^53+1 is
     odd. A real instance is tested by its double remainder: the floating
     `%` is exact (like C's fmod), and x * 2^a is exact too, so a value
@@ -55,6 +56,7 @@ def divisible_ok(col: Column | None, k, exact: Column | None = None) -> Column:
                 return exact_ok
             return F.coalesce(exact_ok, col.cast("double") % F.lit(float(ki)) == F.lit(0.0))
         return col.cast("double") % F.lit(float(ki)) == F.lit(0.0)
+    col = exact if col is None else col
     a = _pow2_scale(float(k))
     if a is not None:
         m = float(k) * (1 << a)  # integer-valued by construction

@@ -331,7 +331,7 @@ def _walk_pointer(root, pointer: str, ref: str):
             token = raw.replace("~1", "/").replace("~0", "~")
             if isinstance(node, dict) and token in node:
                 node = node[token]
-            elif isinstance(node, list) and token.isdigit():
+            elif isinstance(node, list) and token.isdigit() and int(token) < len(node):
                 node = node[int(token)]
             else:
                 raise SchemaError(f"cannot resolve $ref {ref}")
@@ -426,6 +426,20 @@ def _references(schema: dict, cfg: Config, ref_stack: tuple):
             yield key, _reference(key, schema[key], cfg, ref_stack)
 
 
+def _resource_cfg(schema: dict, cfg: Config) -> Config:
+    """The Config ``schema``'s keywords resolve under. An embedded schema
+    resource, a non-root `$id`, opens a new resolution scope: fragment
+    refs/anchors inside it resolve against THIS subdocument, and relative
+    URIs against its (base-resolved) $id. (The reference frames every
+    resource; SchemaFrame, frame.h:38-60.)"""
+    sid = schema.get("$id")
+    if isinstance(sid, str) and schema is not cfg.root:
+        from urllib.parse import urljoin
+
+        return cfg.with_root(schema, urljoin(cfg.base_uri or "", sid))
+    return cfg
+
+
 @without_call_sites()
 def compile_node(
     schema: Union[dict, bool],
@@ -442,16 +456,7 @@ def compile_node(
         return _leaf(cfg, False, kw, ctx, M.msg_false_schema)
     if not isinstance(schema, dict):
         raise SchemaError(f"invalid schema node at {kw or '<root>'}")
-    # Embedded schema resource: a non-root `$id` opens a new resolution
-    # scope — fragment refs/anchors inside it resolve against THIS
-    # subdocument, and relative URIs against its (base-resolved) $id.
-    # (The reference frames every resource; SchemaFrame, frame.h:38-60.)
-    sid = schema.get("$id")
-    if isinstance(sid, str) and schema is not cfg.root:
-        from urllib.parse import urljoin
-
-        cfg = cfg.with_root(schema, urljoin(cfg.base_uri or "", sid))
-
+    cfg = _resource_cfg(schema, cfg)
     parts: list[Compiled] = []
     registered = ((k, h) for k, h in KEYWORD_COMPILERS.items() if k not in _KEYWORDS)
     for key, handler in chain(_KEYWORDS.items(), registered):
@@ -604,6 +609,7 @@ def _member_names(schema, cfg: Config, ref_stack) -> tuple:
         if not isinstance(node, dict) or any(node is n for n in seen):
             return
         seen.append(node)
+        cfg = _resource_cfg(node, cfg)
         props, required = node.get("properties"), node.get("required")
         dep_required, dep_schemas = node.get("dependentRequired"), node.get("dependentSchemas")
         names.update(dict.fromkeys(props if isinstance(props, dict) else ()))
@@ -1030,7 +1036,9 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
         selected = _unlisted(list(names), patterns)
     else:
         def selected(k: Union[str, Column]) -> Cond:
-            return not_(_evaluated(schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack))
+            # a key Column is read inside the member loop's filter lambda
+            at = ctx if isinstance(k, str) else ctx.in_lambda()
+            return not_(_evaluated(schema, "unevaluatedProperties", _property_conds(k), at, cfg, ref_stack))
     return _guarded(ctx.is_type("object"), _each_member(ctx, selected, val, kwp, cfg, ref_stack))
 
 
@@ -1056,8 +1064,8 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
 
 
 def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
-    def evaluated(i: Column, elem: Ctx) -> Cond:
-        return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx, cfg, ref_stack)
+    def evaluated(i: Column, elem: Ctx) -> Cond:  # inside the element loop's lambda
+        return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx.in_lambda(), cfg, ref_stack)
 
     return _each_item(val, ctx, kwp, cfg, ref_stack, evaluated)
 

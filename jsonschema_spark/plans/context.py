@@ -197,6 +197,11 @@ class Ctx:
         lambda. ``names`` as for ``loop_elements``."""
         raise NotImplementedError
 
+    def in_lambda(self) -> "Ctx":
+        """This value as read inside the lambda of a higher-order function,
+        where Spark runs no Python UDF."""
+        return self
+
     def unique_items(self) -> Column:
         """Whether the array's elements are pairwise distinct (deep
         equality, AssertionUnique)."""
@@ -569,9 +574,14 @@ class VariantCtx(Ctx):
     path. Loop bodies run inside higher-order functions, which Spark
     evaluates without generated code and without sharing repeated reads;
     the root is left unbound, since its projection's generated code shares
-    them already. ``in_loop`` marks a value read inside such a lambda: a
-    container constant there compares member by member, since no pandas
-    UDF can run in a lambda.
+    them already.
+
+    A container ``const``/``enum`` compares canonical JSON renderings
+    through a pandas UDF, except in a value read inside a lambda
+    (``in_loop``, ``in_lambda()``), where no UDF can run: there it compares
+    member by member in the JVM (``_eq_container``). Outside lambdas the
+    UDF stays, as it is faster: the JVM comparison re-reads each member by
+    path.
     """
 
     def __init__(self, v: Column, loc: Union[str, Column], present: Cond | None = None,
@@ -582,6 +592,9 @@ class VariantCtx(Ctx):
         self.obj = obj
         self.names = names
         self.in_loop = in_loop
+
+    def in_lambda(self) -> "VariantCtx":
+        return VariantCtx(self.v, self.loc, self.present, self.obj, self.names, in_loop=True)
 
     def _schema(self) -> Column:
         return F.schema_of_variant(self.v)
@@ -619,7 +632,7 @@ class VariantCtx(Ctx):
         return F.try_variant_get(self.v, "$", "double")
 
     def int_val(self) -> Column:
-        return F.when(self._schema().isin(*_INT_TYPES), self._exact_int())
+        return F.when(self._schema().isin(*_INT_TYPES, *_WIDE_INT_TYPES), self._exact_int())
 
     def _exact_int(self) -> Column:
         return F.try_variant_get(self.v, "$", "decimal(38,0)")

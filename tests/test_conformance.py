@@ -45,7 +45,8 @@ CASES = [
     ("exclusive bounds", {"exclusiveMinimum": 1, "exclusiveMaximum": 3},
      [("1", False), ("3", False), ("2", True)]),
     ("multipleOf int", {"multipleOf": 2},
-     [("4", True), ("5", False), ("4.0", True), ("9007199254740993", False), ("9007199254740994", True)]),
+     [("4", True), ("5", False), ("4.0", True), ("9007199254740993", False), ("9007199254740994", True),
+      ("18446744073709551617", False), ("18446744073709551618", True)]),
     ("multipleOf fraction", {"multipleOf": 0.5},
      [("1.5", True), ("1.25", False), ("3", True)]),
     # --- string -------------------------------------------------------------
@@ -367,6 +368,21 @@ ADVERSARIAL = [
       ('[["x", 1]]', False), ('[{"a": 1, "b": [1, {"c": null}], "d": 2}]', False), ("[1]", False),
       ('[{"a": 1, "b": [1, {}]}]', False), ('{"m": {"a": 1}, "n": [[2.0]]}', True),
       ('{"m": {"a": 1, "b": 1}}', False), ('{"m": [[2], []]}', False), ('{"m": {"A": 1}}', False)]),
+    # the loop's member-name scan resolves $ref inside the items resource,
+    # whose allOf has two entries, not against the root's one
+    ("$ref inside an embedded resource of an element loop",
+     {"allOf": [{}], "items": {"$id": "http://e/x", "allOf": [{}, {"required": ["a"]}], "$ref": "#/allOf/1"}},
+     [('[{"a": 1}]', True), ("[{}]", False), ('[{"b": 1}, {"a": 2}]', False), ("[1]", True), ("{}", True)]),
+    ("container const in a branch next to unevaluatedProperties",
+     {"anyOf": [{"properties": {"a": {"const": [1, {"b": 2}]}}}, {"required": ["c"]}],
+      "unevaluatedProperties": False},
+     [('{"a": [1, {"b": 2}]}', True), ('{"a": [1.0, {"b": 2.0}]}', True), ("{}", True),
+      ('{"a": [2], "c": 1}', False), ('{"a": [1, {"b": 2}], "c": 1}', False), ('{"c": 1}', False)]),
+    ("container consts in branches next to unevaluatedItems",
+     {"anyOf": [{"prefixItems": [{"const": {"a": 1}}]}, {"contains": {"const": [1]}}],
+      "unevaluatedItems": False},
+     [('[{"a": 1}]', True), ('[{"a": 1.0}, [1]]', True), ('[{"a": 1}, 2]', False), ("[[1], [1.0]]", True),
+      ("[]", True), ("[2]", False)]),
 ]
 
 

@@ -133,6 +133,10 @@ def test_multiple_of(spark):
     df3 = rows(spark, [(0.3,), (0.35,)], "x double")
     got3 = [r.valid for r in validate(df3, {"properties": {"x": {"multipleOf": 0.1}}}).collect()]
     assert got3 == [True, False]
+    # a real divisor on an integer column reads it as a double
+    for k, want in ((0.5, [True, True]), (0.1, [True, True]), (0.75, [False, False])):
+        got4 = [r.valid for r in validate(df, {"properties": {"n": {"multipleOf": k}}}).collect()]
+        assert got4 == want, k
 
 
 @pytest.mark.parametrize("k,want", [(2, True), (3, False), (0.5, True)])
