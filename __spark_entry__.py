@@ -243,11 +243,11 @@ LADDER_SCHEMA = {
     "$id": LADDER_BASE,
     "type": "object",
     "properties": {
-        # the four multipleOf exactness-ladder branches (json_value.cc:801-857):
+        # four divisor kinds (json_value.cc:801-857):
         "l_orderkey": {"type": "integer", "multipleOf": 3},        # int % int
         "l_quantity": {"type": "number", "multipleOf": 2},         # real / int divisor
-        "l_extendedprice": {"type": "number", "multipleOf": 0.25},  # pow-2 scaling
-        "l_discount": {"type": "number", "multipleOf": 0.03},      # decimal pudf
+        "l_extendedprice": {"type": "number", "multipleOf": 0.25},  # binary-fraction divisor
+        "l_discount": {"type": "number", "multipleOf": 0.03},      # decimal divisor
     },
 }
 
@@ -570,7 +570,7 @@ def q_binpack_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully determined by the plan — presence varint (1) + bounded-int k (1)
     + enum lang (1) + string msg (1 + len) — so DuckDB can compute them
     exactly; round-trip equality is asserted per row."""
-    from jsonschema_spark.functions.canonical import canonical_json
+    from jsonschema_spark.functions.canonical import canonical
     from jsonschema_spark.operators.binpack import binpack_decode, binpack_encode
 
     ev = spark.read.parquet(_t(sf_dir, "events"))
@@ -589,7 +589,8 @@ def q_binpack_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.length("bin").cast("long")).alias("n_bytes"),
-        F.sum((canonical_json(F.col("doc")) == F.col("doc2")).cast("long")).alias("n_roundtrip_ok"),
+        F.sum((canonical(F.try_parse_json("doc")) == canonical(F.try_parse_json("doc2")))
+              .cast("long")).alias("n_roundtrip_ok"),
     )
 
 

@@ -3,26 +3,34 @@
 The reference's ``const``/``enum``/``uniqueItems`` compare whole JSON
 values structurally (AssertionEqual evaluator_dispatch.h:697-712,
 AssertionUnique :814-818): object key order is irrelevant and numbers
-compare by value (1 == 1.0). Spark's ``to_json`` preserves source key
-order and renders 1.0 as "1.0", so raw JSON-string comparison diverges.
+compare by value (1 == 1.0). Two JSON values are reference-equal iff their
+canonical renderings are equal (booleans stay distinct from numbers:
+``true`` vs ``1``).
 
-Canonical form: sort object keys recursively, collapse integral floats to
-integers, compact separators. Two JSON values are reference-equal iff
-their canonical renderings are byte-equal (booleans stay distinct from
-numbers: ``true`` vs ``1``).
+``canonical_dumps`` is the Python rendering, for the driver-side
+evaluator and the linter: sorted keys, integral floats collapsed to
+integers, compact separators.
 
-These run as Arrow-batched pandas UDFs — the documented slow path, used
-ONLY for container-valued comparisons (scalar const/enum/uniqueItems stay
-pure JVM expressions).
+``canonical`` is the same equality as one JVM expression over a VARIANT,
+used on every path and inside higher-order-function lambdas alike.
+``to_json`` of a VARIANT already sorts object keys and writes compactly;
+``parse_json`` stores an integer or a plain decimal exactly (``1.0`` reads
+as 1, ``0.10`` as 0.1), and an exponent literal as a DOUBLE, which renders
+as ``1.0`` or ``1.0E20``. Only a rendering that holds ``.`` or ``E`` is
+rewritten: its number tokens are read as doubles, an integral one below
+1e38 is written as its ``decimal(38,0)`` digits and any other one as its
+double's string. ``canonical_const`` renders a constant with the same
+``parse_json``/``to_json`` and the same number rule, folded to a literal.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import BooleanType, StringType
+
+# a string literal | a run of non-structural characters | one structural one
+_TOKENS = r'"(?:[^"\\]|\\.)*"|[^"{}\[\],:]+|[{}\[\],:]'
 
 
 def _canon(v):
@@ -42,45 +50,46 @@ def canonical_dumps(value) -> str:
     return json.dumps(_canon(value), sort_keys=True, separators=(",", ":"), ensure_ascii=False)
 
 
-@F.pandas_udf(StringType())
-def _canonical_json_udf(s: pd.Series) -> pd.Series:
-    def canon(x):
-        if x is None:
-            return None
-        try:
-            return canonical_dumps(json.loads(x))
-        except (ValueError, TypeError):
-            return None
-
-    return s.map(canon)
+def _canon_number(d: Column) -> Column:
+    """A double written by its value: an integral one below 1e38 by its
+    ``decimal(38,0)`` digits, any other one by its string."""
+    whole = (d % F.lit(1.0) == F.lit(0.0)) & (F.abs(d) < F.lit(1e38))
+    return F.when(whole, d.cast("decimal(38,0)").cast("string")).otherwise(d.cast("string"))
 
 
-@F.pandas_udf(BooleanType())
-def _unique_canonical_udf(s: pd.Series) -> pd.Series:
-    """s = JSON rendering of an array; True iff all elements are distinct
-    under canonical (deep, number-normalized) equality. Non-array input →
-    vacuous True (the caller's type guard governs)."""
-
-    def uniq(x):
-        if x is None:
-            return None
-        try:
-            arr = json.loads(x)
-        except (ValueError, TypeError):
-            return True
-        if not isinstance(arr, list):
-            return True
-        seen = [canonical_dumps(e) for e in arr]
-        return len(set(seen)) == len(seen)
-
-    return s.map(uniq)
+def canonical(v: Column) -> Column:
+    """Canonical rendering of a VARIANT value (NULL for a NULL value)."""
+    text = F.to_json(v)
+    tokens = F.regexp_extract_all(text, F.lit(_TOKENS), F.lit(0))
+    rewrite = F.transform(tokens, lambda tok: F.when(
+        tok.rlike("^-?[0-9].*[.E]"), _canon_number(tok.try_cast("double"))).otherwise(tok))
+    return F.when(text.rlike("[.E]"), F.array_join(rewrite, "")).otherwise(text)
 
 
-def canonical_json(col: Column) -> Column:
-    """Canonical rendering of a JSON-string column (NULL on parse failure)."""
-    return _canonical_json_udf(col)
+def canonical_const(value) -> Column:
+    """Canonical rendering of a python JSON constant, equal to ``canonical``
+    of its VARIANT: each real stands in as a marker string while
+    ``parse_json``/``to_json`` sort and render the rest, then is written by
+    ``_canon_number``. Every part is a constant, so Catalyst folds the
+    whole rendering to one literal (the rewrite in ``canonical`` runs in a
+    lambda, which it does not fold). A string holding NUL could spell a
+    marker: such a constant goes through ``canonical`` itself."""
+    text = json.dumps(value)
+    if "\\u0000" in text:
+        return canonical(F.parse_json(F.lit(text)))
+    reals: list = []
 
+    def mark(v):
+        if isinstance(v, float):
+            reals.append(v)
+            return f"\0{len(reals)}\0"
+        if isinstance(v, dict):
+            return {k: mark(x) for k, x in v.items()}
+        if isinstance(v, list):
+            return [mark(x) for x in v]
+        return v
 
-def unique_canonical(json_array_col: Column) -> Column:
-    """Deep uniqueItems over a JSON-array-string column."""
-    return _unique_canonical_udf(json_array_col)
+    out = F.to_json(F.parse_json(F.lit(json.dumps(mark(value)))))
+    for i, d in enumerate(reals, 1):
+        out = F.replace(out, F.lit(json.dumps(f"\0{i}\0")), _canon_number(F.lit(d)))
+    return out

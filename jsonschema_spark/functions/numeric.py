@@ -1,88 +1,88 @@
 """Exact `multipleOf` semantics (AssertionDivisible).
 
-The reference uses an exactness ladder (/root/reference/vendor/core/src/core/
-json/json_value.cc:801-857): int % int, the real-divisor-with-exact-binary-
-representation case, then arbitrary-precision decimal. We mirror it with
-strategy selection at compile time:
+The reference divides exactly (/root/reference/vendor/core/src/core/json/
+json_value.cc:801-857). One rule does it here, in the JVM: the divisor is
+k = p/q in lowest terms, and the value is read as a decimal m·10^t with
+integer m and t:
 
-1. integer divisor k                       → `try_mod(n, k) == 0` over the
-   exact integer reading n of an integer-typed value, over doubles
-   otherwise (pure codegen)
-2. divisor k = m / 2^a                     → `(col * 2^a) % m == 0` (pure
-   codegen)
-3. general real divisor                    → Arrow-batched pandas UDF doing
-   exact decimal arithmetic on the shortest-repr string of the float
+- an integer-typed value n exactly, as m = n and t = 0 (bigint or
+  decimal(38,0));
+- a real by the shortest decimal text of its double that reads back as
+  that double: 15 or 16 significant digits when one of them does, else
+  Java's ``Double.toString`` (17 digits, or more where JDK 17 misses the
+  shortest).
+
+m·10^t is a multiple of p/q exactly when D(t) divides m, where D(t) =
+p / gcd(p, 10^t) for t >= 0 and p·10^-t / gcd(10^-t, q) for t < 0 (p and q
+share no factor). D(t) is a constant past the 2s and 5s of p, and grows
+beyond any m of a real's reading for a t far enough below zero, so it is
+a small literal table indexed by t.
 """
 
 from __future__ import annotations
 
 from decimal import Decimal
+from fractions import Fraction
+from math import gcd
 
-import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import BooleanType
+
+_REAL_M = 10**18  # a real's reading has |m| below this
+_NUMBER = r"^(-?[0-9]+)(?:\.([0-9]+))?(?:[eE]([-+]?[0-9]+))?$"
 
 
-def _pow2_scale(k: float) -> int | None:
-    """If k = m / 2^a for integers m, a with small a, return a (so that
-    x/k integrality can be tested exactly via (x * 2^a) % m)."""
-    for a in range(0, 32):
-        scaled = k * (1 << a)
-        if scaled == int(scaled):
-            return a
-    return None
+def _divisor_at(p: int, q: int, t: int) -> int:
+    """D(t): m·10^t is a multiple of p/q iff D(t) divides m."""
+    if t >= 0:
+        return p // gcd(p, 10**t)
+    return p * 10**-t // gcd(10**-t, q)
+
+
+def _int_ok(n: Column, p: int) -> Column:
+    if p >= 10**38:  # beyond every decimal(38,0): only 0 divides
+        return n == F.lit(0)
+    return F.try_mod(n, F.lit(p if p < 2**63 else Decimal(p))) == F.lit(0)
+
+
+def _real_text(d: Column) -> Column:
+    cands = [F.format_string(f"%.{digits - 1}e", d) for digits in (15, 16)]
+    return F.coalesce(*[F.when(c.try_cast("double") == d, c) for c in cands], d.cast("string"))
+
+
+def _real_ok(d: Column, p: int, q: int) -> Column:
+    text = _real_text(d.cast("double"))
+    frac = F.regexp_extract(text, _NUMBER, 2)
+    m = F.concat(F.regexp_extract(text, _NUMBER, 1), frac).try_cast("bigint")
+    t = F.coalesce(F.regexp_extract(text, _NUMBER, 3).try_cast("int"), F.lit(0)) - F.length(frac)
+    lo = hi = 0
+    while _divisor_at(p, q, lo - 1) < _REAL_M:  # D grows as t falls
+        lo -= 1
+    while _divisor_at(p, q, hi + 1) != _divisor_at(p, q, hi):  # until p's 2s and 5s are spent
+        hi += 1
+    # a 0 entry below lo, and for a D no m of a real's reading reaches: only 0 divides
+    table = [0] + [x if x < _REAL_M else 0 for x in (_divisor_at(p, q, e) for e in range(lo, hi + 1))]
+    at = F.least(F.greatest(t - F.lit(lo - 2), F.lit(1)), F.lit(len(table)))
+    div = F.element_at(F.array(*[F.lit(x) for x in table]), at)
+    return F.coalesce(F.try_mod(m, div) == F.lit(0), m == F.lit(0), F.lit(False))
 
 
 def divisible_ok(col: Column | None, k, exact: Column | None = None) -> Column:
-    """Boolean Column: value at `col` (numeric) is divisible by constant k.
+    """Boolean Column: the numeric value is a multiple of the constant k.
 
     ``exact`` reads the value as an exact integer (bigint or decimal(p,0))
-    where it is integer-typed and is NULL elsewhere; ``col`` is None when
-    ``exact`` is never NULL, and a divisor that is not an integer then
-    reads ``exact`` as a double. An integer divisor takes the remainder of
-    ``exact`` with ``try_mod``, which cannot abort the job, so 2^53+1 is
-    odd. A real instance is tested by its double remainder: the floating
-    `%` is exact (like C's fmod), and x * 2^a is exact too, so a value
-    beyond int64 (1e20) divides by 2 and not by 3. The quotient is no test:
-    it rounds, and every double above 2^53 is integral."""
-    if isinstance(k, int) or (isinstance(k, float) and k.is_integer()):
-        ki = int(k)
-        if exact is not None:
-            if abs(ki) >= 10**38:  # beyond every decimal(38,0): only 0 divides
-                exact_ok = exact == F.lit(0)
-            else:
-                exact_ok = F.try_mod(exact, F.lit(ki if -(2**63) <= ki < 2**63 else Decimal(ki))) == F.lit(0)
-            if col is None:
-                return exact_ok
-            return F.coalesce(exact_ok, col.cast("double") % F.lit(float(ki)) == F.lit(0.0))
-        return col.cast("double") % F.lit(float(ki)) == F.lit(0.0)
-    col = exact if col is None else col
-    a = _pow2_scale(float(k))
-    if a is not None:
-        m = float(k) * (1 << a)  # integer-valued by construction
-        return col.cast("double") * F.lit(float(1 << a)) % F.lit(m) == F.lit(0.0)
-    return _divisible_decimal(col.cast("double"), F.lit(float(k)))
-
-
-@F.pandas_udf(BooleanType())
-def _divisible_decimal(x: pd.Series, k: pd.Series) -> pd.Series:
-    """Exact decimal fallback (reference Decimal::divisible_by analogue).
-
-    Arrow-batched; uses the shortest decimal repr of each float so 0.3 /
-    0.1 style cases resolve the way a human (and the reference's decimal
-    type) expects.
-    """
-    from decimal import Decimal
-
-    def ok(xv, kv):
-        if xv is None or kv is None:
-            return None
-        try:
-            return (Decimal(repr(float(xv))) % Decimal(repr(float(kv)))) == 0
-        except Exception:
-            return False
-
-    return pd.Series([ok(a, b) for a, b in zip(x, k)], dtype="object")
+    where it is integer-typed and is NULL elsewhere; ``col`` reads it as a
+    number, and is None when ``exact`` is never NULL. ``try_mod`` cannot
+    abort the job, so 2^53+1 is odd, and a real beyond int64 (1e40) is
+    read by its decimal digits, not by its binary double."""
+    r = Fraction(str(k))
+    p, q = abs(r.numerator), r.denominator
+    if p == 0:
+        return F.lit(False)
+    if exact is None:
+        return _real_ok(col, p, q)
+    if col is None:
+        return _int_ok(exact, p)
+    return F.coalesce(_int_ok(exact, p), _real_ok(col, p, q))
 
 
 def divisible_duckdb(col_sql: str, k, col_is_integer: bool) -> str:
@@ -91,11 +91,4 @@ def divisible_duckdb(col_sql: str, k, col_is_integer: bool) -> str:
         if col_is_integer:
             return f"(({col_sql} % {int(k)}) = 0)"
         return f"(({col_sql} / {int(k)}) = floor({col_sql} / {int(k)}))"
-    a = _pow2_scale(float(k))
-    if a is not None:
-        m = float(k) * (1 << a)
-        return (
-            f"(({col_sql} * {float(1 << a)} / {m}) = "
-            f"floor({col_sql} * {float(1 << a)} / {m}))"
-        )
     return f"((CAST({col_sql} AS DECIMAL(38,12)) % CAST({k} AS DECIMAL(38,12))) = 0)"

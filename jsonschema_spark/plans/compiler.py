@@ -560,8 +560,9 @@ def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> 
 
 
 def _multiple_of_ok(val, ctx: Ctx) -> Cond:
-    """An integer-typed value divides exactly (``ctx.int_val()``); a typed
-    integer column needs no double reading beside it."""
+    """An integer-typed value is read exactly (``ctx.int_val()``), a real
+    by its decimal digits; a typed integer column needs no real reading
+    beside it."""
     return divisible_ok(None if ctx.is_type("integer") is True else ctx.num_val(), val, ctx.int_val())
 
 
@@ -744,10 +745,11 @@ def _k_dependent_schemas(schema: dict, val: dict, ctx: Ctx, kwp: str, cfg: Confi
 def _k_unique_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Optional[Compiled]:
     """AssertionUnique (dispatch.h:814-818): deep distinctness.
 
-    The context picks the test: pure-JVM ``array_distinct`` over typed
-    scalar arrays (flat columns; exact, one Spark array holds one numeric
-    type), canonical deep equality in an Arrow pudf over VARIANT arrays
-    and container-element arrays (key order irrelevant, 1 == 1.0)."""
+    The context picks the test, ``array_distinct`` either way: over the
+    elements of a typed scalar array (a flat column; exact, one Spark array
+    holds one numeric type), over their canonical renderings for VARIANT
+    arrays and container elements (``functions/canonical.py``: key order
+    irrelevant, 1 == 1.0)."""
     if not val:
         return None
     if ctx.is_type("array") is False:
@@ -1036,9 +1038,7 @@ def _k_unevaluated_properties(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config
         selected = _unlisted(list(names), patterns)
     else:
         def selected(k: Union[str, Column]) -> Cond:
-            # a key Column is read inside the member loop's filter lambda
-            at = ctx if isinstance(k, str) else ctx.in_lambda()
-            return not_(_evaluated(schema, "unevaluatedProperties", _property_conds(k), at, cfg, ref_stack))
+            return not_(_evaluated(schema, "unevaluatedProperties", _property_conds(k), ctx, cfg, ref_stack))
     return _guarded(ctx.is_type("object"), _each_member(ctx, selected, val, kwp, cfg, ref_stack))
 
 
@@ -1065,7 +1065,7 @@ def _k_unevaluated_items(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref
 
 def _k_unevaluated_items_dynamic(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> Compiled:
     def evaluated(i: Column, elem: Ctx) -> Cond:  # inside the element loop's lambda
-        return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx.in_lambda(), cfg, ref_stack)
+        return _evaluated(schema, "unevaluatedItems", _item_conds(i, elem), ctx, cfg, ref_stack)
 
     return _each_item(val, ctx, kwp, cfg, ref_stack, evaluated)
 
@@ -1083,7 +1083,7 @@ _KEYWORDS: dict = {
     "$recursiveRef": partial(_k_reference, "$recursiveRef"),
     "type": _k_type,
     "const": KeywordCompiler(lambda v, c: c.eq_const(v), M.msg_const),
-    "enum": KeywordCompiler(lambda v, c: or_(*[c.eq_const(x) for x in v]), M.msg_enum),
+    "enum": KeywordCompiler(lambda v, c: c.eq_any(v), M.msg_enum),
     "required": KeywordCompiler(
         lambda v, c: and_(*[c.get_prop(n).present for n in v]), M.msg_required, "object"),
     "dependentRequired": _k_dependent_required,

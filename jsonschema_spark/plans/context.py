@@ -42,6 +42,8 @@ from typing import Callable, Optional, Union
 
 from pyspark.sql import Column, functions as F, types as T
 
+from jsonschema_spark.functions.canonical import canonical, canonical_const
+
 Cond = Union[bool, Column]  # static-foldable boolean
 
 _INT64 = range(-(2**63), 2**63)  # integers a bigint literal can hold
@@ -197,11 +199,6 @@ class Ctx:
         lambda. ``names`` as for ``loop_elements``."""
         raise NotImplementedError
 
-    def in_lambda(self) -> "Ctx":
-        """This value as read inside the lambda of a higher-order function,
-        where Spark runs no Python UDF."""
-        return self
-
     def unique_items(self) -> Column:
         """Whether the array's elements are pairwise distinct (deep
         equality, AssertionUnique)."""
@@ -215,7 +212,23 @@ class Ctx:
     def eq_const(self, value) -> Cond:
         """Deep structural equality to a python JSON constant
         (AssertionEqual, evaluator_dispatch.h:697-712)."""
+        return self.eq_any([value])
+
+    def eq_any(self, values: list) -> Cond:
+        """Deep equality to one of ``values`` (``enum``): scalars compare
+        one by one, and the containers as one IN list over a single
+        canonical rendering of the value."""
+        containers = [x for x in values if isinstance(x, (dict, list))]
+        return or_(*[self._eq_scalar(x) for x in values if not isinstance(x, (dict, list))],
+                   self._eq_structured(containers) if containers else False)
+
+    def _eq_scalar(self, value) -> Cond:
+        """Equality to a scalar constant: null, a boolean, a number or a string."""
         raise NotImplementedError
+
+    def _eq_structured(self, values: list) -> Cond:
+        """Deep equality to one of the object and array constants ``values``."""
+        return False
 
     def json_repr(self) -> Column:
         """Stringified JSON of the value, for error messages
@@ -279,7 +292,7 @@ class MissingCtx(Ctx):
     def prop_names(self) -> list[str]:
         return []
 
-    def eq_const(self, value) -> Cond:
+    def _eq_scalar(self, value) -> Cond:
         return False
 
     def json_repr(self) -> Column:
@@ -412,13 +425,13 @@ class FlatColCtx(Ctx):
                               present=F.map_contains_key(self.col, key), nullable=True)
         return MissingCtx(child_loc)
 
-    def eq_const(self, value) -> Cond:
+    def _eq_scalar(self, value) -> Cond:
         if self.nullable:
             return self.col.isNull() if value is None else and_(self.col.isNotNull(), self._eq_value(value))
         return self._eq_value(value)
 
     def _eq_value(self, value) -> Cond:
-        """``eq_const`` of a value that is not NULL."""
+        """``_eq_scalar`` of a value that is not NULL."""
         if value is None:
             return self._tag == "null"
         if isinstance(value, bool):
@@ -440,30 +453,30 @@ class FlatColCtx(Ctx):
                 if _exact_double(value) is None:
                     return False
             return self.num_val() == F.lit(float(value))
-        if isinstance(value, str):
-            return self.str_val() == F.lit(value) if self._tag == "string" else False
-        if isinstance(self.dtype, T.StructType):
-            # member by member: a NULL member is an absent one, never a
-            # JSON null
-            names = self.prop_names()
-            if not isinstance(value, dict) or any(k not in names for k in value):
-                return False
-            conds: list[Cond] = []
-            for name in names:
-                child = self.get_prop(name)
-                if name in value:
-                    conds.append(and_(child.present, child.eq_const(value[name])))
-                else:
-                    conds.append(not_(B(child.present)))
-            return and_(*conds)
-        # arrays/maps: deep structural equality via canonical rendering
-        # (key order irrelevant, 1 == 1.0 — evaluator_dispatch.h:697-712);
-        # pudf slow path, containers only
-        if self._tag in ("array", "object"):
-            from jsonschema_spark.functions.canonical import canonical_dumps, canonical_json
+        return self.str_val() == F.lit(value) if self._tag == "string" else False
 
-            return canonical_json(F.to_json(self.col)) == F.lit(canonical_dumps(value))
-        return False
+    def _eq_structured(self, values: list) -> Cond:
+        if isinstance(self.dtype, T.StructType):
+            eq = or_(*[self._eq_struct(v) for v in values])
+        elif self._tag in ("array", "object"):  # an array or a map
+            eq = _flat_canonical(self.col).isin(*[canonical_const(v) for v in values])
+        else:
+            return False
+        return and_(self.col.isNotNull(), eq) if self.nullable else eq
+
+    def _eq_struct(self, value) -> Cond:
+        """Member by member: a NULL member is an absent one, never a JSON null."""
+        names = self.prop_names()
+        if not isinstance(value, dict) or any(k not in names for k in value):
+            return False
+        conds: list[Cond] = []
+        for name in names:
+            child = self.get_prop(name)
+            if name in value:
+                conds.append(and_(child.present, child.eq_const(value[name])))
+            else:
+                conds.append(not_(B(child.present)))
+        return and_(*conds)
 
     def json_repr(self) -> Column:
         if self.nullable:
@@ -484,16 +497,25 @@ class FlatColCtx(Ctx):
 
     def unique_items(self) -> Column:
         # a Spark array holds one element type, so scalar elements compare
-        # exactly in the JVM; container elements need canonical equality
+        # exactly; container elements compare by canonical rendering
         if isinstance(self.dtype.elementType, (T.StructType, T.MapType, T.ArrayType)):
-            from jsonschema_spark.functions.canonical import unique_canonical
-
-            return unique_canonical(self.json_repr())
+            return _all_distinct(self.col, _flat_canonical)
         return F.size(F.array_distinct(self.col)) == F.size(self.col)
 
     def item_reprs(self) -> Column:
         et = self.dtype.elementType
         return F.transform(self.col, lambda x: FlatColCtx.value(x, et, "").json_repr())
+
+
+def _flat_canonical(col: Column) -> Column:
+    """Canonical rendering of a flat array, map or struct value: through a
+    VARIANT, whose ``to_json`` sorts object keys."""
+    return canonical(F.parse_json(F.to_json(col)))
+
+
+def _all_distinct(arr: Column, key: Callable[[Column], Column]) -> Column:
+    """Whether no two elements of ``arr`` have the same ``key``."""
+    return F.size(F.array_distinct(F.transform(arr, key))) == F.size(arr)
 
 
 def _child_loc(loc: Union[str, Column], name: Union[str, Column]) -> Union[str, Column]:
@@ -545,8 +567,8 @@ def _loop_ctx(value: Column, loc: Column, names: tuple, bound: Column) -> "Varia
     """The Ctx of loop element ``value``; with ``names``, ``bound`` is its
     binding, whose field ``o`` is the element cast to their struct."""
     if not names:
-        return VariantCtx(value, loc, in_loop=True)
-    return VariantCtx(value, loc, obj=bound.getField("o"), names=names, in_loop=True)
+        return VariantCtx(value, loc)
+    return VariantCtx(value, loc, obj=bound.getField("o"), names=names)
 
 
 class VariantCtx(Ctx):
@@ -575,26 +597,15 @@ class VariantCtx(Ctx):
     evaluates without generated code and without sharing repeated reads;
     the root is left unbound, since its projection's generated code shares
     them already.
-
-    A container ``const``/``enum`` compares canonical JSON renderings
-    through a pandas UDF, except in a value read inside a lambda
-    (``in_loop``, ``in_lambda()``), where no UDF can run: there it compares
-    member by member in the JVM (``_eq_container``). Outside lambdas the
-    UDF stays, as it is faster: the JVM comparison re-reads each member by
-    path.
     """
 
     def __init__(self, v: Column, loc: Union[str, Column], present: Cond | None = None,
-                 obj: Column | None = None, names: tuple = (), in_loop: bool = False):
+                 obj: Column | None = None, names: tuple = ()):
         self.v = v
         self.loc = loc
         self.present = v.isNotNull() if present is None else present
         self.obj = obj
         self.names = names
-        self.in_loop = in_loop
-
-    def in_lambda(self) -> "VariantCtx":
-        return VariantCtx(self.v, self.loc, self.present, self.obj, self.names, in_loop=True)
 
     def _schema(self) -> Column:
         return F.schema_of_variant(self.v)
@@ -644,10 +655,10 @@ class VariantCtx(Ctx):
         return F.try_variant_get(self.v, "$", "array<variant>")
 
     def element_ctx_factory(self):
-        loc, in_loop = self.loc, self.in_loop
+        loc = self.loc
 
         def factory(x: Column, i: Column) -> Ctx:
-            return VariantCtx(x, F.concat(S(loc), F.lit("/"), i.cast("string")), in_loop=in_loop)
+            return VariantCtx(x, F.concat(S(loc), F.lit("/"), i.cast("string")))
 
         return factory
 
@@ -679,7 +690,7 @@ class VariantCtx(Ctx):
             child = F.try_variant_get(self.v, f"$.{name}", "variant")
         else:
             child = F.element_at(self._as_map(), F.lit(name))
-        return VariantCtx(child, child_loc, in_loop=self.in_loop)
+        return VariantCtx(child, child_loc)
 
     def loop_members(self, names):
         loc, names = self.loc, _struct_names(names)
@@ -695,7 +706,7 @@ class VariantCtx(Ctx):
 
         return entries, lambda e: e.getField("key"), member
 
-    def eq_const(self, value) -> Cond:
+    def _eq_scalar(self, value) -> Cond:
         if value is None:
             return self.is_type("null")
         if isinstance(value, bool):
@@ -717,37 +728,16 @@ class VariantCtx(Ctx):
             return or_(exact, real)
         if isinstance(value, float):
             return B(self.is_type("number")) & (self.num_val() == F.lit(float(value)))
-        if isinstance(value, str):
-            return B(self.is_type("string")) & (self.str_val() == F.lit(value))
-        if self.in_loop:
-            return self._eq_container(value)
-        # containers: deep structural equality via canonical rendering —
-        # variant to_json preserves source key order, so the raw string
-        # compare would wrongly distinguish {"a":1,"b":2} from its
-        # reordering (reference deep equality: equal)
-        from jsonschema_spark.functions.canonical import canonical_dumps, canonical_json
+        return B(self.is_type("string")) & (self.str_val() == F.lit(value))
 
-        return canonical_json(F.to_json(self.v)) == F.lit(canonical_dumps(value))
-
-    def _eq_container(self, value) -> Cond:
-        """Deep equality to a container constant, member by member in the
-        JVM: an object with the same member names in any order, or an array
-        of the same length, whose members are equal."""
-        if isinstance(value, dict):
-            members = [and_(c.present, c.eq_const(x)) for c, x in ((self.get_prop(k), x) for k, x in value.items())]
-            return and_(self.is_type("object"), self.obj_size() == F.lit(len(value)), *members)
-        arr = self.arr()
-        elems = [VariantCtx(F.try_element_at(arr, F.lit(i + 1)), "", in_loop=True).eq_const(x)
-                 for i, x in enumerate(value)]
-        return and_(arr.isNotNull(), F.size(arr) == F.lit(len(value)), *elems)
+    def _eq_structured(self, values: list) -> Cond:
+        return canonical(self.v).isin(*[canonical_const(v) for v in values])
 
     def json_repr(self) -> Column:
         return F.to_json(self.v)
 
     def unique_items(self) -> Column:
-        from jsonschema_spark.functions.canonical import unique_canonical
-
-        return unique_canonical(self.json_repr())
+        return _all_distinct(self.arr(), canonical)
 
     def item_reprs(self) -> Column:
         return F.transform(self.arr(), lambda x: F.to_json(x))

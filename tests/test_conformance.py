@@ -383,6 +383,31 @@ ADVERSARIAL = [
       "unevaluatedItems": False},
      [('[{"a": 1}]', True), ('[{"a": 1.0}, [1]]', True), ('[{"a": 1}, 2]', False), ("[[1], [1.0]]", True),
       ("[]", True), ("[2]", False)]),
+    # uniqueItems and a decimal multipleOf inside element and member
+    # loops, the lambdas of higher-order functions
+    ("uniqueItems inside an element loop", {"properties": {"a": {"items": {"uniqueItems": True}}}},
+     [('{"a": [[1, 1.0], [1e0, 2]]}', False), ('{"a": [[{"x": 1}, {"x": 1.0}]]}', False),
+      ('{"a": [[1, 2], [1e0, 2.5], []]}', True), ('{"a": [[{"x": 1}, {"x": 1.5}], ["1", 1]]}', True),
+      ('{"a": [[{"x": 1, "y": 2}, {"y": 2, "x": 1}]]}', False)]),
+    ("decimal multipleOf inside an element loop", {"properties": {"a": {"items": {"multipleOf": 0.01}}}},
+     [('{"a": [0.07]}', True), ('{"a": [0.075]}', False), ('{"a": [1e-2]}', True),
+      ('{"a": [12345678.91]}', True), ('{"a": [0.07, 0.075]}', False), ('{"a": [3, "x", null]}', True)]),
+    ("uniqueItems and decimal multipleOf inside a member loop",
+     {"additionalProperties": {"items": {"uniqueItems": True, "multipleOf": 0.01}}},
+     [('{"a": [[1, 1.0]]}', False), ('{"a": [[{"x": 1}, {"x": 1.0}]]}', False), ('{"a": [0.07, [1, 2]]}', True),
+      ('{"a": [0.075]}', False), ('{"a": [1e-2, 12345678.91], "b": [[1e0, 2]]}', True)]),
+    # a real is read by its shortest decimal digits, as validate_py reads
+    # it, not by the binary value of its double
+    ("integer multipleOf of a real beyond int64", {"properties": {"a": {"multipleOf": 100000000000000000000}}},
+     [('{"a": 1e40}', True), ('{"a": 1e20}', True), ('{"a": 1.5e20}', False), ('{"a": 2.5e40}', True)]),
+    ("power-of-two multipleOf of a real beyond int64", {"properties": {"a": {"multipleOf": 9223372036854775808}}},
+     [('{"a": 1e40}', False), ('{"a": 0}', True), ('{"a": 9223372036854775808}', True)]),
+    # JDK 17's Double.toString gives 9.999999999999999E22 and
+    # 2.82879384806159008E17 for these, not the shortest digits
+    ("multipleOf of reals whose Java string is not the shortest",
+     {"properties": {"a": {"multipleOf": 1e22}, "b": {"multipleOf": 1000}}},
+     [('{"a": 1e23}', True), ('{"b": 2.82879384806159E17}', True), ('{"b": 2.82879384806159008E17}', True),
+      ('{"a": 1.5e22}', False), ('{"b": 2.828793848061591E17}', False)]),
 ]
 
 

@@ -438,3 +438,40 @@ def test_tree_loops_read_each_element_once(spark):
             assert len(out.collect()) == 2, name
     finally:
         spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
+_DEEP = {"uniqueItems": True, "multipleOf": 0.01, "enum": [[1, 2.0], {"x": 1}, 0.07, [[1]], "s"],
+         "not": {"const": {"x": [1.0]}}}
+
+
+def test_deep_equality_and_divisibility_are_python_free(spark):
+    """``uniqueItems``, a container ``const``/``enum`` and a decimal
+    ``multipleOf``, at the root and inside element and member loops, plan
+    no Python evaluation on the tree or the flat path, fast or exhaustive
+    in both ``short_circuit`` modes, and run within generated code."""
+    from jsonschema_spark import annotate
+
+    tree = spark.createDataFrame([(d,) for d in (
+        "[1, 2.0]", '{"x": 1}', "0.07", '[[1], [1.0]]', '{"a": [0.075, {"x": 1}]}', '[{"x": 1}, [1, 2]]',
+    )], "doc string")
+    tree_schema = {**_DEEP, "items": _DEEP, "additionalProperties": _DEEP}
+    flat = spark.createDataFrame([
+        (0.07, [1, 2], [[1], [1]], [{"x": 1}], {"k": [0.07, 0.075]}),
+        (0.075, [2, 2], [[2, 1]], [{"x": 2}, None], {}),
+    ], "n double, a array<bigint>, aa array<array<bigint>>, am array<map<string,bigint>>, "
+       "mm map<string,array<double>>")
+    flat_schema = {"additionalProperties": _DEEP,
+                   "properties": {"aa": {"items": _DEEP}, "am": {"items": _DEEP},
+                                  "mm": {"additionalProperties": _DEEP}}}
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for df, schema, doc_col in ((tree, tree_schema, "doc"), (flat, flat_schema, None)):
+            outs = [validate(df, schema, doc_col=doc_col).select("valid")]
+            outs += [annotate(df, schema, doc_col=doc_col, short_circuit=sc).select(F.size("violations"))
+                     for sc in (True, False)]
+            for out in outs:
+                assert "EvalPython" not in _plan(out), (doc_col, _plan(out))
+                assert len(out.collect()) == df.count()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)

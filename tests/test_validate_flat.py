@@ -129,7 +129,7 @@ def test_multiple_of(spark):
     df2 = rows(spark, [(2.5,), (2.53,)], "x double")
     got2 = [r.valid for r in validate(df2, {"properties": {"x": {"multipleOf": 0.5}}}).collect()]
     assert got2 == [True, False]
-    # non-binary divisor routes to the exact-decimal pandas UDF
+    # a divisor that is no binary fraction divides the decimal digits
     df3 = rows(spark, [(0.3,), (0.35,)], "x double")
     got3 = [r.valid for r in validate(df3, {"properties": {"x": {"multipleOf": 0.1}}}).collect()]
     assert got3 == [True, False]
@@ -469,3 +469,27 @@ def test_null_elements_and_map_values_are_json_null(spark):
         assert [v for v, _ in flat] == py, schema
     flat, _, _ = _flat_tree_py(df, {"properties": {"xs": {"items": {"type": "integer"}}}})
     assert [v for v, _ in flat] == [False, True, False]
+
+
+def test_container_constants_on_nested_array_and_map_elements(spark):
+    """A container ``const``/``enum`` on the elements of an array of arrays
+    or of maps compares inside the element loop's lambda, as the tree path
+    does: key order is irrelevant and 1 equals 1.0."""
+    df = spark.createDataFrame([
+        ([[1], [1]], [{"x": 1, "y": 2}]),
+        ([[1], [2]], [{"y": 2, "x": 1}, {"x": 1}]),
+        ([], [None]),
+    ], "a array<array<bigint>>, m array<map<string,bigint>>")
+    for schema in (
+        {"properties": {"a": {"items": {"const": [1]}}}},
+        {"properties": {"a": {"items": {"enum": [[2], [1.0], "x"]}}}},
+        {"properties": {"a": {"uniqueItems": True}}},
+        {"properties": {"m": {"items": {"const": {"x": 1, "y": 2.0}}}}},
+        {"properties": {"m": {"items": {"enum": [{"x": 1}, {"y": 2, "x": 1}]}}}},
+        {"properties": {"m": {"uniqueItems": True, "items": {"not": {"const": {}}}}}},
+    ):
+        flat, tree, py = _flat_tree_py(df, schema)
+        assert flat == tree, schema
+        assert [v for v, _ in flat] == py, schema
+    flat, _, _ = _flat_tree_py(df, {"properties": {"a": {"items": {"const": [1]}}}})
+    assert [v for v, _ in flat] == [True, False, True]
