@@ -19,8 +19,8 @@ as 1, ``0.10`` as 0.1), and an exponent literal as a DOUBLE, which renders
 as ``1.0`` or ``1.0E20``. Only a rendering that holds ``.`` or ``E`` is
 rewritten: its number tokens are read as doubles, an integral one below
 1e38 is written as its ``decimal(38,0)`` digits and any other one as its
-double's string. ``canonical_const`` renders a constant with the same
-``parse_json``/``to_json`` and the same number rule, folded to a literal.
+double's string. ``canonical_const`` renders a constant through the same
+``parse_json`` and ``canonical``.
 """
 
 from __future__ import annotations
@@ -29,8 +29,10 @@ import json
 
 from pyspark.sql import Column, functions as F
 
-# a string literal | a run of non-structural characters | one structural one
-_TOKENS = r'"(?:[^"\\]|\\.)*"|[^"{}\[\],:]+|[{}\[\],:]'
+# a string literal | a run of non-structural characters | one structural one;
+# possessive runs, so java.util.regex matches a long string without
+# recursing once per character
+_TOKENS = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"|[^"{}\[\],:]++|[{}\[\],:]'
 
 
 def _canon(v):
@@ -67,29 +69,5 @@ def canonical(v: Column) -> Column:
 
 
 def canonical_const(value) -> Column:
-    """Canonical rendering of a python JSON constant, equal to ``canonical``
-    of its VARIANT: each real stands in as a marker string while
-    ``parse_json``/``to_json`` sort and render the rest, then is written by
-    ``_canon_number``. Every part is a constant, so Catalyst folds the
-    whole rendering to one literal (the rewrite in ``canonical`` runs in a
-    lambda, which it does not fold). A string holding NUL could spell a
-    marker: such a constant goes through ``canonical`` itself."""
-    text = json.dumps(value)
-    if "\\u0000" in text:
-        return canonical(F.parse_json(F.lit(text)))
-    reals: list = []
-
-    def mark(v):
-        if isinstance(v, float):
-            reals.append(v)
-            return f"\0{len(reals)}\0"
-        if isinstance(v, dict):
-            return {k: mark(x) for k, x in v.items()}
-        if isinstance(v, list):
-            return [mark(x) for x in v]
-        return v
-
-    out = F.to_json(F.parse_json(F.lit(json.dumps(mark(value)))))
-    for i, d in enumerate(reals, 1):
-        out = F.replace(out, F.lit(json.dumps(f"\0{i}\0")), _canon_number(F.lit(d)))
-    return out
+    """``canonical`` of a python JSON constant, through the same VARIANT."""
+    return canonical(F.parse_json(F.lit(json.dumps(value))))

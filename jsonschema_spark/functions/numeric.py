@@ -91,4 +91,12 @@ def divisible_duckdb(col_sql: str, k, col_is_integer: bool) -> str:
         if col_is_integer:
             return f"(({col_sql} % {int(k)}) = 0)"
         return f"(({col_sql} / {int(k)}) = floor({col_sql} / {int(k)}))"
+    # k = m / 2^a: x * 2^a / m is exact in doubles
+    a = next((a for a in range(32) if (float(k) * (1 << a)).is_integer()), None)
+    if a is not None:
+        m = float(k) * (1 << a)
+        return (
+            f"(({col_sql} * {float(1 << a)} / {m}) = "
+            f"floor({col_sql} * {float(1 << a)} / {m}))"
+        )
     return f"((CAST({col_sql} AS DECIMAL(38,12)) % CAST({k} AS DECIMAL(38,12))) = 0)"

@@ -493,3 +493,25 @@ def test_container_constants_on_nested_array_and_map_elements(spark):
         assert [v for v, _ in flat] == py, schema
     flat, _, _ = _flat_tree_py(df, {"properties": {"a": {"items": {"const": [1]}}}})
     assert [v for v, _ in flat] == [True, False, True]
+
+
+def test_long_strings_compare_as_containers(spark):
+    """A 100k-character string with ``.`` in it, inside an array or a map,
+    renders for ``uniqueItems`` and a container ``const``/``enum`` on the
+    flat and the tree path alike."""
+    s = "a.b " * 25_000
+    df = spark.createDataFrame([
+        ([[s], [s]], [{"d": s}, {"d": s}]),
+        ([[s], [s + "x"]], [{"d": s}, {"d": s + "x"}]),
+    ], "a array<array<string>>, m array<map<string,string>>")
+    for schema in (
+        {"properties": {"a": {"uniqueItems": True}, "m": {"uniqueItems": True}}},
+        {"properties": {"a": {"const": [[s], [s + "x"]]}}},
+        {"properties": {"m": {"items": {"enum": [{"d": s}, 1.5]}}}},
+        {"properties": {"m": {"items": {"const": {"d": s + "x"}}}}},
+    ):
+        flat, tree, py = _flat_tree_py(df, schema)
+        assert flat == tree, schema
+        assert [v for v, _ in flat] == py, schema
+    flat, _, _ = _flat_tree_py(df, {"properties": {"a": {"uniqueItems": True}, "m": {"uniqueItems": True}}})
+    assert [v for v, _ in flat] == [False, True]
