@@ -31,6 +31,7 @@ class FormatSpec:
     name: str
     build: Callable[[Column], Column]  # string Column -> boolean Column
     duckdb: str  # SQL template over {c}
+    in_python: bool = False  # build is a pandas UDF
 
 
 def _rx(col: Column, pattern: str) -> Column:
@@ -153,6 +154,7 @@ def _regex_format_spec() -> FormatSpec:
         build=lambda c: _is_valid_regex(c),
         # oracle approximation: DuckDB can't compile-try; balanced-ish check
         duckdb="TRUE",
+        in_python=True,
     )
 
 

@@ -8,9 +8,10 @@ parse, command_validate.cc:272-280; golden: test/validate/fail_json.sh
 span STARTS AT ITS KEY and ends at the last character of its value).
 
 We re-derive spans with a single-pass position-tracking scanner over the
-original document text, run as an Arrow-batched pandas UDF on the cold
-path only (failing rows / report assembly) — the hot validate path never
-touches it.
+original document text. ``instance_spans`` is the one Arrow-batched UDF
+that runs it: one scan per document, for all of that document's entries
+at once, on the cold path only (report and violation-row output) — the
+hot validate path never touches it.
 """
 
 from __future__ import annotations
@@ -122,47 +123,28 @@ def _line_col(text: str, off: int) -> tuple[int, int]:
     return line, off - last_nl if last_nl >= 0 else off + 1
 
 
-def position_of(text: str, pointer: str) -> list[int] | None:
-    """1-based [startLine, startCol, endLine, endCol] of ``pointer`` in
-    ``text`` (None if the document fails to parse or lacks the pointer)."""
+def _positions(doc: str | None, locs) -> list | None:
+    """The span of each pointer in ``locs`` within ``doc`` (None where the
+    scan misses it); None for a NULL document."""
+    if doc is None or locs is None:
+        return None
     try:
-        spans = scan_spans(text)
+        spans = scan_spans(doc) if len(locs) else {}
     except (ValueError, IndexError):
-        return None
-    if pointer not in spans:
-        return None
-    so, eo = spans[pointer]
-    sl, sc = _line_col(text, so)
-    el, ec = _line_col(text, eo)
-    return [sl, sc, el, ec]
+        spans = {}
+    return [[*_line_col(doc, spans[p][0]), *_line_col(doc, spans[p][1])] if p in spans else None
+            for p in locs]
 
 
-@F.pandas_udf(ArrayType(IntegerType()))
-def _position_udf(doc: pd.Series, loc: pd.Series) -> pd.Series:
-    # one scan per (doc, loc) row — cold path (failing rows only); spans
-    # are memoized per unique document within the batch
-    cache: dict[str, dict | None] = {}
-
-    def pos(d, p):
-        if d is None or p is None:
-            return None
-        if d not in cache:
-            try:
-                cache[d] = scan_spans(d)
-            except (ValueError, IndexError):
-                cache[d] = None
-        spans = cache[d]
-        if spans is None or p not in spans:
-            return None
-        so, eo = spans[p]
-        sl, sc = _line_col(d, so)
-        el, ec = _line_col(d, eo)
-        return [sl, sc, el, ec]
-
-    return pd.Series([pos(d, p) for d, p in zip(doc, loc)])
+@F.pandas_udf(ArrayType(ArrayType(IntegerType())))
+def _spans_udf(doc: pd.Series, locs: pd.Series) -> pd.Series:
+    return pd.Series([_positions(d, ls) for d, ls in zip(doc, locs)])
 
 
-def instance_position(doc_col: Column, loc_col: Column) -> Column:
-    """Column: [startLine, startCol, endLine, endCol] of ``loc_col`` (a
-    JSON-pointer string) within ``doc_col`` (the source document text)."""
-    return _position_udf(doc_col, loc_col)
+def instance_spans(doc: Column, parsed: Column, locs: Column) -> Column:
+    """Column ``array<array<int>>``: the [startLine, startCol, endLine,
+    endCol] span of each JSON pointer in ``locs`` (an array of instance
+    locations) within the source text ``doc``, aligned with ``locs``.
+    NULL for the whole row unless ``parsed`` — a document Spark could not
+    parse has no positions, however much of it the scanner would read."""
+    return _spans_udf(F.when(parsed, doc), locs)

@@ -275,11 +275,15 @@ def pattern_ok(col: Column, pattern: str) -> Column:
         if plan.hi is None:
             return col.isNotNull()
         return F.length(col).between(plan.lo, plan.hi)
-    if _java_dialect_safe(pattern):
-        translated = _translate_permissive(pattern, "java")
-        if translated is not None:
-            return col.rlike(translated)
-    return _pcre_fallback(col, pattern)
+    if pattern_in_python(pattern):
+        return _pcre_fallback(col, pattern)
+    return col.rlike(_translate_permissive(pattern, "java"))
+
+
+def pattern_in_python(pattern: str) -> bool:
+    """Whether ``pattern_ok`` routes ``pattern`` to the Python-regex pandas
+    UDF: a general pattern that is not Java-safe."""
+    return classify_pattern(pattern).kind == "general" and not _java_dialect_safe(pattern)
 
 
 def pattern_duckdb(col_sql: str, pattern: str) -> str:

@@ -148,21 +148,17 @@ def annotations(
     annotation) — the Basic-output ``annotations[]`` shape, one row per
     emitted annotation. ``positions`` adds the [line,col,line,col] source
     span (doc_col sources only)."""
-    from jsonschema_spark.operators.validate import _as_compiled, _bind
+    from jsonschema_spark.operators.validate import (
+        _ANNS_TMP, _as_compiled, _bind, _positioned, _with_spans)
 
+    if positions and doc_col is None:
+        raise ValueError("positions=True needs doc_col: flat rows have no source text to span")
     cs = _as_compiled(schema)
-    pre, ctx, _ = _bind(df, doc_col)
+    pre, ctx, parse_ok = _bind(df, doc_col)
+    anns = annotations_col(cs, ctx)
+    if positions:
+        pre = pre.withColumn(_ANNS_TMP, anns)
+        pre = _with_spans(pre, doc_col, parse_ok, F.col(_ANNS_TMP)["instanceLocation"])
+        anns = _positioned(F.col(_ANNS_TMP), "annotation")
     # inline names each struct field a column: no helper column to collide
-    rows = pre.select(*id_cols, *([doc_col] if doc_col and positions else []),
-                      F.inline(annotations_col(cs, ctx)))
-    if doc_col and positions:
-        from jsonschema_spark.functions.positions import instance_position
-
-        rows = rows.withColumn(
-            "instancePosition", instance_position(F.col(doc_col), F.col("instanceLocation"))
-        ).drop(doc_col)
-        rows = rows.select(
-            *id_cols, "keywordLocation", "absoluteKeywordLocation",
-            "instanceLocation", "instancePosition", "annotation",
-        )
-    return rows
+    return pre.select(*id_cols, F.inline(anns))

@@ -37,7 +37,6 @@ from __future__ import annotations
 from dataclasses import fields
 from typing import Optional, Sequence, Union
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from jsonschema_spark.plans.compiler import (
@@ -63,6 +62,8 @@ _PARSE_FAIL_MSG = "The instance could not be parsed as JSON"
 _VARIANT_TMP = "__jss_variant"
 _VALID_TMP = "__jss_valid"
 _VIOLS_TMP = "__jss_violations"
+_ANNS_TMP = "__jss_annotations"
+_SPANS_TMP = "__jss_spans"
 
 
 def _bind(
@@ -211,27 +212,34 @@ def violations_with_positions(
     """Violation rows with the reference's ``instancePosition`` column —
     1-based [startLine, startCol, endLine, endCol] span of the instance
     location in the SOURCE document text (output_standard.cc:85; golden
-    test/validate/fail_json.sh). Positions come from a one-pass scanner
-    over the original text, computed for FAILING rows only (cold path).
+    test/validate/fail_json.sh). Positions come from one scan of each
+    FAILING document's text (cold path), NULL where it did not parse.
     doc_col sources only: flat rows have no source text to span."""
-    from jsonschema_spark.functions.positions import instance_position
+    cs = _as_compiled(schema)
+    pre, ctx, parse_ok = _bind(df, doc_col)
+    ok, viols = _verdict(cs, ctx, parse_ok, "exhaustive", short_circuit)
+    failing = pre.withColumns({_VALID_TMP: ok, _VIOLS_TMP: viols}).filter(~F.col(_VALID_TMP))
+    spanned = _with_spans(failing, doc_col, parse_ok, F.col(_VIOLS_TMP)["instanceLocation"])
+    return spanned.select(*id_cols, F.inline(_positioned(F.col(_VIOLS_TMP), "error")))
 
-    annotated = annotate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP,
-                         violations_col=_VIOLS_TMP, short_circuit=short_circuit)
-    return (
-        annotated.filter(~F.col(_VALID_TMP))
-        .select(*id_cols, F.col(doc_col).alias("__jss_doc"), F.explode(_VIOLS_TMP).alias("__jss_v"))
-        .select(
-            *id_cols,
-            F.col("__jss_v.keywordLocation").alias("keywordLocation"),
-            F.col("__jss_v.absoluteKeywordLocation").alias("absoluteKeywordLocation"),
-            F.col("__jss_v.instanceLocation").alias("instanceLocation"),
-            instance_position(F.col("__jss_doc"), F.col("__jss_v.instanceLocation")).alias(
-                "instancePosition"
-            ),
-            F.col("__jss_v.error").alias("error"),
-        )
-    )
+
+def _with_spans(df: DataFrame, doc_col: str, parse_ok: Column, locs: Column) -> DataFrame:
+    """``df`` plus ``_SPANS_TMP``: the source span of each instance
+    location in ``locs``, from one scan of the document, before any
+    explode or inline."""
+    from jsonschema_spark.functions.positions import instance_spans
+
+    return df.withColumn(_SPANS_TMP, instance_spans(F.col(doc_col), parse_ok, locs))
+
+
+def _positioned(entries: Column, value_field: str) -> Column:
+    """Each Basic-output entry of ``entries`` with its span from
+    ``_SPANS_TMP`` as ``instancePosition``, before ``value_field``
+    (``error`` or ``annotation``). A NULL span is omitted by ``to_json``."""
+    spans = F.col(_SPANS_TMP)
+    return F.transform(entries, lambda e, i: F.struct(
+        *[e[n].alias(n) for n in ("keywordLocation", "absoluteKeywordLocation", "instanceLocation")],
+        F.get(spans, i).alias("instancePosition"), e[value_field].alias(value_field)))
 
 
 @without_call_sites()
@@ -245,7 +253,8 @@ def property_verdicts(
     data-quality-dashboard projection: each schema property's subschema
     (plus its required bit) evaluated independently, all in the same
     single pass. A property column is True when the value is absent-and-
-    not-required or present-and-valid."""
+    not-required or present-and-valid; every column fails where the
+    document does not parse."""
     from jsonschema_spark.plans.compiler import _apply_subschema
 
     cs = _as_compiled(schema)
@@ -253,16 +262,16 @@ def property_verdicts(
     props = node.get("properties", {}) or {}
     required = set(node.get("required", []) or [])
     cfg = cs._cfg("fast")
-    pre, ctx, _ = _bind(df, doc_col)
+    pre, ctx, parse_ok = _bind(df, doc_col)
     cols = {}
     for name, sub_schema in props.items():
         child = ctx.get_prop(name)
         ok = _apply_subschema(sub_schema, child, f"/properties/{name}", cfg, ()).ok
         if name in required:
             ok = and_(ok, child.present)
-        cols[f"{prefix}{name}"] = B(ok)
+        cols[f"{prefix}{name}"] = B(and_(parse_ok, ok))
     for name in required - set(props):
-        cols[f"{prefix}{name}"] = B(ctx.get_prop(name).present)
+        cols[f"{prefix}{name}"] = B(and_(parse_ok, ctx.get_prop(name).present))
     return _unbind(pre.withColumns(cols), doc_col)
 
 
@@ -283,9 +292,14 @@ def standard_output(
     omitted for valid rows, matching the reference's Flag/Basic shapes).
 
     ``annotations=True`` adds the golden ``annotations[]`` block to valid
-    rows (test/validate/pass_json.sh); ``positions=True`` (doc_col only)
-    inserts ``instancePosition`` spans into every entry
-    (test/validate/fail_json.sh) — the full field-for-field Basic shape."""
+    rows that have annotations (test/validate/pass_json.sh), each value
+    its JSON text verbatim; ``positions=True`` (doc_col only) inserts
+    ``instancePosition`` spans into every entry of a parsed document
+    (test/validate/fail_json.sh) — the full field-for-field Basic shape.
+    Every report is built in the JVM; positions add one Arrow UDF that
+    returns the spans."""
+    if positions and doc_col is None:
+        raise ValueError("positions=True needs doc_col: flat rows have no source text to span")
     if fmt == "flag":
         v = validate(df, schema, doc_col=doc_col, valid_col=_VALID_TMP)
         report = F.to_json(F.struct(F.col(_VALID_TMP).alias("valid")))
@@ -296,73 +310,40 @@ def standard_output(
     pre, ctx, parse_ok = _bind(df, doc_col)
     ok, viols = _verdict(cs, ctx, parse_ok, "exhaustive")
     a = pre.withColumns({_VALID_TMP: ok, _VIOLS_TMP: viols})
-    ann_col = None
+    valid, errors = F.col(_VALID_TMP), F.col(_VIOLS_TMP)
+    anns = None
     if annotations:
         from jsonschema_spark.operators.annotations import annotations_col
 
-        ann_col = annotations_col(cs, ctx)
-    if positions and doc_col is not None:
-        return _standard_output_positions(a, doc_col, ann_col, out_col)
-    valid = F.col(_VALID_TMP).alias("valid")
-    valid_report = (
-        F.to_json(F.struct(valid, ann_col.alias("annotations")))
-        if ann_col is not None
-        else F.to_json(F.struct(valid))
-    )
-    report = F.when(F.col(_VALID_TMP), valid_report).otherwise(
-        F.to_json(F.struct(valid, F.col(_VIOLS_TMP).alias("errors")))
-    )
-    return _unbind(a.withColumn(out_col, report), doc_col, _VALID_TMP, _VIOLS_TMP)
+        a, anns = a.withColumn(_ANNS_TMP, annotations_col(cs, ctx)), F.col(_ANNS_TMP)
+    if positions:
+        locs = errors["instanceLocation"]
+        if anns is not None:
+            locs = F.when(valid, anns["instanceLocation"]).otherwise(locs)
+        a = _with_spans(a, doc_col, parse_ok, locs)
+        errors = _positioned(errors, "error")
+        anns = _positioned(anns, "annotation") if anns is not None else None
+    valid_report = F.to_json(F.struct(valid.alias("valid")))
+    if anns is not None:
+        valid_report = F.when(F.size(_ANNS_TMP) > 0, _annotations_report(anns)).otherwise(valid_report)
+    report = F.when(valid, valid_report).otherwise(
+        F.to_json(F.struct(valid.alias("valid"), errors.alias("errors"))))
+    return _unbind(a.withColumn(out_col, report), doc_col,
+                   _VALID_TMP, _VIOLS_TMP, _ANNS_TMP, _SPANS_TMP)
 
 
-def _standard_output_positions(annotated: DataFrame, doc_col: str, ann_col, out_col: str) -> DataFrame:
-    """Assemble the Basic report with instancePosition spans: one scan of
-    the source text per row (Arrow-batched; entries share the scan)."""
-    import json as _json
+def _annotations_report(anns: Column) -> Column:
+    """``{"valid":true,"annotations":[...]}`` with each entry's annotation
+    JSON text spliced in verbatim in place of the closing brace of the
+    entry's ``to_json``: a trip through VARIANT would rewrite ``1.0`` as
+    ``1`` and ``1e+20`` as ``1.0E20``."""
+    def entry(e: Column) -> Column:
+        head = F.to_json(e.dropFields("annotation"))
+        return F.concat(head.substr(F.lit(1), F.length(head) - 1),
+                        F.lit(',"annotation":'), e["annotation"], F.lit("}"))
 
-    from pyspark.sql.types import StringType
-
-    from jsonschema_spark.functions.positions import scan_spans, _line_col
-
-    @F.pandas_udf(StringType())
-    def assemble(valid: pd.Series, doc: pd.Series, viols: pd.Series, anns: pd.Series) -> pd.Series:
-        def build(v, d, errs_json, anns_json):
-            entries_key = "annotations" if v else "errors"
-            raw = _json.loads(anns_json if v else errs_json) or []
-            try:
-                spans = scan_spans(d) if d is not None else {}
-            except (ValueError, IndexError):
-                spans = {}
-            out = []
-            for e in raw:
-                loc = e.get("instanceLocation", "")
-                ent = {
-                    "keywordLocation": e["keywordLocation"],
-                    "absoluteKeywordLocation": e["absoluteKeywordLocation"],
-                    "instanceLocation": loc,
-                }
-                if loc in spans:
-                    so, eo = spans[loc]
-                    sl, sc = _line_col(d, so)
-                    el, ec = _line_col(d, eo)
-                    ent["instancePosition"] = [sl, sc, el, ec]
-                if v:
-                    ent["annotation"] = _json.loads(e["annotation"])
-                else:
-                    ent["error"] = e["error"]
-                out.append(ent)
-            rep = {"valid": bool(v)}
-            if out or not v:
-                rep[entries_key] = out
-            return _json.dumps(rep, separators=(",", ":"), ensure_ascii=False)
-
-        return pd.Series([build(v, d, ej, aj) for v, d, ej, aj in zip(valid, doc, viols, anns)])
-
-    anns_json = F.to_json(ann_col) if ann_col is not None else F.lit("[]")
-    report = assemble(
-        F.col(_VALID_TMP), F.col(doc_col), F.to_json(F.col(_VIOLS_TMP)), anns_json
-    )
-    return _unbind(annotated.withColumn(out_col, report), doc_col, _VALID_TMP, _VIOLS_TMP)
+    return F.concat(F.lit('{"valid":true,"annotations":['),
+                    F.array_join(F.transform(anns, entry), ","), F.lit("]}"))
 
 
 @without_call_sites()

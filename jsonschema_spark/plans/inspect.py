@@ -8,8 +8,14 @@ strategy* the compiler will pick against a given table schema:
 - ``static``  — constant-folds at compile time (e.g. `type` on a typed
   flat column);
 - ``column``  — native Column expression (codegen);
-- ``pandas``  — Arrow-batched pandas UDF (the `format: regex` slow path);
-- ``applicator`` — structural node with children.
+- ``pandas``  — Arrow-batched pandas UDF (a residual ``pattern``, the
+  `format: regex` compile-try);
+- ``applicator`` — structural node with children: a keyword with
+  subschema positions (``upgrade.subschemas``) or a reference keyword.
+
+Applicators come from the tables ``subschemas`` walks plus the compiler's
+``_REF_KEYWORDS``; ``pandas`` from the predicates the compiler routes by
+(``strings.pattern_in_python``, ``FormatSpec.in_python``).
 """
 
 from __future__ import annotations
@@ -18,21 +24,20 @@ from typing import Optional, Union
 
 from pyspark.sql import types as T
 
-from jsonschema_spark.plans.compiler import _KEYWORDS
-from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
+from jsonschema_spark.functions.formats import FORMATS
+from jsonschema_spark.functions.strings import pattern_in_python
+from jsonschema_spark.plans.compiler import _KEYWORDS, _REF_KEYWORDS
+from jsonschema_spark.plans.upgrade import SCHEMA_KEYWORDS, _ptr_escape, subschemas
 
-_APPLICATORS = {
-    "properties", "patternProperties", "additionalProperties", "propertyNames",
-    "dependentSchemas", "prefixItems", "items", "contains", "allOf", "anyOf",
-    "oneOf", "not", "if", "$ref",
-}
-_PANDAS_KEYWORDS: dict[str, set] = {"format": {"regex"}}
+_APPLICATORS = SCHEMA_KEYWORDS | set(_REF_KEYWORDS)
 
 
 def _strategy(key: str, value, col_dtype: Optional[T.DataType]) -> str:
     if key in _APPLICATORS:
         return "applicator"
-    if key == "format" and value in _PANDAS_KEYWORDS["format"]:
+    if key == "pattern" and isinstance(value, str) and pattern_in_python(value):
+        return "pandas"
+    if key == "format" and isinstance(value, str) and value in FORMATS and FORMATS[value].in_python:
         return "pandas"
     if key == "type" and col_dtype is not None:
         return "static"

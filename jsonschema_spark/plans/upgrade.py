@@ -37,6 +37,8 @@ _SCHEMA_VALUES = ("items", "additionalItems", "additionalProperties", "propertyN
                   "not", "contains", "if", "then", "else",
                   "unevaluatedProperties", "unevaluatedItems")
 _SCHEMA_LISTS = ("allOf", "anyOf", "oneOf", "prefixItems", "extends")
+# every keyword ``subschemas`` may descend through
+SCHEMA_KEYWORDS = frozenset((*_SCHEMA_MAPS, *_SCHEMA_VALUES, *_SCHEMA_LISTS, "dependencies"))
 
 
 def _ptr_escape(name: str) -> str:

@@ -329,6 +329,28 @@ def test_inspect_strategies(spark):
     assert by_loc["/properties/lang/type"] == "static"
     assert by_loc["/properties/lang/pattern"] == "column"
     assert by_loc["/properties"] == "applicator"
+    # every keyword with subschema positions, and every reference keyword,
+    # is an applicator; a pattern the Java route cannot take, and the
+    # compile-try `format: regex`, run in a pandas UDF
+    schema = {
+        "$defs": {"n": {"$dynamicAnchor": "n"}},
+        "allOf": [{"$dynamicRef": "#n"}, {"$recursiveRef": "#"}, {"$ref": "#/$defs/n"}],
+        "unevaluatedProperties": {"type": "integer"},
+        "unevaluatedItems": {"type": "string"},
+        "properties": {
+            "u": {"pattern": "^\\p{L}+$"},
+            "r": {"format": "regex"},
+            "d": {"format": "date"},
+        },
+    }
+    by_loc = {e["keywordLocation"]: e["strategy"] for e in inspect_schema(schema)}
+    for loc in ("/unevaluatedProperties", "/unevaluatedItems", "/allOf/0/$dynamicRef",
+                "/allOf/1/$recursiveRef", "/allOf/2/$ref", "/allOf"):
+        assert by_loc[loc] == "applicator", loc
+    assert by_loc["/properties/u/pattern"] == "pandas"
+    assert by_loc["/properties/r/format"] == "pandas"
+    assert by_loc["/properties/d/format"] == "column"
+    assert by_loc["/unevaluatedItems/type"] == "column"
 
 
 def test_plan_serialize_roundtrip(tmp_path):
@@ -474,6 +496,70 @@ def test_annotations_golden_shape(spark):
     assert rep["valid"] is True
     anns = {a["keywordLocation"]: a["annotation"] for a in rep["annotations"]}
     assert anns == {"/title": ["Test"], "/description": ["Test schema"], "/properties": ["foo"]}
+
+
+_RAW_SCHEMA = {"default": 1.0, "properties": {"a": {"type": "integer", "examples": [1e20]}}}
+
+
+def _drop_positions(report: dict) -> dict:
+    return {k: [{f: x for f, x in e.items() if f != "instancePosition"} for e in v]
+            if isinstance(v, list) else v for k, v in report.items()}
+
+
+def test_basic_output_one_path(spark):
+    """The Basic report is one shape with and without positions: the
+    positioned report is the plain one plus ``instancePosition`` on each
+    entry; annotation values are their JSON text byte for byte; a valid
+    row without annotations is ``{"valid":true}``; an entry of a document
+    that did not parse carries no position."""
+    from jsonschema_spark import annotations, standard_output, violations_with_positions
+
+    df = spark.createDataFrame(
+        [(1, '{"a": 1}'), (2, "not json"), (3, None), (4, '{\n "a": "x"}')],
+        "id long, doc string")
+
+    def reports(schema, **kw):
+        out = standard_output(df, schema, doc_col="doc", annotations=True, **kw)
+        return {r.id: r.report for r in out.collect()}
+
+    plain, spanned = reports(_RAW_SCHEMA), reports(_RAW_SCHEMA, positions=True)
+    for i in (1, 2, 3, 4):
+        assert json.loads(plain[i]) == _drop_positions(json.loads(spanned[i])), i
+    for rep in (plain[1], spanned[1]):
+        assert '"keywordLocation":"/default"' in rep and '"annotation":[1.0]' in rep
+        assert '"annotation":[[1e+20]]' in rep and '"annotation":["a"]' in rep
+    assert '"instanceLocation":"/a","instancePosition":[1,2,1,7],"annotation":[[1e+20]]}' in spanned[1]
+    errs = json.loads(spanned[4])["errors"]
+    assert [e["instancePosition"] for e in errs] == [[2, 2, 2, 9], [1, 1, 2, 10]]
+    for i in (2, 3):
+        assert plain[i] == spanned[i] == (
+            '{"valid":false,"errors":[{"keywordLocation":"","absoluteKeywordLocation":"#",'
+            '"instanceLocation":"","error":"The instance could not be parsed as JSON"}]}'), i
+    rows = violations_with_positions(df, _RAW_SCHEMA, ["id"], doc_col="doc").orderBy("id").collect()
+    assert [(r.id, r.instancePosition) for r in rows if r.id in (2, 3)] == [(2, None), (3, None)]
+    # a valid row with no annotations, in both modes, with and without the block
+    for ann in (False, True):
+        for pos in (False, True):
+            out = standard_output(df, {"type": "object"}, doc_col="doc", annotations=ann, positions=pos)
+            assert {r.id: r.report for r in out.collect()}[1] == '{"valid":true}', (ann, pos)
+    ann_rows = annotations(df, _RAW_SCHEMA, ["id"], doc_col="doc", positions=True).collect()
+    assert {(r.keywordLocation, r.annotation, tuple(r.instancePosition)) for r in ann_rows} == {
+        ("/default", "[1.0]", (1, 1, 1, 8)), ("/properties", '["a"]', (1, 1, 1, 8)),
+        ("/properties/a/examples", "[[1e+20]]", (1, 2, 1, 7))}
+
+
+def test_positions_need_doc_col(spark):
+    """Flat rows have no source text: asking them for positions is an
+    error, not a report without them."""
+    from jsonschema_spark import annotations, standard_output
+
+    df = spark.createDataFrame([(1, 2)], "id long, a long")
+    with pytest.raises(ValueError, match="doc_col"):
+        standard_output(df, _RAW_SCHEMA, positions=True)
+    with pytest.raises(ValueError, match="doc_col"):
+        standard_output(df, _RAW_SCHEMA, annotations=True, positions=True)
+    with pytest.raises(ValueError, match="doc_col"):
+        annotations(df, _RAW_SCHEMA, ["id"], positions=True)
 
 
 def test_annotations_dropped_from_failing_branches(spark):

@@ -23,6 +23,19 @@ SCHEMA = {"required": ["doc_id"],
                          "n_chars": {"minimum": 1, "maximum": 400}}}
 
 
+@pytest.fixture
+def no_codegen_fallback(spark):
+    """Run the test with ``spark.sql.codegen.fallback`` off: a plan whose
+    generated code does not compile fails its job instead of running
+    interpreted without a signal."""
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+
+
 def _plan(df, mode="formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -30,7 +43,7 @@ def _plan(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
-def test_fast_validate_is_pure_codegen(spark):
+def test_fast_validate_is_pure_codegen(spark, no_codegen_fallback):
     df = validate(spark.read.parquet(DOCS), SCHEMA)
     plan = _plan(df)
     # formatted mode marks whole-stage-codegen stages as "[codegen id : N]"
@@ -38,6 +51,7 @@ def test_fast_validate_is_pure_codegen(spark):
     assert "[codegen id : 1]" in plan and "*(1)" in _plan(df, "simple")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Exchange" not in plan  # verdict column = zero shuffles
+    assert df.filter(~F.col("valid")).count() >= 0
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -261,7 +275,7 @@ def _run_twice(dfs, schema, exhaustive: bool, doc_col=None) -> None:
         assert len(out.collect()) == df.count(), schema
 
 
-def test_exhaustive_plans_stay_in_codegen(spark):
+def test_exhaustive_plans_stay_in_codegen(spark, no_codegen_fallback):
     """Exhaustive ``annotate`` plans, and every ``small_jobs`` tree plan in
     the mode its job runs, compile within janino's 64 KB method limit.
     Spark normally falls back to interpreted evaluation, without a signal,
@@ -289,31 +303,45 @@ def test_exhaustive_plans_stay_in_codegen(spark):
     assert len(jobs) == len(SMALL_TREE)
     doc_dfs = [spark.createDataFrame([(d,) for d in docs], "doc string")
                for docs in (event_docs, event_docs[1:] + ['{"user": {"name": "bo_2", "age": 9}}'])]
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        for desc, schema, docs in cases:
-            df = spark.createDataFrame([(d,) for d in docs], "doc string")
-            for sc in (True, False):
-                out = annotate(df, schema, doc_col="doc", short_circuit=sc)
-                n = out.select(F.size("violations").alias("n")).collect()
-                assert len(n) == len(docs), (desc, sc)
-        for schema, exhaustive in jobs:
-            _run_twice(doc_dfs, schema, exhaustive, doc_col="doc")
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)
+    for desc, schema, docs in cases:
+        df = spark.createDataFrame([(d,) for d in docs], "doc string")
+        for sc in (True, False):
+            out = annotate(df, schema, doc_col="doc", short_circuit=sc)
+            n = out.select(F.size("violations").alias("n")).collect()
+            assert len(n) == len(docs), (desc, sc)
+    for schema, exhaustive in jobs:
+        _run_twice(doc_dfs, schema, exhaustive, doc_col="doc")
 
 
-def test_flat_struct_const_is_python_free(spark):
+def test_flat_struct_const_is_python_free(spark, no_codegen_fallback):
     """A nested struct compares with an object constant member by member,
     inside the JVM: no Arrow round trip through a canonical-JSON UDF."""
     df = spark.createDataFrame([((1, "x"),)], "o struct<p: bigint, q: string>")
-    for sub in ({"const": {"p": 1}}, {"enum": [{"p": 1, "q": "x"}, {"q": "y"}]}):
-        assert "EvalPython" not in _plan(validate(df, {"properties": {"o": sub}})), sub
+    for sub, want in (({"const": {"p": 1}}, False), ({"enum": [{"p": 1, "q": "x"}, {"q": "y"}]}, True)):
+        out = validate(df, {"properties": {"o": sub}})
+        assert "EvalPython" not in _plan(out), sub
+        assert [r.valid for r in out.collect()] == [want], sub
 
 
-def test_flat_plans_stay_in_codegen(spark):
-    """The fast flat plan above, exhaustive flat ``annotate`` of the
+def test_standard_output_python_only_for_positions(spark, no_codegen_fallback):
+    """A Basic report with annotations is built in the JVM: no Python
+    evaluation without positions, and with them exactly one Arrow UDF,
+    the one returning the source spans."""
+    from jsonschema_spark import standard_output
+
+    df = spark.createDataFrame([(1, '{"a": 1}'), (2, '{"a": "x"}'), (3, "not json")],
+                               "id long, doc string")
+    schema = {"title": "t", "properties": {"a": {"type": "integer", "examples": [1]}}}
+    plain = standard_output(df, schema, doc_col="doc", annotations=True)
+    assert "EvalPython" not in _plan(plain)
+    spanned = _plan(standard_output(df, schema, doc_col="doc", annotations=True, positions=True), "simple")
+    assert spanned.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in spanned
+    assert spanned.count("_spans_udf(") == 1
+    assert len(plain.collect()) == 3
+
+
+def test_flat_plans_stay_in_codegen(spark, no_codegen_fallback):
+    """Exhaustive flat ``annotate`` of the
     perfbench pages schema and of the seeded metamorphic schemas over their
     typed row, and every ``small_jobs`` flat plan in the mode its job runs
     (over two DataFrames, so a plan-cache hit is covered), compile within
@@ -341,18 +369,12 @@ def test_flat_plans_stay_in_codegen(spark):
     assert len(jobs) == len(SMALL_FLAT)
     cols_df = spark.createDataFrame(_rows(random.Random(3), 12), COLS)
     cases = [(PAGES, pages)] + [(_rand_schema(random.Random(1000 + i)), cols_df) for i in range(25)]
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        assert validate(spark.read.parquet(DOCS), SCHEMA).filter(~F.col("valid")).count() >= 0
-        for schema, df in cases:
-            for sc in (True, False):
-                n = annotate(df, schema, short_circuit=sc).select(F.size("violations").alias("n")).collect()
-                assert len(n) == df.count(), (schema, sc)
-        for schema, exhaustive in jobs:
-            _run_twice([pages, more_pages], schema, exhaustive)
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)
+    for schema, df in cases:
+        for sc in (True, False):
+            n = annotate(df, schema, short_circuit=sc).select(F.size("violations").alias("n")).collect()
+            assert len(n) == df.count(), (schema, sc)
+    for schema, exhaustive in jobs:
+        _run_twice([pages, more_pages], schema, exhaustive)
 
 
 def _closing(text: str, at: int) -> int:
@@ -405,7 +427,7 @@ def _variant_reads_in_lambdas(df) -> tuple:
     return members, tags, len(re.findall(r", \$\.\w", text))
 
 
-def test_tree_loops_read_each_element_once(spark):
+def test_tree_loops_read_each_element_once(spark, no_codegen_fallback):
     """The element loops of the perfbench ``EVENTS`` tree plans bind each
     element once: no type test renders an object or array, no member is
     read by path, and each scalar type test on a member reads one
@@ -429,22 +451,17 @@ def test_tree_loops_read_each_element_once(spark):
         "exhaustive": (annotate(df, EVENTS, doc_col="doc"), 45),
         "exhaustive, short_circuit=False": (annotate(df, EVENTS, doc_col="doc", short_circuit=False), 64),
     }
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        for name, (out, bound) in plans.items():
-            members, tags, paths = _variant_reads_in_lambdas(out)
-            assert (members <= bound, tags <= 1, paths) == (True, True, 0), (name, members, tags, paths)
-            assert len(out.collect()) == 2, name
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)
+    for name, (out, bound) in plans.items():
+        members, tags, paths = _variant_reads_in_lambdas(out)
+        assert (members <= bound, tags <= 1, paths) == (True, True, 0), (name, members, tags, paths)
+        assert len(out.collect()) == 2, name
 
 
 _DEEP = {"uniqueItems": True, "multipleOf": 0.01, "enum": [[1, 2.0], {"x": 1}, 0.07, [[1]], "s"],
          "not": {"const": {"x": [1.0]}}}
 
 
-def test_deep_equality_and_divisibility_are_python_free(spark):
+def test_deep_equality_and_divisibility_are_python_free(spark, no_codegen_fallback):
     """``uniqueItems``, a container ``const``/``enum`` and a decimal
     ``multipleOf``, at the root and inside element and member loops, plan
     no Python evaluation on the tree or the flat path, fast or exhaustive
@@ -463,15 +480,10 @@ def test_deep_equality_and_divisibility_are_python_free(spark):
     flat_schema = {"additionalProperties": _DEEP,
                    "properties": {"aa": {"items": _DEEP}, "am": {"items": _DEEP},
                                   "mm": {"additionalProperties": _DEEP}}}
-    prev = spark.conf.get("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try:
-        for df, schema, doc_col in ((tree, tree_schema, "doc"), (flat, flat_schema, None)):
-            outs = [validate(df, schema, doc_col=doc_col).select("valid")]
-            outs += [annotate(df, schema, doc_col=doc_col, short_circuit=sc).select(F.size("violations"))
-                     for sc in (True, False)]
-            for out in outs:
-                assert "EvalPython" not in _plan(out), (doc_col, _plan(out))
-                assert len(out.collect()) == df.count()
-    finally:
-        spark.conf.set("spark.sql.codegen.fallback", prev)
+    for df, schema, doc_col in ((tree, tree_schema, "doc"), (flat, flat_schema, None)):
+        outs = [validate(df, schema, doc_col=doc_col).select("valid")]
+        outs += [annotate(df, schema, doc_col=doc_col, short_circuit=sc).select(F.size("violations"))
+                 for sc in (True, False)]
+        for out in outs:
+            assert "EvalPython" not in _plan(out), (doc_col, _plan(out))
+            assert len(out.collect()) == df.count()

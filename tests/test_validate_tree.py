@@ -327,7 +327,19 @@ def test_tree_property_verdicts(spark):
     out = property_verdicts(df, schema, doc_col="doc").orderBy("i")
     assert out.columns == ["i", "doc", "ok_id", "ok_tags"]
     assert [(r.ok_id, r.ok_tags) for r in out.collect()] == [
-        (True, True), (False, False), (False, True), (False, True)]
+        (True, True), (False, False), (False, True), (False, False)]
+
+
+def test_tree_property_verdicts_fail_unparsed_documents(spark):
+    """A document that does not parse, or is NULL, fails every property
+    column, as ``validate`` fails it."""
+    from jsonschema_spark import property_verdicts
+
+    schema = {"properties": {"a": {"type": "integer"}, "b": {"type": "string"}}}
+    df = docs(spark, "not json", None, '{"a": 1}')
+    out = validate(property_verdicts(df, schema, doc_col="doc"), schema, doc_col="doc")
+    assert [(r.ok_a, r.ok_b, r.valid) for r in out.orderBy("i").collect()] == [
+        (False, False, False), (False, False, False), (True, True, True)]
 
 
 def test_operators_leave_callers_valid_column_alone(spark):
