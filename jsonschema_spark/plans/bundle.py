@@ -14,7 +14,8 @@ import copy
 import re
 from typing import Union
 
-from jsonschema_spark.plans.upgrade import _rewrite_refs, _walk_schema
+from jsonschema_spark.plans.frame import Frame, locate, root_base, walk
+from jsonschema_spark.plans.upgrade import _rewrite_refs
 
 
 def _slug(uri: str, taken: set) -> str:
@@ -26,59 +27,45 @@ def _slug(uri: str, taken: set) -> str:
     return name
 
 
-def _external_refs(doc) -> set:
-    out: set = set()
-
-    def fn(node):
-        ref = node.get("$ref")
-        if isinstance(ref, str) and not ref.startswith("#"):
-            out.add(ref.partition("#")[0])
-
-    _walk_schema(doc, fn)
-    return out
-
-
-def _rewrite(doc, mapping: dict[str, str]) -> None:
-    def fn(node):
-        ref = node.get("$ref")
-        if isinstance(ref, str) and not ref.startswith("#"):
-            uri, _, frag = ref.partition("#")
-            if uri in mapping:
-                node["$ref"] = f"#/$defs/{mapping[uri]}{frag}"
-
-    _walk_schema(doc, fn)
-
-
 def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
     """Inline every reachable external `$ref` target into `$defs` and
-    rewrite references to same-document pointers. Transitive: inlined
-    documents' own external refs are resolved too. Unknown URIs raise."""
+    rewrite references to same-document pointers. A reference resolves
+    against the base URI of the resource that holds it (plans/frame.py);
+    one that lands in the document itself or in an embedded `$id`
+    resource stays as it is. Transitive: inlined documents' own external
+    refs are resolved too, against their own URI. Unknown URIs raise."""
     if not isinstance(schema, dict):
         return schema
     out = copy.deepcopy(schema)
+    local = Frame(out, root_base(out))
+    frame = Frame(out, root_base(out), resolver)
     mapping: dict[str, str] = {}
     taken = set((out.get("$defs") or {}).keys())
-    frontier_docs = [out]
-    while frontier_docs:
-        doc = frontier_docs.pop()
-        for uri in sorted(_external_refs(doc)):
-            if uri in mapping:
+    pending = [(out, root_base(out))]
+    while pending:
+        doc, base = pending.pop()
+        refs = [(node, node_base) for _, node, node_base, _ in walk(doc, base)
+                if isinstance(node.get("$ref"), str) and not node["$ref"].startswith("#")]
+        for node, node_base in refs:
+            uri, frag = locate(node["$ref"], node_base)
+            if local.resource(uri) is not None:
                 continue
-            if uri not in resolver:
-                raise KeyError(f"$ref target not in resolver registry: {uri}")
-            slug = _slug(uri, taken)
-            taken.add(slug)
-            mapping[uri] = slug
-            inlined = copy.deepcopy(resolver[uri])
-            if isinstance(inlined, dict):
-                inlined.pop("$schema", None)
-                # the inlined document's own pointer refs (``#/...`` or
-                # bare ``#``) now resolve inside its new home under
-                # $defs/<slug>. Plain-name ``#anchor`` refs stay as they
-                # are: anchors resolve document-wide, and prefixing would
-                # forge a broken pointer like ``#/$defs/<slug>name``.
-                _rewrite_refs(inlined, {"#": f"#/$defs/{slug}"})
-            out.setdefault("$defs", {})[slug] = inlined
-            frontier_docs.append(inlined)
-    _rewrite(out, mapping)
+            if uri not in mapping:
+                target = frame.resource(uri)
+                if target is None:
+                    raise KeyError(f"$ref target not in resolver registry: {uri}")
+                slug = _slug(uri, taken)
+                taken.add(slug)
+                mapping[uri] = slug
+                inlined = copy.deepcopy(target)
+                if isinstance(inlined, dict):
+                    # it joins the bundle's resource: its pointer refs now
+                    # resolve under $defs/<slug>, its anchors in the bundle
+                    inlined.pop("$schema", None)
+                    inlined.pop("$id", None)
+                    _rewrite_refs(inlined, {"#": f"#/$defs/{slug}"})
+                out.setdefault("$defs", {})[slug] = inlined
+                pending.append((inlined, uri))
+            pointer = not frag or frag.startswith("/")
+            node["$ref"] = f"#/$defs/{mapping[uri]}{frag}" if pointer else f"#{frag}"
     return out

@@ -12,7 +12,8 @@ Rules:
 - array + items → ArrayType(items-type);
 - type lists / missing type → the widest common Spark type (StringType
   fallback — documented lossy corner);
-- $ref (same-document) resolved before derivation.
+- $ref resolved before derivation, through the schema's frame
+  (plans/frame.py): pointers, anchors and embedded `$id` resources.
 """
 
 from __future__ import annotations
@@ -21,24 +22,21 @@ from typing import Union
 
 from pyspark.sql import types as T
 
-
-def _resolve_local_ref(ref: str, root: dict):
-    node = root
-    for raw in ref.lstrip("#/").split("/"):
-        if not raw:
-            continue
-        token = raw.replace("~1", "/").replace("~0", "~")
-        node = node[token]
-    return node
+from jsonschema_spark.plans.frame import Frame, enter, root_base
 
 
-def _dtype(schema: Union[dict, bool], root: dict, use_format_types: bool) -> T.DataType:
+def _dtype(schema: Union[dict, bool], at: tuple, use_format_types: bool) -> T.DataType:
+    """``at``: ``(frame, resource, base)`` of the resource the node is in."""
     if schema is True or schema == {}:
         return T.StringType()
     if schema is False:
         return T.NullType()
-    if "$ref" in schema and isinstance(schema["$ref"], str) and schema["$ref"].startswith("#"):
-        return _dtype(_resolve_local_ref(schema["$ref"], root), root, use_format_types)
+    frame, resource, base = at
+    resource, base = enter(schema, resource, base)
+    at = (frame, resource, base)
+    if isinstance(schema.get("$ref"), str):
+        target, resource, base = frame.resolve(schema["$ref"], base, resource)
+        return _dtype(target, (frame, resource, base), use_format_types)
     t = schema.get("type")
     if isinstance(t, list):
         t = t[0] if len(t) == 1 else None
@@ -60,19 +58,19 @@ def _dtype(schema: Union[dict, bool], root: dict, use_format_types: bool) -> T.D
         items = schema.get("items", True)
         prefix = schema.get("prefixItems")
         if isinstance(prefix, list) and prefix:
-            return T.ArrayType(_dtype(prefix[0], root, use_format_types))
-        return T.ArrayType(_dtype(items if not isinstance(items, list) else items[0], root, use_format_types))
+            return T.ArrayType(_dtype(prefix[0], at, use_format_types))
+        return T.ArrayType(_dtype(items if not isinstance(items, list) else items[0], at, use_format_types))
     if t == "object" or "properties" in schema:
         required = set(schema.get("required", []) or [])
         fields = [
-            T.StructField(name, _dtype(sub, root, use_format_types), nullable=name not in required)
+            T.StructField(name, _dtype(sub, at, use_format_types), nullable=name not in required)
             for name, sub in (schema.get("properties", {}) or {}).items()
         ]
         if fields:
             return T.StructType(fields)
         ap = schema.get("additionalProperties")
         if isinstance(ap, dict):
-            return T.MapType(T.StringType(), _dtype(ap, root, use_format_types))
+            return T.MapType(T.StringType(), _dtype(ap, at, use_format_types))
         return T.MapType(T.StringType(), T.StringType())
     # enum/const-only schemas: infer from the constant values
     values = schema.get("enum", [schema["const"]] if "const" in schema else None)
@@ -90,8 +88,8 @@ def _dtype(schema: Union[dict, bool], root: dict, use_format_types: bool) -> T.D
 
 def struct_type_for(schema: Union[dict, bool], use_format_types: bool = False) -> T.StructType:
     """Top-level derivation; the schema must describe an object."""
-    root = schema if isinstance(schema, dict) else {}
-    dt = _dtype(schema, root, use_format_types)
+    base = root_base(schema)
+    dt = _dtype(schema, (Frame(schema, base), schema, base), use_format_types)
     if not isinstance(dt, T.StructType):
         raise ValueError("top-level schema does not describe an object with properties")
     return dt

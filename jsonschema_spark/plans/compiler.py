@@ -64,6 +64,7 @@ from jsonschema_spark.plans.context import (
     not_,
     or_,
 )
+from jsonschema_spark.plans.frame import Frame, SchemaError, enter, root_base
 from jsonschema_spark.plans.registry import KEYWORD_COMPILERS, KeywordCompiler
 from jsonschema_spark.plans.upgrade import _ptr_escape, subschemas
 
@@ -74,10 +75,6 @@ VIOLS_DT = f"array<{VIOL_STRUCT_DT}>"
 
 def empty_viols() -> Column:
     return F.array().cast(VIOLS_DT)
-
-
-class SchemaError(ValueError):
-    pass
 
 
 @contextmanager
@@ -132,9 +129,9 @@ class Config:
     #         conjunct's violations (evaluator_dispatch.h:1254-1267)
     # False = report every failing conjunct (SQL-oracle-friendly mode)
     short_circuit: bool = True
-    # uri → schema dict registry for external $ref (the bundle/resolver
-    # analogue, /root/reference/src/resolver.h); local-only when None
-    resolver: Optional[dict] = None
+    # every resource and anchor of the document and of the resolver
+    # registry (plans/frame.py): each reference resolves through it
+    frame: Optional[Frame] = None
     # Recursive $ref unroll budget (the reference's inline-threshold
     # analogue, compile.cc:268-348 / compiler.h:98-99). A self-recursive
     # target is inlined up to this depth; instances whose data nests
@@ -260,26 +257,6 @@ def _and_combine(parts: list[Compiled], cfg: Config, own: Optional[tuple] = None
 _DYNAMIC_KEYWORDS = ("$dynamicRef", "$recursiveRef")
 
 
-def _resource_anchors(root, name: str, dynamic_only: bool):
-    """Anchors named ``name`` within ONE schema resource — the walk stops
-    at embedded `$id` boundaries (an embedded resource's anchors belong to
-    that resource, not its host)."""
-    hits = []
-
-    def walk(n, is_root):
-        if not isinstance(n, dict) or (not is_root and isinstance(n.get("$id"), str)):
-            return
-        if n.get("$dynamicAnchor") == name or (
-            not dynamic_only and n.get("$anchor") == name
-        ):
-            hits.append(n)
-        for _, sub in subschemas(n):
-            walk(sub, False)
-
-    walk(root, True)
-    return hits
-
-
 def _resolve_dynamic_ref(key: str, val, cfg: Config):
     """Static resolution of $dynamicRef/$recursiveRef against the
     compile-time dynamic scope (outermost resource first). Returns
@@ -302,7 +279,7 @@ def _resolve_dynamic_ref(key: str, val, cfg: Config):
             "runtime dynamic-scope resolution — unsupported"
         )
     name = val[1:]
-    initial = _resource_anchors(cfg.root, name, dynamic_only=False)
+    initial = cfg.frame.anchors(cfg.root, name)
     if len(initial) != 1:
         raise SchemaError(
             f"$dynamicRef {val!r} needs exactly one in-document anchor for "
@@ -311,7 +288,7 @@ def _resolve_dynamic_ref(key: str, val, cfg: Config):
     target = initial[0]
     if isinstance(target, dict) and target.get("$dynamicAnchor") == name:
         for res, uri in scope:  # outermost-first: the defining property of dynamic scope
-            hits = _resource_anchors(res, name, dynamic_only=True)
+            hits = cfg.frame.anchors(res, name, dynamic=True)
             if len(hits) > 1:
                 raise SchemaError(
                     f"$dynamicRef {val!r} needs exactly one anchor per resource "
@@ -321,78 +298,8 @@ def _resolve_dynamic_ref(key: str, val, cfg: Config):
                 return hits[0], res, uri
     return target, cfg.root, cfg.base_uri
 
+
 _TYPE_NAMES = {"null", "boolean", "integer", "number", "string", "array", "object"}
-
-
-def _walk_pointer(root, pointer: str, ref: str):
-    node: Union[dict, bool, list] = root
-    if pointer:
-        for raw in pointer.lstrip("/").split("/"):
-            token = raw.replace("~1", "/").replace("~0", "~")
-            if isinstance(node, dict) and token in node:
-                node = node[token]
-            elif isinstance(node, list) and token.isdigit() and int(token) < len(node):
-                node = node[int(token)]
-            else:
-                raise SchemaError(f"cannot resolve $ref {ref}")
-    return node
-
-
-def _find_anchor(node, name: str):
-    if not isinstance(node, dict):
-        return None
-    if node.get("$anchor") == name:
-        return node
-    for _, sub in subschemas(node):
-        hit = _find_anchor(sub, name)
-        if hit is not None:
-            return hit
-    return None
-
-
-def _collect_embedded_resources(node, base: str, out: dict, is_root: bool = True) -> None:
-    """uri → subschema for every embedded `$id` resource (nested scopes
-    compose: an inner $id resolves against its enclosing base)."""
-    from urllib.parse import urljoin
-
-    if not isinstance(node, dict):
-        return
-    sid = node.get("$id")
-    if isinstance(sid, str) and not is_root:
-        base = urljoin(base or "", sid)
-        out.setdefault(base, node)
-    for _, sub in subschemas(node):
-        _collect_embedded_resources(sub, base, out, False)
-
-
-def _resolve_ref(ref: str, cfg: Config) -> tuple[dict | bool, Config]:
-    """Resolve a `$ref`: same-document fragments directly — JSON Pointers
-    (`#/...`) or `$anchor` names (`#name`); absolute URIs through the
-    resolver registry (the bundle/remote-resolution analogue — the target
-    document becomes the new resolution root, so its own fragments
-    resolve within it)."""
-    if ref.startswith("#"):
-        fragment = ref[1:]
-        if fragment and not fragment.startswith("/"):
-            hit = _find_anchor(cfg.root, fragment)
-            if hit is None:
-                raise SchemaError(f"cannot resolve $anchor reference {ref}")
-            return hit, cfg
-        return _walk_pointer(cfg.root, fragment, ref), cfg
-    uri, _, fragment = ref.partition("#")
-    registry = cfg.resolver or {}
-    target = registry.get(uri)
-    if target is None and cfg.base_uri:
-        # relative reference against the base URI
-        from urllib.parse import urljoin
-
-        absolute = urljoin(cfg.base_uri, uri)
-        target = registry.get(absolute)
-        uri = absolute if target is not None else uri
-    if target is None:
-        raise SchemaError(f"external $ref not in resolver registry: {ref}")
-    node = _walk_pointer(target, fragment, ref)
-    return node, cfg.with_root(target, uri)
 
 
 _REF_KEYWORDS = ("$ref", *_DYNAMIC_KEYWORDS)
@@ -403,18 +310,21 @@ def _reference(key: str, val, cfg: Config, ref_stack: tuple):
     `$recursiveRef`) — the one place the recursion budget is applied.
     Returns ``(target, sub_cfg, sub_stack)``, or None once this reference
     has been entered ``cfg.max_ref_depth`` times along the current compile
-    path."""
+    path. A `$ref` resolves through the frame: a same-document fragment
+    in the current resource, any other reference in the resource at its
+    URI. A target in another resource compiles under that resource (its
+    own fragments resolve within it)."""
     if key == "$ref":
         if not isinstance(val, str):
             raise SchemaError(f"$ref must be a string, got {val!r}")
-        target, sub_cfg = _resolve_ref(val, cfg)
+        target, res, res_uri = cfg.frame.resolve(val, cfg.base_uri, cfg.root)
         ref_key = (cfg.base_uri, val)
     else:
         target, res, res_uri = _resolve_dynamic_ref(key, val, cfg)
-        sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
         ref_key = (cfg.base_uri, f"{key}:{val}")
     if ref_stack.count(ref_key) >= cfg.max_ref_depth:
         return None
+    sub_cfg = cfg if res is cfg.root else cfg.with_root(res, res_uri)
     return target, sub_cfg, ref_stack + (ref_key,)
 
 
@@ -432,12 +342,8 @@ def _resource_cfg(schema: dict, cfg: Config) -> Config:
     refs/anchors inside it resolve against THIS subdocument, and relative
     URIs against its (base-resolved) $id. (The reference frames every
     resource; SchemaFrame, frame.h:38-60.)"""
-    sid = schema.get("$id")
-    if isinstance(sid, str) and schema is not cfg.root:
-        from urllib.parse import urljoin
-
-        return cfg.with_root(schema, urljoin(cfg.base_uri or "", sid))
-    return cfg
+    res, base = enter(schema, cfg.root, cfg.base_uri)
+    return cfg if res is cfg.root else cfg.with_root(res, base)
 
 
 @without_call_sites()
@@ -1150,24 +1056,17 @@ class CompiledSchema:
     format_strict: bool = False
 
     def __post_init__(self):
-        doc = self.resolution_root if self.resolution_root is not None else self.schema
-        if isinstance(doc, dict):
-            self.base_uri = doc.get("$id", self.base_uri)
-            # embedded `$id` resources become resolvable targets — a $ref
-            # to an embedded resource's URI (absolute or base-relative)
-            # lands on that subschema with its own resolution scope
-            embedded: dict = {}
-            _collect_embedded_resources(doc, self.base_uri, embedded)
-            if embedded:
-                merged = dict(self.resolver or {})
-                for uri, node in embedded.items():
-                    merged.setdefault(uri, node)
-                self.resolver = merged
+        self.base_uri = root_base(self._root(), self.base_uri)
+
+    def _root(self) -> Union[dict, bool]:
+        return self.resolution_root if self.resolution_root is not None else self.schema
 
     def _cfg(self, mode: str, short_circuit: bool = True) -> Config:
-        root = self.resolution_root if self.resolution_root is not None else self.schema
-        return Config(self.base_uri, mode, self.format_assertion, root,
-                      short_circuit, self.resolver, self.max_ref_depth,
+        """The compile Config; its frame is built on each compile (a
+        plan-cache miss), so it frames the schema as it is now."""
+        root = self._root()
+        return Config(self.base_uri, mode, self.format_assertion, root, short_circuit,
+                      Frame(root, self.base_uri, self.resolver), self.max_ref_depth,
                       format_strict=self.format_strict)
 
     def compile_flat(
@@ -1214,12 +1113,7 @@ def compile_entrypoint(
     resolving against the FULL document."""
     if not isinstance(schema, dict):
         raise SchemaError("entrypoint requires an object schema")
-    frag = entrypoint[1:] if entrypoint.startswith("#") else entrypoint
-    if frag and not frag.startswith("/"):
-        node = _find_anchor(schema, frag)
-        if node is None:
-            raise SchemaError(f"cannot resolve entrypoint anchor {entrypoint}")
-    else:
-        node = _walk_pointer(schema, frag, entrypoint)
+    ref = entrypoint if entrypoint.startswith("#") else f"#{entrypoint}"
+    node = Frame(schema, root_base(schema)).resolve(ref, root_base(schema), schema)[0]
     return CompiledSchema(node, "", format_assertion, resolver, max_ref_depth,
                           resolution_root=schema)

@@ -31,7 +31,8 @@ import re
 from typing import Union
 
 from jsonschema_spark.functions.canonical import canonical_dumps
-from jsonschema_spark.plans.upgrade import _walk_schema, subschemas
+from jsonschema_spark.plans.frame import Frame, SchemaError, root_base, walk
+from jsonschema_spark.plans.upgrade import _walk_schema
 
 _BOUND_PAIRS = [
     ("minimum", "maximum"),
@@ -350,11 +351,12 @@ def _elevatable_allof_keywords(node: dict) -> set:
     return out
 
 
-def _instance_findings(node: dict, path: str, root, base: str,
-                       resolver) -> list[dict]:
+def _instance_findings(node: dict, path: str, root, base: str, resource,
+                       resolver, frame: Frame) -> list[dict]:
     """valid_default.h / valid_examples.h analogues: schema-embedded
     literals must satisfy the subschema that carries them (driver-side
-    evaluator, plans/pyeval.py — never a table-scale path)."""
+    evaluator, plans/pyeval.py — never a table-scale path); an external
+    `$ref` the frame cannot resolve (invalid_external_ref.h)."""
     from jsonschema_spark.plans.pyeval import EvalError, validate_at
 
     out = []
@@ -375,14 +377,12 @@ def _instance_findings(node: dict, path: str, root, base: str,
             check("valid_examples", ex, f"examples[{i}]")
     ref = node.get("$ref")
     if isinstance(ref, str) and not ref.startswith("#"):
-        from jsonschema_spark.plans.pyeval import _Scope
-
         try:
-            _Scope(root, base, resolver).resolve(ref, base)
-        except EvalError:
+            frame.resolve(ref, base, resource)
+        except SchemaError:
             out.append({"path": path or "/", "rule": "invalid_external_ref",
                         "severity": "error",
-                        "message": f"external $ref {ref!r} does not resolve"})  # invalid_external_ref.h
+                        "message": f"external $ref {ref!r} does not resolve"})
     return out
 
 
@@ -414,30 +414,18 @@ def _root_findings(schema: dict, dia: int = 12) -> list[dict]:
     return out
 
 
-def _walk(node: Union[dict, bool], path: str, out: list[dict], root=None,
-          base: str = "https://jsonschema-spark.invalid/root", resolver=None,
-          dia: int = 12) -> None:
-    if not isinstance(node, dict):
-        return
-    if isinstance(node.get("$id"), str):
-        from urllib.parse import urldefrag, urljoin
-
-        base = urldefrag(urljoin(base, node["$id"]))[0]
-    out.extend(_findings(node, path, dia))
-    if root is not None:
-        out.extend(_instance_findings(node, path, root, base, resolver))
-    for suffix, sub in subschemas(node):
-        _walk(sub, path + suffix, out, root, base, resolver, dia)
-
-
 def lint_schema(schema: Union[dict, bool], resolver: dict = None,
                 dialect: str = None) -> list[dict]:
-    root = schema if isinstance(schema, dict) else None
+    """Every finding, pre-order over the schema positions; each `$ref`
+    resolves against the base URI of its resource, as it compiles."""
+    dia = _dialect_ord(schema, dialect)
+    frame = Frame(schema, root_base(schema), resolver)
     out: list[dict] = []
-    _walk(schema, "", out, root=root, resolver=resolver,
-          dia=_dialect_ord(schema, dialect))
+    for path, node, base, resource in walk(schema, root_base(schema)):
+        out.extend(_findings(node, path, dia))
+        out.extend(_instance_findings(node, path, schema, base, resource, resolver, frame))
     if isinstance(schema, dict):
-        out.extend(_root_findings(schema, _dialect_ord(schema, dialect)))
+        out.extend(_root_findings(schema, dia))
     return out
 
 
@@ -468,7 +456,7 @@ def lint_fix(schema: Union[dict, bool]) -> Union[dict, bool]:
     returns a new schema.
 
     Fix rules are applied at SCHEMA positions only — the walker recurses
-    through ``subschemas`` (the same positions ``_walk`` visits),
+    through ``subschemas`` (the same positions ``lint_schema`` visits),
     never into the entries of ``properties``/``patternProperties``/``$defs``
     maps as if they were keywords, and never into ``const``/``enum``/
     ``default`` data values (a property literally named "enum" must keep

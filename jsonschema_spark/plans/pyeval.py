@@ -462,11 +462,12 @@ def validate_at(root: Schema, node: Schema, instance: Any,
     """Validate an instance against a SUBSCHEMA of ``root`` — `$ref`s inside
     ``node`` resolve against the whole document (lint valid_default /
     valid_examples run here: the annotated literal is checked against the
-    node that carries it)."""
+    node that carries it). ``node_base``, the base URI of the resource that
+    holds ``node``, may be relative: it is joined to the document's."""
     if isinstance(root, dict) and isinstance(root.get("$id"), str):
         base_uri = urldefrag(urljoin(base_uri, root["$id"]))[0]
     scope = _Scope(root, base_uri, resolver)
-    return _eval(node, instance, scope, node_base or base_uri, 0,
+    return _eval(node, instance, scope, urljoin(base_uri, node_base or ""), 0,
                  format_assertion)[0]
 
 

@@ -22,9 +22,9 @@ from __future__ import annotations
 
 import json
 from typing import Callable, Optional
-from urllib.parse import urljoin, urldefrag
+from urllib.parse import urldefrag
 
-from jsonschema_spark.plans.upgrade import subschemas
+from jsonschema_spark.plans.frame import Frame, locate, root_base, walk
 
 
 def _default_fetch(uri: str, timeout: float) -> str:
@@ -49,20 +49,6 @@ def http_resolver(
     return out
 
 
-def _external_refs(schema, base: str, out: set) -> None:
-    """Absolute URIs of every external $ref at schema positions."""
-    if not isinstance(schema, dict):
-        return
-    sid = schema.get("$id")
-    if isinstance(sid, str):
-        base = urljoin(base or "", sid)
-    ref = schema.get("$ref")
-    if isinstance(ref, str) and not ref.startswith("#"):
-        out.add(urldefrag(urljoin(base or "", ref))[0])
-    for _, sub in subschemas(schema):
-        _external_refs(sub, base, out)
-
-
 def resolve_remote_refs(
     schema,
     resolver: Optional[dict] = None,
@@ -70,21 +56,28 @@ def resolve_remote_refs(
     timeout: float = 10.0,
     max_fetches: int = 64,
 ) -> dict:
-    """Transitively fetch every external ``$ref`` target not already in
-    ``resolver``; returns the completed registry (input unmodified)."""
+    """Transitively fetch every external ``$ref`` target that is neither
+    in ``resolver`` nor a resource of the schema (an embedded `$id`), as
+    plans/frame.py resolves it; returns the completed registry (input
+    unmodified)."""
     registry = dict(resolver or {})
-    frontier: set = set()
-    _external_refs(schema, "", frontier)
+    frame = Frame(schema, root_base(schema), registry)
+    pending = [(schema, root_base(schema))]
     fetched = 0
-    while frontier:
-        uri = frontier.pop()
-        if uri in registry:
-            continue
-        if fetched >= max_fetches:
-            raise ValueError(f"remote $ref fetch budget ({max_fetches}) exhausted at {uri}")
-        text = fetch(uri) if fetch else _default_fetch(uri, timeout)
-        doc = json.loads(text)
-        registry[uri] = doc
-        fetched += 1
-        _external_refs(doc, uri, frontier)
+    while pending:
+        doc, base = pending.pop()
+        for _, node, node_base, _ in walk(doc, base):
+            ref = node.get("$ref")
+            if not isinstance(ref, str) or ref.startswith("#"):
+                continue
+            uri = locate(ref, node_base)[0]
+            if frame.resource(uri) is not None:
+                continue
+            if fetched >= max_fetches:
+                raise ValueError(f"remote $ref fetch budget ({max_fetches}) exhausted at {uri}")
+            text = fetch(uri) if fetch else _default_fetch(uri, timeout)
+            registry[uri] = json.loads(text)
+            fetched += 1
+            frame.add(registry[uri], uri)
+            pending.append((registry[uri], uri))
     return registry

@@ -15,6 +15,16 @@ from jsonschema_spark import annotate, validate
 
 _MY_ID = "https://localhost:1234/draft2020-12/id/my_identifier.json"
 
+# `#foo` names the root resource's anchor; the embedded resource's `foo`
+# is another resource's
+ANCHOR_SCOPE = {
+    "$id": "https://example.com/root.json",
+    "$defs": {"inner": {"$id": "inner.json",
+                        "$defs": {"x": {"$anchor": "foo", "type": "integer"}}},
+              "mine": {"$anchor": "foo", "type": "string"}},
+    "$ref": "#foo",
+}
+
 CASES = [
     # --- type ---------------------------------------------------------------
     ("integer accepts int and integral real, rejects fraction/string/bool-ish",
@@ -251,6 +261,20 @@ CASES = [
       "anyOf": [{"$ref": "#/$defs/zzz_anchor_in_const"}, {"$ref": "#my_anchor"}]},
      [('{"$anchor": "my_anchor", "type": "null"}', True), ('{"type": "null"}', False),
       ('"a string"', True), ("1", False)]),
+    # --- anchors resolve within their own resource -----------------------------
+    ("plain-name ref resolves in its own resource, not in an embedded one",
+     ANCHOR_SCOPE,
+     [('"a"', True), ("1", False), ("null", False)]),
+    ("URI with an anchor fragment names an anchor of an embedded resource",
+     {"$id": "https://example.com/root.json",
+      "$defs": {"inner": {"$id": "inner.json",
+                          "$defs": {"x": {"$anchor": "foo", "type": "integer"}}}},
+      "$ref": "inner.json#foo"},
+     [("1", True), ('"a"', False)]),
+    ("plain-name ref to a $dynamicAnchor",
+     {"$defs": {"e": {"$dynamicAnchor": "elem", "type": "integer"}},
+      "properties": {"a": {"$ref": "#elem"}}},
+     [('{"a": 1}', True), ('{"a": "x"}', False), ("{}", True)]),
 ]
 
 
@@ -290,6 +314,19 @@ def test_conformance(spark, desc, schema, checks):
     assert not mismatches, f"{desc}: instance -> (got, want): {mismatches}"
     bad = _annotate_mismatches(rows, checks)
     assert not bad, f"{desc}: (instance, short_circuit) -> (valid, #violations): {bad}"
+
+
+def test_anchor_scope_flat(spark):
+    """The flat path resolves ANCHOR_SCOPE's `#foo` in the root resource
+    too, as validate_py does."""
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    schema = {**{k: v for k, v in ANCHOR_SCOPE.items() if k != "$ref"},
+              "properties": {"a": {"$ref": "#foo"}}}
+    got = [(validate(spark.createDataFrame([(a,)], f"a {dtype}"), schema).first()["valid"],
+            validate_py(schema, {"a": a}))
+           for a, dtype in (("x", "string"), (1, "long"))]
+    assert got == [(True, True), (False, False)]
 
 
 ADVERSARIAL = [

@@ -1,5 +1,7 @@
 """Dialect upgrade, external-$ref resolver/bundle, static unevaluated*."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -793,3 +795,97 @@ def test_draft_0_2_properties_required_by_default():
     und = upgrade_schema({"properties": {"a": {"type": "string"},
                                          "c": {"optional": False}}})
     assert und.get("required") == ["c"]
+
+
+def test_anchor_outside_its_resource_raises(spark):
+    """`#foo` names an anchor of the resource the reference is in: the
+    embedded resource's `foo` is not the root's, so nothing resolves, on
+    validate as on an entrypoint (validate_py raises too)."""
+    from jsonschema_spark import compile_entrypoint
+    from jsonschema_spark.plans.pyeval import EvalError, validate_py
+
+    schema = {
+        "$id": "https://example.com/root.json",
+        "$defs": {"inner": {"$id": "inner.json",
+                            "$defs": {"x": {"$anchor": "foo", "type": "integer"}}}},
+        "$ref": "#foo",
+    }
+    docs = spark.createDataFrame([(1, "1")], "id long, doc string")
+    with pytest.raises(SchemaError, match="cannot resolve"):
+        validate(docs, schema, doc_col="doc").collect()
+    with pytest.raises(SchemaError, match="cannot resolve"):
+        compile_entrypoint(schema, "#foo")
+    with pytest.raises(EvalError):
+        validate_py(schema, 1)
+
+
+EMBEDDED = {
+    "$id": "https://e.com/root.json",
+    "$defs": {"i": {"$id": "inner.json", "type": "integer"}},
+    "properties": {"x": {"$ref": "inner.json"}},
+}
+BASE_RELATIVE = {"$id": "https://e.com/a.json", "properties": {"x": {"$ref": "b.json"}}}
+BASE_RELATIVE_REGISTRY = {"https://e.com/b.json": {
+    "$id": "https://e.com/b.json", "$defs": {"p": {"minimum": 0}}, "$ref": "#/$defs/p"}}
+
+
+@pytest.mark.parametrize("schema,registry", [(EMBEDDED, {}), (BASE_RELATIVE, BASE_RELATIVE_REGISTRY)],
+                         ids=["embedded resource", "base-relative ref"])
+def test_bundle_resolves_refs_like_compile(spark, schema, registry):
+    """bundle resolves a `$ref` against its resource's base URI, and finds
+    an embedded `$id` resource in the document: the bundle gives the
+    verdicts of the schema compiled with the registry and of validate_py."""
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    insts = [{"x": 1}, {"x": -1}, {"x": "a"}, {}]
+    docs = spark.createDataFrame([(i, json.dumps(v)) for i, v in enumerate(insts)],
+                                 "i long, doc string")
+
+    def verdicts(cs):
+        return [r["valid"] for r in validate(docs, cs, doc_col="doc").orderBy("i").collect()]
+
+    want = [validate_py(schema, v, resolver=registry) for v in insts]
+    assert verdicts(bundle(schema, registry)) == verdicts(compile_schema(schema, resolver=registry)) == want
+    assert len(set(want)) == 2
+
+
+def test_remote_refs_skip_embedded_resources():
+    """An `$id` resource of the document is no remote reference: nothing
+    is fetched for it."""
+    from jsonschema_spark.sources.http_resolver import resolve_remote_refs
+
+    def fetch(uri):
+        raise AssertionError(f"fetched {uri}")
+
+    assert resolve_remote_refs(EMBEDDED, fetch=fetch) == {}
+    assert bundle(EMBEDDED, {}) == EMBEDDED
+
+
+_LINT_REFS = [
+    ("base-relative ref", BASE_RELATIVE, BASE_RELATIVE_REGISTRY, False),
+    ("registry key relative to a root without $id",
+     {"properties": {"x": {"$ref": "b.json"}}}, {"b.json": {"type": "integer"}}, False),
+    ("embedded-resource ref", EMBEDDED, None, False),
+    ("uri#anchor",
+     {"$id": "https://e.com/root.json",
+      "$defs": {"i": {"$id": "inner.json", "$defs": {"x": {"$anchor": "foo"}}}},
+      "properties": {"x": {"$ref": "inner.json#foo"}}}, None, False),
+    ("uri#pointer that misses",
+     {"$id": "https://e.com/root.json", "$defs": {"i": {"$id": "inner.json"}},
+      "properties": {"x": {"$ref": "inner.json#/nope"}}}, None, True),
+    ("unknown URI", {"properties": {"x": {"$ref": "https://e.com/nope.json"}}}, None, True),
+]
+
+
+@pytest.mark.parametrize("schema,registry,raises", [c[1:] for c in _LINT_REFS],
+                         ids=[c[0] for c in _LINT_REFS])
+def test_lint_flags_a_ref_exactly_when_compile_raises(spark, schema, registry, raises):
+    from jsonschema_spark.plans.lint import lint_schema
+
+    flagged = any(f["rule"] == "invalid_external_ref" for f in lint_schema(schema, resolver=registry))
+    try:
+        compile_schema(schema, resolver=registry).compile_variant(F.col("v"))
+        raised = False
+    except SchemaError:
+        raised = True
+    assert (flagged, raised) == (raises, raises)

@@ -317,6 +317,32 @@ def test_codegen_struct_type():
     assert st["name"].nullable
     assert st["scores"].dataType.elementType.typeName() == "double"
     assert st["nested"].dataType["flag"].dataType.typeName() == "boolean"
+    # references resolve through the frame: an anchor, and a pointer
+    # inside an embedded `$id` resource
+    anchored = struct_type_for({"$defs": {"p": {"$anchor": "pos", "type": "integer"}},
+                                "properties": {"a": {"$ref": "#pos"}}})
+    assert anchored["a"].dataType.typeName() == "long"
+    embedded = struct_type_for({
+        "$id": "https://e.com/root.json",
+        "properties": {"a": {"$ref": "#/$defs/inner"}, "b": {"$ref": "inner.json"}},
+        "$defs": {"inner": {"$id": "inner.json", "$defs": {"q": {"type": "boolean"}},
+                            "$ref": "#/$defs/q"}},
+    })
+    assert [f.dataType.typeName() for f in embedded] == ["boolean", "boolean"]
+
+
+def test_only_the_frame_and_the_oracle_join_uris():
+    """Every reference resolves through plans/frame.py; plans/pyeval.py
+    keeps its own resolution as the independent oracle. No other module
+    joins URIs."""
+    root = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "jsonschema_spark")
+    joiners = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root) for f in files
+        if f.endswith(".py") and "urljoin" in open(os.path.join(d, f)).read()
+    )
+    assert joiners == ["plans/frame.py", "plans/pyeval.py"]
 
 
 def test_inspect_strategies(spark):
