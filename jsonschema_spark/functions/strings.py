@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from functools import lru_cache
+from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -73,10 +73,15 @@ def classify_pattern(pattern: str) -> RegexPlan:
 # plus two SILENT Java-vs-PCRE2 class divergences:
 #   in-class `[`    → Java nested-class union; PCRE2 literal → escape for Java
 #   in-class `&&`   → Java intersection; PCRE2 literal       → escape for Java
+# A POSIX class (`[[:alpha:]]`) is neither: Java has no such class, and
+# escaping its `[` would make it literal characters, so such a pattern
+# takes the Python route (RE2's are ASCII where UCP's are Unicode: no
+# oracle form either).
 # Patterns carrying an inline multiline flag keep `$` untranslated (PCRE2
 # ignores DOLLAR_ENDONLY under (?m), and so do Java/RE2 with (?m)).
 _RISKY_RE = re.compile(r"\\c[A-Za-z]")  # PCRE2_NEVER_BACKSLASH_C: \c rejected
 _QUANT_RE = re.compile(r"\{\d+(,\d*)?\}")
+_POSIX_CLASS_RE = re.compile(r"\[:\^?[A-Za-z]+:\]")
 _INLINE_M_RE = re.compile(r"\(\?[a-zA-Z-]*m[a-zA-Z-]*[):]")
 
 
@@ -98,7 +103,7 @@ def _translate_permissive(pattern: str, target: str) -> str | None:
         unescaped = re.sub(r"\\.", "", no_bs_pairs)
         if re.search(r"\(\?[=!<>]", unescaped):
             return None
-        if re.search(r"[*+?}]\+", unescaped):
+        if re.search(r"[*+?}]\+", unescaped) or _POSIX_CLASS_RE.search(pattern):
             return None
     dollar = {"java": r"\z", "python": r"\Z", "re2": r"\z"}[target]
     keep_dollar = bool(_INLINE_M_RE.search(pattern))
@@ -186,7 +191,7 @@ def _translate_permissive(pattern: str, target: str) -> str | None:
 
 
 def _java_dialect_safe(pattern: str) -> bool:
-    if _RISKY_RE.search(pattern):
+    if _RISKY_RE.search(pattern) or _POSIX_CLASS_RE.search(pattern):
         return False
     # a '{' that does not open a valid quantifier is a PCRE2 literal but a
     # Java syntax hazard
@@ -234,27 +239,30 @@ def permissive_search_py(pattern: str, value: str | None) -> bool | None:
     return bool(rx.search(value))
 
 
-def _pcre_fallback(col: Column, pattern: str) -> Column:
-    """Residual route: unanchored search with the Python `regex` module
-    (PCRE2-compatible — the same engine family as the reference), under the
-    same permissive-dialect translation as the JVM route."""
-    from pyspark.sql.types import BooleanType
+def regex_compiles(pattern: str) -> bool:
+    """Whether ``pattern`` is a valid regular expression: it compiles under
+    the permissive-PCRE2 dialect, as `pattern` does. The one validity rule
+    for `pattern`, `patternProperties` keys, `format: "regex"`, lint and
+    the metaschema check."""
+    return _compiled_permissive_py(pattern) is not None
 
-    translated = _translate_permissive(pattern, "python")
+
+def _pandas_predicate(fn, col: Column) -> Column:
+    """Boolean Column: ``fn`` of each non-NULL value of ``col``, in an
+    Arrow-batched pandas UDF. The one Python route of compiled plans."""
+    from pyspark.sql.types import BooleanType
 
     @F.pandas_udf(BooleanType())
     def probe(s: pd.Series) -> pd.Series:
-        try:
-            import regex as _re_mod
-        except ImportError:  # pragma: no cover
-            import re as _re_mod
-        try:
-            rx = _re_mod.compile(translated)
-        except Exception:
-            return pd.Series([False] * len(s))
-        return s.map(lambda v: None if v is None else bool(rx.search(v)))
+        return s.map(lambda v: None if v is None else fn(v))
 
     return probe(col)
+
+
+def regex_ok(col: Column) -> Column:
+    """Boolean Column: the string ``col`` is a valid regular expression
+    (``regex_compiles``)."""
+    return _pandas_predicate(regex_compiles, col)
 
 
 def pattern_ok(col: Column, pattern: str) -> Column:
@@ -276,7 +284,9 @@ def pattern_ok(col: Column, pattern: str) -> Column:
             return col.isNotNull()
         return F.length(col).between(plan.lo, plan.hi)
     if pattern_in_python(pattern):
-        return _pcre_fallback(col, pattern)
+        # the Python `regex` module: PCRE2-compatible, the reference's
+        # engine family, under the same translation as the JVM route
+        return _pandas_predicate(partial(permissive_search_py, pattern), col)
     return col.rlike(_translate_permissive(pattern, "java"))
 
 

@@ -13,7 +13,9 @@ Rules:
 - type lists / missing type → the widest common Spark type (StringType
   fallback — documented lossy corner);
 - $ref resolved before derivation, through the schema's frame
-  (plans/frame.py): pointers, anchors and embedded `$id` resources.
+  (plans/frame.py): pointers, anchors and embedded `$id` resources; a
+  `$ref` to a schema already on the derivation path (recursion) →
+  StringType.
 """
 
 from __future__ import annotations
@@ -26,17 +28,21 @@ from jsonschema_spark.plans.frame import Frame, enter, root_base
 
 
 def _dtype(schema: Union[dict, bool], at: tuple, use_format_types: bool) -> T.DataType:
-    """``at``: ``(frame, resource, base)`` of the resource the node is in."""
+    """``at``: ``(frame, resource, base, path)``: the resource the node is
+    in, its base URI, and the ids of the schemas being derived around it."""
     if schema is True or schema == {}:
         return T.StringType()
     if schema is False:
         return T.NullType()
-    frame, resource, base = at
+    frame, resource, base, path = at
     resource, base = enter(schema, resource, base)
-    at = (frame, resource, base)
+    path = path | {id(schema)}
+    at = (frame, resource, base, path)
     if isinstance(schema.get("$ref"), str):
         target, resource, base = frame.resolve(schema["$ref"], base, resource)
-        return _dtype(target, (frame, resource, base), use_format_types)
+        if id(target) in path:
+            return T.StringType()
+        return _dtype(target, (frame, resource, base, path), use_format_types)
     t = schema.get("type")
     if isinstance(t, list):
         t = t[0] if len(t) == 1 else None
@@ -89,7 +95,7 @@ def _dtype(schema: Union[dict, bool], at: tuple, use_format_types: bool) -> T.Da
 def struct_type_for(schema: Union[dict, bool], use_format_types: bool = False) -> T.StructType:
     """Top-level derivation; the schema must describe an object."""
     base = root_base(schema)
-    dt = _dtype(schema, (Frame(schema, base), schema, base), use_format_types)
+    dt = _dtype(schema, (Frame(schema, base), schema, base, frozenset()), use_format_types)
     if not isinstance(dt, T.StructType):
         raise ValueError("top-level schema does not describe an object with properties")
     return dt

@@ -154,10 +154,6 @@ class Config:
     # its target under THAT resource's root/base (fragment $refs inside the
     # target resolve against the right document).
     dynamic_scope: tuple = ()
-    # Parser-grade idn-hostname/idn-email/iri validation via pandas UDF
-    # (functions/formats.py:format_ok_strict); False = pure-JVM regex
-    # approximations (the documented default — oracle-expressible)
-    format_strict: bool = False
 
     @property
     def want_viols(self) -> bool:
@@ -457,11 +453,7 @@ def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> 
     guard = ctx.is_type("string")
     if guard is False:
         return Compiled(True)
-    if cfg.format_strict:
-        from jsonschema_spark.functions.formats import format_ok_strict as build
-    else:
-        build = format_ok
-    leaf = _leaf(cfg, build(val, ctx.str_val()), kwp, ctx, lambda: M.msg_format(ctx, val))
+    leaf = _leaf(cfg, format_ok(val, ctx.str_val()), kwp, ctx, lambda: M.msg_format(ctx, val))
     return _guarded(guard, leaf)
 
 
@@ -1052,8 +1044,6 @@ class CompiledSchema:
     # --entrypoint analogue: when set, `schema` is the compiled subschema
     # but fragments/$refs still resolve against this full document
     resolution_root: Optional[Union[dict, bool]] = None
-    # parser-grade idn-*/iri validation (pandas UDF path) — see Config
-    format_strict: bool = False
 
     def __post_init__(self):
         self.base_uri = root_base(self._root(), self.base_uri)
@@ -1066,8 +1056,7 @@ class CompiledSchema:
         plan-cache miss), so it frames the schema as it is now."""
         root = self._root()
         return Config(self.base_uri, mode, self.format_assertion, root, short_circuit,
-                      Frame(root, self.base_uri, self.resolver), self.max_ref_depth,
-                      format_strict=self.format_strict)
+                      Frame(root, self.base_uri, self.resolver), self.max_ref_depth)
 
     def compile_flat(
         self, df_schema: T.StructType, mode: str = "exhaustive", short_circuit: bool = True
@@ -1094,10 +1083,8 @@ def compile_schema(
     format_assertion: bool = True,
     resolver: Optional[dict] = None,
     max_ref_depth: int = 6,
-    format_strict: bool = False,
 ) -> CompiledSchema:
-    return CompiledSchema(schema, base_uri, format_assertion, resolver,
-                          max_ref_depth, format_strict=format_strict)
+    return CompiledSchema(schema, base_uri, format_assertion, resolver, max_ref_depth)
 
 
 def compile_entrypoint(

@@ -82,12 +82,15 @@ def install_schema(
                     "installed": False}
 
     # fetch root + transitive closure, bundle for offline use
-    # (http_resolver keys its registry by DEFRAGGED uri)
+    # (http_resolver keys its registry by DEFRAGGED uri); a root without
+    # `$id` is framed at the URI it was fetched from
     from urllib.parse import urldefrag
 
     base = urldefrag(uri)[0]
     registry = http_resolver([uri], fetch=fetch, timeout=timeout)
     root = registry[base]
+    if isinstance(root, dict) and "$id" not in root:
+        root = {"$id": base, **root}
     registry = resolve_remote_refs(root, resolver=registry, fetch=fetch, timeout=timeout)
     bundled = bundle(root, registry) if isinstance(root, dict) else root
     text = json.dumps(bundled, indent=2, ensure_ascii=False) + "\n"

@@ -31,6 +31,7 @@ import re
 from typing import Union
 
 from jsonschema_spark.functions.canonical import canonical_dumps
+from jsonschema_spark.functions.strings import permissive_search_py, regex_compiles
 from jsonschema_spark.plans.frame import Frame, SchemaError, root_base, walk
 from jsonschema_spark.plans.upgrade import _walk_schema
 
@@ -103,9 +104,9 @@ def _findings(node: dict, path: str, dia: int = 12) -> list[dict]:
         add("consequence_without_if", "warning", "then/else without if has no effect")
     if node.get("additionalProperties") is False and isinstance(req, list):
         declared = set(node.get("properties", {}) or {})
-        pats = [re.compile(p) for p in (node.get("patternProperties", {}) or {})]
+        pats = list(node.get("patternProperties", {}) or {})
         for name in req:
-            if name not in declared and not any(p.search(name) for p in pats):
+            if name not in declared and not any(permissive_search_py(p, name) for p in pats):
                 add("required_undeclared_property", "error",
                     f"required property {name!r} can never exist in this closed object")
     for kw in ("minLength", "maxLength", "minItems", "maxItems", "minProperties", "maxProperties"):
@@ -203,11 +204,11 @@ def _findings(node: dict, path: str, dia: int = 12) -> list[dict]:
             "minProperties exceeds the number of allowed properties in this closed object")  # unsatisfiable_min_properties.h
     for kw, rule in (("pattern", "pattern_non_ecma_regex"),):
         v = node.get(kw)
-        if isinstance(v, str) and not _regex_compiles(v):
+        if isinstance(v, str) and not regex_compiles(v):
             add(rule, "error", f"{kw} is not a valid regular expression: {v!r}")  # pattern_non_ecma_regex.h
     if isinstance(node.get("patternProperties"), dict):
         for p in node["patternProperties"]:
-            if not _regex_compiles(p):
+            if not regex_compiles(p):
                 add("pattern_properties_non_ecma_regex", "error",
                     f"patternProperties key is not a valid regular expression: {p!r}")  # pattern_properties_non_ecma_regex.h
     fmt = node.get("format")
@@ -388,14 +389,6 @@ def _instance_findings(node: dict, path: str, root, base: str, resource,
 
 def _snake(kw: str) -> str:
     return re.sub(r"(?<!^)(?=[A-Z])", "_", kw).lower()
-
-
-def _regex_compiles(pattern: str) -> bool:
-    try:
-        re.compile(pattern)
-        return True
-    except re.error:
-        return False
 
 
 def _root_findings(schema: dict, dia: int = 12) -> list[dict]:

@@ -13,6 +13,7 @@ from __future__ import annotations
 from numbers import Number
 from typing import Union
 
+from jsonschema_spark.functions.strings import regex_compiles
 from jsonschema_spark.plans.upgrade import subschemas
 
 _TYPE_NAMES = {"null", "boolean", "integer", "number", "string", "array", "object"}
@@ -52,12 +53,8 @@ def metaschema_errors(schema: Union[dict, bool], path: str = "") -> list[str]:
     if "pattern" in schema:
         if not isinstance(schema["pattern"], str):
             errs.append(f"{loc}: pattern must be a string")
-        else:
-            import re
-            try:
-                re.compile(schema["pattern"])
-            except re.error as e:
-                errs.append(f"{loc}: pattern is not a valid regular expression ({e})")
+        elif not regex_compiles(schema["pattern"]):
+            errs.append(f"{loc}: pattern is not a valid regular expression")
     req = schema.get("required")
     if req is not None and (not isinstance(req, list) or not all(isinstance(x, str) for x in req)):
         errs.append(f"{loc}: required must be an array of strings")

@@ -15,7 +15,7 @@ nature* and need one:
 
 Semantics mirror the Spark compiler (plans/compiler.py): 2020-12 keyword
 set, format as an assertion over the SAME regex constants
-(functions/formats.py:format_py), deep equality via canonical JSON
+(functions/formats.py:FormatSpec.py), deep equality via canonical JSON
 (functions/canonical.py:canonical_dumps), annotation-tracking
 `unevaluatedProperties`/`unevaluatedItems` (reference runtime marks,
 vendor/blaze/src/evaluator/evaluator.h:217-276).
@@ -26,13 +26,12 @@ test fixtures only. Anything per-row stays in the compiled Column plan.
 
 from __future__ import annotations
 
-import re
 from fractions import Fraction
 from typing import Any, Optional, Union
 from urllib.parse import urldefrag, urljoin
 
 from jsonschema_spark.functions.canonical import canonical_dumps
-from jsonschema_spark.functions.formats import FORMATS, format_py
+from jsonschema_spark.functions.formats import FORMATS
 
 Schema = Union[dict, bool]
 
@@ -311,7 +310,7 @@ def _eval(schema: Schema, inst: Any, scope: _Scope, base: str, depth: int,
             ok &= bool(permissive_search_py(schema["pattern"], inst))
         fmt = schema.get("format")
         if fmt_assert and isinstance(fmt, str) and fmt in FORMATS:
-            ok &= format_py(fmt, inst)
+            ok &= FORMATS[fmt].py(inst)
 
     # --- arrays -------------------------------------------------------------
     if isinstance(inst, list):

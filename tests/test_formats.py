@@ -1,16 +1,20 @@
 """All 21 `format` validators (SURVEY.md §2.4): positive/negative cases
 evaluated in ONE pass (one boolean column per (format, case))."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_spark.functions.formats import FORMATS, format_ok
+from jsonschema_spark.functions.formats import FORMATS, format_duckdb, format_ok
 
 CASES = {
     "uri": [("https://example.com/a?b=c#d", True), ("ftp://x/y", True),
             ("not a uri", False), ("/relative/only", False), ("http://x/%zz", False)],
     "uri-reference": [("/relative/path", True), ("a b", False)],
-    "iri": [("https://example.com/x", True), ("nope nope", False)],
-    "iri-reference": [("frag#x", True), ("sp ace", False)],
+    # iri, iri-reference, idn-hostname and idn-email accept ASCII only
+    "iri": [("https://example.com/x", True), ("nope nope", False),
+            ("mailto:user@example.com", True), ("https://例え.jp/パス?q=値", False),
+            ("https://exa mple.com/", False), ("no-scheme-iri", False)],
+    "iri-reference": [("frag#x", True), ("sp ace", False), ("/путь/к/файлу", False), ("%2", False)],
     "uri-template": [("/users/{id}", True), ("/u{", False)],
     "date-time": [("2021-06-01T12:00:00Z", True), ("2021-06-01t12:00:00+05:30", True),
                   ("2021-13-01T12:00:00Z", False), ("2021-06-01 12:00:00", False)],
@@ -24,15 +28,20 @@ CASES = {
     "ipv6": [("2001:db8::1", True), ("::1", True), ("::ffff:192.0.2.1", True),
              ("2001:db8::1::2", False), ("g::1", False)],
     "hostname": [("example-host.co", True), ("a" * 64 + ".com", False), ("-bad.com", False)],
-    "idn-hostname": [("example.com", True), ("bad_host", False)],
+    "idn-hostname": [("example.com", True), ("bad_host", False), ("xn--bcher-kva.example", True),
+                     ("bücher.example", False), ("-bad.example", False),
+                     ("a" * 64 + ".com", False), ("trailing.dot.", False)],
     "email": [("a.b+c@example.com", True), ("no-at-sign", False), ("a@b@c", False)],
-    "idn-email": [("x@example.org", True), ("@missing", False)],
+    "idn-email": [("x@example.org", True), ("@missing", False), ("user@bücher.example", False),
+                  ("no-at-sign", False), ("u@-bad.example", False)],
     "uuid": [("123e4567-e89b-12d3-a456-426614174000", True),
              ("123e4567e89b12d3a456426614174000", False)],
     "json-pointer": [("/a/b~0c/0", True), ("", True), ("no-slash", False), ("/bad~2", False)],
     "relative-json-pointer": [("0#", True), ("2/a/b", True), ("01/a", False), ("-1/a", False)],
     "color": [("#abc", True), ("#AABBCC", True), ("orange", True), ("#ab", False), ("magenta", False)],
-    "regex": [("^a(b|c)*$", True), ("a{1,2}", True), ("(unclosed", False), ("a)bad", False)],
+    # valid iff it compiles as a `pattern` does (permissive PCRE2)
+    "regex": [("^a(b|c)*$", True), ("a{1,2}", True), ("(unclosed", False), ("a)bad", False),
+              ("\\p{L}+", True), ("(?<name>x)", True), ("[]", True), ("[[:foo:]]", False)],
 }
 
 
@@ -51,39 +60,22 @@ def test_all_formats_one_pass(spark):
         if bool(got) != r["expected"]:
             bad.append((r["fmt"], r["value"], r["expected"], got))
     assert not bad, f"format mismatches: {bad}"
+    # the driver-side predicate is derived from the same declaration
+    bad_py = [(f, v, e) for f, pairs in CASES.items() for v, e in pairs if FORMATS[f].py(v) != e]
+    assert not bad_py, f"FormatSpec.py mismatches: {bad_py}"
 
 
-STRICT_CASES = {
-    "idn-hostname": [("bücher.example", True), ("xn--bcher-kva.example", True),
-                     ("example.com", True), ("-bad.example", False),
-                     ("a" * 64 + ".com", False), ("trailing.dot.", False)],
-    "idn-email": [("user@bücher.example", True), ("x@example.org", True),
-                  ("no-at-sign", False), ("u@-bad.example", False)],
-    "iri": [("https://例え.jp/パス?q=値", True), ("mailto:user@example.com", True),
-            ("https://exa mple.com/", False), ("no-scheme-iri", False)],
-    "iri-reference": [("/путь/к/файлу", True), ("frag#x", True), ("%2", False)],
-}
-
-
-def test_strict_formats_python():
-    from jsonschema_spark.functions.formats import format_py_strict
-
-    bad = [(f, v, e) for f, pairs in STRICT_CASES.items()
-           for v, e in pairs if format_py_strict(f, v) != e]
-    assert not bad, f"strict format mismatches: {bad}"
-
-
-def test_strict_formats_spark_path(spark):
-    """format_strict=True routes idn-*/iri through the parser-grade pandas
-    UDF; a unicode hostname the regex approximation rejects now validates."""
-    from jsonschema_spark import compile_schema, validate
-
-    schema = {"properties": {"host": {"format": "idn-hostname"}}}
-    df = spark.createDataFrame(
-        [("bücher.example",), ("example.com",), ("-bad.example",)], "host string")
-    strict = [r["valid"] for r in
-              validate(df, compile_schema(schema, format_strict=True)).collect()]
-    assert strict == [True, True, False]
-    # default (JVM regex) path: ASCII-only approximation rejects the IDN
-    loose = [r["valid"] for r in validate(df, compile_schema(schema)).collect()]
-    assert loose == [False, True, False]
+def test_duckdb_predicates_match_cases():
+    """The DuckDB oracle predicate of each format (all but `regex`, which
+    DuckDB cannot compile-try) agrees with the cases."""
+    duckdb = pytest.importorskip("duckdb")
+    con = duckdb.connect()
+    bad = []
+    for f, pairs in CASES.items():
+        if FORMATS[f].in_python:
+            continue
+        for v, e in pairs:
+            got = con.execute(f"SELECT {format_duckdb(f, 's')} FROM (SELECT ? AS s)", [v]).fetchone()[0]
+            if got is not e:
+                bad.append((f, v, e, got))
+    assert not bad, f"duckdb format mismatches: {bad}"

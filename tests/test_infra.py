@@ -329,6 +329,13 @@ def test_codegen_struct_type():
                             "$ref": "#/$defs/q"}},
     })
     assert [f.dataType.typeName() for f in embedded] == ["boolean", "boolean"]
+    # a $ref back to a schema on the derivation path is the lossy fallback
+    linked = struct_type_for({"$defs": {"n": {"properties": {"v": {"type": "integer"},
+                                                             "next": {"$ref": "#/$defs/n"}}}},
+                              "$ref": "#/$defs/n"})
+    assert [(f.name, f.dataType.typeName()) for f in linked] == [("v", "long"), ("next", "string")]
+    tree = struct_type_for({"properties": {"kids": {"type": "array", "items": {"$ref": "#"}}}})
+    assert tree["kids"].dataType.elementType.typeName() == "string"
 
 
 def test_only_the_frame_and_the_oracle_join_uris():

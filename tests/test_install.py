@@ -6,6 +6,7 @@ import json
 import pytest
 
 from jsonschema_spark.plans.install import FrozenError, install_all, install_schema
+from jsonschema_spark.plans.pyeval import validate_py
 
 STORE = {
     "https://e.com/person.json":
@@ -68,3 +69,22 @@ def test_install_uri_with_fragment(tmp_path):
                        "vendor/p.json", project_dir=str(tmp_path),
                        fetch=STORE.__getitem__)
     assert r["installed"] is True  # defragged lookup; whole doc vendored
+
+
+def test_install_frames_root_at_its_fetch_uri(tmp_path):
+    """A fetched root without `$id` resolves its relative refs against the
+    URI it was fetched from."""
+    store = {
+        "https://e.com/dir/a.json": '{"properties": {"b": {"$ref": "b.json"}}}',
+        "https://e.com/dir/b.json": '{"type": "integer"}',
+    }
+    fetched = []
+
+    def fetch(uri):
+        fetched.append(uri)
+        return store[uri]
+
+    install_schema("https://e.com/dir/a.json", "vendor/a.json", project_dir=str(tmp_path), fetch=fetch)
+    assert fetched == ["https://e.com/dir/a.json", "https://e.com/dir/b.json"]
+    installed = json.loads((tmp_path / "vendor" / "a.json").read_text())
+    assert validate_py(installed, {"b": 1}) and not validate_py(installed, {"b": "x"})

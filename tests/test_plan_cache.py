@@ -127,7 +127,6 @@ def test_binding_is_part_of_the_key(spark, flat, compiles):
     {"resolver": {"https://example.com/x": {"minimum": 1}}},
     {"max_ref_depth": 3},
     {"resolution_root": {"$defs": {"x": SCHEMA}}},
-    {"format_strict": True},
 ])
 def test_each_compiled_schema_field_is_part_of_the_key(flat, compiles, option):
     validate(flat, CompiledSchema(SCHEMA))

@@ -487,3 +487,32 @@ def test_deep_equality_and_divisibility_are_python_free(spark, no_codegen_fallba
         for out in outs:
             assert "EvalPython" not in _plan(out), (doc_col, _plan(out))
             assert len(out.collect()) == df.count()
+
+
+def test_formats_are_python_free(spark, no_codegen_fallback, tmp_path):
+    """Every `format` but `regex` is a JVM expression: on the flat and the
+    tree path, fast and exhaustive, its plan has no Python evaluation and
+    runs in one whole-stage codegen stage."""
+    import json
+
+    from jsonschema_spark import annotate
+    from jsonschema_spark.functions.formats import FORMATS
+
+    fmts = sorted(f for f, spec in FORMATS.items() if not spec.in_python)
+    assert len(fmts) == 20
+    schema = {"properties": {f: {"type": "string", "format": f} for f in fmts}}
+    values = ["2024-01-01", "example.com", "not a uri"]
+    flat = str(tmp_path / "flat")
+    spark.createDataFrame([tuple([v] * len(fmts)) for v in values],
+                          ", ".join(f"`{f}` string" for f in fmts)).write.parquet(flat)
+    tree = str(tmp_path / "tree")
+    spark.createDataFrame([(json.dumps(dict.fromkeys(fmts, v)),) for v in values],
+                          "doc string").write.parquet(tree)
+    for path, doc_col in ((flat, None), (tree, "doc")):
+        df = spark.read.parquet(path)
+        for out in (validate(df, schema, doc_col=doc_col).select("valid"),
+                    annotate(df, schema, doc_col=doc_col).select(F.size("violations"))):
+            plan = _plan(out)
+            assert "EvalPython" not in plan, (doc_col, plan)
+            assert set(re.findall(r"\[codegen id : (\d+)\]", plan)) == {"1"}, (doc_col, plan)
+            assert len(out.collect()) == len(values)

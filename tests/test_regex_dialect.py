@@ -25,6 +25,8 @@ the boundary correctly:
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,6 +107,13 @@ CORPUS = [
     (r"é\b", "é!", True, "UCP-b-unicode"),
     # unicode escapes
     (r"éx", "éx", True, "unicode-escape"),
+    # a POSIX class inside a class is a class (Unicode under UCP); Java has
+    # none, and its escaped `[` would read the class as literal characters
+    ("^[[:alpha:]]+$", "abc", True, "posix-class"),
+    ("^[[:alpha:]]+$", "a]", False, "posix-class"),
+    ("^[[:alpha:]]+$", "ÄB", True, "posix-class-UCP"),
+    ("[[:^alpha:]]", "ab", False, "posix-class-negated"),
+    ("[[:^alpha:]]", "a1", True, "posix-class-negated"),
 ]
 
 
@@ -202,3 +211,68 @@ def test_pattern_duckdb_refuses_ucp_word_boundary():
 
     with pytest.raises(ValueError):
         pattern_duckdb("s", r"\bfoo\b")
+
+
+def test_posix_class_tree_matches_validate_py(spark):
+    """A `pattern` with a POSIX class gives the tree path the verdicts of
+    ``validate_py``: the class is not read as literal characters."""
+    from jsonschema_spark import validate, validate_py
+
+    schema = {"type": "string", "pattern": "^[[:alpha:]]+$"}
+    values = ["abc", "a]", "ÄB", "1", ":"]
+    df = spark.createDataFrame([(json.dumps(v),) for v in values], "doc string")
+    got = {json.loads(r.doc): r.valid for r in validate(df, schema, doc_col="doc").collect()}
+    assert got == {v: validate_py(schema, v) for v in values} == {
+        "abc": True, "a]": False, "ÄB": True, "1": False, ":": False}
+
+
+# (regex, valid): valid iff it compiles as `pattern` does, under the
+# permissive-PCRE2 dialect (the Python `regex` module)
+VALIDITY = [
+    ("^a(b|c)*$", True),
+    (r"\p{L}+", True),
+    (r"^\p{Lu}+$", True),
+    ("(?<name>x)", True),
+    ("[]", True),
+    ("^[[:alpha:]]+$", True),
+    ("(unclosed", False),
+    ("a)bad", False),
+    ("[[:foo:]]", False),
+    ("x{2,1}", False),
+]
+
+
+def test_regex_validity_is_one_rule(spark):
+    """The metaschema check, lint, `format: "regex"` (driver-side, in
+    ``validate_py`` and through the Spark UDF) and `pattern` itself agree
+    on which regexes are valid."""
+    from jsonschema_spark import lint_schema, metaschema_errors, validate, validate_py
+    from jsonschema_spark.functions.formats import FORMATS
+
+    df = spark.createDataFrame([(json.dumps(p),) for p, _ in VALIDITY], "doc string")
+    udf = {json.loads(r.doc): r.valid
+           for r in validate(df, {"format": "regex"}, doc_col="doc").collect()}
+    for p, valid in VALIDITY:
+        rules = {f["rule"] for f in lint_schema({"pattern": p, "patternProperties": {p: {}}})}
+        assert (not metaschema_errors({"pattern": p})) is valid, p
+        assert ("pattern_non_ecma_regex" not in rules) is valid, p
+        assert ("pattern_properties_non_ecma_regex" not in rules) is valid, p
+        assert FORMATS["regex"].py(p) is valid, p
+        assert validate_py({"format": "regex"}, p) is valid, p
+        assert udf[p] is valid, p
+
+
+def test_lint_closed_object_reads_keys_as_patterns():
+    """``required_undeclared_property`` matches required names against the
+    `patternProperties` keys by `pattern`'s rule: ``\\p{L}`` is a class,
+    and ``$`` does not match before a trailing newline."""
+    from jsonschema_spark import lint_schema, validate_py
+
+    def undeclared(schema):
+        return [f for f in lint_schema(schema) if f["rule"] == "required_undeclared_property"]
+
+    unicode_key = {"additionalProperties": False, "required": ["x"], "patternProperties": {r"\p{L}": {}}}
+    assert undeclared(unicode_key) == []
+    newline = {"additionalProperties": False, "required": ["a\n"], "patternProperties": {"^a$": {}}}
+    assert len(undeclared(newline)) == 1
+    assert validate_py(newline, {"a\n": 1}) is False
