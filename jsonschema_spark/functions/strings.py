@@ -1,39 +1,22 @@
-"""String helpers: regex fast-path classification and code-point lengths.
+"""String helpers: regex fast-path classification and the PCRE2 token table.
 
-The reference classifies compiled regexes into Prefix / NonEmpty / Range /
-general-PCRE2 variants so common patterns skip the regex engine entirely
-(/root/reference/vendor/core/src/core/regex/include/sourcemeta/core/regex.h:31-69).
-We reproduce the same strategy: `^literal` → `startswith` (stays in codegen
-with no regex state machine), `.+`-likes → `length >= 1`, `^.{a,b}$` →
-`length between`, everything else → `rlike` after translation to the
-reference's permissive-PCRE2 dialect (see the dialect-translation note
-below), residuals → a Python `regex` pudf under the same translation.
-
-String lengths are Unicode code points, not bytes, matching
-`JSON::size(String)` (/root/reference/vendor/core/src/core/json/json_value.cc:509-524).
-Spark's `length` on StringType already counts code points; the trap the
-survey flags (byte-length in Arrow UDFs) is avoided by keeping length checks
-JVM-side.
+As the reference classifies regexes into Prefix / NonEmpty / Range / PCRE2
+(/root/reference/vendor/core/src/core/regex/include/sourcemeta/core/regex.h:31-69),
+`^literal`, `.+` and `^.{a,b}$` (code points, as `JSON::size(String)`) stay
+in codegen; every other pattern goes through one PCRE2 tokenizer and its table.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from collections import namedtuple
 from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
 
 _META = set(".^$*+?()[]{}|\\")
-
-
-@dataclass(frozen=True)
-class RegexPlan:
-    kind: str  # 'prefix' | 'nonempty' | 'range' | 'general'
-    prefix: str | None = None
-    lo: int | None = None
-    hi: int | None = None
+RegexPlan = namedtuple("RegexPlan", "kind prefix lo hi", defaults=(None, None, None))
 
 
 def classify_pattern(pattern: str) -> RegexPlan:
@@ -43,264 +26,281 @@ def classify_pattern(pattern: str) -> RegexPlan:
         return RegexPlan("nonempty")
     m = re.fullmatch(r"\^\.\{(\d+)(?:,(\d+))?\}\$", pattern)
     if m:
-        lo = int(m.group(1))
-        hi = int(m.group(2)) if m.group(2) else lo
-        return RegexPlan("range", lo=lo, hi=hi)
-    if pattern.startswith("^"):
-        body = pattern[1:]
-        if body.endswith(".*"):
-            body = body[:-2]
-        if body and not any(ch in _META for ch in body):
-            return RegexPlan("prefix", prefix=body)
+        return RegexPlan("range", lo=int(m.group(1)), hi=int(m.group(2) or m.group(1)))
+    body = pattern[1:].removesuffix(".*")
+    if pattern.startswith("^") and body and not any(ch in _META for ch in body):
+        return RegexPlan("prefix", prefix=body)
     return RegexPlan("general")
 
 
-# --- dialect translation --------------------------------------------------
+# --- the PCRE2 token table ---------------------------------------------------
 #
-# The reference compiles `pattern` with PCRE2 under
-# PCRE2_UTF | PCRE2_UCP | PCRE2_DOTALL | PCRE2_DOLLAR_ENDONLY |
-# PCRE2_NEVER_BACKSLASH_C | PCRE2_ALLOW_EMPTY_CLASS
-# (/root/reference/vendor/core/src/core/regex/regex.cc:45-47). Those flags
-# are the AUTHORITATIVE semantics, and every execution route — Java rlike,
-# the Python-regex pudf fallback, and the DuckDB RE2 oracle — is translated
-# to reproduce them:
-#   DOTALL          → prepend (?s); `.` matches line terminators
-#   UCP             → Java: (?U); Python regex: Unicode default;
-#                     RE2: \d→\p{Nd}, \w→[\p{L}\p{N}_], \s→Unicode ws class
-#   DOLLAR_ENDONLY  → unescaped `$` outside classes → \z (Java/RE2) / \Z (Py)
-#   ALLOW_EMPTY_CLASS → `[]` never matches → (?!) ; `[^]` any char → `.`
-#                     (valid under the prepended (?s))
-# plus two SILENT Java-vs-PCRE2 class divergences:
-#   in-class `[`    → Java nested-class union; PCRE2 literal → escape for Java
-#   in-class `&&`   → Java intersection; PCRE2 literal       → escape for Java
-# A POSIX class (`[[:alpha:]]`) is neither: Java has no such class, and
-# escaping its `[` would make it literal characters, so such a pattern
-# takes the Python route (RE2's are ASCII where UCP's are Unicode: no
-# oracle form either).
-# Patterns carrying an inline multiline flag keep `$` untranslated (PCRE2
-# ignores DOLLAR_ENDONLY under (?m), and so do Java/RE2 with (?m)).
-_RISKY_RE = re.compile(r"\\c[A-Za-z]")  # PCRE2_NEVER_BACKSLASH_C: \c rejected
-_QUANT_RE = re.compile(r"\{\d+(,\d*)?\}")
-_POSIX_CLASS_RE = re.compile(r"\[:\^?[A-Za-z]+:\]")
-_INLINE_M_RE = re.compile(r"\(\?[a-zA-Z-]*m[a-zA-Z-]*[):]")
+# PCRE2 compiles `pattern` under UTF | UCP | DOTALL | DOLLAR_ENDONLY | NEVER_BACKSLASH_C |
+# ALLOW_EMPTY_CLASS (/root/reference/vendor/core/src/core/regex/regex.cc:45-47). `_tokens`
+# reads a pattern as PCRE2 does (`_LEX`: the syntax of each token kind) or raises RegexError
+# (`\C`, `\1` with no group, `x{2,1}`); `_TABLE` renders each token for Java `rlike`, the
+# Python `regex` module and RE2, None where a target has no form.
+# - An escape (`\x{41}`, `\Q…\E`, `\e`, `\cJ`, `\0`, `\101`, ECMA's `\uXXXX`) is one character;
+#   `\NN` refers back only when that many groups precede it, else it is octal. `a{,3}` is
+#   `a{0,3}` (PCRE2 10.43). `\d \w \s \h \v`, POSIX classes and `\p{Xan}` are `_UCP` sets;
+#   a `\p{…}` script or binary property (not a general category) is a Python-only item.
+# - Flags m, s, x are read here and dropped (`$` is `\z`, a newline is LF); n U J xx ^ raise.
+#   Named groups render numbered, as Java names are ASCII alphanumerics.
+# - Java has no form for recursion, subroutine calls, conditionals, `\K`, `(*PRUNE)`,
+#   `(*SKIP)`, branch reset, or a lookbehind holding an unbounded quantifier, a
+#   backreference or `\X`: those take the pandas UDF.
 
 
-def _translate_permissive(pattern: str, target: str) -> str | None:
-    """Rewrite `pattern` from the reference's permissive PCRE2 dialect to an
-    equivalent pattern for `target` ('java' | 'python' | 're2').
-    Returns None when no faithful translation exists for the target."""
-    if target == "re2":
-        # constructs RE2 cannot express at all: backreferences, lookaround,
-        # atomic groups / Java-style named groups, possessive quantifiers.
-        # Detection must not fire on ESCAPED metachars ('\\1' is a literal
-        # backslash + digit, not a backref): drop '\\\\' pairs before the
-        # backref scan, then all remaining escapes before the construct
-        # scans — deletion can only create false positives (conservative
-        # fallback), never hide a real unescaped construct.
-        no_bs_pairs = pattern.replace("\\\\", "")
-        if re.search(r"\\[1-9]", no_bs_pairs):
-            return None
-        unescaped = re.sub(r"\\.", "", no_bs_pairs)
-        if re.search(r"\(\?[=!<>]", unescaped):
-            return None
-        if re.search(r"[*+?}]\+", unescaped) or _POSIX_CLASS_RE.search(pattern):
-            return None
-    dollar = {"java": r"\z", "python": r"\Z", "re2": r"\z"}[target]
-    keep_dollar = bool(_INLINE_M_RE.search(pattern))
-    out = []
-    i, n = 0, len(pattern)
-    in_class = False
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            nxt = pattern[i + 1]
-            if target == "re2":
-                if nxt == "u" and re.match(r"u[0-9a-fA-F]{4}", pattern[i + 1:]):
-                    out.append("\\x{" + pattern[i + 2:i + 6] + "}")
-                    i += 6
-                    continue
-                if nxt in "dD":
-                    out.append("\\p{Nd}" if nxt == "d" else "\\P{Nd}")
-                    i += 2
-                    continue
-                if nxt == "w":
-                    out.append(r"\p{L}\p{N}_" if in_class else r"[\p{L}\p{N}_]")
-                    i += 2
-                    continue
-                if nxt == "W":
-                    if in_class:
-                        return None
-                    out.append(r"[^\p{L}\p{N}_]")
-                    i += 2
-                    continue
-                if nxt == "s":
-                    ws = "\\t\\n\\x0B\\f\\r\\x{85}\\p{Z}"
-                    out.append(ws if in_class else "[" + ws + "]")
-                    i += 2
-                    continue
-                if nxt == "S":
-                    if in_class:
-                        return None
-                    out.append("[^\\t\\n\\x0B\\f\\r\\x{85}\\p{Z}]")
-                    i += 2
-                    continue
-                if nxt in "bB":  # RE2 \b is ASCII-only; PCRE2 UCP is Unicode
-                    return None
-            out.append(c)
-            out.append(nxt)
-            i += 2
-            continue
-        if not in_class:
-            if c == "[":
-                # PCRE2_ALLOW_EMPTY_CLASS: '[]' / '[^]' are complete tokens
-                if pattern.startswith("[]", i):
-                    out.append("(?!)" if target != "re2" else "[^\\x{0}-\\x{10FFFF}]")
-                    i += 2
-                    continue
-                if pattern.startswith("[^]", i):
-                    out.append(".")  # (?s) is prepended — '.' is any char
-                    i += 3
-                    continue
-                in_class = True
-                out.append(c)
-                i += 1
-                continue
-            if c == "$" and not keep_dollar:
-                out.append(dollar)
-                i += 1
-                continue
-            out.append(c)
-            i += 1
-            continue
-        # inside a character class
-        if c == "]":
-            in_class = False
-        elif target == "java" and c == "[":
-            out.append("\\[")
-            i += 1
-            continue
-        elif target == "java" and c == "&":
-            out.append("\\&")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-        continue
-    prefix = {"java": "(?sU)", "python": "(?s)", "re2": "(?s)"}[target]
-    return prefix + "".join(out)
+class RegexError(ValueError):
+    """PCRE2 rejects the pattern."""
 
 
-def _java_dialect_safe(pattern: str) -> bool:
-    if _RISKY_RE.search(pattern) or _POSIX_CLASS_RE.search(pattern):
-        return False
-    # a '{' that does not open a valid quantifier is a PCRE2 literal but a
-    # Java syntax hazard
-    for m in re.finditer(r"(?<!\\)\{", pattern):
-        if not _QUANT_RE.match(pattern, m.start()):
-            return False
-    try:
-        import warnings
+def _raise(msg: str):
+    raise RegexError(msg)
 
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")  # e.g. '[a&&b]' set-op FutureWarning
-            re.compile(pattern.replace("[^]", ".").replace("[]", "(?!)"))
-    except re.error:
-        return False
-    return True
+
+_CATEGORIES = set("C Cc Cf Cn Co Cs L Ll Lm Lo Lt Lu M Mc Me Mn N Nd Nl No P Pc Pd Pe Pf Pi Po Ps "
+                  "S Sc Sk Sm So Z Zl Zp Zs".split())
+_UCP = {  # PCRE2 under UCP, as class bodies: shorthands, POSIX classes, special properties
+    "d": r"\p{Nd}", "w": r"\p{L}\p{N}_", "s": r"\t\n\x0b\f\r\x85\x{180e}\p{Z}",
+    "h": r"\t\x20\xa0\x{1680}\x{180e}\x{2000}-\x{200a}\x{202f}\x{205f}\x{3000}",
+    "v": r"\n-\r\x85\x{2028}\x{2029}", "[:alpha:]": r"\p{L}", "[:digit:]": r"\d", "[:alnum:]": r"\p{L}\p{N}",
+    "[:space:]": r"\s", "[:word:]": r"\w", "[:blank:]": r"\h", "[:upper:]": r"\p{Lu}", "[:lower:]": r"\p{Ll}",
+    "[:cntrl:]": r"\p{Cc}", "[:xdigit:]": "0-9A-Fa-f", "[:ascii:]": r"\x00-\x7f",
+    "[:punct:]": r"\p{P}$+<=>^`|~\xa2-\xa6\xa8\xa9\xac\xae-\xb1\xb4\xb8\xd7\xf7",
+    "[:graph:]": r"\p{L}\p{M}\p{N}\p{P}\p{S}\p{Cf}", "[:print:]": r"\p{L}\p{M}\p{N}\p{P}\p{S}\p{Cf}\p{Zs}",
+    "Any": r"\x00-\x{10ffff}", "L&": r"\p{Lu}\p{Ll}\p{Lt}", "LC": r"\p{Lu}\p{Ll}\p{Lt}", "Xan": r"\p{L}\p{N}",
+    "Xps": r"\s", "Xsp": r"\s", "Xwd": r"\w"}
+_SIMPLE = {"a": "\x07", "b": "\b", "e": "\x1b", "f": "\f", "n": "\n", "r": "\r", "t": "\t"}
+_CHR = (r"\\(?:x\{[0-9a-fA-F]+\}|x[0-9a-fA-F]{0,2}|o\{[0-7]+\}|u[0-9a-fA-F]{4}|c[ -~]|[aefnrt]|0[0-7]{0,2}"
+        r"|N\{U\+[0-9a-fA-F]+\}|[^A-Za-z0-9])")
+_SET = r"\\[dDwWsShHvV]|\\[pP](?:\{\^?[\w&]+\}|[A-Z])"
+_ONE = rf"{_CHR}|\\[b89]|\\[0-7]{{1,3}}|[^\\]"  # one character of a class
+_ITEM = re.compile(rf"(?P<range>({_ONE})-({_ONE}))|(?P<posix>\[[:.=]\^?\w+[:.=]\])|(?P<quote>\\Q.*?(?:\\E|$))"
+                   rf"|(?P<skip>\\E)|(?P<set>{_SET})|(?P<chr>{_ONE})|(?P<bad>\\.?)", re.S | re.A)
+_LEX = re.compile("|".join(f"(?P<{k}>{v})" for k, v in (  # the syntax of each token kind; first match wins
+    ("ws", r"\s+|\#[^\n]*"), ("quote", r"\\Q.*?(?:\\E|$)"), ("skip", r"\\E|\(\?\#[^)]*\)"),
+    ("chr", _CHR), ("num", r"\\[1-9][0-9]*"), ("set", _SET), ("bound", r"\\[bBAzZGXR]|\\N(?!\{)|[.^$|]"),
+    ("cls", r"\[\^?(?:\]|(?:\[[:.=]\^?\w+[:.=]\]|\\Q.*?\\E|\\.|[^\]\\])+\])"),
+    ("never", r"\(\*(?:F|FAIL)\)"), ("py", r"\\K|\(\*(?:PRUNE|SKIP)(?::[^)]*)?\)"),
+    ("call", r"\(\?(?:R|[+-]?\d+|&\w+|P>\w+)\)|\\g(?:<[^>]*>|'[^']*')"),
+    ("ref", r"\\g(?:\{-?\d+\}|-?\d+|\{\w+\})|\\k(?:<\w+>|'\w+'|\{\w+\})|\(\?P=\w+\)"),
+    ("flags", r"\(\?[imsx]*(?:-[imsx]*)?[:)]"), ("named", r"\(\?(?:P?<\w+>|'\w+')"),
+    ("open", r"\((?:\?(?:[>=!|]|<[=!]|(?=\(\?)|\([^)]*\)))?"), ("close", r"\)"),
+    ("q", r"(?:[*+?]|\{(?:\d+(?:,\d*)?|,\d+)\})[+?]?"), ("bad", r"\\.?|\(\*|\["), ("lit", "."))), re.S | re.A)
+_REPEATABLE = {"lit", "cls", "pycls", ".", r"\N", ")", "ref", "call", "never", r"\X", r"\R"}
+
+
+def _char(t: str) -> str:
+    """The character an escape (or a plain character) stands for."""
+    k, body = t[1:2], t[2:].strip("{}").removeprefix("U+")
+    if len(t) == 1 or not k.isalnum() or k in "89":
+        return t[-1]
+    if k in _SIMPLE or k == "c":
+        return chr(ord(body.upper()) ^ 0x40) if k == "c" else _SIMPLE[k]
+    v = int(t[1:] if k.isdigit() else body or "0", 8 if k in "o01234567" else 16)
+    return chr(v) if v <= 0x10FFFF and not 0xD800 <= v <= 0xDFFF else _raise(f"no character {v:#x}")
+
+
+def _items(body: str) -> tuple:
+    """A class body as ``("c", ch)``, ``("r", lo, hi)``, ``("p", property)``, ``("n", complemented)``."""
+    items: list = []
+    for m in _ITEM.finditer(body):
+        t, kind = m.group(), m.lastgroup
+        if (kind == "bad" or kind == "posix" and (t[1] != ":" or t.replace("^", "") not in _UCP)
+                or kind == "range" and _char(m.group(3)) < _char(m.group(2))):
+            _raise(f"PCRE2 rejects {t} in a class")
+        items += (_set(t) if kind in ("posix", "set") else [("r", _char(m.group(2)), _char(m.group(3)))]
+                  if kind == "range" else [("c", ch) for ch in (t[2:].removesuffix("\\E") if kind == "quote"
+                                                                 else _char(t) if kind == "chr" else "")])
+    return tuple(items)
+
+
+@lru_cache(maxsize=None)
+def _set(t: str) -> tuple:
+    """The class items of a shorthand, a POSIX class or a property."""
+    name = t.replace("^", "") if t[0] == "[" else t[2:].strip("{}^") if t[1] in "pP" else t[1].lower()
+    if t[1] in "pP" and name not in _CATEGORIES and not (name[:1].isupper() and name in _UCP):
+        import regex  # a script or binary property: the `regex` module's tables name it, the pandas UDF runs it
+
+        try:
+            items = (("s", regex.compile(rf"\p{{{name}}}") and name),)
+        except regex.error:
+            _raise(f"unknown property {t}")
+    else:
+        items = (("p", name),) if name in _CATEGORIES else _items(_UCP[name])
+    return (("n", items),) if (t[1] in "DWSHVP") != ("^" in t) else items
 
 
 @lru_cache(maxsize=4096)
-def _compiled_permissive_py(pattern: str):
-    """Translate + compile once per distinct pattern: callers invoke
-    permissive_search_py per instance / per property name in driver-side
-    loops (pyeval, lint valid_default/valid_examples), so re-translation
-    per call dominated their cost. None = pattern does not compile."""
+def _tokens(p: str) -> tuple:
+    """``p`` as PCRE2 reads it: ``(kind, text, *value)`` per atom, group edge or quantifier."""
+    toks, stack, names = [], [], {}  # stack: (m, s, x, opener index) per open group
+    groups, i, m, s, x = 0, 0, False, True, False
+    while i < len(p):
+        mt = _LEX.match(p, i)
+        kind, t, i = mt.lastgroup, mt.group(), mt.end()
+        if kind == "ws" and not x:  # white space is literal outside (?x)
+            kind, t, i = "lit", t[0], mt.start() + 1
+        if kind == "num" and not (int(t[1:]) < 10 or t[1] in "89" or int(t[1:]) <= groups):
+            t = "\\" + re.match("[0-7]{1,3}", t[1:]).group()  # \NN with fewer groups before it is octal
+            kind, i = "chr", mt.start() + len(t)
+        if kind in ("quote", "chr", "lit"):
+            toks += [("lit", ch) for ch in (t[2:].removesuffix("\\E") if kind == "quote" else _char(t))]
+        elif kind in ("set", "cls"):
+            neg, items = t[:2] == "[^", _set(t) if kind == "set" else _items(t[2 if t[:2] == "[^" else 1:-1])
+            script = any(leaf[0] == "s" for it in items for leaf in (it[1] if it[0] == "n" else [it]))
+            toks.append(("pycls" if script else "cls", None, neg, items))
+        elif kind == "bound":
+            t = {r"\G": r"\A", ".": "." if s else r"\N"}.get(t, t)
+            toks.append((t + "m" * (m and t in ("^", "$")), t))
+        elif kind in ("ref", "call", "num"):
+            key, kind = re.sub(r"^\\[gk]?|^\(\?(?:P[=>]|&)?|[{}<>'()]", "", t), kind.replace("num", "ref")
+            key = (0 if key == "R" else groups + int(key) + (key[0] == "-") if key[:1] in ("+", "-")
+                   else int(key) if key.isdigit() else key)
+            toks.append((kind, "(?R)" if key == 0 else f"(?{key})" if isinstance(key, int) else f"(?&{key})", key))
+        elif kind == "flags":
+            on, _, off = t[2:-1].partition("-")
+            stack += [(m, s, x, len(toks))] if t[-1] == ":" else []
+            m, s, x = [f in on or f not in off and old for f, old in zip("msx", (m, s, x))]
+            text = "(?" + "i" * ("i" in on) + "-i" * ("i" in off) + t[-1]
+            toks += [] if text == "(?)" else [("grp" if t[-1] == ":" else "flag", text)]
+        elif kind in ("named", "open"):
+            name = t[3 + (t[2] == "P"):-1] if kind == "named" else None
+            if kind == "named" and (not name.isidentifier() or len(name) > 32 or name in names):
+                _raise(f"bad group name {name!r}")
+            groups += t == "(" or kind == "named"
+            names.update({name: groups} if name else {})
+            sort = {"(?:": "grp", "(?>": "atomic", "(?|": "py", "(?": "py"}.get(t, "lb" if "<" in t else "look")
+            toks.append(("(" if t == "(" or name else "py" if t[:3] == "(?(" else sort, t, name))
+            stack.append((m, s, x, len(toks) - 1))
+        elif kind == "close":
+            m, s, x, _ = stack.pop() if stack else _raise("unmatched )")
+            toks.append((")", ")"))
+        elif kind == "q":
+            lo, comma, hi = ({"*": "0,", "+": "1,", "?": "0,1"}.get(t[0]) or t[1:t.find("}")]).partition(",")
+            lo, hi = int(lo or 0), int(hi) if hi else None if comma else int(lo)
+            if not toks or toks[-1][0] not in _REPEATABLE or hi is not None and hi < lo or max(lo, hi or 0) > 65535:
+                _raise(f"bad quantifier {t}")
+            t = "{0" + t[1:] if t[:2] == "{," else t
+            toks.append(("q", t, t[1:].endswith("+") or max(lo, hi or 0) > 1000, hi is None))
+        elif kind not in ("ws", "skip"):
+            toks.append((kind, t) if kind != "bad" else _raise(f"PCRE2 rejects {t!r} here"))
+        if toks and (toks[-1][0] in ("ref", r"\X") or toks[-1][0] == "q" and toks[-1][3]):
+            for *_, k in stack:  # java.util.regex needs a lookbehind of bounded length
+                toks[k] = ("py",) + toks[k][1:] if toks[k][0] == "lb" else toks[k]
+    if stack:
+        _raise("missing )")
+    for tok in toks:
+        num = names.get(tok[2], tok[2]) if tok[0] in ("ref", "call") else 0
+        if not isinstance(num, int) or not (tok[0] == "ref") <= num <= groups:
+            _raise(f"reference to non-existent group {tok[2]}")
+    return tuple(("ref", None, names.get(t[2], t[2])) if t[0] == "ref" else t for t in toks)
+
+
+def _item(it: tuple, t: str, meta: str = "\\]^-[&") -> str:
+    """A class item, or with ``meta=_META`` a literal, rendered for ``t``."""
+    if it[0] in ("p", "s", "n"):
+        return f"\\{'P' if it[0] == 'n' else 'p'}{{{(it[1][0] if it[0] == 'n' else it)[1]}}}"
+    return "-".join("\\" + c if c in meta else c if c.isprintable() and not c.isspace()
+                    else f"\\U{ord(c):08x}" if t == "python" else f"\\x{{{ord(c):x}}}" for c in it[1:])
+
+
+def _cls(tok: tuple, t: str) -> str | None:
+    """A bracket class; the complement of a many-item set (`\\W`) joins by | or lookahead."""
+    sets = [it[1] for it in tok[3] if it[0] == "n" and (len(it[1]) > 1 or it[1][0][0] not in "ps")]
+    body = "".join(_item(it, t) for it in tok[3] if it[0] != "n" or it[1] not in sets)
+    nots = ["".join(_item(i, t) for i in n) for n in sets]
+    if not nots:
+        return f"[{'^' * tok[2]}{body}]" if body else "(?s:.)" if tok[2] else _TABLE["never"][_T.index(t)]
+    if not tok[2]:
+        return "(?:" + "|".join([f"[{body}]"] * bool(body) + [f"[^{b}]" for b in nots]) + ")"
+    ahead = "".join(f"(?=[{b}])" for b in nots)
+    return None if t == "re2" else f"(?:{ahead}{f'[^{body}]' if body else '(?s:.)'})"
+
+
+_W = "[" + _UCP["w"] + "]"  # \w under UCP, the same class in all three targets: \b and \B look around it
+_T = ("java", "python", "re2")
+_TABLE = {  # token kind: its (java, python, re2) rendering; True: the token's text, None: no form
+    "prefix": ("(?sU)", "(?s)", "(?s)"),
+    "lit": (lambda tok, t: _item(tok, t, _META),) * 3, "cls": (_cls,) * 3, "pycls": (None, _cls, None),
+    **dict.fromkeys((".", "|", ")", "grp", "flag", "^", r"\A"), (True,) * 3), r"\N": (r"[^\n]",) * 3,
+    "(": ("(", lambda tok, t: f"(?P<{tok[2]}>" if tok[2] else "(", "("),
+    "look": (True, True, None), "lb": (True, True, None), "atomic": (True, True, None),
+    "q": (True, True, lambda tok, t: None if tok[2] else tok[1]),
+    "ref": (lambda tok, t: f"(?:\\{tok[2]})",) * 2 + (None,),
+    "call": (None, True, None), "py": (None, True, None), "never": ("(?!)", "(?!)", r"[^\x00-\x{10ffff}]"),
+    r"\b": (f"(?:(?<={_W})(?!{_W})|(?<!{_W})(?={_W}))",) * 2 + (None,),
+    r"\B": (f"(?:(?<={_W})(?={_W})|(?<!{_W})(?!{_W}))",) * 2 + (None,),
+    r"\X": (r"\X", r"\X", None), r"\R": (r"(?>\r\n|[\n\x0b\f\r\x85\u2028\u2029])",) * 2 + (None,),
+    "$": (r"\z", r"\Z", r"\z"), r"\z": (r"\z", r"\Z", r"\z"), r"\Z": (r"(?=\n?\z)", r"(?=\n?\Z)", None),
+    "^m": (r"(?:^|(?<=\n)(?!\z))", r"(?:^|(?<=\n)(?!\Z))", None), "$m": (r"(?=\n|\z)", r"(?=\n|\Z)", "(?m:$)"),
+}
+
+
+@lru_cache(maxsize=4096)
+def _render(pattern: str, target: str) -> str | None:
+    """``pattern`` for ``target``; None if PCRE2 rejects it or a token has no form there."""
     try:
-        import regex as _re_mod
-    except ImportError:  # pragma: no cover
-        import re as _re_mod
-    translated = _translate_permissive(pattern, "python")
-    try:
-        return _re_mod.compile(translated)
-    except Exception:
+        toks = _tokens(pattern)
+    except RegexError:
         return None
+    col = _T.index(target)
+    out = [r(tok, target) if callable(r) else tok[1] if r is True else r
+           for tok in toks for r in [_TABLE[tok[0]][col]]]
+    return None if None in out else _TABLE["prefix"][col] + "".join(out)
 
 
 def permissive_search_py(pattern: str, value: str | None) -> bool | None:
-    """Driver-side reference evaluator: unanchored search with the Python
-    `regex` module under the translated permissive-PCRE2 semantics. This is
-    the oracle the divergence corpus (tests/test_regex_dialect.py) holds
-    every execution route to."""
-    if value is None:
-        return None
-    rx = _compiled_permissive_py(pattern)
-    if rx is None:
+    """The driver-side oracle: unanchored search of the Python rendering (`regex` caches compiles)."""
+    import regex
+    rendered = _render(pattern, "python")
+    try:
+        return None if value is None else bool(rendered and regex.search(rendered, value))
+    except regex.error:  # a rendering the `regex` module cannot compile matches nothing
         return False
-    return bool(rx.search(value))
 
 
 def regex_compiles(pattern: str) -> bool:
-    """Whether ``pattern`` is a valid regular expression: it compiles under
-    the permissive-PCRE2 dialect, as `pattern` does. The one validity rule
-    for `pattern`, `patternProperties` keys, `format: "regex"`, lint and
-    the metaschema check."""
-    return _compiled_permissive_py(pattern) is not None
+    """Whether PCRE2 compiles ``pattern``: the one validity rule (lint, metaschema, `format`)."""
+    return _render(pattern, "python") is not None
 
 
 def _pandas_predicate(fn, col: Column) -> Column:
-    """Boolean Column: ``fn`` of each non-NULL value of ``col``, in an
-    Arrow-batched pandas UDF. The one Python route of compiled plans."""
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
+    """``fn`` of each non-NULL value of ``col`` in a pandas UDF: the one Python route of plans."""
+    @F.pandas_udf("boolean")
     def probe(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if v is None else fn(v))
-
     return probe(col)
 
 
-def regex_ok(col: Column) -> Column:
-    """Boolean Column: the string ``col`` is a valid regular expression
-    (``regex_compiles``)."""
-    return _pandas_predicate(regex_compiles, col)
+regex_ok = partial(_pandas_predicate, regex_compiles)  # Boolean Column: the string is a valid regex
 
 
 def pattern_ok(col: Column, pattern: str) -> Column:
-    """Boolean Column: `col` matches `pattern` (unanchored search,
-    permissive-PCRE2 semantics — see the dialect-translation note above).
-
-    Classification ladder (regex.h:31-69 analogue): prefix/nonempty/range
-    fast paths stay in codegen (exactly correct under DOTALL +
-    DOLLAR_ENDONLY, the same flags that make the reference's own
-    NonEmpty/Range classes sound); general Java-safe patterns use `rlike`
-    with the (?sU)+`\\z` translation; residuals route to a PCRE pudf."""
+    """Boolean Column: `col` matches `pattern` (unanchored): a fast path, `rlike` of the Java
+    rendering, or the pandas UDF where there is none; a pattern PCRE2 rejects matches nothing."""
     plan = classify_pattern(pattern)
     if plan.kind == "prefix":
         return col.startswith(plan.prefix)
     if plan.kind == "nonempty":
         return F.length(col) >= 1
     if plan.kind == "range":
-        if plan.hi is None:
-            return col.isNotNull()
-        return F.length(col).between(plan.lo, plan.hi)
+        return col.isNotNull() if plan.hi is None else F.length(col).between(plan.lo, plan.hi)
+    if not regex_compiles(pattern):
+        return F.when(col.isNotNull(), F.lit(False))
     if pattern_in_python(pattern):
-        # the Python `regex` module: PCRE2-compatible, the reference's
-        # engine family, under the same translation as the JVM route
         return _pandas_predicate(partial(permissive_search_py, pattern), col)
-    return col.rlike(_translate_permissive(pattern, "java"))
+    return col.rlike(_render(pattern, "java"))
 
 
 def pattern_in_python(pattern: str) -> bool:
-    """Whether ``pattern_ok`` routes ``pattern`` to the Python-regex pandas
-    UDF: a general pattern that is not Java-safe."""
-    return classify_pattern(pattern).kind == "general" and not _java_dialect_safe(pattern)
+    """Whether ``pattern_ok`` runs ``pattern`` in the pandas UDF: it holds a token Java lacks."""
+    return classify_pattern(pattern).kind == "general" and regex_compiles(pattern) and not _render(pattern, "java")
 
 
 def pattern_duckdb(col_sql: str, pattern: str) -> str:
-    """The same predicate in DuckDB SQL (for oracle queries), under the
-    same permissive-dialect translation (RE2 target). Patterns RE2 cannot
-    express faithfully (\\b/\\B under UCP) have no oracle form — raises so
-    the query author picks an RE2-expressible fixture pattern."""
+    """The predicate in DuckDB SQL for oracle queries; raises when RE2 has no form for it."""
     plan = classify_pattern(pattern)
     if plan.kind == "prefix":
         esc = plan.prefix.replace("'", "''").replace("%", "\\%").replace("_", "\\_")
@@ -311,7 +311,7 @@ def pattern_duckdb(col_sql: str, pattern: str) -> str:
         if plan.hi is None:
             return f"({col_sql} IS NOT NULL)"
         return f"(length({col_sql}) BETWEEN {plan.lo} AND {plan.hi})"
-    translated = _translate_permissive(pattern, "re2")
+    translated = _render(pattern, "re2")
     if translated is None:
         raise ValueError(f"pattern {pattern!r} has no faithful RE2 oracle form")
     return f"regexp_matches({col_sql}, '{translated.replace(chr(39), chr(39)*2)}')"

@@ -14,7 +14,7 @@ import copy
 import re
 from typing import Union
 
-from jsonschema_spark.plans.frame import Frame, locate, root_base, walk
+from jsonschema_spark.plans.frame import Frame, SchemaError, locate, root_base, walk
 from jsonschema_spark.plans.upgrade import _rewrite_refs
 
 
@@ -25,6 +25,14 @@ def _slug(uri: str, taken: set) -> str:
         i += 1
         name = f"{base}-{i}"
     return name
+
+
+def _root_uri(root: dict) -> str:
+    uri = root_base(root)
+    if not uri:
+        raise SchemaError("bundle: an embedded resource refers outside the document, "
+                          "so the root needs an `$id`")
+    return uri
 
 
 def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
@@ -44,9 +52,9 @@ def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
     pending = [(out, root_base(out))]
     while pending:
         doc, base = pending.pop()
-        refs = [(node, node_base) for _, node, node_base, _ in walk(doc, base)
+        refs = [(node, node_base, resource) for _, node, node_base, resource in walk(doc, base)
                 if isinstance(node.get("$ref"), str) and not node["$ref"].startswith("#")]
-        for node, node_base in refs:
+        for node, node_base, resource in refs:
             uri, frag = locate(node["$ref"], node_base)
             if local.resource(uri) is not None:
                 continue
@@ -67,5 +75,8 @@ def bundle(schema: Union[dict, bool], resolver: dict) -> Union[dict, bool]:
                 out.setdefault("$defs", {})[slug] = inlined
                 pending.append((inlined, uri))
             pointer = not frag or frag.startswith("/")
-            node["$ref"] = f"#/$defs/{mapping[uri]}{frag}" if pointer else f"#{frag}"
+            # inside an embedded `$id` resource `#` is that resource: name
+            # the root by its URI to reach the root's $defs
+            at = "" if resource is doc else _root_uri(out)
+            node["$ref"] = f"{at}#/$defs/{mapping[uri]}{frag}" if pointer else f"{at}#{frag}"
     return out

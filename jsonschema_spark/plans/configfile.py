@@ -83,12 +83,3 @@ def resolver_from_config(cfg: ProjectConfig) -> dict:
             registry[uri] = _load_schema_file(path)
     return registry
 
-
-def apply_default_dialect(schema: Union[dict, bool], cfg: ProjectConfig) -> Union[dict, bool]:
-    """Stamp the config's defaultDialect onto a schema that lacks $schema
-    (the reference resolves keyword behavior through it)."""
-    if isinstance(schema, dict) and cfg.default_dialect and "$schema" not in schema:
-        out = dict(schema)
-        out["$schema"] = cfg.default_dialect
-        return out
-    return schema

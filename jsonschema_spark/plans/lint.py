@@ -422,11 +422,6 @@ def lint_schema(schema: Union[dict, bool], resolver: dict = None,
     return out
 
 
-_FIXABLE = {"enum_with_type", "const_with_type", "const_with_enum", "duplicate_enum_values",
-            "duplicate_required_values", "single_branch_combinator", "if_without_consequence",
-            "enum_to_const", "then_empty", "else_empty", "title_trim", "description_trim",
-            "comment_trim", "duplicate_examples", "*_default"}
-
 _FIX_DEFAULTS = {
     "contentSchema": (True, {}),
     "dependencies": ({},),

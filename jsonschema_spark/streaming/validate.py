@@ -22,16 +22,6 @@ from jsonschema_spark.operators.validate import _VALID_TMP, _verdict_aggs, valid
 from jsonschema_spark.plans.compiler import CompiledSchema
 
 
-def validate_stream(
-    sdf: DataFrame,
-    schema: Union[dict, bool, CompiledSchema],
-    doc_col: Optional[str] = None,
-    valid_col: str = "valid",
-) -> DataFrame:
-    """Add the boolean verdict to a streaming DataFrame (stateless)."""
-    return validate(sdf, schema, doc_col=doc_col, valid_col=valid_col)
-
-
 def windowed_verdict_counts(
     sdf: DataFrame,
     schema: Union[dict, bool, CompiledSchema],

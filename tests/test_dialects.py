@@ -477,23 +477,23 @@ def test_config_file_resolver(tmp_path, spark):
 
 def test_regex_residual_routing(spark):
     """Permissive-dialect empty classes hold end-to-end: [] never matches,
-    [^] matches anything. Since round 3 both stay JVM-side — the dialect
-    translator rewrites them to (?!) / (?s:.) — and only genuinely
-    Java-uncompilable patterns (dangling braces, \\c escapes) route to the
-    PCRE pudf (tests/test_regex_dialect.py is the full corpus)."""
+    [^] matches anything. Both stay JVM-side, rendered as (?!) / (?s:.),
+    and so do a dangling brace (an escaped literal) and \\cJ (one
+    character): only a token java.util.regex lacks routes to the pandas
+    UDF (tests/test_regex_dialect.py is the full corpus)."""
     schema = {"properties": {"s": {"pattern": "a[^]z"}}}
     docs = spark.createDataFrame(
         [(1, '{"s": "a!z"}'), (2, '{"s": "az"}')], "id long, doc string"
     )
     got = {r["id"]: r["valid"] for r in validate(docs, schema, doc_col="doc").collect()}
     assert got == {1: True, 2: False}
-    from jsonschema_spark.functions.strings import _java_dialect_safe
+    from jsonschema_spark.functions.strings import pattern_in_python
 
-    assert _java_dialect_safe("^a{2,3}b$")
-    assert _java_dialect_safe("[]")       # translated to (?!) — JVM route
-    assert _java_dialect_safe("[^]")      # translated to .  under (?s)
-    assert not _java_dialect_safe("a{")   # Java literal-brace hazard
-    assert not _java_dialect_safe(r"\cJ")  # PCRE2_NEVER_BACKSLASH_C
+    assert not pattern_in_python("^a{2,3}b$")
+    assert not pattern_in_python("[]")     # rendered (?!) — JVM route
+    assert not pattern_in_python("[^]")    # rendered (?s:.)
+    assert not pattern_in_python("a{")     # a literal brace, escaped for Java
+    assert not pattern_in_python(r"\cJ")   # the control character U+000A
 
 
 def test_dynamic_ref_static_resolution(spark):
@@ -827,15 +827,30 @@ EMBEDDED = {
 BASE_RELATIVE = {"$id": "https://e.com/a.json", "properties": {"x": {"$ref": "b.json"}}}
 BASE_RELATIVE_REGISTRY = {"https://e.com/b.json": {
     "$id": "https://e.com/b.json", "$defs": {"p": {"minimum": 0}}, "$ref": "#/$defs/p"}}
+EMBEDDED_EXTERNAL = {
+    "$id": "https://e.com/root.json",
+    "$defs": {"i": {"$id": "inner.json", "$ref": "https://e.com/b.json"}},
+    "properties": {"x": {"$ref": "inner.json"}},
+}
 
 
-@pytest.mark.parametrize("schema,registry", [(EMBEDDED, {}), (BASE_RELATIVE, BASE_RELATIVE_REGISTRY)],
-                         ids=["embedded resource", "base-relative ref"])
+@pytest.mark.parametrize("schema,registry", [(EMBEDDED, {}), (BASE_RELATIVE, BASE_RELATIVE_REGISTRY),
+                                             (EMBEDDED_EXTERNAL, BASE_RELATIVE_REGISTRY)],
+                         ids=["embedded resource", "base-relative ref", "external ref in embedded resource"])
 def test_bundle_resolves_refs_like_compile(spark, schema, registry):
     """bundle resolves a `$ref` against its resource's base URI, and finds
     an embedded `$id` resource in the document: the bundle gives the
-    verdicts of the schema compiled with the registry and of validate_py."""
+    verdicts of the schema compiled with the registry and of validate_py.
+    An external ref inside an embedded resource reaches the root's $defs:
+    the bundle refers to nothing outside itself."""
     from jsonschema_spark.plans.pyeval import validate_py
+    from jsonschema_spark.sources.http_resolver import resolve_remote_refs
+
+    def fetch(uri):
+        raise AssertionError(f"fetched {uri}")
+
+    closed = bundle(schema, registry)
+    assert resolve_remote_refs(closed, fetch=fetch) == {}
 
     insts = [{"x": 1}, {"x": -1}, {"x": "a"}, {}]
     docs = spark.createDataFrame([(i, json.dumps(v)) for i, v in enumerate(insts)],
@@ -845,8 +860,17 @@ def test_bundle_resolves_refs_like_compile(spark, schema, registry):
         return [r["valid"] for r in validate(docs, cs, doc_col="doc").orderBy("i").collect()]
 
     want = [validate_py(schema, v, resolver=registry) for v in insts]
-    assert verdicts(bundle(schema, registry)) == verdicts(compile_schema(schema, resolver=registry)) == want
+    assert verdicts(closed) == verdicts(compile_schema(schema, resolver=registry)) == want
     assert len(set(want)) == 2
+
+
+def test_bundle_needs_a_root_id_to_reach_it_from_an_embedded_resource():
+    """Without a root `$id` nothing inside an embedded resource can name
+    the root's $defs: bundle raises rather than write a ref that resolves
+    inside the embedded resource."""
+    schema = {k: v for k, v in EMBEDDED_EXTERNAL.items() if k != "$id"}
+    with pytest.raises(SchemaError, match="root needs an `\\$id`"):
+        bundle(schema, BASE_RELATIVE_REGISTRY)
 
 
 def test_remote_refs_skip_embedded_resources():

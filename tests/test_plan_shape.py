@@ -516,3 +516,28 @@ def test_formats_are_python_free(spark, no_codegen_fallback, tmp_path):
             assert "EvalPython" not in plan, (doc_col, plan)
             assert set(re.findall(r"\[codegen id : (\d+)\]", plan)) == {"1"}, (doc_col, plan)
             assert len(out.collect()) == len(values)
+
+
+def test_unicode_property_pattern_is_python_free(spark, no_codegen_fallback, tmp_path):
+    """A `\\p{…}` `pattern` runs as `rlike`: flat and tree, its plan has no
+    Python evaluation and one whole-stage codegen stage, and
+    ``plans/inspect.py`` labels it a column expression, not ``pandas``."""
+    import json
+
+    from jsonschema_spark import inspect_schema
+
+    pattern = r"^\p{Lu}\p{Ll}+$"
+    values = ["Émile", "émile", "ÉMILE"]
+    flat = str(tmp_path / "flat")
+    spark.createDataFrame([(v,) for v in values], "name string").write.parquet(flat)
+    tree = str(tmp_path / "tree")
+    spark.createDataFrame([(json.dumps({"name": v}),) for v in values], "doc string").write.parquet(tree)
+    schema = {"properties": {"name": {"type": "string", "pattern": pattern}}}
+    for path, doc_col in ((flat, None), (tree, "doc")):
+        out = validate(spark.read.parquet(path), schema, doc_col=doc_col).select("valid")
+        plan = _plan(out)
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (doc_col, plan)
+        assert set(re.findall(r"\[codegen id : (\d+)\]", plan)) == {"1"}, (doc_col, plan)
+        assert sorted(r.valid for r in out.collect()) == [False, False, True], doc_col
+    strategies = {r["keyword"]: r["strategy"] for r in inspect_schema(schema)}
+    assert strategies["pattern"] == "column"

@@ -4,23 +4,23 @@ The reference compiles `pattern` with PCRE2 under
 PCRE2_UTF | PCRE2_UCP | PCRE2_DOTALL | PCRE2_DOLLAR_ENDONLY |
 PCRE2_NEVER_BACKSLASH_C | PCRE2_ALLOW_EMPTY_CLASS
 (/root/reference/vendor/core/src/core/regex/regex.cc:45-47). Java's
-`rlike` dialect silently diverges from those flags in at least five ways:
-`.` vs line terminators (DOTALL), `$` before a trailing newline
-(DOLLAR_ENDONLY), ASCII-default \\d/\\w/\\s/\\b (UCP), in-class `[`
-(Java nested-union vs PCRE2 literal) and in-class `&&` (Java intersection
-vs PCRE2 literal). This suite is the committed evidence that the engine's
-routing + translation (functions/strings.py:_translate_permissive) draws
-the boundary correctly:
+`rlike` dialect silently diverges from those flags in many ways: `.` vs
+line terminators (DOTALL), `$` before a trailing newline
+(DOLLAR_ENDONLY), ASCII-default or Java-Unicode \\d/\\w/\\s/\\b (UCP),
+in-class `[` and `&&`, `\\0` and `\\101` (octal in PCRE2). One PCRE2
+tokenizer (functions/strings.py `_tokens`) reads every pattern, and one
+token table renders it for Java `rlike`, the Python `regex` module and
+RE2. This suite is the committed evidence that the table is right:
 
 1. a hand-derived corpus pins the PERMISSIVE-dialect expected verdicts
-   (each case annotated with the flag it exercises);
+   (each case annotated with the flag or token kind it exercises; none is
+   copied from an oracle, since the oracles share the tokenizer);
 2. the engine (pattern_ok through a real Spark plan — fast paths, the
-   translated Java route, and the pudf fallback alike) must reproduce
-   every corpus verdict;
+   Java rendering, and the pandas UDF alike) must reproduce every corpus
+   verdict, and so must the Python and RE2 renderings;
 3. a generated pattern grammar (anchors × atoms × quantifiers) is swept
    against the driver-side permissive evaluator (permissive_search_py) —
-   any silent Java-dialect divergence that routing fails to translate or
-   deflect shows up as a mismatch here.
+   a Java rendering that diverges from the Python one shows up here.
 """
 
 from __future__ import annotations
@@ -114,6 +114,41 @@ CORPUS = [
     ("^[[:alpha:]]+$", "ÄB", True, "posix-class-UCP"),
     ("[[:^alpha:]]", "ab", False, "posix-class-negated"),
     ("[[:^alpha:]]", "a1", True, "posix-class-negated"),
+    # octal versus backreference, by PCRE2's rule: \1-\9 refer back, \NN only
+    # when that many groups precede it (else octal), \0dd is octal
+    ("\\0", "\u0000", True, "octal-NUL"),
+    ("\\0", "0", False, "octal-NUL"),
+    ("^\\101$", "A", True, "octal-not-backref"),
+    ("^\\101$", "x", False, "octal-not-backref"),
+    ("\\12", "\n", True, "octal-no-groups"),
+    ("\\12", "12", False, "octal-no-groups"),
+    ("(a)\\1", "aa", True, "backref"),
+    ("(a)\\1", "ab", False, "backref"),
+    # one UCP table: \w and \b count \p{N} (U+00B2 is No); [[:digit:]] is
+    # \p{Nd} and [[:alpha:]] is \p{L} (U+216B is Nl)
+    (r"^x\w$", "x²", True, "UCP-w-No"),
+    (r"x\b", "x²", False, "UCP-b-No"),
+    ("^[[:digit:]]+$", "٣", True, "posix-digit-UCP"),
+    ("^[[:alpha:]]+$", "Ⅻ", False, "posix-alpha-UCP"),
+    (r"^\p{Lu}\p{Ll}+$", "Abc", True, "property"),
+    (r"^\p{Lu}\p{Ll}+$", "ABc", False, "property"),
+    (r"^\p{Greek}+$", "αβ", True, "script-property"),
+    (r"^\p{Greek}+$", "ab", False, "script-property"),
+    # one row per token kind
+    (r"\x{41}", "A", True, "hex-brace"),
+    (r"\Q.+\E", ".+", True, "quote"),
+    (r"\Q.+\E", "ab", False, "quote"),
+    (r"\e", "\x1b", True, "escape-char"),
+    (r"\cJ", "\n", True, "control-char"),
+    (r"\N", "\n", False, "not-newline"),
+    (r"\N", "a", True, "not-newline"),
+    (r"(?<n>a)\k<n>", "aa", True, "named-backref"),
+    (r"(?<n>a)\k<n>", "ab", False, "named-backref"),
+    (r"(?<a_b>x)\k<a_b>", "xx", True, "named-backref-underscore"),
+    ("a{,3}", "b", True, "brace-upper-only"),
+    ("^a{,3}$", "aaaa", False, "brace-upper-only"),
+    ("a{", "a", False, "dangling-brace"),
+    (r"\C", "C", False, "NEVER_BACKSLASH_C-invalid"),
 ]
 
 
@@ -188,6 +223,22 @@ def test_generated_sweep_engine_matches_permissive(spark):
     assert not bad, f"{len(bad)} divergences, first 10: {bad[:10]}"
 
 
+@pytest.mark.parametrize("pattern", ["\\0", "^\\101$"])
+def test_octal_escapes_validate_like_validate_py(spark, pattern):
+    """An octal escape neither aborts a `validate` job nor reads as a
+    backreference: flat and tree verdicts equal ``validate_py``."""
+    from jsonschema_spark import validate, validate_py
+
+    schema = {"type": "string", "pattern": pattern}
+    values = ["\u0000", "A", "x"]
+    want = [validate_py(schema, v) for v in values]
+    flat = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
+    tree = spark.createDataFrame([(i, json.dumps(v)) for i, v in enumerate(values)], "i long, doc string")
+    got_flat = [r.valid for r in validate(flat, {"properties": {"s": schema}}).orderBy("i").collect()]
+    got_tree = [r.valid for r in validate(tree, schema, doc_col="doc").orderBy("i").collect()]
+    assert got_flat == got_tree == want == [v == {"\\0": "\u0000", "^\\101$": "A"}[pattern] for v in values]
+
+
 def test_duckdb_oracle_translation_matches():
     """The RE2 oracle translation agrees with the permissive dialect on the
     corpus (skipping \\b/\\B patterns, which pattern_duckdb refuses)."""
@@ -226,8 +277,8 @@ def test_posix_class_tree_matches_validate_py(spark):
         "abc": True, "a]": False, "ÄB": True, "1": False, ":": False}
 
 
-# (regex, valid): valid iff it compiles as `pattern` does, under the
-# permissive-PCRE2 dialect (the Python `regex` module)
+# (regex, valid): valid iff PCRE2 compiles it, as the tokenizer
+# (`strings.regex_compiles`) reads it for every route
 VALIDITY = [
     ("^a(b|c)*$", True),
     (r"\p{L}+", True),
