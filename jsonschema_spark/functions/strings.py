@@ -1,22 +1,39 @@
-"""String helpers: regex fast-path classification and the PCRE2 token table.
+"""String helpers: regex fast-path classification and code-point lengths.
 
-As the reference classifies regexes into Prefix / NonEmpty / Range / PCRE2
-(/root/reference/vendor/core/src/core/regex/include/sourcemeta/core/regex.h:31-69),
-`^literal`, `.+` and `^.{a,b}$` (code points, as `JSON::size(String)`) stay
-in codegen; every other pattern goes through one PCRE2 tokenizer and its table.
+The reference classifies compiled regexes into Prefix / NonEmpty / Range /
+general-PCRE2 variants so common patterns skip the regex engine entirely
+(/root/reference/vendor/core/src/core/regex/include/sourcemeta/core/regex.h:31-69).
+We reproduce the same strategy: `^literal` → `startswith` (stays in codegen
+with no regex state machine), `.+`-likes → `length >= 1`, `^.{a,b}$` →
+`length between`, everything else → one PCRE2 tokenizer whose token table
+(see the note below) renders it for `rlike`, or, where a token has no Java
+form, for a Python `regex` pandas UDF.
+
+String lengths are Unicode code points, not bytes, matching
+`JSON::size(String)` (/root/reference/vendor/core/src/core/json/json_value.cc:509-524).
+Spark's `length` on StringType already counts code points; the trap the
+survey flags (byte-length in Arrow UDFs) is avoided by keeping length checks
+JVM-side.
 """
 
 from __future__ import annotations
 
 import re
-from collections import namedtuple
+from dataclasses import dataclass
 from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
 
 _META = set(".^$*+?()[]{}|\\")
-RegexPlan = namedtuple("RegexPlan", "kind prefix lo hi", defaults=(None, None, None))
+
+
+@dataclass(frozen=True)
+class RegexPlan:
+    kind: str  # 'prefix' | 'nonempty' | 'range' | 'general'
+    prefix: str | None = None
+    lo: int | None = None
+    hi: int | None = None
 
 
 def classify_pattern(pattern: str) -> RegexPlan:
@@ -26,10 +43,15 @@ def classify_pattern(pattern: str) -> RegexPlan:
         return RegexPlan("nonempty")
     m = re.fullmatch(r"\^\.\{(\d+)(?:,(\d+))?\}\$", pattern)
     if m:
-        return RegexPlan("range", lo=int(m.group(1)), hi=int(m.group(2) or m.group(1)))
-    body = pattern[1:].removesuffix(".*")
-    if pattern.startswith("^") and body and not any(ch in _META for ch in body):
-        return RegexPlan("prefix", prefix=body)
+        lo = int(m.group(1))
+        hi = int(m.group(2)) if m.group(2) else lo
+        return RegexPlan("range", lo=lo, hi=hi)
+    if pattern.startswith("^"):
+        body = pattern[1:]
+        if body.endswith(".*"):
+            body = body[:-2]
+        if body and not any(ch in _META for ch in body):
+            return RegexPlan("prefix", prefix=body)
     return RegexPlan("general")
 
 
@@ -45,7 +67,10 @@ def classify_pattern(pattern: str) -> RegexPlan:
 #   `a{0,3}` (PCRE2 10.43). `\d \w \s \h \v`, POSIX classes and `\p{Xan}` are `_UCP` sets;
 #   a `\p{…}` script or binary property (not a general category) is a Python-only item.
 # - Flags m, s, x are read here and dropped (`$` is `\z`, a newline is LF); n U J xx ^ raise.
-#   Named groups render numbered, as Java names are ASCII alphanumerics.
+#   A change of `i` lasts to the end of its group, across `|`, on every target: the `regex`
+#   module runs as VERSION1 (scoped flags, backreferences into an open group) without full
+#   case folding, and a class escapes its set operators. Named groups render numbered, as
+#   Java names are ASCII alphanumerics.
 # - Java has no form for recursion, subroutine calls, conditionals, `\K`, `(*PRUNE)`,
 #   `(*SKIP)`, branch reset, or a lookbehind holding an unbounded quantifier, a
 #   backreference or `\X`: those take the pandas UDF.
@@ -53,10 +78,6 @@ def classify_pattern(pattern: str) -> RegexPlan:
 
 class RegexError(ValueError):
     """PCRE2 rejects the pattern."""
-
-
-def _raise(msg: str):
-    raise RegexError(msg)
 
 
 _CATEGORIES = set("C Cc Cf Cn Co Cs L Ll Lm Lo Lt Lu M Mc Me Mn N Nd Nl No P Pc Pd Pe Pf Pi Po Ps "
@@ -88,18 +109,26 @@ _LEX = re.compile("|".join(f"(?P<{k}>{v})" for k, v in (  # the syntax of each t
     ("flags", r"\(\?[imsx]*(?:-[imsx]*)?[:)]"), ("named", r"\(\?(?:P?<\w+>|'\w+')"),
     ("open", r"\((?:\?(?:[>=!|]|<[=!]|(?=\(\?)|\([^)]*\)))?"), ("close", r"\)"),
     ("q", r"(?:[*+?]|\{(?:\d+(?:,\d*)?|,\d+)\})[+?]?"), ("bad", r"\\.?|\(\*|\["), ("lit", "."))), re.S | re.A)
+_REF_KEY = re.compile(r"^\\[gk]?|^\(\?(?:P[=>]|&)?|[{}<>'()]")  # the text around a ref's or call's key
 _REPEATABLE = {"lit", "cls", "pycls", ".", r"\N", ")", "ref", "call", "never", r"\X", r"\R"}
 
 
 def _char(t: str) -> str:
     """The character an escape (or a plain character) stands for."""
-    k, body = t[1:2], t[2:].strip("{}").removeprefix("U+")
-    if len(t) == 1 or not k.isalnum() or k in "89":
+    if len(t) == 1 or not t[1].isalnum() or t[1] in "89":
         return t[-1]
-    if k in _SIMPLE or k == "c":
-        return chr(ord(body.upper()) ^ 0x40) if k == "c" else _SIMPLE[k]
-    v = int(t[1:] if k.isdigit() else body or "0", 8 if k in "o01234567" else 16)
-    return chr(v) if v <= 0x10FFFF and not 0xD800 <= v <= 0xDFFF else _raise(f"no character {v:#x}")
+    k = t[1]
+    if k == "c":  # \cX: X's upper case with bit 0x40 flipped
+        return chr(ord(t[2].upper()) ^ 0x40)
+    if k in _SIMPLE:
+        return _SIMPLE[k]
+    if k.isdigit():
+        v = int(t[1:], 8)
+    else:  # \x, \o, \u, \N{U+…}
+        v = int(t[2:].strip("{}").removeprefix("U+") or "0", 8 if k == "o" else 16)
+    if v > 0x10FFFF or 0xD800 <= v <= 0xDFFF:
+        raise RegexError(f"no character {v:#x}")
+    return chr(v)
 
 
 def _items(body: str) -> tuple:
@@ -107,12 +136,19 @@ def _items(body: str) -> tuple:
     items: list = []
     for m in _ITEM.finditer(body):
         t, kind = m.group(), m.lastgroup
-        if (kind == "bad" or kind == "posix" and (t[1] != ":" or t.replace("^", "") not in _UCP)
-                or kind == "range" and _char(m.group(3)) < _char(m.group(2))):
-            _raise(f"PCRE2 rejects {t} in a class")
-        items += (_set(t) if kind in ("posix", "set") else [("r", _char(m.group(2)), _char(m.group(3)))]
-                  if kind == "range" else [("c", ch) for ch in (t[2:].removesuffix("\\E") if kind == "quote"
-                                                                 else _char(t) if kind == "chr" else "")])
+        if kind == "bad" or kind == "posix" and (t[1] != ":" or t.replace("^", "") not in _UCP):
+            raise RegexError(f"PCRE2 rejects {t} in a class")
+        if kind in ("posix", "set"):
+            items += _set(t)
+        elif kind == "range":
+            lo, hi = _char(m.group(2)), _char(m.group(3))
+            if hi < lo:
+                raise RegexError(f"PCRE2 rejects the range {t}")
+            items.append(("r", lo, hi))
+        elif kind == "quote":
+            items += [("c", ch) for ch in t[2:].removesuffix("\\E")]
+        elif kind == "chr":
+            items.append(("c", _char(t)))
     return tuple(items)
 
 
@@ -124,81 +160,128 @@ def _set(t: str) -> tuple:
         import regex  # a script or binary property: the `regex` module's tables name it, the pandas UDF runs it
 
         try:
-            items = (("s", regex.compile(rf"\p{{{name}}}") and name),)
+            regex.compile(rf"\p{{{name}}}")
         except regex.error:
-            _raise(f"unknown property {t}")
+            raise RegexError(f"unknown property {t}") from None
+        items = (("s", name),)
+    elif name in _CATEGORIES:
+        items = (("p", name),)
     else:
-        items = (("p", name),) if name in _CATEGORIES else _items(_UCP[name])
+        items = _items(_UCP[name])
     return (("n", items),) if (t[1] in "DWSHVP") != ("^" in t) else items
 
 
 @lru_cache(maxsize=4096)
 def _tokens(p: str) -> tuple:
     """``p`` as PCRE2 reads it: ``(kind, text, *value)`` per atom, group edge or quantifier."""
-    toks, stack, names = [], [], {}  # stack: (m, s, x, opener index) per open group
-    groups, i, m, s, x = 0, 0, False, True, False
+    toks, stack, names, groups, i = [], [], {}, 0, 0  # stack: (options, opener index) per open group
+    fs = {"i": False, "m": False, "s": True, "x": False}  # the options in force
     while i < len(p):
         mt = _LEX.match(p, i)
         kind, t, i = mt.lastgroup, mt.group(), mt.end()
-        if kind == "ws" and not x:  # white space is literal outside (?x)
+        if kind == "ws" and not fs["x"]:  # white space is literal outside (?x)
             kind, t, i = "lit", t[0], mt.start() + 1
-        if kind == "num" and not (int(t[1:]) < 10 or t[1] in "89" or int(t[1:]) <= groups):
-            t = "\\" + re.match("[0-7]{1,3}", t[1:]).group()  # \NN with fewer groups before it is octal
-            kind, i = "chr", mt.start() + len(t)
+        if kind == "num":  # \N refers back if N < 10, starts with 8 or 9, or N groups precede it
+            n = int(t[1:]) if len(t) <= 6 else 1 << 16
+            if n > 65535 or not (n < 10 or t[1] in "89" or n <= groups):
+                t = t[:2] if t[1] in "89" else "\\" + re.match("[0-7]{1,3}", t[1:]).group()
+                kind, i = "chr", mt.start() + len(t)
         if kind in ("quote", "chr", "lit"):
-            toks += [("lit", ch) for ch in (t[2:].removesuffix("\\E") if kind == "quote" else _char(t))]
+            chars = t[2:].removesuffix("\\E") if kind == "quote" else _char(t)
+            toks += [("lit", ch) for ch in chars]
         elif kind in ("set", "cls"):
-            neg, items = t[:2] == "[^", _set(t) if kind == "set" else _items(t[2 if t[:2] == "[^" else 1:-1])
+            neg = t[:2] == "[^"
+            items = _set(t) if kind == "set" else _items(t[1 + neg:-1])
             script = any(leaf[0] == "s" for it in items for leaf in (it[1] if it[0] == "n" else [it]))
             toks.append(("pycls" if script else "cls", None, neg, items))
         elif kind == "bound":
-            t = {r"\G": r"\A", ".": "." if s else r"\N"}.get(t, t)
-            toks.append((t + "m" * (m and t in ("^", "$")), t))
+            t = {r"\G": r"\A", ".": "." if fs["s"] else r"\N"}.get(t, t)
+            toks.append((t + "m" * (fs["m"] and t in ("^", "$")), t))
         elif kind in ("ref", "call", "num"):
-            key, kind = re.sub(r"^\\[gk]?|^\(\?(?:P[=>]|&)?|[{}<>'()]", "", t), kind.replace("num", "ref")
-            key = (0 if key == "R" else groups + int(key) + (key[0] == "-") if key[:1] in ("+", "-")
-                   else int(key) if key.isdigit() else key)
-            toks.append((kind, "(?R)" if key == 0 else f"(?{key})" if isinstance(key, int) else f"(?&{key})", key))
+            key = _REF_KEY.sub("", t)  # a group's name or number, a relative number, or R
+            if key == "R":
+                key = 0
+            elif key[:1] in ("+", "-"):
+                key = groups + int(key) + (key[0] == "-")
+                if key < 1:
+                    raise RegexError(f"reference to non-existent group {t}")
+            elif key.isdigit():
+                key = int(key)
+            if key == 0:
+                text = "(?R)"
+            elif isinstance(key, int):
+                text = f"(?{key})"
+            else:
+                text = f"(?&{key})"
+            toks.append(("call" if kind == "call" else "ref", text, key))
         elif kind == "flags":
             on, _, off = t[2:-1].partition("-")
-            stack += [(m, s, x, len(toks))] if t[-1] == ":" else []
-            m, s, x = [f in on or f not in off and old for f, old in zip("msx", (m, s, x))]
-            text = "(?" + "i" * ("i" in on) + "-i" * ("i" in off) + t[-1]
-            toks += [] if text == "(?)" else [("grp" if t[-1] == ":" else "flag", text)]
+            new = {f: f not in off and (f in on or v) for f, v in fs.items()}
+            text = "(?"
+            if new["i"] != fs["i"]:
+                text += "i" if new["i"] else "-i"
+            if t[-1] == ":":
+                stack.append((fs, len(toks)))
+                toks.append(("grp", text + ":"))
+            elif text != "(?":
+                toks.append(("flag", text + ")"))
+            fs = new
         elif kind in ("named", "open"):
-            name = t[3 + (t[2] == "P"):-1] if kind == "named" else None
-            if kind == "named" and (not name.isidentifier() or len(name) > 32 or name in names):
-                _raise(f"bad group name {name!r}")
-            groups += t == "(" or kind == "named"
-            names.update({name: groups} if name else {})
-            sort = {"(?:": "grp", "(?>": "atomic", "(?|": "py", "(?": "py"}.get(t, "lb" if "<" in t else "look")
-            toks.append(("(" if t == "(" or name else "py" if t[:3] == "(?(" else sort, t, name))
-            stack.append((m, s, x, len(toks) - 1))
+            name = None
+            if kind == "named":
+                name = t[3 + (t[2] == "P"):-1]
+                if not name.isidentifier() or len(name) > 32 or name in names:
+                    raise RegexError(f"bad group name {name!r}")
+                names[name] = groups + 1
+            if t == "(" or name:
+                groups += 1
+                sort = "("
+            elif t[:3] == "(?(" or t == "(?":  # a conditional
+                sort = "py"
+            else:
+                sort = {"(?:": "grp", "(?>": "atomic", "(?|": "py"}.get(t, "lb" if "<" in t else "look")
+            toks.append((sort, t, name))
+            stack.append((fs, len(toks) - 1))
         elif kind == "close":
-            m, s, x, _ = stack.pop() if stack else _raise("unmatched )")
+            if not stack:
+                raise RegexError("unmatched )")
+            fs, _ = stack.pop()
             toks.append((")", ")"))
         elif kind == "q":
-            lo, comma, hi = ({"*": "0,", "+": "1,", "?": "0,1"}.get(t[0]) or t[1:t.find("}")]).partition(",")
-            lo, hi = int(lo or 0), int(hi) if hi else None if comma else int(lo)
+            if t[0] == "{":
+                lo, comma, hi = t[1:t.find("}")].partition(",")
+            else:
+                lo, comma, hi = {"*": "0,", "+": "1,", "?": "0,1"}[t[0]].partition(",")
+            lo, hi = int(lo or 0), int(hi) if hi else None
+            if not comma:
+                hi = lo
             if not toks or toks[-1][0] not in _REPEATABLE or hi is not None and hi < lo or max(lo, hi or 0) > 65535:
-                _raise(f"bad quantifier {t}")
-            t = "{0" + t[1:] if t[:2] == "{," else t
+                raise RegexError(f"bad quantifier {t}")
+            if t[:2] == "{,":
+                t = "{0" + t[1:]
             toks.append(("q", t, t[1:].endswith("+") or max(lo, hi or 0) > 1000, hi is None))
+        elif kind == "bad":
+            raise RegexError(f"PCRE2 rejects {t!r} here")
         elif kind not in ("ws", "skip"):
-            toks.append((kind, t) if kind != "bad" else _raise(f"PCRE2 rejects {t!r} here"))
+            toks.append((kind, t))
         if toks and (toks[-1][0] in ("ref", r"\X") or toks[-1][0] == "q" and toks[-1][3]):
-            for *_, k in stack:  # java.util.regex needs a lookbehind of bounded length
-                toks[k] = ("py",) + toks[k][1:] if toks[k][0] == "lb" else toks[k]
+            for _, k in stack:  # java.util.regex needs a lookbehind of bounded length
+                if toks[k][0] == "lb":
+                    toks[k] = ("py",) + toks[k][1:]
     if stack:
-        _raise("missing )")
+        raise RegexError("missing )")
+    out = []
     for tok in toks:
-        num = names.get(tok[2], tok[2]) if tok[0] in ("ref", "call") else 0
-        if not isinstance(num, int) or not (tok[0] == "ref") <= num <= groups:
-            _raise(f"reference to non-existent group {tok[2]}")
-    return tuple(("ref", None, names.get(t[2], t[2])) if t[0] == "ref" else t for t in toks)
+        if tok[0] in ("ref", "call"):
+            num = names.get(tok[2], tok[2])
+            if not isinstance(num, int) or not (tok[0] == "ref") <= num <= groups:
+                raise RegexError(f"reference to non-existent group {tok[2]}")
+            tok = ("ref", None, num) if tok[0] == "ref" else tok
+        out.append(tok)
+    return tuple(out)
 
 
-def _item(it: tuple, t: str, meta: str = "\\]^-[&") -> str:
+def _item(it: tuple, t: str, meta: str = "\\]^-[&|~") -> str:
     """A class item, or with ``meta=_META`` a literal, rendered for ``t``."""
     if it[0] in ("p", "s", "n"):
         return f"\\{'P' if it[0] == 'n' else 'p'}{{{(it[1][0] if it[0] == 'n' else it)[1]}}}"
@@ -222,7 +305,7 @@ def _cls(tok: tuple, t: str) -> str | None:
 _W = "[" + _UCP["w"] + "]"  # \w under UCP, the same class in all three targets: \b and \B look around it
 _T = ("java", "python", "re2")
 _TABLE = {  # token kind: its (java, python, re2) rendering; True: the token's text, None: no form
-    "prefix": ("(?sU)", "(?s)", "(?s)"),
+    "prefix": ("(?sU)", "(?V1s-f)", "(?s)"),
     "lit": (lambda tok, t: _item(tok, t, _META),) * 3, "cls": (_cls,) * 3, "pycls": (None, _cls, None),
     **dict.fromkeys((".", "|", ")", "grp", "flag", "^", r"\A"), (True,) * 3), r"\N": (r"[^\n]",) * 3,
     "(": ("(", lambda tok, t: f"(?P<{tok[2]}>" if tok[2] else "(", "("),
@@ -243,7 +326,7 @@ def _render(pattern: str, target: str) -> str | None:
     """``pattern`` for ``target``; None if PCRE2 rejects it or a token has no form there."""
     try:
         toks = _tokens(pattern)
-    except RegexError:
+    except ValueError:  # a RegexError, or a number too long for int()
         return None
     col = _T.index(target)
     out = [r(tok, target) if callable(r) else tok[1] if r is True else r
@@ -251,42 +334,71 @@ def _render(pattern: str, target: str) -> str | None:
     return None if None in out else _TABLE["prefix"][col] + "".join(out)
 
 
-def permissive_search_py(pattern: str, value: str | None) -> bool | None:
-    """The driver-side oracle: unanchored search of the Python rendering (`regex` caches compiles)."""
+@lru_cache(maxsize=4096)
+def _compiled_py(pattern: str):
+    """The Python rendering of ``pattern``, compiled once: driver-side loops (pyeval, lint)
+    and the pandas UDF search it per value. None if PCRE2 rejects the pattern."""
     import regex
+
     rendered = _render(pattern, "python")
-    try:
-        return None if value is None else bool(rendered and regex.search(rendered, value))
-    except regex.error:  # a rendering the `regex` module cannot compile matches nothing
-        return False
+    return None if rendered is None else regex.compile(rendered)
+
+
+def permissive_search_py(pattern: str, value: str | None) -> bool | None:
+    """Driver-side reference evaluator: unanchored search of the Python
+    rendering of ``pattern`` with the `regex` module. This is the oracle
+    the divergence corpus (tests/test_regex_dialect.py) holds every
+    execution route to; a pattern PCRE2 rejects matches nothing."""
+    if value is None:
+        return None
+    rx = _compiled_py(pattern)
+    return rx is not None and bool(rx.search(value))
 
 
 def regex_compiles(pattern: str) -> bool:
-    """Whether PCRE2 compiles ``pattern``: the one validity rule (lint, metaschema, `format`)."""
+    """Whether PCRE2 compiles ``pattern``: the tokenizer reads it. The
+    one validity rule for `pattern`, `patternProperties` keys,
+    `format: "regex"`, lint and the metaschema check."""
     return _render(pattern, "python") is not None
 
 
 def _pandas_predicate(fn, col: Column) -> Column:
-    """``fn`` of each non-NULL value of ``col`` in a pandas UDF: the one Python route of plans."""
-    @F.pandas_udf("boolean")
+    """Boolean Column: ``fn`` of each non-NULL value of ``col``, in an
+    Arrow-batched pandas UDF. The one Python route of compiled plans."""
+    from pyspark.sql.types import BooleanType
+
+    @F.pandas_udf(BooleanType())
     def probe(s: pd.Series) -> pd.Series:
         return s.map(lambda v: None if v is None else fn(v))
+
     return probe(col)
 
 
-regex_ok = partial(_pandas_predicate, regex_compiles)  # Boolean Column: the string is a valid regex
+def regex_ok(col: Column) -> Column:
+    """Boolean Column: the string ``col`` is a valid regular expression
+    (``regex_compiles``)."""
+    return _pandas_predicate(regex_compiles, col)
 
 
 def pattern_ok(col: Column, pattern: str) -> Column:
-    """Boolean Column: `col` matches `pattern` (unanchored): a fast path, `rlike` of the Java
-    rendering, or the pandas UDF where there is none; a pattern PCRE2 rejects matches nothing."""
+    """Boolean Column: `col` matches `pattern` (unanchored search,
+    permissive-PCRE2 semantics — see the token table note above).
+
+    Classification ladder (regex.h:31-69 analogue): prefix/nonempty/range
+    fast paths stay in codegen (exactly correct under DOTALL +
+    DOLLAR_ENDONLY, the same flags that make the reference's own
+    NonEmpty/Range classes sound); a pattern PCRE2 rejects matches
+    nothing; the rest use `rlike` of the Java rendering, or the pandas
+    UDF where a token has no Java form."""
     plan = classify_pattern(pattern)
     if plan.kind == "prefix":
         return col.startswith(plan.prefix)
     if plan.kind == "nonempty":
         return F.length(col) >= 1
     if plan.kind == "range":
-        return col.isNotNull() if plan.hi is None else F.length(col).between(plan.lo, plan.hi)
+        if plan.hi is None:
+            return col.isNotNull()
+        return F.length(col).between(plan.lo, plan.hi)
     if not regex_compiles(pattern):
         return F.when(col.isNotNull(), F.lit(False))
     if pattern_in_python(pattern):
@@ -295,12 +407,16 @@ def pattern_ok(col: Column, pattern: str) -> Column:
 
 
 def pattern_in_python(pattern: str) -> bool:
-    """Whether ``pattern_ok`` runs ``pattern`` in the pandas UDF: it holds a token Java lacks."""
+    """Whether ``pattern_ok`` routes ``pattern`` to the Python-regex pandas
+    UDF: a general pattern PCRE2 compiles that holds a token Java lacks."""
     return classify_pattern(pattern).kind == "general" and regex_compiles(pattern) and not _render(pattern, "java")
 
 
 def pattern_duckdb(col_sql: str, pattern: str) -> str:
-    """The predicate in DuckDB SQL for oracle queries; raises when RE2 has no form for it."""
+    """The same predicate in DuckDB SQL (for oracle queries), rendered for
+    RE2 from the same tokens. Patterns RE2 cannot express faithfully
+    (\\b/\\B under UCP, backreferences, lookaround) have no oracle form —
+    raises so the query author picks an RE2-expressible fixture pattern."""
     plan = classify_pattern(pattern)
     if plan.kind == "prefix":
         esc = plan.prefix.replace("'", "''").replace("%", "\\%").replace("_", "\\_")

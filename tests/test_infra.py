@@ -365,14 +365,15 @@ def test_inspect_strategies(spark):
     # every keyword with subschema positions, and every reference keyword,
     # is an applicator; a pattern holding a token java.util.regex lacks
     # (here a subroutine call), and the compile-try `format: regex`, run
-    # in a pandas UDF
+    # in a pandas UDF; a Unicode property runs as `rlike`
     schema = {
         "$defs": {"n": {"$dynamicAnchor": "n"}},
         "allOf": [{"$dynamicRef": "#n"}, {"$recursiveRef": "#"}, {"$ref": "#/$defs/n"}],
         "unevaluatedProperties": {"type": "integer"},
         "unevaluatedItems": {"type": "string"},
         "properties": {
-            "u": {"pattern": "^(a|b(?1))$"},
+            "u": {"pattern": "^\\p{L}+$"},
+            "v": {"pattern": "^(a|b(?1))$"},
             "r": {"format": "regex"},
             "d": {"format": "date"},
         },
@@ -381,7 +382,8 @@ def test_inspect_strategies(spark):
     for loc in ("/unevaluatedProperties", "/unevaluatedItems", "/allOf/0/$dynamicRef",
                 "/allOf/1/$recursiveRef", "/allOf/2/$ref", "/allOf"):
         assert by_loc[loc] == "applicator", loc
-    assert by_loc["/properties/u/pattern"] == "pandas"
+    assert by_loc["/properties/u/pattern"] == "column"
+    assert by_loc["/properties/v/pattern"] == "pandas"
     assert by_loc["/properties/r/format"] == "pandas"
     assert by_loc["/properties/d/format"] == "column"
     assert by_loc["/unevaluatedItems/type"] == "column"

@@ -149,6 +149,21 @@ CORPUS = [
     ("^a{,3}$", "aaaa", False, "brace-upper-only"),
     ("a{", "a", False, "dangling-brace"),
     (r"\C", "C", False, "NEVER_BACKSLASH_C-invalid"),
+    # \cX is X's upper case with bit 0x40 flipped, for any printable ASCII X
+    (r"\c{", ";", True, "control-char-brace"),
+    (r"\c{", "{", False, "control-char-brace"),
+    (r"\c}", "=", True, "control-char-brace"),
+    # a mid-pattern option lasts to the end of its group, and into the
+    # group's later alternatives
+    (r"a(?i)b", "Ab", False, "inline-i-scoped"),
+    (r"a(?i)b", "aB", True, "inline-i-scoped"),
+    (r"(?i)a(?-i)b", "Ab", True, "inline-i-unset"),
+    (r"(?i)a(?-i)b", "AB", False, "inline-i-unset"),
+    (r"(a(?i)b|c)d", "Cd", True, "inline-i-across-alternatives"),
+    (r"(a(?i)b|c)d", "cD", False, "inline-i-ends-with-group"),
+    # a backreference inside its own group matches the previous iteration's capture
+    (r"^(a|b\1)+$", "aba", True, "backref-into-open-group"),
+    (r"^(a|b\1)+$", "ab", False, "backref-into-open-group"),
 ]
 
 
@@ -290,6 +305,11 @@ VALIDITY = [
     ("a)bad", False),
     ("[[:foo:]]", False),
     ("x{2,1}", False),
+    (r"\c{", True),
+    (r"\c}", True),
+    ("a{" + "9" * 5000 + "}", False),
+    ("a(?i)b", True),
+    ("(?i)a(?-i)b", True),
 ]
 
 
