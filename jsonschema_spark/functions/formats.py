@@ -8,9 +8,15 @@ JVM expressions), ``duckdb`` (the same predicate in DuckDB SQL, used by
 ``__spark_entry__.oracle_sql``) and ``py`` (driver-side, for
 ``plans/pyeval.py``), so engine, oracle and lint cannot drift.
 
-Every side uses unanchored regex search (`rlike` / `regexp_matches` /
-`re.search`) with explicit `^...$` anchors, and regex syntax in the
-Java∩RE2 common subset (no lookaround, no backrefs).
+The regexes carry explicit `^...$` anchors and use the Java∩RE2 common
+subset (no lookaround, no backrefs). ``duckdb`` and ``py`` search them
+unanchored (`regexp_matches` / `re.search`) and count code points with
+`length` / `len`, as plain readings of the declaration. ``build`` gives
+the same verdicts more cheaply: it bounds lengths by byte count first
+(``strings.code_points_between``) and runs the rejecting regex only on
+values that hold its leading literal (``strings.leading_literal``: `%`
+for the URI formats). A typed column can skip the regex altogether
+(``plans/context.py`` ``FlatColCtx.format_ok``).
 
 Fidelity notes vs the reference: `uri`/`email`/`hostname` etc. are validated
 by full RFC parsers in vendor/core; we use tight regex approximations
@@ -27,9 +33,9 @@ import re
 from dataclasses import dataclass
 from typing import Optional
 
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Column
 
-from jsonschema_spark.functions.strings import regex_compiles, regex_ok
+from jsonschema_spark.functions.strings import code_points_between, leading_literal, regex_compiles, regex_ok
 
 # --- component regexes (shared text between Spark and DuckDB) ---------------
 
@@ -106,11 +112,10 @@ class FormatSpec:
             return regex_ok(c)
         ok = c.rlike(self.pattern)
         if self.reject:
-            ok = ok & ~c.rlike(self.reject)
-        if self.max_len is not None:
-            ok = ok & (F.length(c) <= self.max_len)
-        if self.min_len is not None:
-            ok = ok & (F.length(c) >= self.min_len)
+            lead = leading_literal(self.reject)
+            ok = ok & ~(c.rlike(self.reject) if lead is None else c.contains(lead) & c.rlike(self.reject))
+        if self.max_len is not None or self.min_len is not None:
+            ok = ok & code_points_between(c, self.min_len, self.max_len)
         if self.no_suffix:
             ok = ok & ~c.endswith(self.no_suffix)
         return ok

@@ -3,24 +3,29 @@
 The reference classifies compiled regexes into Prefix / NonEmpty / Range /
 general-PCRE2 variants so common patterns skip the regex engine entirely
 (/root/reference/vendor/core/src/core/regex/include/sourcemeta/core/regex.h:31-69).
-We reproduce the same strategy: `^literal` → `startswith` (stays in codegen
-with no regex state machine), `.+`-likes → `length >= 1`, `^.{a,b}$` →
-`length between`, everything else → one PCRE2 tokenizer whose token table
-(see the note below) renders it for `rlike`, or, where a token has no Java
-form, for a Python `regex` pandas UDF.
+We reproduce the same strategy: `^` and literal tokens (each at most
+optional) → `startswith` of each spelling (stays in codegen with no regex
+state machine), `.+`-likes → a non-empty test, `^.{a,b}$` → a length
+bound, everything else → one PCRE2 tokenizer whose token table (see the
+note below) renders it for `rlike`, or, where a token has no Java form,
+for a Python `regex` pandas UDF.
 
 String lengths are Unicode code points, not bytes, matching
 `JSON::size(String)` (/root/reference/vendor/core/src/core/json/json_value.cc:509-524).
-Spark's `length` on StringType already counts code points; the trap the
-survey flags (byte-length in Arrow UDFs) is avoided by keeping length checks
-JVM-side.
+Spark's `length` on StringType counts code points by walking the UTF-8
+bytes; `code_points_between` decides from the O(1) byte count first, as a
+code point takes one to four bytes, and counts only where that leaves the
+answer open. The trap the survey flags (byte-length in Arrow UDFs) is
+avoided by keeping length checks JVM-side.
 """
 
 from __future__ import annotations
 
+import math
+import operator
 import re
 from dataclasses import dataclass
-from functools import lru_cache, partial
+from functools import lru_cache, partial, reduce
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -31,7 +36,7 @@ _META = set(".^$*+?()[]{}|\\")
 @dataclass(frozen=True)
 class RegexPlan:
     kind: str  # 'prefix' | 'nonempty' | 'range' | 'general'
-    prefix: str | None = None
+    prefixes: tuple = ()  # 'prefix': a value matches iff it starts with one of them
     lo: int | None = None
     hi: int | None = None
 
@@ -46,13 +51,33 @@ def classify_pattern(pattern: str) -> RegexPlan:
         lo = int(m.group(1))
         hi = int(m.group(2)) if m.group(2) else lo
         return RegexPlan("range", lo=lo, hi=hi)
-    if pattern.startswith("^"):
-        body = pattern[1:]
-        if body.endswith(".*"):
-            body = body[:-2]
-        if body and not any(ch in _META for ch in body):
-            return RegexPlan("prefix", prefix=body)
-    return RegexPlan("general")
+    prefixes = _literal_prefixes(pattern)
+    return RegexPlan("prefix", prefixes=prefixes) if prefixes else RegexPlan("general")
+
+
+def _literal_prefixes(pattern: str) -> tuple | None:
+    """The spellings a value must start with to match ``pattern`` when its
+    tokens are `^`, then literals, each with at most a greedy or lazy `?`,
+    then an optional `.*` (DOTALL: it matches any rest); at most four
+    spellings, not all empty. None for any other token, a flag included."""
+    try:
+        toks = list(_tokens(pattern))
+    except ValueError:
+        return None
+    if toks[-2:] == [(".", "."), ("q", "*", False, True)]:
+        del toks[-2:]
+    if toks[:1] != [("^", "^")]:
+        return None
+    out = [""]
+    for prev, tok in zip(toks, toks[1:]):
+        if tok[0] == "lit":
+            out = [p + tok[1] for p in out]
+        elif tok[0] == "q" and tok[1] in ("?", "??") and prev[0] == "lit":
+            out = [p[:-1] for p in out] + out
+        else:
+            return None
+    out = tuple(dict.fromkeys(out))
+    return out if len(out) <= 4 and out != ("",) else None
 
 
 # --- the PCRE2 token table ---------------------------------------------------
@@ -355,6 +380,21 @@ def permissive_search_py(pattern: str, value: str | None) -> bool | None:
     return rx is not None and bool(rx.search(value))
 
 
+def leading_literal(pattern: str) -> str | None:
+    """A character every match of ``pattern`` starts with: its first token
+    when that is an unquantified literal and no `|` splits the top level."""
+    toks, depth = _tokens(pattern), 0
+    for tok in toks:
+        if tok[0] in ("(", "grp", "atomic", "look", "lb") or tok[0] == "py" and tok[1][:2] == "(?":
+            depth += 1
+        elif tok[0] == ")":
+            depth -= 1
+        elif tok[0] == "|" and not depth:
+            return None
+    quantified = len(toks) > 1 and toks[1][0] == "q"
+    return toks[0][1] if toks and toks[0][0] == "lit" and not quantified else None
+
+
 def regex_compiles(pattern: str) -> bool:
     """Whether PCRE2 compiles ``pattern``: the tokenizer reads it. The
     one validity rule for `pattern`, `patternProperties` keys,
@@ -380,25 +420,51 @@ def regex_ok(col: Column) -> Column:
     return _pandas_predicate(regex_compiles, col)
 
 
+def _count(bound: int) -> int:
+    """``bound`` clamped to [-1, 2^31]. A Spark string holds fewer than
+    2^31 bytes, so a count compares with it as with ``bound``, and the
+    clamped value fits an integer literal."""
+    return max(-1, min(bound, 1 << 31))
+
+
+def code_points_between(col: Column, lo=None, hi=None) -> Column:
+    """Boolean Column: the string ``col`` is at least ``lo`` and at most
+    ``hi`` code points long (a bound of None is open); NULL on NULL, as
+    `length` is. A code point is one to four UTF-8 bytes (and Spark's
+    `length` steps one to four bytes per character even over malformed
+    bytes), so the O(1) byte count settles ``hi`` when it is at most
+    ``hi``, and ``lo`` unless it is between ``lo`` and ``4·lo−4``; only
+    there are the code points counted."""
+    n, parts = F.octet_length(col), []
+    if lo is not None:
+        lo = _count(math.ceil(lo))
+        parts.append(n >= lo if lo <= 1 else (n >= lo) & ((n >= 4 * lo - 3) | (F.length(col) >= lo)))
+    if hi is not None:
+        hi = _count(math.floor(hi))
+        parts.append((n <= hi) | (F.length(col) <= hi))
+    return reduce(operator.and_, parts)
+
+
 def pattern_ok(col: Column, pattern: str) -> Column:
     """Boolean Column: `col` matches `pattern` (unanchored search,
     permissive-PCRE2 semantics — see the token table note above).
 
-    Classification ladder (regex.h:31-69 analogue): prefix/nonempty/range
-    fast paths stay in codegen (exactly correct under DOTALL +
-    DOLLAR_ENDONLY, the same flags that make the reference's own
-    NonEmpty/Range classes sound); a pattern PCRE2 rejects matches
-    nothing; the rest use `rlike` of the Java rendering, or the pandas
-    UDF where a token has no Java form."""
+    Classification ladder (regex.h:31-69 analogue): a prefix plan is
+    `startswith` of each spelling, a nonempty or range plan a
+    ``code_points_between`` bound; all stay in codegen and are exactly
+    correct under DOTALL + DOLLAR_ENDONLY, the same flags that make the
+    reference's own NonEmpty/Range classes sound. A pattern PCRE2 rejects
+    matches nothing; the rest use `rlike` of the Java rendering, or the
+    pandas UDF where a token has no Java form."""
     plan = classify_pattern(pattern)
     if plan.kind == "prefix":
-        return col.startswith(plan.prefix)
+        return reduce(operator.or_, [col.startswith(p) for p in plan.prefixes])
     if plan.kind == "nonempty":
-        return F.length(col) >= 1
+        return code_points_between(col, lo=1)
     if plan.kind == "range":
         if plan.hi is None:
             return col.isNotNull()
-        return F.length(col).between(plan.lo, plan.hi)
+        return code_points_between(col, plan.lo, plan.hi)
     if not regex_compiles(pattern):
         return F.when(col.isNotNull(), F.lit(False))
     if pattern_in_python(pattern):
@@ -418,8 +484,8 @@ def pattern_duckdb(col_sql: str, pattern: str) -> str:
     (\\b/\\B under UCP, backreferences, lookaround) have no oracle form —
     raises so the query author picks an RE2-expressible fixture pattern."""
     plan = classify_pattern(pattern)
-    if plan.kind == "prefix":
-        esc = plan.prefix.replace("'", "''").replace("%", "\\%").replace("_", "\\_")
+    if plan.kind == "prefix" and len(plan.prefixes) == 1:  # several spellings: RE2, below
+        esc = plan.prefixes[0].replace("\\", "\\\\").replace("'", "''").replace("%", "\\%").replace("_", "\\_")
         return f"({col_sql} LIKE '{esc}%' ESCAPE '\\')"
     if plan.kind == "nonempty":
         return f"(length({col_sql}) >= 1)"

@@ -48,9 +48,9 @@ from typing import Optional, Union
 import pyspark.errors.utils as _pyspark_errors_utils
 from pyspark.sql import Column, functions as F, types as T
 
-from jsonschema_spark.functions.formats import FORMATS, format_ok
+from jsonschema_spark.functions.formats import FORMATS
 from jsonschema_spark.functions.numeric import divisible_ok
-from jsonschema_spark.functions.strings import pattern_ok
+from jsonschema_spark.functions.strings import code_points_between, pattern_ok
 from jsonschema_spark.plans import messages as M
 from jsonschema_spark.plans.context import (
     B,
@@ -453,7 +453,7 @@ def _k_format(schema: dict, val, ctx: Ctx, kwp: str, cfg: Config, ref_stack) -> 
     guard = ctx.is_type("string")
     if guard is False:
         return Compiled(True)
-    leaf = _leaf(cfg, format_ok(val, ctx.str_val()), kwp, ctx, lambda: M.msg_format(ctx, val))
+    leaf = _leaf(cfg, ctx.format_ok(val), kwp, ctx, lambda: M.msg_format(ctx, val))
     return _guarded(guard, leaf)
 
 
@@ -998,8 +998,8 @@ _KEYWORDS: dict = {
     "prefixItems": _k_prefix_items,
     "items": _k_items,
     "contains": _k_contains,
-    "minLength": KeywordCompiler(lambda v, c: F.length(c.str_val()) >= v, M.msg_min_length, "string"),
-    "maxLength": KeywordCompiler(lambda v, c: F.length(c.str_val()) <= v, M.msg_max_length, "string"),
+    "minLength": KeywordCompiler(lambda v, c: code_points_between(c.str_val(), lo=v), M.msg_min_length, "string"),
+    "maxLength": KeywordCompiler(lambda v, c: code_points_between(c.str_val(), hi=v), M.msg_max_length, "string"),
     "pattern": KeywordCompiler(lambda v, c: pattern_ok(c.str_val(), v), M.msg_regex, "string"),
     "format": _k_format,
     "minimum": KeywordCompiler(lambda v, c: c.num_val() >= float(v), M.msg_greater_equal, "number"),

@@ -43,10 +43,18 @@ from typing import Callable, Optional, Union
 from pyspark.sql import Column, functions as F, types as T
 
 from jsonschema_spark.functions.canonical import canonical, canonical_const
+from jsonschema_spark.functions.formats import format_ok
 
 Cond = Union[bool, Column]  # static-foldable boolean
 
 _INT64 = range(-(2**63), 2**63)  # integers a bigint literal can hold
+
+# [0001-01-01T00:00Z, 9999-12-31T00:00Z) in microseconds, and [0001-01-01,
+# 9999-12-31) in days: `str_val` renders these in any session timezone (Java
+# offsets reach ±18 h) with a year from 0000 to 9999, which `date-time` and
+# `date` accept (their regexes take any four-digit year and Feb 29)
+_SAFE_MICROS = (-62135596800 * 10**6, 253402214400 * 10**6)
+_SAFE_DAYS = (-719162, 2932896)
 
 
 def B(x: Cond) -> Column:
@@ -156,6 +164,10 @@ class Ctx:
 
     def bool_val(self) -> Column:
         raise NotImplementedError
+
+    def format_ok(self, fmt: str) -> Column:
+        """Whether the value, read as a string, is valid under ``format: fmt``."""
+        return format_ok(fmt, self.str_val())
 
     # --- containers ---------------------------------------------------
     def arr(self) -> Column:
@@ -369,6 +381,18 @@ class FlatColCtx(Ctx):
         if isinstance(self.dtype, T.BinaryType):
             return F.base64(self.col)
         return self.col.cast("string")
+
+    def format_ok(self, fmt: str) -> Column:
+        """A timestamp under `date-time`, or a date under `date`, is valid
+        by a range test inside the safe interval; only outside it is the
+        rendering matched."""
+        if fmt == "date-time" and isinstance(self.dtype, T.TimestampType):
+            at, (lo, hi) = F.unix_micros(self.col), _SAFE_MICROS
+        elif fmt == "date" and isinstance(self.dtype, T.DateType):
+            at, (lo, hi) = F.unix_date(self.col), _SAFE_DAYS
+        else:
+            return super().format_ok(fmt)
+        return F.when((at >= lo) & (at < hi), F.lit(True)).otherwise(super().format_ok(fmt))
 
     def num_val(self) -> Column:
         return self.col.cast("double")

@@ -25,6 +25,9 @@ ANCHOR_SCOPE = {
     "$ref": "#foo",
 }
 
+# one code point of each UTF-8 width: 1, 2, 3 and 4 bytes
+_WIDTHS = ("a", "\u00e9", "\u20ac", "\U0001F600")
+
 CASES = [
     # --- type ---------------------------------------------------------------
     ("integer accepts int and integral real, rejects fraction/string/bool-ish",
@@ -62,7 +65,8 @@ CASES = [
     # --- string -------------------------------------------------------------
     ("length is code points", {"minLength": 2, "maxLength": 3},
      [('"ab"', True), ('"abc"', True), ('"a"', False), ('"abcd"', False),
-      ('"\\u00e9\\u00e9"', True)]),  # two é code points, 4 UTF-8 bytes
+      ('"\\u00e9\\u00e9"', True)]  # two é code points, 4 UTF-8 bytes
+     + [(json.dumps(ch * n, ensure_ascii=False), 2 <= n <= 3) for ch in _WIDTHS for n in (1, 2, 3, 4)]),
     ("pattern is unanchored search", {"pattern": "b+"},
      [('"abc"', True), ('"aaa"', False)]),
     # --- object -------------------------------------------------------------
@@ -316,6 +320,24 @@ def test_conformance(spark, desc, schema, checks):
     assert not bad, f"{desc}: (instance, short_circuit) -> (valid, #violations): {bad}"
 
 
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_length_bounds_at_every_utf8_width(spark, k):
+    """`minLength`/`maxLength` k over k−1, k and k+1 code points of each
+    UTF-8 width: flat, tree and ``validate_py`` all count code points."""
+    from jsonschema_spark.plans.pyeval import validate_py
+
+    values = [ch * n for ch in _WIDTHS for n in (k - 1, k, k + 1)]
+    flat = spark.createDataFrame(list(enumerate(values)), "i long, s string")
+    tree = spark.createDataFrame([(i, json.dumps(v, ensure_ascii=False)) for i, v in enumerate(values)],
+                                 "i long, doc string")
+    for kw, holds in (("minLength", lambda n: n >= k), ("maxLength", lambda n: n <= k)):
+        schema = {"type": "string", kw: k}
+        got_flat = [r.valid for r in validate(flat, {"properties": {"s": schema}}).orderBy("i").collect()]
+        got_tree = [r.valid for r in validate(tree, schema, doc_col="doc").orderBy("i").collect()]
+        got_py = [validate_py(schema, v) for v in values]
+        assert got_flat == got_tree == got_py == [holds(len(v)) for v in values], kw
+
+
 def test_anchor_scope_flat(spark):
     """The flat path resolves ANCHOR_SCOPE's `#foo` in the root resource
     too, as validate_py does."""
@@ -445,6 +467,9 @@ ADVERSARIAL = [
      {"properties": {"a": {"multipleOf": 1e22}, "b": {"multipleOf": 1000}}},
      [('{"a": 1e23}', True), ('{"b": 2.82879384806159E17}', True), ('{"b": 2.82879384806159008E17}', True),
       ('{"a": 1.5e22}', False), ('{"b": 2.828793848061591E17}', False)]),
+    # a length bound beyond int64 compiles (as a bound no string reaches)
+    ("length bounds beyond int64", {"properties": {"a": {"minLength": 10**30}, "b": {"maxLength": 10**30}}},
+     [('{"a": "x"}', False), ('{"b": "x"}', True), ('{"a": 1, "b": ""}', True)]),
 ]
 
 

@@ -6,15 +6,19 @@ from pyspark.sql import functions as F
 
 from jsonschema_spark.functions.formats import FORMATS, format_duckdb, format_ok
 
+# percent-escapes: every `%` starts two hex digits
+_PCT_REL = [("%41", True), ("%4", False), ("a%", False), ("%%41", False)]
+_PCT_ABS = [("http://x/" + v, ok) for v, ok in _PCT_REL]
+
 CASES = {
     "uri": [("https://example.com/a?b=c#d", True), ("ftp://x/y", True),
-            ("not a uri", False), ("/relative/only", False), ("http://x/%zz", False)],
-    "uri-reference": [("/relative/path", True), ("a b", False)],
+            ("not a uri", False), ("/relative/only", False), ("http://x/%zz", False), *_PCT_ABS],
+    "uri-reference": [("/relative/path", True), ("a b", False), *_PCT_REL],
     # iri, iri-reference, idn-hostname and idn-email accept ASCII only
     "iri": [("https://example.com/x", True), ("nope nope", False),
             ("mailto:user@example.com", True), ("https://例え.jp/パス?q=値", False),
-            ("https://exa mple.com/", False), ("no-scheme-iri", False)],
-    "iri-reference": [("frag#x", True), ("sp ace", False), ("/путь/к/файлу", False), ("%2", False)],
+            ("https://exa mple.com/", False), ("no-scheme-iri", False), *_PCT_ABS],
+    "iri-reference": [("frag#x", True), ("sp ace", False), ("/путь/к/файлу", False), ("%2", False), *_PCT_REL],
     "uri-template": [("/users/{id}", True), ("/u{", False)],
     "date-time": [("2021-06-01T12:00:00Z", True), ("2021-06-01t12:00:00+05:30", True),
                   ("2021-13-01T12:00:00Z", False), ("2021-06-01 12:00:00", False)],

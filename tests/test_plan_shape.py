@@ -541,3 +541,42 @@ def test_unicode_property_pattern_is_python_free(spark, no_codegen_fallback, tmp
         assert sorted(r.valid for r in out.collect()) == [False, False, True], doc_col
     strategies = {r["keyword"]: r["strategy"] for r in inspect_schema(schema)}
     assert strategies["pattern"] == "column"
+
+
+def test_pages_string_keywords_take_cheap_kernels(spark, no_codegen_fallback):
+    """In the fast plan of the perfbench pages schema every string keyword
+    runs its cheap exact kernel first: a typed `format` renders its value
+    only outside the range test's interval, a code-point count sits behind
+    a byte-count test, the bad-`%` regex behind ``Contains(url, %)``, and
+    `^https?://` is two ``StartsWith``. The verdicts of edge rows that take
+    the slow branches equal ``validate_py``'s."""
+    from perfbench.schemas import PAGES
+
+    from jsonschema_spark import validate_py
+
+    # (i, url, warc_ts as µs and as this UTC session renders it, text, day as days and rendered)
+    ts, day = (1704067200 * 10**6, "2024-01-01T00:00:00Z"), (19723, "2024-01-01")
+    data = [(0, "https://a.example/%41", *ts, "é" * 3, *day),
+            (1, "https://a.example/%4", *ts, "x", *day),
+            (2, "ftp://a.example/", *ts, "x", *day),
+            (3, "http://a.example/", -62135596800 * 10**6 - 1, "0000-12-31T23:59:59Z", "😀", 2932896, "9999-12-31"),
+            (4, "http://a.example/", *ts, "", *day)]
+    df = spark.createDataFrame([(i, u, us, x, d) for i, u, us, _, x, d, _ in data],
+                               "i long, url string, us long, text string, d long")
+    df = df.select("i", "url", F.timestamp_micros("us").alias("warc_ts"), F.lit("h").alias("html"), "text",
+                   F.lit("en").alias("lang"), F.date_from_unix_date("d").alias("day"))
+    schema = {**PAGES, "properties": {**PAGES["properties"], "i": {"type": "integer"}}}
+    out = validate(df, schema)
+    (line,) = [ln for ln in _plan(out).splitlines() if " AS valid#" in ln]
+    ranged = re.findall(r"CASE WHEN \(\(unix_(micros|date)\((\w+#\d+)\) >= -?\d+\) AND \(unix_\1\(\2\) < \d+\)\) "
+                        r"THEN true ELSE RLIKE\(date_format\((?:cast\()?\2", line)
+    assert len(ranged) == line.count("date_format(") == 2, line
+    bounded = re.findall(r"\(octet_length\((\w+#\d+)\) [<>]= \d+\) OR \(length\(\1\) [<>]= \d+\)", line)
+    assert len(bounded) == len(re.findall(r"(?<!octet_)length\(", line)) == 2, line  # url and text
+    gated = re.findall(r"NOT Contains\((url#\d+), %\) OR NOT RLIKE\(\1, %", line)
+    assert len(gated) == line.count(", %(") == 1, line
+    assert "https?" not in line and re.search(r"StartsWith\((url#\d+), http://\) OR StartsWith\(\1, https://\)", line)
+    rows = {r.i: r.valid for r in out.select("i", "valid").collect()}
+    want = {i: validate_py(schema, {"i": i, "url": u, "warc_ts": t, "html": "h", "text": x, "lang": "en", "day": d})
+            for i, u, _, t, x, _, d in data}
+    assert rows == want == {0: True, 1: False, 2: False, 3: True, 4: False}

@@ -30,8 +30,10 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from jsonschema_spark.functions.formats import RE_BAD_PCT
 from jsonschema_spark.functions.strings import (
     classify_pattern,
+    leading_literal,
     pattern_ok,
     permissive_search_py,
 )
@@ -164,7 +166,34 @@ CORPUS = [
     # a backreference inside its own group matches the previous iteration's capture
     (r"^(a|b\1)+$", "aba", True, "backref-into-open-group"),
     (r"^(a|b\1)+$", "ab", False, "backref-into-open-group"),
+    # `^` and literal tokens, each at most optional, are `startswith` of each spelling
+    ("^https?://", "http://", True, "prefix-optional"),
+    ("^https?://", "https://", True, "prefix-optional"),
+    ("^https?://", "httpss://", False, "prefix-optional"),
+    ("^https?://", "ftp://", False, "prefix-optional"),
+    (r"^a\.b", "axb", False, "prefix-escaped-dot"),
+    (r"^\Qa.b\E", "a.b", True, "prefix-quoted"),
+    (r"^\Qa.b\E", "axb", False, "prefix-quoted"),
+    (r"^a\\b", "a\\bc", True, "prefix-escaped-backslash"),
+    (r"^a\\b", "ab", False, "prefix-escaped-backslash"),
+    # a possessive `?+` gives nothing back, so `b?+b` needs two b's
+    (r"^ab?+b", "ab", False, "possessive-optional"),
+    ("(?i)^https?://", "HTTP://", True, "prefix-under-flag"),
 ]
+
+
+def test_prefix_plans_come_from_tokens():
+    """The prefix plan reads the token stream: escapes and quoting are
+    literals, an optional literal doubles the spellings; a possessive
+    quantifier or a flag keeps the pattern general."""
+    assert classify_pattern("^https?://").prefixes == ("http://", "https://")
+    assert classify_pattern(r"^a\.b").prefixes == classify_pattern(r"^\Qa.b\E.*").prefixes == ("a.b",)
+    for pattern in (r"^ab?+b", "(?i)^https?://", "(?i:^a)", "^a?b?c?", "^.*", "^a$", "^a*"):
+        assert classify_pattern(pattern).kind == "general", pattern
+    # the literal a `format` reject regex is gated on starts every match
+    assert leading_literal(RE_BAD_PCT) == "%" and leading_literal("%(a|b)") == "%"
+    for pattern in ("%a|b", "%?x", "(%)", "(?i)%", ""):
+        assert leading_literal(pattern) is None, pattern
 
 
 def test_corpus_against_driver_evaluator():
@@ -262,7 +291,7 @@ def test_duckdb_oracle_translation_matches():
 
     con = duckdb.connect()
     for pattern, value, expected, tag in CORPUS:
-        if "\\b" in pattern or "\\B" in pattern or classify_pattern(pattern).kind != "general":
+        if "\\b" in pattern or "\\B" in pattern or classify_pattern(pattern).kind in ("nonempty", "range"):
             continue
         try:
             sql = pattern_duckdb("s", pattern)

@@ -255,10 +255,81 @@ def test_verdict_counts(spark):
     assert (got.n_rows, got.n_valid, got.n_invalid) == (3, 2, 1)
 
 
-def test_timestamp_column_as_datetime_string(spark):
+def _days_from_civil(y: int, m: int, d: int) -> int:
+    """Days from 1970-01-01 to y-m-d, proleptic Gregorian, for any year."""
+    y -= m <= 2
+    era, yoe = divmod(y, 400)
+    doy = (153 * (m - 3 if m > 2 else m + 9) + 2) // 5 + d - 1
+    return era * 146097 + yoe * 365 + yoe // 4 - yoe // 100 + doy - 719468
+
+
+_US_PER_DAY = 86_400 * 10**6
+_YEAR1, _LAST_DAY, _YEAR10K = _days_from_civil(1, 1, 1), _days_from_civil(9999, 12, 31), _days_from_civil(10000, 1, 1)
+# session timezones: both extreme offsets, a +14:00 zone whose early years
+# run on local mean time (-10:29:20), and a DST zone
+_ZONES = ["UTC", "+18:00", "-18:00", "Pacific/Kiritimati", "America/New_York"]
+
+
+@pytest.fixture
+def session_zone(spark):
+    """Set the session timezone for the test; restored afterwards."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    yield lambda tz: spark.conf.set("spark.sql.session.timeZone", tz)
+    spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def _typed_format_verdicts(spark, session_zone, fmt, to_typed, rendering, values) -> dict:
+    """(zone, value) -> (engine verdict, the session's rendering) of
+    ``format: fmt`` over ``to_typed(value)``, checked against ``validate_py``
+    of that rendering."""
+    from jsonschema_spark import validate_py
+
+    sub = {"type": "string", "format": fmt}
+    out = {}
+    for tz in _ZONES:
+        session_zone(tz)
+        df = rows(spark, list(enumerate(values)), "i long, n long").select("i", to_typed(F.col("n")).alias("t"))
+        got = validate(df, {"properties": {"t": sub}}).select("i", "valid", F.date_format("t", rendering).alias("text"))
+        for r in got.collect():
+            out[(tz, values[r.i])] = (r.valid, r.text)
+            assert r.valid is validate_py(sub, r.text), (tz, values[r.i], r.text, r.valid)
+    return out
+
+
+def test_timestamp_column_as_datetime_string(spark, session_zone):
     df = spark.sql("select timestamp'2021-06-01 12:00:00' as warc_ts")
     schema = {"properties": {"warc_ts": {"type": "string", "format": "date-time"}}}
     assert validate(df, schema).collect()[0].valid is True
+    # a timestamp is valid iff the text the session renders is: by a range
+    # test inside [0001-01-01T00:00Z, 9999-12-31T00:00Z), by the regex outside
+    edges = [_days_from_civil(0, 6, 15) * _US_PER_DAY, _YEAR1 * _US_PER_DAY - 1, _YEAR1 * _US_PER_DAY,
+             _YEAR1 * _US_PER_DAY + 1, _LAST_DAY * _US_PER_DAY - 1, _LAST_DAY * _US_PER_DAY,
+             _YEAR10K * _US_PER_DAY - 1, _YEAR10K * _US_PER_DAY, _days_from_civil(-44, 3, 15) * _US_PER_DAY,
+             0, _days_from_civil(2021, 6, 1) * _US_PER_DAY + 12 * 3600 * 10**6]
+    got = _typed_format_verdicts(spark, session_zone, "date-time", F.timestamp_micros,
+                                 "yyyy-MM-dd'T'HH:mm:ss'Z'", edges)
+    # the rendering is local wall time with a literal Z, so the verdict at
+    # the edges depends on the zone
+    last = _YEAR10K * _US_PER_DAY - 1
+    assert got[("UTC", last)] == (True, "9999-12-31T23:59:59Z")
+    assert got[("+18:00", last)] == (False, "+10000-01-01T17:59:59Z")
+    assert got[("UTC", _YEAR1 * _US_PER_DAY - 1)] == (True, "0000-12-31T23:59:59Z")
+    assert got[("-18:00", _days_from_civil(0, 6, 15) * _US_PER_DAY)] == (True, "0000-06-14T06:00:00Z")
+    assert got[("America/New_York", 0)] == (True, "1969-12-31T19:00:00Z")
+    assert got[("UTC", _YEAR10K * _US_PER_DAY)][0] is False
+
+
+def test_date_column_as_date_string(spark, session_zone):
+    """A date is valid under `format: date` iff its rendering is, in every
+    session timezone: by a range test inside [0001-01-01, 9999-12-31)."""
+    edges = [_days_from_civil(0, 6, 15), _YEAR1 - 1, _YEAR1, _YEAR1 + 1, _LAST_DAY - 1, _LAST_DAY,
+             _YEAR10K, _days_from_civil(-44, 3, 15), 0, _days_from_civil(2024, 2, 29)]
+    got = _typed_format_verdicts(spark, session_zone, "date", F.date_from_unix_date, "yyyy-MM-dd", edges)
+    for tz in _ZONES:
+        assert got[(tz, _LAST_DAY)] == (True, "9999-12-31")
+        assert got[(tz, _YEAR10K)] == (False, "+10000-01-01")
+        assert got[(tz, _YEAR1 - 1)] == (True, "0000-12-31")
+        assert got[(tz, _days_from_civil(-44, 3, 15))][0] is False
 
 
 def test_standard_output_shapes(spark):
